@@ -1,0 +1,7 @@
+from __future__ import annotations
+
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [os.path.dirname(HERE), os.path.dirname(os.path.dirname(HERE))]
