@@ -6,8 +6,7 @@ entries inside the driver's correctness window (VERDICT r6 item 8).
 
 The comparison mirrors the driver gate: row count, column-name set, and
 a value hash over rows with columns sorted BY NAME (so aliasing must
-match, exactly like CORRECTNESS_r*.json). Entries without an oracle
-(none today) would record rows-only.
+match, exactly like CORRECTNESS_r*.json).
 
 Usage:  python oracle_self.py [sf_dir]     # default /root/testdata/sf0.01
 Exit status is non-zero if any entry fails, so it doubles as a gate.
@@ -71,23 +70,20 @@ def main() -> int:
             sdf = spec.spark(spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]
             entry["spark_rows"] = len(srows)
-            if spec.oracle:
-                res = con.execute(spec.oracle)
-                dcols = [d[0] for d in res.description]
-                drows = res.fetchall()
-                entry["oracle_rows"] = len(drows)
-                entry["rows_match"] = len(srows) == len(drows)
-                entry["schema_match"] = sorted(sdf.columns) == sorted(dcols)
-                entry["hash_match"] = _vhash(sdf.columns, srows) == _vhash(
-                    dcols, drows
-                )
-                ok = (
-                    entry["rows_match"]
-                    and entry["schema_match"]
-                    and entry["hash_match"]
-                )
-            else:
-                ok = entry["spark_rows"] >= 0
+            res = con.execute(spec.oracle)
+            dcols = [d[0] for d in res.description]
+            drows = res.fetchall()
+            entry["oracle_rows"] = len(drows)
+            entry["rows_match"] = len(srows) == len(drows)
+            entry["schema_match"] = sorted(sdf.columns) == sorted(dcols)
+            entry["hash_match"] = _vhash(sdf.columns, srows) == _vhash(
+                dcols, drows
+            )
+            ok = (
+                entry["rows_match"]
+                and entry["schema_match"]
+                and entry["hash_match"]
+            )
         except Exception as exc:  # noqa: BLE001 — attestation must record, not die
             entry["err"] = f"{type(exc).__name__}: {exc}"[:300]
             traceback.print_exc(file=sys.stderr)

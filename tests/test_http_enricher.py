@@ -5,14 +5,19 @@ retry prompt mutation (:519), and error handling, with zero external network.
 
 from __future__ import annotations
 
+import io
 import json
+import re
 import threading
 from http.server import BaseHTTPRequestHandler, HTTPServer
 
+import pandas as pd
 import pytest
 
+from vacancy_gpt_etl_pipeline_spark.__main__ import main
 from vacancy_gpt_etl_pipeline_spark.operators.enrichment import (
     UNDEFINED,
+    UNSPECIFIED,
     HttpLLMEnricher,
     _process_chunk,
 )
@@ -32,8 +37,10 @@ class _FakeLLM(BaseHTTPRequestHandler):
             self.end_headers()
             return
         prompt = body["messages"][0]["text"]
-        # echo classification: every item in the prompt's {items} list gets a label
-        items = [s.strip() for s in prompt.split("|")[-1].split(",") if s.strip()]
+        # echo classification: every item in the prompt's {items} list (after
+        # the last "|" or "для:") gets a label in every output column
+        tail = re.split(r"\||для:", prompt)[-1]
+        items = [s.strip() for s in tail.split(",") if s.strip()]
         payload = {
             "result": {
                 "alternatives": [
@@ -41,7 +48,15 @@ class _FakeLLM(BaseHTTPRequestHandler):
                         "message": {
                             "text": "```json\n"
                             + json.dumps(
-                                [{"original": k, "normalized_title": f"T:{k}"} for k in items],
+                                [
+                                    {
+                                        "original": k,
+                                        "normalized_title": f"T:{k}",
+                                        "category": f"C:{k}",
+                                        "specialization": f"S:{k}",
+                                    }
+                                    for k in items
+                                ],
                                 ensure_ascii=False,
                             )
                             + "\n```"
@@ -119,3 +134,30 @@ def test_unreachable_endpoint_stubs_totally():
         ["x"], e_down, max_retries=1, defaults={"normalized_title": UNDEFINED}, sleep_s=0
     )
     assert rows == [{"original": "x", "normalized_title": UNDEFINED}]
+
+
+def test_cli_http_pipeline_sends_requests_and_labels(spark, llm_server, tmp_path):
+    raw = tmp_path / "raw"
+    raw.mkdir()
+    pd.DataFrame(
+        [
+            ["1", "Аналитик данных", "финансы", 100, "2024-01-01"],
+            ["2", "Разработчик", "айти", 200, "2024-01-02"],
+        ],
+        columns=["id", "title", "ai_field_of_activity", "salary_to", "created_at"],
+    ).to_csv(raw / "vacancies_20240101_000000.csv", index=False, encoding="utf-8-sig")
+    buf = io.StringIO()
+    argv = [
+        "pipeline",
+        "--input", str(raw),
+        "--output", str(tmp_path / "out"),
+        "--enricher", "http",
+        "--api-url", llm_server,
+        "--api-key", "test-key",
+    ]
+    assert main(argv, out=buf) == 0
+    assert len(_FakeLLM.requests) > 0
+    got = spark.read.option("header", True).csv(buf.getvalue().strip()).collect()
+    fallbacks = {UNDEFINED, UNSPECIFIED}
+    assert any(r["normalized_title"] not in fallbacks for r in got)
+    assert {r["id"]: r["category"] for r in got} == {"1": "C:финансы", "2": "C:айти"}

@@ -9,7 +9,7 @@ workloads without writing a driver script:
     python -m vacancy_gpt_etl_pipeline_spark pipeline \
         --input /data/raw --output /data/processed [--enricher mock|http]
 
-    # any of the 80 registry queries against a parquet table directory
+    # any registry query against a parquet table directory
     python -m vacancy_gpt_etl_pipeline_spark query q1_pricing_summary \
         --sf-dir /root/testdata/sf0.01 --limit 20 --format jsonl
 
@@ -107,7 +107,7 @@ def _http_enrichers(api_url: str, api_key: str):
         api_key=api_key,
         prompt_template=(
             "Классифицируй названия вакансий. Верни JSON-массив объектов "
-            '{{"original": ..., "normalized_title": ...}} для: {keys}'
+            '{{"original": ..., "normalized_title": ...}} для: {items}'
         ),
         output_cols=("normalized_title",),
     )
@@ -117,7 +117,7 @@ def _http_enrichers(api_url: str, api_key: str):
         prompt_template=(
             "Классифицируй сферы деятельности. Верни JSON-массив объектов "
             '{{"original": ..., "category": ..., "specialization": ...}} '
-            "для: {keys}"
+            "для: {items}"
         ),
         output_cols=("category", "specialization"),
     )
