@@ -101,7 +101,7 @@ DEFAULTS = {"normalized_title": UNDEFINED}
 
 def test_totality_on_clean_response():
     e = ScriptedEnricher([_ok])
-    rows = _process_chunk(["a", "b", "c"], e, max_retries=2, defaults=DEFAULTS, sleep_s=0)
+    rows = _process_chunk(["a", "b", "c"], e, batch_size=15, max_retries=2, defaults=DEFAULTS, sleep_s=0)
     assert [r["original"] for r in rows] == ["a", "b", "c"]
     assert all(r["normalized_title"] == f"T:{r['original']}" for r in rows)
     assert len(e.calls) == 1  # no retries needed
@@ -109,7 +109,7 @@ def test_totality_on_clean_response():
 
 def test_fenced_response_is_recovered():
     e = ScriptedEnricher([lambda keys: f"```json\n{_ok(keys)}\n```"])
-    rows = _process_chunk(["a", "b"], e, max_retries=0, defaults=DEFAULTS, sleep_s=0)
+    rows = _process_chunk(["a", "b"], e, batch_size=15, max_retries=0, defaults=DEFAULTS, sleep_s=0)
     assert {r["original"]: r["normalized_title"] for r in rows} == {
         "a": "T:a",
         "b": "T:b",
@@ -118,7 +118,7 @@ def test_fenced_response_is_recovered():
 
 def test_truncated_then_clean_retries_residue():
     e = ScriptedEnricher(['[{"original": "a", "normalized_ti', _ok])
-    rows = _process_chunk(["a", "b"], e, max_retries=2, defaults=DEFAULTS, sleep_s=0)
+    rows = _process_chunk(["a", "b"], e, batch_size=15, max_retries=2, defaults=DEFAULTS, sleep_s=0)
     assert all(r["normalized_title"].startswith("T:") for r in rows)
     # attempt 0 got everything, attempt 1 retried the full residue
     assert e.calls == [(0, ("a", "b")), (1, ("a", "b"))]
@@ -129,12 +129,36 @@ def test_partial_failure_resends_only_residue():
         return json.dumps([{"original": "a", "normalized_title": "T:a"}])
 
     e = ScriptedEnricher([first, _ok])
-    rows = _process_chunk(["a", "b", "c"], e, max_retries=2, defaults=DEFAULTS, sleep_s=0)
+    rows = _process_chunk(["a", "b", "c"], e, batch_size=15, max_retries=2, defaults=DEFAULTS, sleep_s=0)
     assert {r["original"]: r["normalized_title"] for r in rows} == {
         "a": "T:a", "b": "T:b", "c": "T:c",
     }
     # U2 set difference: the retry carries ONLY the unresolved residue
     assert e.calls == [(0, ("a", "b", "c")), (1, ("b", "c"))]
+
+
+def test_residues_of_two_batches_leave_in_one_retry():
+    def first(keys):  # every request drops its middle key
+        return _ok([k for k in keys if k not in ("b", "e")])
+
+    e = ScriptedEnricher([first, _ok])
+    rows = _process_chunk(
+        list("abcdef"), e, batch_size=3, max_retries=1, defaults=DEFAULTS, sleep_s=0
+    )
+    assert all(r["normalized_title"] == f"T:{r['original']}" for r in rows)
+    # attempt 0 sends full batches; the retry round pools both residues
+    assert e.calls == [(0, ("a", "b", "c")), (0, ("d", "e", "f")), (1, ("b", "e"))]
+
+
+def test_retry_round_rebatches_residue_and_sleeps_once(monkeypatch):
+    from vacancy_gpt_etl_pipeline_spark.operators import enrichment
+
+    sleeps = []
+    monkeypatch.setattr(enrichment.time, "sleep", sleeps.append)
+    e = ScriptedEnricher(["garbage", _ok])
+    _process_chunk(list("abcde"), e, batch_size=2, max_retries=1, defaults=DEFAULTS, sleep_s=0.5)
+    assert [(a, len(k)) for a, k in e.calls] == [(0, 2), (0, 2), (0, 1), (1, 2), (1, 2), (1, 1)]
+    assert sleeps == [0.5]  # pacing once per retry round, not per request
 
 
 def test_retry_values_requeue_primary_failures():
@@ -144,14 +168,14 @@ def test_retry_values_requeue_primary_failures():
         )
 
     e = ScriptedEnricher([first, _ok], retry_values={UNDEFINED})
-    rows = _process_chunk(["a", "b"], e, max_retries=1, defaults=DEFAULTS, sleep_s=0)
+    rows = _process_chunk(["a", "b"], e, batch_size=15, max_retries=1, defaults=DEFAULTS, sleep_s=0)
     assert {r["original"]: r["normalized_title"] for r in rows} == {"a": "T:a", "b": "T:b"}
     assert e.calls == [(0, ("a", "b")), (1, ("b",))]
 
 
 def test_exhausted_retries_fall_back_to_stub():
     e = ScriptedEnricher(["garbage", "also garbage"])
-    rows = _process_chunk(["a", "b"], e, max_retries=1, defaults=DEFAULTS, sleep_s=0)
+    rows = _process_chunk(["a", "b"], e, batch_size=15, max_retries=1, defaults=DEFAULTS, sleep_s=0)
     # totality invariant (dag/...py:320-325): every key exactly once, stubbed
     assert [r["original"] for r in rows] == ["a", "b"]
     assert all(r["normalized_title"] == UNDEFINED for r in rows)
@@ -160,7 +184,7 @@ def test_exhausted_retries_fall_back_to_stub():
 
 def test_exception_in_respond_is_survived():
     e = ScriptedEnricher([RuntimeError("HTTP 500"), _ok])
-    rows = _process_chunk(["a"], e, max_retries=1, defaults=DEFAULTS, sleep_s=0)
+    rows = _process_chunk(["a"], e, batch_size=15, max_retries=1, defaults=DEFAULTS, sleep_s=0)
     assert rows == [{"original": "a", "normalized_title": "T:a"}]
 
 
@@ -171,7 +195,7 @@ def test_hallucinated_keys_are_filtered():
         return json.dumps(items)
 
     e = ScriptedEnricher([resp])
-    rows = _process_chunk(["a"], e, max_retries=0, defaults=DEFAULTS, sleep_s=0)
+    rows = _process_chunk(["a"], e, batch_size=15, max_retries=0, defaults=DEFAULTS, sleep_s=0)
     # anti-hallucination (dag/...py:590-603): invented key never surfaces
     assert [r["original"] for r in rows] == ["a"]
 
@@ -186,13 +210,13 @@ def test_duplicate_originals_keep_first():
         )
 
     e = ScriptedEnricher([resp])
-    rows = _process_chunk(["a"], e, max_retries=0, defaults=DEFAULTS, sleep_s=0)
+    rows = _process_chunk(["a"], e, batch_size=15, max_retries=0, defaults=DEFAULTS, sleep_s=0)
     assert rows == [{"original": "a", "normalized_title": "FIRST"}]
 
 
 def test_non_dict_items_ignored():
     e = ScriptedEnricher(['["just a string", 42, {"original": "a", "normalized_title": "X"}]'])
-    rows = _process_chunk(["a"], e, max_retries=0, defaults=DEFAULTS, sleep_s=0)
+    rows = _process_chunk(["a"], e, batch_size=15, max_retries=0, defaults=DEFAULTS, sleep_s=0)
     assert rows == [{"original": "a", "normalized_title": "X"}]
 
 
@@ -248,7 +272,7 @@ def test_partition_cap_preserves_batch_size(spark):
         df, "title", BatchSizeEcho(), batch_size=5, max_retries=0, max_partitions=4
     )
     sizes = [int(r["normalized_title"]) for r in out.collect()]
-    # 200 keys / cap 4 partitions = 50 keys per task, re-chunked to ≤5 per call
+    # 200 keys / cap 4 partitions = 50 keys per task, cut to ≤5 per call
     assert max(sizes) <= 5
     assert sum(1 for s in sizes if s == 5) >= 190  # nearly all full batches
 

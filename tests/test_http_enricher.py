@@ -7,9 +7,10 @@ from __future__ import annotations
 
 import io
 import json
+import math
 import re
 import threading
-from http.server import BaseHTTPRequestHandler, HTTPServer
+from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pandas as pd
 import pytest
@@ -20,12 +21,14 @@ from vacancy_gpt_etl_pipeline_spark.operators.enrichment import (
     UNSPECIFIED,
     HttpLLMEnricher,
     _process_chunk,
+    enrich_column,
 )
 
 
 class _FakeLLM(BaseHTTPRequestHandler):
     requests: list[dict] = []
     fail_first = False
+    omit_first_item = False  # drop one key from every attempt-0 answer
 
     def do_POST(self):
         body = json.loads(self.rfile.read(int(self.headers["Content-Length"])))
@@ -41,6 +44,8 @@ class _FakeLLM(BaseHTTPRequestHandler):
         # the last "|" or "для:") gets a label in every output column
         tail = re.split(r"\||для:", prompt)[-1]
         items = [s.strip() for s in tail.split(",") if s.strip()]
+        if type(self).omit_first_item and not prompt.startswith("ВНИМАНИЕ"):
+            items = items[1:]
         payload = {
             "result": {
                 "alternatives": [
@@ -79,19 +84,20 @@ class _FakeLLM(BaseHTTPRequestHandler):
 def llm_server():
     _FakeLLM.requests = []
     _FakeLLM.fail_first = False
-    srv = HTTPServer(("127.0.0.1", 0), _FakeLLM)
+    _FakeLLM.omit_first_item = False
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), _FakeLLM)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     yield f"http://127.0.0.1:{srv.server_port}/v1/completion"
     srv.shutdown()
 
 
-def _enricher(endpoint):
+def _enricher(endpoint, output_cols=("normalized_title",)):
     return HttpLLMEnricher(
         endpoint=endpoint,
         api_key="test-key",
         prompt_template="classify | {items}",
-        output_cols=("normalized_title",),
+        output_cols=output_cols,
         model="test-model",
         retry_values=frozenset({UNDEFINED}),
     )
@@ -119,7 +125,8 @@ def test_http_500_flows_into_retry_residue(llm_server):
     _FakeLLM.fail_first = True
     e = _enricher(llm_server)
     rows = _process_chunk(
-        ["x", "y"], e, max_retries=1, defaults={"normalized_title": UNDEFINED}, sleep_s=0
+        ["x", "y"], e, batch_size=15, max_retries=1,
+        defaults={"normalized_title": UNDEFINED}, sleep_s=0,
     )
     # attempt 0 got HTTP 500 (exception path), attempt 1 resolved everything
     assert {r["original"]: r["normalized_title"] for r in rows} == {
@@ -131,7 +138,8 @@ def test_http_500_flows_into_retry_residue(llm_server):
 def test_unreachable_endpoint_stubs_totally():
     e_down = _enricher("http://127.0.0.1:1/v1/completion")  # nothing listens
     rows = _process_chunk(
-        ["x"], e_down, max_retries=1, defaults={"normalized_title": UNDEFINED}, sleep_s=0
+        ["x"], e_down, batch_size=15, max_retries=1,
+        defaults={"normalized_title": UNDEFINED}, sleep_s=0,
     )
     assert rows == [{"original": "x", "normalized_title": UNDEFINED}]
 
@@ -161,3 +169,35 @@ def test_cli_http_pipeline_sends_requests_and_labels(spark, llm_server, tmp_path
     fallbacks = {UNDEFINED, UNSPECIFIED}
     assert any(r["normalized_title"] not in fallbacks for r in got)
     assert {r["id"]: r["category"] for r in got} == {"1": "C:финансы", "2": "C:айти"}
+
+
+def test_retry_residue_is_pooled_per_task(spark, llm_server):
+    """Each enrichment task pools the residue of all its attempt-0
+    requests into full retry requests, which keeps the pipeline inside
+    BASELINE.md's request budget (⌈titles/15⌉ + ⌈fields/10⌉) × 2."""
+    _FakeLLM.omit_first_item = True
+    n_titles, n_fields = 300, 150
+    df = spark.createDataFrame(
+        [(i, f"title {i}", f"field {i % n_fields}") for i in range(n_titles)],
+        "id int, title string, ai_field_of_activity string",
+    )
+    slots = spark.sparkContext.defaultParallelism
+    total = budget = 0
+    for key_col, n, batch, cols in (
+        ("title", n_titles, 15, ("normalized_title",)),
+        ("ai_field_of_activity", n_fields, 10, ("category", "specialization")),
+    ):
+        _FakeLLM.requests = []
+        e = _enricher(llm_server, cols)
+        out = enrich_column(df, key_col, e, batch_size=batch, max_retries=1)
+        got = out.select(key_col, cols[0]).distinct().collect()
+        assert len(got) == n
+        assert all(r[cols[0]] != UNDEFINED for r in got)  # retries resolved all
+        prompts = [r["body"]["messages"][0]["text"] for r in _FakeLLM.requests]
+        retries = sum(p.startswith("ВНИМАНИЕ") for p in prompts)
+        tasks = min(math.ceil(n / batch), slots)
+        assert retries <= tasks, (key_col, retries, tasks)
+        assert len(prompts) - retries <= math.ceil(n / batch) + tasks - 1
+        total += len(prompts)
+        budget += 2 * math.ceil(n / batch)
+    assert total <= budget, (total, budget)

@@ -99,12 +99,17 @@ keys_strategy = st.lists(
 )
 
 
-@given(keys=keys_strategy, salt=st.integers(0, 1000), retries=st.integers(0, 3))
+@given(
+    keys=keys_strategy,
+    salt=st.integers(0, 1000),
+    retries=st.integers(0, 3),
+    batch=st.integers(1, 30),
+)
 @settings(max_examples=150, suppress_health_check=[HealthCheck.too_slow])
-def test_chunk_totality_and_idempotence(keys, salt, retries):
+def test_chunk_totality_and_idempotence(keys, salt, retries, batch):
     enricher = ArbitraryBehavior(salt)
     defaults = {"normalized_title": UNDEFINED}
-    rows = _process_chunk(keys, enricher, retries, defaults, sleep_s=0)
+    rows = _process_chunk(keys, enricher, batch, retries, defaults, sleep_s=0)
     # totality: every input key exactly once, in order
     assert [r["original"] for r in rows] == keys
     # values are either real resolutions or the fallback stub — never None,
@@ -112,7 +117,7 @@ def test_chunk_totality_and_idempotence(keys, salt, retries):
     for r in rows:
         assert r["normalized_title"] == UNDEFINED or r["normalized_title"] == f"OK:{r['original']}"
     # idempotence: pure function of (keys, enricher behavior)
-    rows2 = _process_chunk(keys, ArbitraryBehavior(salt), retries, defaults, sleep_s=0)
+    rows2 = _process_chunk(keys, ArbitraryBehavior(salt), batch, retries, defaults, sleep_s=0)
     assert rows == rows2
 
 

@@ -9,7 +9,9 @@ conservative-cap and partition properties.
 from __future__ import annotations
 
 import math
+import os
 
+import pytest
 from pyspark.sql import Row
 
 from vacancy_gpt_etl_pipeline_spark.operators.similarity import semdedup
@@ -379,3 +381,19 @@ def test_two_level_n_cent_hint_matches_counted(spark):
         ).collect()
     )
     assert hinted == counted
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_two_level_registry_hint_is_full_at_every_fixture_sf(spark, sf_dir, sf):
+    # semdedup_2level_survivors passes n_cent=_IVF_CELLS instead of
+    # counting its sampled centroids; that hint is only sound while the
+    # stride sample over its planted union is full
+    from vacancy_gpt_etl_pipeline_spark.operators.similarity import sampled_centroids
+    from vacancy_gpt_etl_pipeline_spark.queries import (
+        _IVF_CELLS,
+        _IVF_STRIDE,
+        _planted_embeddings,
+    )
+
+    u = _planted_embeddings(spark, os.path.join(os.path.dirname(sf_dir), sf))
+    assert sampled_centroids(u, _IVF_CELLS, _IVF_STRIDE).count() == _IVF_CELLS

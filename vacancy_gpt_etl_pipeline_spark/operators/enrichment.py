@@ -12,8 +12,8 @@ Reference parity (dag/vacancy_pipline_gpt_rerty.py):
 Spark-first plan (the one semantic rewrite Catalyst can never derive,
 because the UDF is a black box to it):
 
-    distinct(trim(key)) ──► Arrow-batched mapInPandas (HTTP per batch,
-    retry-residue inside the task) ──► broadcast join back to the full table
+    distinct(trim(key)) ──► one mapInPandas task per slot (full HTTP
+    batches, retry-residue pooled across the task) ──► broadcast join back
 
 Why this shape at 100 TB:
 - Only DISTINCT keys ever reach the LLM — cost scales with key cardinality,
@@ -21,14 +21,20 @@ Why this shape at 100 TB:
   contract).
 - Batches run in PARALLEL across executors (the reference loops batches
   sequentially on one worker — its dominant wall-clock cost).
-- The retry loop lives INSIDE the task, so a retry re-sends only the failed
-  residue of one batch and never re-plans the job.
-- The UDF is a pure function of its input batch (idempotent under Spark task
-  retries); keep-first dedup + the final keys⟕mapping outer join make the
-  output total and exactly-once per key. Precisely: enricher CALLS are
-  at-least-once (a failed task attempt may already have reached the LLM),
-  but Spark discards a failed attempt's output wholesale, so the mapping
-  rows are exactly-once per key — proven under injected first-attempt task
+- Each task owns one slot's share of the distinct keys and runs ONE
+  retry-residue loop over all of them: attempt 0 sends full batches, and
+  each retry round re-batches the whole task's residue. A task holding k
+  keys sends at most ⌈k/batch⌉ requests per attempt (only the last one
+  partial), so the column's first attempt costs at most ⌈n/batch⌉ +
+  tasks − 1 requests, and a retry round whose residue fits one batch per
+  task costs at most one request per task. Retries never re-plan the job.
+- The UDF is a pure function of its task's keys (idempotent under Spark
+  task retries); keep-first dedup + the final keys⟕mapping outer join make
+  the output total and exactly-once per key. Precisely: enricher CALLS are
+  at-least-once — a failed Spark task re-calls the LLM for its WHOLE
+  partition, since its attempt may already have reached the LLM — but
+  Spark discards a failed attempt's output wholesale, so the mapping rows
+  are exactly-once per key — proven under injected first-attempt task
   crashes in tests/test_enrichment_retry_idempotence.py (local[4,2]).
 - The mapping table is bounded by key cardinality → broadcast join back, no
   shuffle of the big side. For unbounded key spaces pass
@@ -192,14 +198,18 @@ class HttpLLMEnricher(Enricher):
 def _process_chunk(
     keys: list[str],
     enricher: Enricher,
+    batch_size: int,
     max_retries: int,
     defaults: dict[str, str],
     sleep_s: float,
 ) -> list[dict]:
-    """One batch through the retry-residue loop. Pure function of its inputs
-    (no external state) → idempotent under Spark task retries."""
+    """A task's keys through the retry-residue loop. Each attempt cuts the
+    still-pending keys into ``batch_size`` requests, so attempt 0 sends
+    full batches and a retry round pools the residue of every request
+    before it: ⌈residue/batch_size⌉ retries, not one per failed batch.
+    Pure function of its inputs (no external state) → idempotent under
+    Spark task retries."""
     out_cols = list(enricher.output_cols)
-    key_set = set(keys)
     resolved: dict[str, dict] = {}
     pending = list(keys)
     for attempt in range(max_retries + 1):
@@ -207,26 +217,28 @@ def _process_chunk(
             break
         if attempt > 0 and sleep_s > 0:
             time.sleep(sleep_s)  # inter-retry pacing (dag/...py:305-306)
-        try:
-            raw = enricher.respond(pending, attempt)
-            parsed = safe_json_parse_text(raw)
-        except Exception:
-            parsed = None  # error path → residue retried, then stubbed (:318)
-        if parsed is None:
-            continue
-        for item in parsed:
-            if not isinstance(item, dict):
+        for i in range(0, len(pending), batch_size):
+            request = pending[i : i + batch_size]
+            try:
+                parsed = safe_json_parse_text(enricher.respond(request, attempt))
+            except Exception:
+                parsed = None  # error path → residue retried, then stubbed (:318)
+            if parsed is None:
                 continue
-            orig = str(item.get("original", "")).strip()
-            if orig not in key_set:
-                continue  # anti-hallucination filter (dag/...py:590-603)
-            if orig in resolved:
-                continue  # keep-first dedup (dag/...py:360-366)
-            vals = {c: str(item.get(c)) if item.get(c) is not None else None for c in out_cols}
-            primary = vals.get(out_cols[0])
-            if primary is None or primary in enricher.retry_values:
-                continue  # failure → stays in residue for next attempt
-            resolved[orig] = vals
+            key_set = set(request)
+            for item in parsed:
+                if not isinstance(item, dict):
+                    continue
+                orig = str(item.get("original", "")).strip()
+                if orig not in key_set:
+                    continue  # anti-hallucination filter (dag/...py:590-603)
+                if orig in resolved:
+                    continue  # keep-first dedup (dag/...py:360-366)
+                vals = {c: str(item.get(c)) if item.get(c) is not None else None for c in out_cols}
+                primary = vals.get(out_cols[0])
+                if primary is None or primary in enricher.retry_values:
+                    continue  # failure → stays in residue for next attempt
+                resolved[orig] = vals
         pending = [k for k in pending if k not in resolved]  # U2 set difference
     rows = []
     for k in keys:  # totality: every input key gets exactly one output row
@@ -282,14 +294,13 @@ def enrich_column(
     broadcast_mapping: bool | None = None,
     empty_key_default: str | None = None,
     max_partitions: int | None = None,
-    partitions_per_slot: int = 4,
     keys_from: DataFrame | None = None,
 ) -> DataFrame:
     """Enrich ``df`` with ``enricher.output_cols`` derived from ``key_col``.
 
     Plan: distinct(trim(key)) → repartition to min(⌈n/batch_size⌉,
-    partition cap) → mapInPandas batch-call with retry-residue → left
-    join back → coalesce defaults. See module docstring for the 100 TB
+    partition cap) → mapInPandas retry-residue loop per task → left join
+    back → coalesce defaults. See module docstring for the 100 TB
     rationale.
 
     ``broadcast_mapping=None`` (default) picks the join-back strategy
@@ -301,11 +312,13 @@ def enrich_column(
     True/False to override the estimate in either direction.
 
     The partition count is capped at ``max_partitions`` (default
-    ``partitions_per_slot × defaultParallelism``): one-partition-per-batch
-    is right while batches ≪ cluster slots, but at 100 M distinct keys it
-    would mean millions of tasks — a scheduler killer. ``run()`` re-chunks
-    WITHIN each partition, so ``batch_size`` per LLM call is preserved
-    regardless of the cap; the cap only bounds task count.
+    ``defaultParallelism``): one task per slot, each owning ~n/slots
+    distinct keys. The task cuts its keys into ``batch_size`` requests
+    and pools every request's residue into the retry rounds, so it sends
+    at most ⌈k/batch_size⌉ requests per attempt for its k keys; only the
+    last request of an attempt can be partial. A failed Spark task
+    re-calls the LLM for its whole partition (calls at-least-once, rows
+    exactly-once).
 
     ``keys_from``: when CHAINING enrichments, the distinct key set of a
     later stage would otherwise be computed over the already-enriched
@@ -339,28 +352,20 @@ def enrich_column(
     if n_keys == 0:
         mapping = df.sparkSession.createDataFrame([], schema)
     else:
-        if max_partitions is None:
-            max_partitions = max(
-                1, partitions_per_slot * df.sparkSession.sparkContext.defaultParallelism
-            )
-        n_parts = min(max(1, math.ceil(n_keys / batch_size)), max_partitions)
+        n_parts = min(
+            math.ceil(n_keys / batch_size),
+            max_partitions or df.sparkSession.sparkContext.defaultParallelism,
+        )
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            buf: list[str] = []
-            for pdf in batches:
-                buf.extend(pdf["original"].tolist())
-                while len(buf) >= batch_size:
-                    chunk, buf = buf[:batch_size], buf[batch_size:]
-                    yield pd.DataFrame(
-                        _process_chunk(chunk, enricher, max_retries, defaults, sleep_s)
-                    )
-            if buf:
+            keys = [k for pdf in batches for k in pdf["original"].tolist()]
+            if keys:
                 yield pd.DataFrame(
-                    _process_chunk(buf, enricher, max_retries, defaults, sleep_s)
+                    _process_chunk(keys, enricher, batch_size, max_retries, defaults, sleep_s)
                 )
 
-        # round-robin repartition → bounded even partitions; one HTTP-bound
-        # task per ~batch; parallelism = executor slots. The mapping is
+        # round-robin repartition → one task per slot, each owning an even
+        # share of the distinct keys and sending full batches. The mapping is
         # PERSISTED: every downstream action over the enriched frame would
         # otherwise re-run the mapInPandas stage — i.e. re-call the LLM —
         # once per action. Caching makes enrichment cost once-per-key, not

@@ -1597,17 +1597,15 @@ _EMB_PLANES = _pseudo_tables(1, 6)[0]
 _ANN_TABLES = _pseudo_tables(8, 4)
 
 
-def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed cosine near-duplicate pairs.
-
-    The raw embeddings fixture is near-orthogonal random data (max pairwise
-    cosine ≈ 0.45), so the query PLANTS deterministic near-dups — an affine
-    copy ``2v + 0.02`` of the first 25 vectors under shifted ids — then runs
-    the bucketed detector. The oracle derives the identical planted frame
-    and identical buckets in SQL, so LSH candidate semantics (not just the
-    cosine math) are what's being verified. No crossJoin anywhere: the
-    registered plan joins on bucket equality only."""
-    emb = _t(spark, sf_dir, "embeddings", widen=True)
+def _planted_embeddings(
+    spark: SparkSession, sf_dir: str, widen: bool = False
+) -> DataFrame:
+    """``embeddings`` as doubles plus planted near-duplicates: an affine copy
+    ``2v + 0.02`` of the first 25 vectors under ids shifted by 1,000,000.
+    The raw fixture is near-orthogonal (max pairwise cosine ≈ 0.45), so
+    the similarity entries need these paraphrase-like duplicates, which
+    share direction but not magnitude, to have anything to find."""
+    emb = _t(spark, sf_dir, "embeddings", widen=widen)
     base = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
@@ -1618,8 +1616,22 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding"
         ),
     )
+    return base.unionByName(planted)
+
+
+def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH-bucketed cosine near-duplicate pairs.
+
+    The raw embeddings fixture is near-orthogonal random data (max pairwise
+    cosine ≈ 0.45), so the query PLANTS deterministic near-dups — an affine
+    copy ``2v + 0.02`` of the first 25 vectors under shifted ids — then runs
+    the bucketed detector. The oracle derives the identical planted frame
+    and identical buckets in SQL, so LSH candidate semantics (not just the
+    cosine math) are what's being verified. No crossJoin anywhere: the
+    registered plan joins on bucket equality only."""
     return embedding_near_duplicates(
-        base.unionByName(planted), threshold=0.9, planes=_EMB_PLANES, dim=_EMB_DIM
+        _planted_embeddings(spark, sf_dir, widen=True),
+        threshold=0.9, planes=_EMB_PLANES, dim=_EMB_DIM,
     )
 
 
@@ -6932,19 +6944,8 @@ def semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation (cells, not just cosine math) is hash-verified. Plan:
     broadcast centroids + map-side max_by assignment, pair join on cell
     equality only — never all-pairs."""
-    emb = _t(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    planted = base.where(F.col("vec_id") < 25).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(2.0) + F.lit(0.02)).alias(
-            "embedding"
-        ),
-    )
     return semdedup(
-        base.unionByName(planted),
+        _planted_embeddings(spark, sf_dir),
         n_centroids=_IVF_CELLS,
         stride=_IVF_STRIDE,
         threshold=0.9,
@@ -7094,25 +7095,14 @@ def semdedup_2level_survivors(
         semdedup,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
-    base = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    planted = base.where(F.col("vec_id") < 25).select(
-        (F.col("vec_id") + 1000000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(2.0) + F.lit(0.02)).alias(
-            "embedding"
-        ),
-    )
-    u = base.unionByName(planted)
+    u = _planted_embeddings(spark, sf_dir)
     cents = sampled_centroids(u, _IVF_CELLS, _IVF_STRIDE)
     # n_cent=_IVF_CELLS skips the operator's eager centroid count()
     # job (~0.7 s warm — it drags the sampled-centroid lineage through
     # a job before assignment starts). The sample is full at every
-    # fixture SF (verified: exactly 8 ids ≡ 0 mod 61 at sf0.001/0.01/
-    # 0.1), and the ORACLE's coarse-pick constants are already derived
-    # from _IVF_CELLS, so the constant is the contract, not a guess.
+    # fixture SF — pinned by tests/test_semdedup.py — and the ORACLE's
+    # coarse-pick constants are already derived from _IVF_CELLS, so the
+    # constant is the contract, not a guess.
     assigned = ivf_assign_two_level(
         u, cents, dim=_EMB_DIM, n_cent=_IVF_CELLS
     )

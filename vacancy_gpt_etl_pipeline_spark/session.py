@@ -19,6 +19,20 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+MAX_DRIVER_MEM_GB = 32
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for this machine: about half of physical RAM
+    (read with ``os.sysconf`` unless ``phys_bytes`` is given), at least 1g
+    and at most 32g. A flat 32g heap on a 16 GB box let local mode's one
+    JVM grow until the kernel OOM-killed it."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, OSError, ValueError):
+            return f"{MAX_DRIVER_MEM_GB}g"  # platform without sysconf
+    return f"{max(1, min(MAX_DRIVER_MEM_GB, (phys_bytes // 2) >> 30))}g"
 
 
 def get_spark(
@@ -42,7 +56,10 @@ def get_spark(
         # 1g — far too small for broadcast builds / cached frames on a big
         # box (found by a 50k-doc scale run OOMing a broadcast). Must be set
         # before JVM launch; on a real cluster spark-submit overrides it.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.shuffle.partitions", str(shuffle))
         # static conf, default 100 generated-class entries: a many-query
         # session (the 47-entry bench registry) evicts the big unrolled
@@ -60,7 +77,7 @@ def get_spark(
         # single late-session run) — raised to 10000 in the r15
         # optimization round so the cache again covers two interleaved
         # passes with headroom. Generated classes are small (KBs); the
-        # driver-memory cost is negligible next to a 32g heap.
+        # driver-memory cost is negligible next to a multi-GB heap.
         .config("spark.sql.codegen.cache.maxEntries", "10000")
         # Spark's default hugeMethodLimit (65535) accepts generated methods
         # far beyond the JVM JIT's 8000-bytecode compile ceiling, so wide-
