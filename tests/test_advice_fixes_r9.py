@@ -222,15 +222,15 @@ def test_enrichment_join_back_adapts_to_key_count(spark):
 
 
 def test_parse_size_bytes():
-    from vacancy_gpt_etl_pipeline_spark.operators.enrichment import (
-        _parse_size_bytes,
-    )
+    from vacancy_gpt_etl_pipeline_spark.session import parse_size_bytes
 
-    assert _parse_size_bytes("10485760") == 10 << 20
-    assert _parse_size_bytes("10MB") == 10 << 20
-    assert _parse_size_bytes("512k") == 512 << 10
-    assert _parse_size_bytes("1g") == 1 << 30
-    assert _parse_size_bytes("-1") == -1
+    assert parse_size_bytes("10485760") == 10 << 20
+    assert parse_size_bytes("10MB") == 10 << 20
+    assert parse_size_bytes("512k") == 512 << 10
+    assert parse_size_bytes("1g") == 1 << 30
+    assert parse_size_bytes("-1") == -1
+    assert parse_size_bytes("1.5g") == 3 << 29
+    assert parse_size_bytes("128MB") == 128 << 20
 
 
 # ------------------------------------------------- exact-substring dedup

@@ -50,3 +50,41 @@ def test_changed_entries_go_before_slowest_ones():
     kept = json.loads(line)["queries"]
     assert set(slowest) <= set(kept)
     assert 0 < len(set(kept) & set(changed)) < len(changed)
+
+
+def test_baseline_is_the_committed_stamp(tmp_path):
+    """A bench run rewrites BENCH_SELF.json; the next run must still
+    compare against the stamp committed at HEAD, not that working copy."""
+    import subprocess
+
+    def stamp(seconds):
+        return json.dumps({"sf": 0.1, "queries": {"pagerank": seconds}})
+
+    def git(*args):
+        subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=tmp_path,
+            check=True,
+            capture_output=True,
+        )
+
+    git("init", "-q")
+    (tmp_path / "BENCH_SELF.json").write_text(stamp(5.0))
+    git("add", "BENCH_SELF.json")
+    git("commit", "-q", "-m", "stamp")
+    (tmp_path / "BENCH_SELF.json").write_text(stamp(9.0))
+
+    name, prev = bench._load_previous(str(tmp_path), 0.1)
+    assert prev == {"pagerank": 5.0}
+    assert "BENCH_SELF" in name
+
+
+def test_baseline_falls_back_to_driver_history_outside_git(tmp_path):
+    (tmp_path / "BENCH_SELF.json").write_text(
+        json.dumps({"sf": 0.1, "queries": {"pagerank": 9.0}})
+    )
+    (tmp_path / "BENCH_r03.json").write_text(
+        json.dumps({"parsed": {"sf": 0.1, "queries": {"pagerank": 4.0}}})
+    )
+    name, prev = bench._load_previous(str(tmp_path), 0.1)
+    assert (name, prev) == ("BENCH_r03.json", {"pagerank": 4.0})

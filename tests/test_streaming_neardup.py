@@ -218,10 +218,10 @@ def test_text_gate_index_reads_are_partition_pruned(
     suppresses candidate generation from ubiquitous shingles."""
     import re
 
+    from vacancy_gpt_etl_pipeline_spark.streaming.gate import read_index
     from vacancy_gpt_etl_pipeline_spark.streaming.neardup_gate import (
         HASH_INDEX_SCHEMA,
         _pruned,
-        _read_or_empty,
     )
 
     docs = _docs(spark, sf_dir)
@@ -230,7 +230,7 @@ def test_text_gate_index_reads_are_partition_pruned(
     pidx = str(tmp_path / "postings")
     apply_neardup_gate_batch(docs.where("doc_id < 200"), 0, out, hidx, pidx)
 
-    idx = _read_or_empty(spark, hidx, HASH_INDEX_SCHEMA)
+    idx = read_index(spark, hidx, HASH_INDEX_SCHEMA)
     pruned = _pruned(idx, ["00", "01", "ff"], None)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)

@@ -14,9 +14,10 @@ from vacancy_gpt_etl_pipeline_spark.operators.phash import (
     phash_bmp,
     phash_incremental,
 )
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import read_index
 from vacancy_gpt_etl_pipeline_spark.streaming.phash_gate import (
     BATCH_COL,
-    _read_index,
+    INDEX_SCHEMA,
     write_stream_phash_gate,
 )
 
@@ -62,7 +63,7 @@ def test_streaming_gate_parity_and_exactly_once(spark, sf_dir, tmp_path):
     # empty-history gate = keep-first reps of the batch
     direct1 = phash_incremental(
         phash_bmp(synthesize_bmp_payload(docs.where("doc_id < 250"), "doc_id")),
-        _read_index(spark, str(tmp_path / "nowhere")),
+        read_index(spark, str(tmp_path / "nowhere"), INDEX_SCHEMA),
     )
     assert _survivor_set(run1) == _survivor_set(direct1)
     # band-exploded index layout: 4 rows (one per 16-bit band) per

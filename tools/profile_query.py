@@ -9,10 +9,9 @@ For each named registry query, measures with a warmed session:
                bench itself is unaffected)
   - exec_s:    noop-sink execution wall (includes analysis/optimization/
                codegen)
-and dumps the formatted executed plan to an optional directory.
 
 Usage:
-    python tools/profile_query.py [--plans DIR] [--runs N] name [name ...]
+    python tools/profile_query.py [--runs N] name [name ...]
     python tools/profile_query.py --all          # whole registry, 1 run
 
 Prints one JSON line per query to stdout; chatter to stderr.
@@ -32,14 +31,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
-    ap.add_argument("--plans", default=None, help="dir for explain output")
-    ap.add_argument("--suffix", default="before")
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--all", action="store_true")
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from bench import warm_session
     from vacancy_gpt_etl_pipeline_spark.queries import queries
     from vacancy_gpt_etl_pipeline_spark.session import get_spark
 
@@ -52,31 +50,12 @@ def main() -> None:
     spark = get_spark(app_name="profile")
     sc = spark.sparkContext
 
-    # same warmers as bench.py
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    warm = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    warm.groupBy("l_returnflag").count().write.mode("overwrite").format("noop").save()
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    wspec = W.partitionBy("source").orderBy("doc_id")
-    (
-        docs.withColumn("_rn", F.row_number().over(wspec))
-        .where(F.col("_rn") <= 3)
-        .join(F.broadcast(docs.select("doc_id").limit(100)), "doc_id")
-        .write.mode("overwrite")
-        .format("noop")
-        .save()
-    )
-    spark.catalog.clearCache()
-
-    if args.plans:
-        os.makedirs(args.plans, exist_ok=True)
+    warm_session(spark, sf_dir)
 
     for name in names:
         fn = registry[name]
         per_run = []
-        for r in range(args.runs):
+        for _ in range(args.runs):
             # job ids are global+monotonic; nextJobId is the counter
             j0 = sc._jsc.sc().dagScheduler().nextJobId()
             if not isinstance(j0, int):
@@ -96,25 +75,6 @@ def main() -> None:
                     "jobs": j1 - j0,
                 }
             )
-            if args.plans and r == 0:
-                try:
-                    plan = df._jdf.queryExecution().explainString(
-                        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                            "formatted"
-                        )
-                    )
-                except Exception:
-                    import io
-                    from contextlib import redirect_stdout
-
-                    buf = io.StringIO()
-                    with redirect_stdout(buf):
-                        df.explain("formatted")
-                    plan = buf.getvalue()
-                with open(
-                    os.path.join(args.plans, f"{name}_{args.suffix}.txt"), "w"
-                ) as f:
-                    f.write(plan)
             spark.catalog.clearCache()
             df = None
             import gc as _gc

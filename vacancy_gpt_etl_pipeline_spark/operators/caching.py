@@ -22,7 +22,7 @@ not for services.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 class CacheScope:
@@ -58,3 +58,47 @@ class CacheScope:
 def persist_in(df: DataFrame, scope: CacheScope | None) -> DataFrame:
     """Persist ``df``, tracked in ``scope`` when one is given."""
     return scope.persist(df) if scope is not None else df.persist()
+
+
+class BlockRelease:
+    """Frees the RDD blocks created inside its ``with`` block.
+
+    ``DataFrame.unpersist()`` does not free ``localCheckpoint`` blocks
+    (they live in the RDD block store, not the relation cache), so a
+    loop that checkpoints once per round or per micro-batch pins one
+    RDD per iteration unless something releases it. On entry the scope
+    records the ids of ``getPersistentRDDs``; on exit it unpersists
+    every id that appeared since. ``checkpoint``/``free`` let a loop
+    release blocks before the scope ends.
+
+    Assumes one driver thread creates persistent RDDs while the scope
+    is open: an RDD another thread persists in that window is freed
+    with the scope's own.
+    """
+
+    def __init__(self, spark: SparkSession) -> None:
+        self._jsc = spark.sparkContext._jsc
+
+    def _ids(self) -> set[int]:
+        return set(self._jsc.getPersistentRDDs().keySet().toArray())
+
+    def checkpoint(self, df: DataFrame) -> tuple[DataFrame, set[int]]:
+        """``df.localCheckpoint()`` and the ids of the blocks it made."""
+        before = self._ids()
+        out = df.localCheckpoint()
+        return out, self._ids() - before
+
+    def free(self, ids: set[int]) -> None:
+        live = self._jsc.getPersistentRDDs()
+        for rid in ids:
+            rdd = live.get(rid)
+            if rdd is not None:
+                rdd.unpersist(False)
+
+    def __enter__(self) -> "BlockRelease":
+        self._before = self._ids()
+        return self
+
+    def __exit__(self, *exc) -> bool:
+        self.free(self._ids() - self._before)
+        return False

@@ -105,12 +105,12 @@ def _shingled(
         F.size("_toks") >= n, F.array_distinct(F.transform(idx, gram))
     ).otherwise(F.array().cast("array<string>"))
     out = toks.select("_id", shingles.alias("_sh"))
-    # persist=False is ONLY for a caller that neither explodes nor reuses
-    # this frame (none in-repo today — every current caller explodes it,
-    # and the round-5 A/B measured persist=False on the contamination
-    # audit at 70 s vs 2 s because an unpersisted explode re-evaluates
-    # the array expression per emitted element). The escape hatch stays
-    # for external single-read callers; default stays persisted.
+    # persist=False is for a caller that materializes this frame itself
+    # before exploding it: streaming/neardup_gate localCheckpoints it so
+    # each micro-batch frees its own blocks. An unpersisted explode
+    # re-evaluates the array expression per emitted element (the
+    # round-5 A/B measured the contamination audit at 70 s vs 2 s), so
+    # the default stays persisted.
     if not persist:
         return out
     # persisted: every other caller reuses this frame across joins/explodes,

@@ -57,6 +57,7 @@ from pyspark.sql import types as T
 
 from vacancy_gpt_etl_pipeline_spark.functions.json_parse import safe_json_parse_text
 from vacancy_gpt_etl_pipeline_spark.functions.scalars import non_empty
+from vacancy_gpt_etl_pipeline_spark.session import parse_size_bytes
 
 # 21-label title taxonomy (dag/vacancy_pipline_gpt_rerty.py:187-209).
 TITLE_TAXONOMY = (
@@ -253,21 +254,6 @@ def _process_chunk(
 _EST_CELL_BYTES = 64
 
 
-def _parse_size_bytes(value: str) -> int:
-    """``spark.sql.autoBroadcastJoinThreshold`` as bytes: plain ints are
-    bytes; `k`/`m`/`g` (optionally with `b`) suffixes as in Spark's
-    byte-string configs. ``-1``/``0`` mean broadcast disabled."""
-    s = value.strip().lower()
-    mult = 1
-    for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                      ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30),
-                      ("b", 1)):
-        if s.endswith(suffix):
-            s, mult = s[: -len(suffix)], m
-            break
-    return int(s) * mult
-
-
 def _mapping_fits_broadcast(spark: SparkSession, n_keys: int, n_cols: int) -> bool:
     """Whether the key→outputs mapping frame is safely broadcastable:
     ``n_keys × n_cols × ~64 B`` against the session's
@@ -277,7 +263,7 @@ def _mapping_fits_broadcast(spark: SparkSession, n_keys: int, n_cols: int) -> bo
     for. Threshold ≤ 0 (broadcast disabled) → shuffle join."""
     try:
         raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        threshold = _parse_size_bytes(raw)
+        threshold = parse_size_bytes(raw)
     except Exception:
         threshold = 10 << 20  # Spark's default 10 MB
     return threshold > 0 and n_keys * n_cols * _EST_CELL_BYTES <= threshold

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
+
 Merge = Tuple[str, str]
 
 # Ranked merge list (rank = position). Chosen to exercise the shapes a
@@ -712,10 +714,8 @@ def bpe_learn_merges_incremental(
     accumulates one cached RDD per round and per-round cost creeps
     linearly with block-manager pressure (measured +0.1 s/round per
     16 rounds). The loop therefore frees the PREVIOUS round's
-    checkpoint blocks through ``JavaSparkContext.getPersistentRDDs``,
-    diffing persistent-RDD ids around its own checkpoint calls — it
-    only ever unpersists ids it just created (single driver thread
-    assumed, as in any training loop)."""
+    checkpoint blocks through :class:`caching.BlockRelease`, which also
+    frees the live ones when the loop ends or fails."""
     SEP = _SQL_SEP
     words = docs.select(
         F.explode(
@@ -725,40 +725,22 @@ def bpe_learn_merges_incremental(
     wf = words.groupBy("word").agg(
         F.count(F.lit(1)).cast("bigint").alias("freq")
     )
-    jsc = docs.sparkSession.sparkContext._jsc
-
-    def _persistent_ids() -> set:
-        return set(jsc.getPersistentRDDs().keySet().toArray())
-
-    def _free(ids: set) -> None:
-        m = jsc.getPersistentRDDs()
-        for rid in ids:
-            rdd = m.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-
-    def _checkpoint(df: DataFrame) -> tuple[DataFrame, set]:
-        before = _persistent_ids()
-        out = df.localCheckpoint()
-        return out, _persistent_ids() - before
-
-    seg, seg_ids = _checkpoint(
-        wf.select(
-            F.expr(
-                "array_join(transform(sequence(1, length(word)), "
-                f"i -> concat('{SEP}', substring(word, i, 1), '{SEP}')), '')"
-            ).alias("seq"),
-            "freq",
-        )
-    )
-    pairs, pair_ids = _checkpoint(
-        _pair_frame(seg)
-        .groupBy("x", "y")
-        .agg(F.sum("freq").cast("bigint").alias("pair_count"))
-    )
-
     merges: list[tuple[str, str, int]] = []
-    try:
+    with BlockRelease(docs.sparkSession) as blocks:
+        seg, seg_ids = blocks.checkpoint(
+            wf.select(
+                F.expr(
+                    "array_join(transform(sequence(1, length(word)), i -> "
+                    f"concat('{SEP}', substring(word, i, 1), '{SEP}')), '')"
+                ).alias("seq"),
+                "freq",
+            )
+        )
+        pairs, pair_ids = blocks.checkpoint(
+            _pair_frame(seg)
+            .groupBy("x", "y")
+            .agg(F.sum("freq").cast("bigint").alias("pair_count"))
+        )
         for r in range(n_merges):
             best = (
                 pairs.orderBy(F.desc("pair_count"), "x", "y")
@@ -778,26 +760,22 @@ def bpe_learn_merges_incremental(
             delta = _pair_frame(rewritten).unionByName(
                 _pair_frame(affected, sign=-1)
             )
-            pairs, new_ids = _checkpoint(
+            pairs, new_ids = blocks.checkpoint(
                 pairs.select("x", "y", F.col("pair_count").alias("freq"))
                 .unionByName(delta)
                 .groupBy("x", "y")
                 .agg(F.sum("freq").cast("bigint").alias("pair_count"))
                 .where(F.col("pair_count") > 0)
             )
-            _free(pair_ids)
+            blocks.free(pair_ids)
             pair_ids = new_ids
             seg = seg.withColumn(
                 "seq", F.replace("seq", F.lit(pat), F.lit(rep))
             )
             if (r + 1) % checkpoint_every == 0:
-                seg, new_seg_ids = _checkpoint(seg)
-                _free(seg_ids)
+                seg, new_seg_ids = blocks.checkpoint(seg)
+                blocks.free(seg_ids)
                 seg_ids = new_seg_ids
-    finally:
-        # a failed job or interrupt must not strand the live blocks —
-        # the exact leak class the id-diff freeing exists to prevent
-        _free(pair_ids | seg_ids)
     return merges
 
 

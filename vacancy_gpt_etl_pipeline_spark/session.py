@@ -35,6 +35,15 @@ def default_driver_memory(phys_bytes: int | None = None) -> str:
     return f"{max(1, min(MAX_DRIVER_MEM_GB, (phys_bytes // 2) >> 30))}g"
 
 
+def parse_size_bytes(value: str) -> int:
+    """A Spark byte-string config as bytes: plain numbers are bytes;
+    ``k``/``m``/``g`` suffixes, optionally followed by ``b``, scale by
+    powers of 1024 (``"1.5g"``, ``"128MB"``). ``-1`` stays ``-1``."""
+    s = value.strip().lower().removesuffix("b")
+    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}.get(s[-1:])
+    return int(float(s[:-1]) * mult) if mult else int(float(s))
+
+
 def get_spark(
     app_name: str = "vacancy-gpt-etl-pipeline-spark",
     cpus: int | None = None,

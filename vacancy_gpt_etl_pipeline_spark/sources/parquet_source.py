@@ -14,7 +14,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vacancy_gpt_etl_pipeline_spark.schemas import TESTDATA_TABLES
-from vacancy_gpt_etl_pipeline_spark.session import configure_session
+from vacancy_gpt_etl_pipeline_spark.session import (
+    configure_session,
+    parse_size_bytes,
+)
 
 
 def widen_scan(
@@ -117,25 +120,6 @@ def _declared_partition_count(df: DataFrame) -> int | None:
         return None
 
 
-_SIZE_SUFFIXES = {
-    "b": 1,
-    "k": 1 << 10,
-    "kb": 1 << 10,
-    "m": 1 << 20,
-    "mb": 1 << 20,
-    "g": 1 << 30,
-    "gb": 1 << 30,
-}
-
-
-def _parse_bytes(value: str) -> int:
-    v = value.strip().lower()
-    for suffix in sorted(_SIZE_SUFFIXES, key=len, reverse=True):
-        if v.endswith(suffix):
-            return int(float(v[: -len(suffix)]) * _SIZE_SUFFIXES[suffix])
-    return int(float(v))
-
-
 def _estimate_scan_splits(spark: SparkSession, files: list[str]) -> int:
     """Upper-bound-ish estimate of how many splits a file scan yields,
     mirroring FilePartition.maxSplitBytes: split each file at
@@ -144,10 +128,10 @@ def _estimate_scan_splits(spark: SparkSession, files: list[str]) -> int:
     just file://); the call count is bounded by the caller's
     files < parallelism guard."""
     sc = spark.sparkContext
-    max_pb = _parse_bytes(
+    max_pb = parse_size_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB")
     )
-    open_cost = _parse_bytes(
+    open_cost = parse_size_bytes(
         spark.conf.get("spark.sql.files.openCostInBytes", "4MB")
     )
     hconf = sc._jsc.hadoopConfiguration()

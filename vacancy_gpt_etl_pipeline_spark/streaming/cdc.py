@@ -36,12 +36,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from vacancy_gpt_etl_pipeline_spark.operators.diff import snapshot_diff
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import BATCH_COL, drain
 from vacancy_gpt_etl_pipeline_spark.streaming.upsert import (
     _snapshot_ids,
     latest_snapshot,
 )
-
-BATCH_COL = "_batch_id"
 
 
 def _upsert(prev: DataFrame, batch: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -110,13 +109,7 @@ def write_stream_changelog(
         )
         new_state.write.mode("error").parquet(nxt)
 
-    (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint, _batch)
 
 
 def read_changelog(spark: SparkSession, changelog_path: str, key_cols: list[str]) -> DataFrame:

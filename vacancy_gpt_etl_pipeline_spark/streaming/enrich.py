@@ -39,8 +39,7 @@ from vacancy_gpt_etl_pipeline_spark.operators.enrichment import (
     Enricher,
     enrich_column,
 )
-
-from vacancy_gpt_etl_pipeline_spark.streaming.upsert import BATCH_COL
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import BATCH_COL, drain
 
 
 def write_stream_enriched(
@@ -67,10 +66,4 @@ def write_stream_enriched(
             .parquet(out_path)
         )
 
-    (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint, _batch)

@@ -21,13 +21,9 @@ index — so the state is the simplest of the family:
   ≤ 256 ints), and a fingerprint's full posting set lives in its one
   partition, so pruning is lossless for the exact gate.
 
-Delivery class mirrors streaming/phash_gate.py exactly: checkpointed
-micro-batches never replay; a retried batch overwrites its own
-``_batch_id`` output partition (dynamic partition overwrite) and
-excludes its own batch id from the index read, so either crash order
-(output-then-index or index-then-output) converges on retry. Retry
-duplicates within a committed batch id are harmless to the exact gate
-(anti-join semantics ignore multiplicity) and are collapsed by
+Delivery class: the family's commit protocol (streaming/gate.py).
+Retry duplicates within a committed batch id are harmless to the exact
+gate (anti-join semantics ignore multiplicity) and are collapsed by
 :func:`compact_fp_index`.
 """
 
@@ -39,7 +35,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vacancy_gpt_etl_pipeline_spark.streaming.upsert import BATCH_COL
+from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
+    BATCH_COL,
+    commit,
+    drain,
+    read_index,
+)
 
 
 def _index_schema(key_col: str) -> T.StructType:
@@ -51,22 +53,6 @@ def _index_schema(key_col: str) -> T.StructType:
             T.StructField("pb", T.IntegerType()),
         ]
     )
-
-
-def _read_or_empty(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """Persisted index or an empty schema frame before the first batch
-    commits. ONLY the missing-path case is caught — a corrupt index
-    must FAIL the batch (an empty history re-admits every duplicate)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], schema)
-        raise
 
 
 def apply_fp_gate_batch(
@@ -88,72 +74,29 @@ def apply_fp_gate_batch(
     record; payloads stay in the source) and their fingerprints append
     to the index."""
     spark = batch_df.sparkSession
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    # the fingerprint frame feeds the prune collect AND the gate — the
-    # checkpoint keeps the Arrow decode single-pass; blocks are freed
-    # by id-diffing getPersistentRDDs (the phash_gate pattern:
-    # unpersist() does not free localCheckpoint blocks)
-    fps = fingerprinter(batch_df).localCheckpoint()
     pb_expr = F.pmod(F.xxhash64(F.col(key_col)), F.lit(256)).cast("int")
-    pbs = [
-        r["pb"]
-        for r in fps.where(F.col(key_col).isNotNull())
-        .select(pb_expr.alias("pb"))
-        .distinct()
-        .collect()
-    ]
-    idx = _read_or_empty(spark, index_path, _index_schema(key_col))
-    idx = idx.where(F.col("pb").isin(pbs) if pbs else F.lit(False))
-    hist = idx.where(F.col(BATCH_COL) != F.lit(batch_id))
-    survivors = gate(fps, hist).localCheckpoint()
-    new_ids = set(jsc.getPersistentRDDs().keySet().toArray()) - before
-
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.withColumn(BATCH_COL, F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .partitionBy(BATCH_COL)
-            .parquet(out_path)
+    with BlockRelease(spark):
+        # the fingerprint frame feeds the prune collect AND the gate —
+        # the checkpoint keeps the Arrow decode single-pass
+        fps = fingerprinter(batch_df).localCheckpoint()
+        pbs = [
+            r["pb"]
+            for r in fps.where(F.col(key_col).isNotNull())
+            .select(pb_expr.alias("pb"))
+            .distinct()
+            .collect()
+        ]
+        idx = read_index(spark, index_path, _index_schema(key_col))
+        idx = idx.where(F.col("pb").isin(pbs) if pbs else F.lit(False))
+        hist = idx.where(F.col(BATCH_COL) != F.lit(batch_id))
+        survivors = gate(fps, hist).localCheckpoint()
+        index = survivors.select(
+            key_col,
+            "asset_id",
+            F.lit(batch_id).cast("long").alias(BATCH_COL),
+            pb_expr.alias("pb"),
         )
-        (
-            survivors.select(
-                key_col,
-                "asset_id",
-                F.lit(batch_id).cast("long").alias(BATCH_COL),
-                pb_expr.alias("pb"),
-            )
-            .write.mode("append")
-            .partitionBy("pb")
-            .parquet(index_path)
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-        m = jsc.getPersistentRDDs()
-        for rid in new_ids:
-            rdd = m.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-
-
-def _drain(
-    stream: DataFrame,
-    checkpoint: str,
-    batch_fn: Callable[[DataFrame, int], None],
-) -> None:
-    (
-        stream.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+        commit(survivors, batch_id, out_path, (index, index_path, ("pb",)))
 
 
 def write_stream_audio_fp_gate(
@@ -182,7 +125,7 @@ def write_stream_audio_fp_gate(
             "fingerprint",
         )
 
-    _drain(stream, checkpoint, _batch)
+    drain(stream, checkpoint, _batch)
 
 
 def write_stream_video_fp_gate(
@@ -210,7 +153,7 @@ def write_stream_video_fp_gate(
             "video_fp",
         )
 
-    _drain(stream, checkpoint, _batch)
+    drain(stream, checkpoint, _batch)
 
 
 def compact_fp_index(
@@ -225,7 +168,7 @@ def compact_fp_index(
     MAX batch id so own-batch exclusion can never re-fire for
     checkpoint-committed batches."""
     (
-        _read_or_empty(spark, index_path, _index_schema(key_col))
+        read_index(spark, index_path, _index_schema(key_col))
         .groupBy("pb", key_col)
         .agg(
             F.min("asset_id").alias("asset_id"),

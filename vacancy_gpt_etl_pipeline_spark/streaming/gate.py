@@ -1,0 +1,111 @@
+"""The micro-batch commit protocol shared by the streaming dedup gates
+(streaming/{fp,phash,semdedup,seq_near,neardup}_gate.py) and the
+``foreachBatch`` drain every streaming sink here runs through.
+
+Each gate reads its persisted index (:func:`read_index`), prunes it to
+the partitions the batch can touch, runs the BATCH operator verbatim
+against that history, and hands the survivors to :func:`commit`.
+
+Delivery class (exactly-once EFFECTIVE output): a committed
+micro-batch is never replayed (checkpoint), so re-running over an
+unchanged source writes nothing. Within a failed-and-retried batch
+both sinks are idempotent BY KEY rather than append-only:
+
+- survivors overwrite their own ``_batch_id=N`` partition of
+  ``out_path`` (dynamic partition overwrite), so a retry replaces its
+  earlier partial output instead of duplicating it;
+- index rows carry ``_batch_id`` and every gate EXCLUDES the current
+  batch id from its history read, so a retry that crashed after a
+  partial (or complete) index append re-derives the identical
+  survivor set — its own half-written rows can never veto it — and
+  its re-append only duplicates rows within the same batch id, which
+  the gates' distinct/groupBy collapse and their ``compact_*``
+  functions remove.
+
+Either failure order (output-then-index or index-then-output)
+therefore converges to the same final state on retry.
+"""
+
+from __future__ import annotations
+
+from typing import Callable, Sequence
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+BATCH_COL = "_batch_id"
+
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+#: read errors that mean "no history yet": the path is missing, or a
+#: crash left a directory with no data files (UNABLE_TO_INFER_SCHEMA)
+_NO_HISTORY = (
+    "PATH_NOT_FOUND",
+    "Path does not exist",
+    "UNABLE_TO_INFER_SCHEMA",
+)
+
+
+def read_index(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame | None:
+    """The persisted table at ``path``; with no history yet, an empty
+    frame of ``schema`` (or None when no schema is given). Only the
+    no-history cases are caught — a corrupt or unreadable index must
+    FAIL the batch (gating against a silently-empty history would
+    re-admit every duplicate ever ingested)."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if not any(tag in str(e) for tag in _NO_HISTORY):
+            raise
+    return None if schema is None else spark.createDataFrame([], schema)
+
+
+def commit(
+    survivors: DataFrame,
+    batch_id: int,
+    out_path: str,
+    *index: tuple[DataFrame, str, Sequence[str]],
+) -> None:
+    """Write ``survivors`` to this batch's ``_batch_id`` partition of
+    ``out_path`` (dynamic partition overwrite, so a retry replaces its
+    own partial output), then append each ``(rows, path,
+    partition_cols)`` index write, in order. The session's overwrite
+    mode is restored afterwards."""
+    spark = survivors.sparkSession
+    prev_mode = spark.conf.get(_OVERWRITE_MODE, "static")
+    spark.conf.set(_OVERWRITE_MODE, "dynamic")
+    try:
+        (
+            survivors.withColumn(BATCH_COL, F.lit(batch_id).cast("long"))
+            .write.mode("overwrite")
+            .partitionBy(BATCH_COL)
+            .parquet(out_path)
+        )
+        for rows, path, partition_cols in index:
+            rows.write.mode("append").partitionBy(*partition_cols).parquet(
+                path
+            )
+    finally:
+        spark.conf.set(_OVERWRITE_MODE, prev_mode)
+
+
+def drain(
+    stream: DataFrame,
+    checkpoint: str,
+    batch_fn: Callable[[DataFrame, int], None],
+) -> None:
+    """Run ``batch_fn(batch_df, batch_id)`` over every micro-batch of
+    ``stream`` not yet committed to ``checkpoint`` (AvailableNow), and
+    return when the stream is drained."""
+    (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )

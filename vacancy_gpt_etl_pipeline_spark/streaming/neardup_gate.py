@@ -60,12 +60,8 @@ the MinHash-banded gate family (``dedup_minhash_lsh`` /
 ``neardup_incr``) — signatures trade exact raw Jaccard for bounded
 reads; this gate intentionally keeps exactness.
 
-Delivery class mirrors streaming/phash_gate.py exactly: checkpointed
-micro-batches never replay; within a failed-and-retried batch, output
-overwrites its own ``_batch_id`` partition (dynamic partition
-overwrite) and the gate excludes its own batch id from both index
-reads, so either crash order (output-then-index or index-then-output)
-converges to the same final state on retry.
+Delivery class: the family's commit protocol (streaming/gate.py); the
+gate excludes its own batch id from both index reads.
 """
 
 from __future__ import annotations
@@ -74,11 +70,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
 from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
     _shingled,
     content_hash_col,
 )
-from vacancy_gpt_etl_pipeline_spark.streaming.upsert import BATCH_COL
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
+    BATCH_COL,
+    commit,
+    drain,
+    read_index,
+)
 
 HASH_INDEX_SCHEMA = T.StructType(
     [
@@ -98,22 +100,6 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("pb", T.IntegerType()),
     ]
 )
-
-
-def _read_or_empty(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """Persisted index or an empty schema frame before the first batch
-    commits. ONLY the missing-path case is caught — a corrupt index
-    must FAIL the batch (an empty history re-admits every duplicate)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], schema)
-        raise
 
 
 def _pruned(
@@ -136,7 +122,8 @@ def _shingle_postings(docs: DataFrame, n: int) -> DataFrame:
     default ``.persist()``: the checkpoint both materializes the array
     before the explode (the re-evaluation hazard the default persist
     guards against) and keeps the block in the caller's
-    getPersistentRDDs diff so each micro-batch frees its own state —
+    :class:`caching.BlockRelease` scope so each micro-batch frees its
+    own state —
     an untracked ``.persist()`` per batch would pile up across a long
     drain."""
     sh = _shingled(
@@ -172,146 +159,121 @@ def apply_neardup_gate_batch(
     near-matching history at ``jaccard >= threshold``) land in this
     batch's partition of ``out_path`` and both indexes."""
     spark = batch_df.sparkSession
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    hashed = batch_df.withColumn(
-        "content_hash", content_hash_col("text", normalize)
-    )
-    # keep-first within batch (the incremental_dedup contract), then
-    # checkpoint: the frame feeds the prefix collect, the exact gate,
-    # and the shingle stage
-    w = Window.partitionBy("content_hash").orderBy(F.asc("doc_id"))
-    fresh = (
-        hashed.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-        .localCheckpoint()
-    )
-    # exact gate against the pruned hash index (prefix collect is
-    # metadata-sized: ≤ 256 distinct 2-hex-char values)
-    hash_pbs = [
-        r["pb"]
-        for r in fresh.select(
-            F.substring("content_hash", 1, 2).alias("pb")
+    with BlockRelease(spark):
+        hashed = batch_df.withColumn(
+            "content_hash", content_hash_col("text", normalize)
         )
-        .distinct()
-        .collect()
-    ]
-    seen = _pruned(
-        _read_or_empty(spark, hash_index_path, HASH_INDEX_SCHEMA),
-        hash_pbs,
-        batch_id,
-    ).select("content_hash")
-    exact = fresh.join(seen, "content_hash", "left_anti").localCheckpoint()
+        # keep-first within batch (the incremental_dedup contract), then
+        # checkpoint: the frame feeds the prefix collect, the exact gate,
+        # and the shingle stage
+        w = Window.partitionBy("content_hash").orderBy(F.asc("doc_id"))
+        fresh = (
+            hashed.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rn")
+            .localCheckpoint()
+        )
+        # exact gate against the pruned hash index (prefix collect is
+        # metadata-sized: ≤ 256 distinct 2-hex-char values)
+        hash_pbs = [
+            r["pb"]
+            for r in fresh.select(
+                F.substring("content_hash", 1, 2).alias("pb")
+            )
+            .distinct()
+            .collect()
+        ]
+        seen = _pruned(
+            read_index(spark, hash_index_path, HASH_INDEX_SCHEMA),
+            hash_pbs,
+            batch_id,
+        ).select("content_hash")
+        exact = fresh.join(seen, "content_hash", "left_anti").localCheckpoint()
 
-    # near gate: batch shingles vs pruned postings, raw Jaccard
-    bsh = _shingle_postings(exact, n).localCheckpoint()
-    post_pbs = [
-        r["pb"] for r in bsh.select("pb").distinct().collect()
-    ]
-    hist = _pruned(
-        _read_or_empty(spark, postings_index_path, POSTINGS_SCHEMA),
-        post_pbs,
-        batch_id,
-    )
-    # A retried-then-committed EARLIER batch leaves duplicate
-    # (s_hash, doc_id) rows in the append-mode index until compaction;
-    # the intersection count below is row-based, so without this
-    # dedupe a later batch would double-count shared shingles
-    # (Jaccard > true value, possibly > 1) and falsely drop docs.
-    # (s_hash, doc_id) is unique per logical posting; n_sh is constant
-    # per doc so any surviving row's value is correct.
-    hist = hist.dropDuplicates(["s_hash", "doc_id"])
-    # fan-out cap: a shingle's history posting list is fully contained
-    # in its partition, so the df count under pruning is EXACT
-    # (counted AFTER the dedupe, so the cap sees distinct docs)
-    fan_w = Window.partitionBy("s_hash")
-    hist = (
-        hist.withColumn("_df", F.count(F.lit(1)).over(fan_w))
-        .where(F.col("_df") <= max_shingle_fanout)
-        .drop("_df")
-    )
-    inter = (
-        bsh.select("s_hash", F.col("doc_id").alias("_bid"), "n_sh")
-        .join(
-            hist.select(
+        # near gate: batch shingles vs pruned postings, raw Jaccard
+        bsh = _shingle_postings(exact, n).localCheckpoint()
+        post_pbs = [
+            r["pb"] for r in bsh.select("pb").distinct().collect()
+        ]
+        hist = _pruned(
+            read_index(spark, postings_index_path, POSTINGS_SCHEMA),
+            post_pbs,
+            batch_id,
+        )
+        # A retried-then-committed EARLIER batch leaves duplicate
+        # (s_hash, doc_id) rows in the append-mode index until compaction;
+        # the intersection count below is row-based, so without this
+        # dedupe a later batch would double-count shared shingles
+        # (Jaccard > true value, possibly > 1) and falsely drop docs.
+        # (s_hash, doc_id) is unique per logical posting; n_sh is constant
+        # per doc so any surviving row's value is correct.
+        hist = hist.dropDuplicates(["s_hash", "doc_id"])
+        # fan-out cap: a shingle's history posting list is fully contained
+        # in its partition, so the df count under pruning is EXACT
+        # (counted AFTER the dedupe, so the cap sees distinct docs)
+        fan_w = Window.partitionBy("s_hash")
+        hist = (
+            hist.withColumn("_df", F.count(F.lit(1)).over(fan_w))
+            .where(F.col("_df") <= max_shingle_fanout)
+            .drop("_df")
+        )
+        inter = (
+            bsh.select("s_hash", F.col("doc_id").alias("_bid"), "n_sh")
+            .join(
+                hist.select(
+                    "s_hash",
+                    F.col("doc_id").alias("_hid"),
+                    F.col("n_sh").alias("_nh"),
+                ),
                 "s_hash",
-                F.col("doc_id").alias("_hid"),
-                F.col("n_sh").alias("_nh"),
-            ),
+            )
+            .groupBy("_bid", "_hid")
+            .agg(
+                F.count(F.lit(1)).alias("_inter"),
+                F.first("n_sh").alias("_nb"),
+                F.first("_nh").alias("_nh"),
+            )
+        )
+        near_dropped = (
+            inter.withColumn(
+                "jaccard",
+                F.round(
+                    F.col("_inter")
+                    / (F.col("_nb") + F.col("_nh") - F.col("_inter")),
+                    6,
+                ),
+            )
+            .where(F.col("jaccard") >= threshold)
+            .select(F.col("_bid").alias("doc_id"))
+            .distinct()
+        )
+        survivors = exact.join(
+            near_dropped, "doc_id", "left_anti"
+        ).localCheckpoint()
+        hash_index = survivors.select(
+            "content_hash",
+            "doc_id",
+            F.lit(batch_id).cast("long").alias(BATCH_COL),
+            F.substring("content_hash", 1, 2).alias("pb"),
+        )
+        # reuse the batch's checkpointed postings — survivors are a
+        # subset of the exact-fresh frame bsh was built from
+        postings = bsh.join(
+            survivors.select("doc_id"), "doc_id", "left_semi"
+        ).select(
             "s_hash",
+            "doc_id",
+            "n_sh",
+            F.lit(batch_id).cast("long").alias(BATCH_COL),
+            "pb",
         )
-        .groupBy("_bid", "_hid")
-        .agg(
-            F.count(F.lit(1)).alias("_inter"),
-            F.first("n_sh").alias("_nb"),
-            F.first("_nh").alias("_nh"),
+        commit(
+            survivors,
+            batch_id,
+            out_path,
+            (hash_index, hash_index_path, ("pb",)),
+            (postings, postings_index_path, ("pb",)),
         )
-    )
-    near_dropped = (
-        inter.withColumn(
-            "jaccard",
-            F.round(
-                F.col("_inter")
-                / (F.col("_nb") + F.col("_nh") - F.col("_inter")),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select(F.col("_bid").alias("doc_id"))
-        .distinct()
-    )
-    survivors = exact.join(
-        near_dropped, "doc_id", "left_anti"
-    ).localCheckpoint()
-    new_ids = set(jsc.getPersistentRDDs().keySet().toArray()) - before
-
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.withColumn(BATCH_COL, F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .partitionBy(BATCH_COL)
-            .parquet(out_path)
-        )
-        (
-            survivors.select(
-                "content_hash",
-                "doc_id",
-                F.lit(batch_id).cast("long").alias(BATCH_COL),
-                F.substring("content_hash", 1, 2).alias("pb"),
-            )
-            .write.mode("append")
-            .partitionBy("pb")
-            .parquet(hash_index_path)
-        )
-        (
-            # reuse the batch's checkpointed postings — survivors are a
-            # subset of the exact-fresh frame bsh was built from
-            bsh.join(survivors.select("doc_id"), "doc_id", "left_semi")
-            .select(
-                "s_hash",
-                "doc_id",
-                "n_sh",
-                F.lit(batch_id).cast("long").alias(BATCH_COL),
-                "pb",
-            )
-            .write.mode("append")
-            .partitionBy("pb")
-            .parquet(postings_index_path)
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-        m = jsc.getPersistentRDDs()
-        for rid in new_ids:
-            rdd = m.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
 
 
 def write_stream_neardup_gate(
@@ -344,13 +306,7 @@ def write_stream_neardup_gate(
             normalize=normalize,
         )
 
-    (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint, _batch)
 
 
 def compact_neardup_indexes(
@@ -369,7 +325,7 @@ def compact_neardup_indexes(
     history document stays a distinct near-gate candidate; ``n_sh`` is
     constant per document so any contributing row's value is correct."""
     (
-        _read_or_empty(spark, hash_index_path, HASH_INDEX_SCHEMA)
+        read_index(spark, hash_index_path, HASH_INDEX_SCHEMA)
         .groupBy("pb", "content_hash")
         .agg(
             F.min("doc_id").alias("doc_id"),
@@ -381,7 +337,7 @@ def compact_neardup_indexes(
         .parquet(hash_dest)
     )
     (
-        _read_or_empty(spark, postings_index_path, POSTINGS_SCHEMA)
+        read_index(spark, postings_index_path, POSTINGS_SCHEMA)
         .groupBy("pb", "s_hash", "doc_id")
         .agg(
             F.first("n_sh").alias("n_sh"),

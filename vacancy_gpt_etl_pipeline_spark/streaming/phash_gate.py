@@ -27,24 +27,9 @@ the batch's working set instead of the whole table. The candidate
 pair list is collected driver-side but is metadata-sized by
 construction: at most 4 bands x 256 prefixes = 1024 values.
 
-Delivery class (r12 advice — exactly-once EFFECTIVE output): a
-committed micro-batch is never replayed (checkpoint), so re-running
-over an unchanged source writes nothing. Within a failed-and-retried
-batch both sinks are idempotent BY KEY rather than append-only:
-
-- survivors overwrite their own ``_batch_id=N`` partition of
-  ``out_path`` (dynamic partition overwrite), so a retry replaces its
-  earlier partial output instead of duplicating it;
-- index rows carry ``_batch_id`` and the gate EXCLUDES the current
-  batch id from its history read, so a retry that crashed after a
-  partial (or complete) index append re-derives the identical
-  survivor set — its own half-written fingerprints can never veto it
-  — and its re-append only duplicates rows within the same batch id,
-  which the gate's distinct/groupBy collapse makes harmless.
-
-Either failure order (output-then-index or index-then-output) therefore
-converges to the same final state on retry; compaction of a long-lived
-index stays the log-compaction pattern of streaming/upsert.py.
+Delivery class: the family's commit protocol (streaming/gate.py);
+:func:`compact_phash_index` is the log-compaction of a long-lived
+index (the streaming/upsert.py pattern).
 """
 
 from __future__ import annotations
@@ -53,11 +38,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
 from vacancy_gpt_etl_pipeline_spark.operators.phash import (
     phash_bmp,
     phash_incremental,
 )
-from vacancy_gpt_etl_pipeline_spark.streaming.upsert import BATCH_COL
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
+    BATCH_COL,
+    commit,
+    drain,
+    read_index,
+)
 
 #: On-disk index row schema (band-exploded; ``band_idx``/``pb`` are the
 #: partition columns and come back as int columns on read).
@@ -114,22 +105,6 @@ def index_rows(hashes: DataFrame, batch_id: int) -> DataFrame:
     )
 
 
-def _read_index(spark: SparkSession, index_path: str) -> DataFrame:
-    """The persisted fingerprint index (band-exploded rows), or an
-    empty frame with the index schema before the first batch commits.
-    ONLY the missing-path case is caught — a corrupt or unreadable
-    index must FAIL the batch (gating against a silently-empty history
-    would re-admit every duplicate ever ingested)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(index_path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], INDEX_SCHEMA)
-        raise
-
-
 def batch_band_pairs(hashes: DataFrame) -> list[tuple[int, int]]:
     """Distinct ``(band_idx, pb)`` pairs a batch can touch. The collect
     is metadata-sized by construction: ≤ 4 bands × 256 prefixes = 1024
@@ -162,7 +137,7 @@ def read_index_fingerprints(
     ``exclude_batch_id`` removes the current batch's own (possibly
     partial) appends from a previous failed attempt — the retry
     idempotence contract."""
-    idx = _read_index(spark, index_path)
+    idx = read_index(spark, index_path, INDEX_SCHEMA)
     if pairs is not None:
         by_band: dict[int, list[int]] = {}
         for band_idx, pb in pairs:
@@ -197,56 +172,27 @@ def apply_phash_gate_batch(
     (tests/test_streaming_phash.py replays the same batch id twice and
     simulates the index-written/output-lost crash order)."""
     spark = batch_df.sparkSession
-    hashes = phash_bmp(batch_df)
-    # localCheckpoint severs lineage: both sinks below reuse the
-    # materialized survivors, and the index append must not re-read
-    # the index being written. DataFrame.unpersist() does NOT free
-    # localCheckpoint blocks — release them by id-diffing
-    # getPersistentRDDs (the operators/tokenize.py trainer pattern),
-    # or a long drain strands one pinned RDD per micro-batch.
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    # hashes feeds two consumers (the pair collect and the gate) — the
-    # checkpoint keeps the Arrow BMP decode single-pass
-    hashes = hashes.localCheckpoint()
-    hist = read_index_fingerprints(
-        spark,
-        index_path,
-        pairs=batch_band_pairs(hashes),
-        exclude_batch_id=batch_id,
-    )
-    survivors = phash_incremental(
-        hashes, hist, max_hamming=max_hamming, max_bucket=max_bucket
-    ).localCheckpoint()
-    new_ids = set(jsc.getPersistentRDDs().keySet().toArray()) - before
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.withColumn(
-                BATCH_COL, F.lit(batch_id).cast("long")
-            )
-            .write.mode("overwrite")
-            .partitionBy(BATCH_COL)
-            .parquet(out_path)
+    # localCheckpoint severs lineage: both sinks reuse the materialized
+    # survivors, and the index append must not re-read the index being
+    # written. hashes feeds two consumers (the pair collect and the
+    # gate) — the checkpoint keeps the Arrow BMP decode single-pass.
+    with BlockRelease(spark):
+        hashes = phash_bmp(batch_df).localCheckpoint()
+        hist = read_index_fingerprints(
+            spark,
+            index_path,
+            pairs=batch_band_pairs(hashes),
+            exclude_batch_id=batch_id,
         )
-        (
-            index_rows(survivors, batch_id)
-            .write.mode("append")
-            .partitionBy("band_idx", "pb")
-            .parquet(index_path)
+        survivors = phash_incremental(
+            hashes, hist, max_hamming=max_hamming, max_bucket=max_bucket
+        ).localCheckpoint()
+        commit(
+            survivors,
+            batch_id,
+            out_path,
+            (index_rows(survivors, batch_id), index_path, ("band_idx", "pb")),
         )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-        m = jsc.getPersistentRDDs()
-        for rid in new_ids:
-            rdd = m.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
 
 
 def write_stream_phash_gate(
@@ -274,13 +220,7 @@ def write_stream_phash_gate(
             max_bucket=max_bucket,
         )
 
-    (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint, _batch)
 
 
 def compact_phash_index(
@@ -300,7 +240,7 @@ def compact_phash_index(
     time those batches are checkpoint-committed, so own-batch exclusion
     can never re-fire for them."""
     (
-        _read_index(spark, index_path)
+        read_index(spark, index_path, INDEX_SCHEMA)
         .groupBy("band_idx", "pb", "band_val", "b0", "b1", "b2", "b3")
         .agg(
             F.min("asset_id").alias("asset_id"),

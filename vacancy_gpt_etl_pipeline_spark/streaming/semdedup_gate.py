@@ -17,46 +17,30 @@ State is TWO persisted tables:
   (the cell list is a metadata-sized collect, ≤ C values). Same
   pruned-read layout as the band/prefix indexes of the other gates.
 
-Delivery class matches the other two gates exactly: checkpointed
-micro-batches never replay; survivors overwrite their own
-``_batch_id`` partition of ``out_path`` (dynamic partition
-overwrite); index rows carry ``_batch_id`` and the gate excludes its
-own batch id from history reads — either crash order of a retried
-batch converges. Within-batch near-duplicates both survive (history
-is the only veto — the incremental-family contract that makes retries
-order-independent).
+Delivery class: the family's commit protocol (streaming/gate.py). A
+crash mid-bootstrap leaves a file-less centroid directory, which
+:func:`gate.read_index` reads as missing, so the retry re-bootstraps.
+Within-batch near-duplicates both survive (history is the only veto —
+the incremental-family contract that makes retries order-independent).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
 from vacancy_gpt_etl_pipeline_spark.operators.similarity import (
+    ivf_assign,
     sampled_centroids,
     semdedup_incremental,
 )
-from vacancy_gpt_etl_pipeline_spark.streaming.upsert import BATCH_COL
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read a parquet table, or None when it does not exist yet. A
-    crash mid-bootstrap can leave a file-less directory — the
-    UNABLE_TO_INFER_SCHEMA case is treated as missing so the retry
-    re-bootstraps; any other failure must fail the batch."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        msg = str(e)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-        ):
-            return None
-        raise
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
+    BATCH_COL,
+    commit,
+    drain,
+    read_index,
+)
 
 
 def apply_semdedup_gate_batch(
@@ -75,79 +59,50 @@ def apply_semdedup_gate_batch(
     function for retry-idempotence tests. ``batch_df`` is
     ``(vec_id, embedding array<double>)``."""
     spark = batch_df.sparkSession
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    batch = batch_df.localCheckpoint()
-    cents = _read_or_none(spark, centroids_path)
-    if cents is None:
-        # deterministic bootstrap: a retried first batch rewrites the
-        # identical table (stride sample of the same rows)
-        sampled_centroids(batch, n_centroids, stride).write.mode(
-            "overwrite"
-        ).parquet(centroids_path)
-        cents = spark.read.parquet(centroids_path)
-    # the gate needs history only in the batch's own cells — collect
-    # the cell list (≤ n_centroids values) and prune the index read
-    from vacancy_gpt_etl_pipeline_spark.operators.similarity import (
-        ivf_assign,
-    )
-
-    assigned = ivf_assign(batch, cents, dim=dim).localCheckpoint()
-    cells = [r["cell"] for r in assigned.select("cell").distinct().collect()]
-    idx = _read_or_none(spark, index_path)
-    if idx is None:
-        hist_assigned = assigned.where(F.lit(False)).select(
-            "cell", "vec_id", "embedding"
+    with BlockRelease(spark):
+        batch = batch_df.localCheckpoint()
+        cents = read_index(spark, centroids_path)
+        if cents is None:
+            # deterministic bootstrap: a retried first batch rewrites the
+            # identical table (stride sample of the same rows)
+            sampled_centroids(batch, n_centroids, stride).write.mode(
+                "overwrite"
+            ).parquet(centroids_path)
+            cents = spark.read.parquet(centroids_path)
+        # the gate needs history only in the batch's own cells — collect
+        # the cell list (≤ n_centroids values) and prune the index read
+        assigned = ivf_assign(batch, cents, dim=dim).localCheckpoint()
+        cells = [
+            r["cell"] for r in assigned.select("cell").distinct().collect()
+        ]
+        idx = read_index(spark, index_path)
+        if idx is None:
+            hist_assigned = assigned.where(F.lit(False))
+        else:
+            hist_assigned = idx.where(
+                F.col("cell").isin(cells) if cells else F.lit(False)
+            ).where(F.col(BATCH_COL) != F.lit(batch_id))
+        survivors = semdedup_incremental(
+            batch,
+            history=None,
+            centroids=cents,
+            threshold=threshold,
+            dim=dim,
+            max_cell=max_cell,
+            history_assigned=hist_assigned.select(
+                "cell", "vec_id", "embedding"
+            ),
+            batch_assigned=assigned,
+        ).localCheckpoint()
+        index = survivors.join(
+            assigned.select("vec_id", "embedding"), "vec_id"
+        ).select(
+            "vec_id",
+            "embedding",
+            F.lit(batch_id).cast("long").alias(BATCH_COL),
+            "cell",
         )
-    else:
-        hist_assigned = (
-            idx.where(F.col("cell").isin(cells) if cells else F.lit(False))
-            .where(F.col(BATCH_COL) != F.lit(batch_id))
-            .select("cell", "vec_id", "embedding")
-        )
-    survivors = semdedup_incremental(
-        batch,
-        history=None,
-        centroids=cents,
-        threshold=threshold,
-        dim=dim,
-        max_cell=max_cell,
-        history_assigned=hist_assigned,
-        batch_assigned=assigned,
-    ).localCheckpoint()
-    new_ids = set(jsc.getPersistentRDDs().keySet().toArray()) - before
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.withColumn(BATCH_COL, F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .partitionBy(BATCH_COL)
-            .parquet(out_path)
-        )
-        (
-            survivors.join(assigned.select("vec_id", "embedding"), "vec_id")
-            .select(
-                "vec_id",
-                "embedding",
-                F.lit(batch_id).cast("long").alias(BATCH_COL),
-                "cell",
-            )
-            .write.mode("append")
-            .partitionBy("cell")
-            .parquet(index_path)
-        )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-        m = jsc.getPersistentRDDs()
-        for rid in new_ids:
-            rdd = m.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
+        commit(survivors, batch_id, out_path, (index, index_path, ("cell",)))
 
 
 def write_stream_semdedup_gate(
@@ -181,10 +136,4 @@ def write_stream_semdedup_gate(
             max_cell=max_cell,
         )
 
-    (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint, _batch)

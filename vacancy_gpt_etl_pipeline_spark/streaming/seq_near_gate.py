@@ -23,12 +23,7 @@ the pigeonhole band-sharing guarantee. A micro-batch therefore reads
 only the ≤ ``n_bands × 256`` (band_idx, pb) partitions its own band
 values hash into — the working set, not the corpus.
 
-Delivery class is the family's (phash_gate docstring): checkpointed
-micro-batches never replay; within a retried batch the survivor sink
-overwrites its own ``_batch_id`` partition (dynamic partition
-overwrite) and the index read excludes the current batch id, so both
-crash orders converge. localCheckpoint blocks are freed by id-diffing
-getPersistentRDDs (unpersist() does not free them).
+Delivery class: the family's commit protocol (streaming/gate.py).
 """
 
 from __future__ import annotations
@@ -39,8 +34,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
 from vacancy_gpt_etl_pipeline_spark.operators.dedup import seq_near_veto
-from vacancy_gpt_etl_pipeline_spark.streaming.upsert import BATCH_COL
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
+    BATCH_COL,
+    commit,
+    drain,
+    read_index,
+)
 
 SEQ_COL = "seq"
 
@@ -106,21 +107,6 @@ def index_rows(
     )
 
 
-def _read_index(spark: SparkSession, index_path: str) -> DataFrame:
-    """The persisted index, or an empty typed frame before the first
-    commit. Only the missing-path case is caught — a corrupt index
-    must FAIL the batch (a silently-empty history re-admits every
-    duplicate ever ingested)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(index_path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return spark.createDataFrame([], INDEX_SCHEMA)
-        raise
-
-
 def batch_band_pairs(
     seqs: DataFrame, n_bands: int = 3, sep: str = "-"
 ) -> list[tuple[int, int]]:
@@ -149,7 +135,7 @@ def read_index_sequences(
     exactly or within the near threshold shares a non-empty band
     value (and its length) with it. ``exclude_batch_id`` removes the
     current batch's own partial appends — the retry contract."""
-    idx = _read_index(spark, index_path)
+    idx = read_index(spark, index_path, INDEX_SCHEMA)
     if pairs is not None:
         by_band: dict[int, list[int]] = {}
         for band_idx, pb in pairs:
@@ -189,51 +175,30 @@ def apply_seq_near_gate_batch(
     plain function so retry idempotence is testable without a
     streaming harness."""
     spark = batch_df.sparkSession
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    seqs = fingerprinter(batch_df).localCheckpoint()
-    hist = read_index_sequences(
-        spark,
-        index_path,
-        pairs=batch_band_pairs(seqs, n_bands=n_bands),
-        exclude_batch_id=batch_id,
-    )
-    survivors = seq_near_veto(
-        seqs,
-        hist,
-        SEQ_COL,
-        "asset_id",
-        max_diff=max_diff,
-        n_bands=n_bands,
-        max_bucket=max_bucket,
-    ).localCheckpoint()
-    new_ids = set(jsc.getPersistentRDDs().keySet().toArray()) - before
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            survivors.withColumn(BATCH_COL, F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .partitionBy(BATCH_COL)
-            .parquet(out_path)
+    with BlockRelease(spark):
+        seqs = fingerprinter(batch_df).localCheckpoint()
+        hist = read_index_sequences(
+            spark,
+            index_path,
+            pairs=batch_band_pairs(seqs, n_bands=n_bands),
+            exclude_batch_id=batch_id,
         )
-        (
-            index_rows(survivors, batch_id, n_bands=n_bands)
-            .write.mode("append")
-            .partitionBy("band_idx", "pb")
-            .parquet(index_path)
+        survivors = seq_near_veto(
+            seqs,
+            hist,
+            SEQ_COL,
+            "asset_id",
+            max_diff=max_diff,
+            n_bands=n_bands,
+            max_bucket=max_bucket,
+        ).localCheckpoint()
+        index = index_rows(survivors, batch_id, n_bands=n_bands)
+        commit(
+            survivors,
+            batch_id,
+            out_path,
+            (index, index_path, ("band_idx", "pb")),
         )
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-        m = jsc.getPersistentRDDs()
-        for rid in new_ids:
-            rdd = m.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
 
 
 def write_stream_seq_near_gate(
@@ -262,13 +227,7 @@ def write_stream_seq_near_gate(
             max_bucket=max_bucket,
         )
 
-    (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint, _batch)
 
 
 def audio_fingerprinter(batch_df: DataFrame) -> DataFrame:
@@ -306,7 +265,7 @@ def compact_seq_near_index(
     per (asset_id, band_idx, band_val), keeping the smallest batch id
     — decisions are preserved because the gate only reads the
     sequence set."""
-    idx = _read_index(spark, index_path)
+    idx = read_index(spark, index_path, INDEX_SCHEMA)
     (
         idx.groupBy("asset_id", SEQ_COL, "band_val", "band_idx", "pb")
         .agg(F.min(BATCH_COL).alias(BATCH_COL))

@@ -28,7 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-BATCH_COL = "_batch_id"
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import BATCH_COL, drain
 
 
 def write_stream_upsert_log(
@@ -46,13 +46,7 @@ def write_stream_upsert_log(
             .parquet(log_path)
         )
 
-    (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint, _append)
 
 
 def read_upserted(
