@@ -1,8 +1,10 @@
 """Local oracle attestation: run EVERY registry entry against its DuckDB
-oracle at sf0.01 (the driver's correctness scale) and write the per-entry
-verdicts to ORACLE_SELF.json — inspectable evidence that the full
-registry surface was locally verified this round, not just the ~50
-entries inside the driver's correctness window (VERDICT r6 item 8).
+oracle at sf0.01 (the correctness-gate scale) or any other scale
+factor and write the per-entry verdicts to ``ORACLE_SELF_<scale>.json``
+(``<scale>`` is the basename of ``sf_dir``, so each scale factor keeps its
+own attestation) — inspectable evidence that the full registry surface
+was locally verified, not just the ~50 entries inside the correctness
+window (VERDICT r6 item 8).
 
 The comparison mirrors the driver gate: row count, column-name set, and
 a value hash over rows with columns sorted BY NAME (so aliasing must
@@ -95,8 +97,9 @@ def main() -> int:
         print(f"[oracle-self] {name}: {status}", file=sys.stderr)
         spark.catalog.clearCache()
 
+    scale = os.path.basename(os.path.normpath(sf_dir))
     out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "ORACLE_SELF.json"
+        os.path.dirname(os.path.abspath(__file__)), f"ORACLE_SELF_{scale}.json"
     )
     with open(out_path, "w") as f:
         json.dump(

@@ -96,6 +96,18 @@ def test_pseudo_random_graph_matches_union_find(spark):
     assert got == want
 
 
+def test_max_iter_exhaustion_raises(spark):
+    # one star round on a 20-node chain leaves 18 components for one
+    # connected chain; that partial labelling must never be returned
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(19)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="within 1 rounds"):
+        connected_components(chain, max_iter=1)
+    with pytest.raises(RuntimeError, match="within 1 rounds"):
+        dedup_clusters(chain.toDF("id_a", "id_b"), max_iter=1)
+
+
 def test_dedup_clusters_column_contract(spark):
     pairs = spark.createDataFrame([(10, 20), (20, 30)], "id_a long, id_b long")
     out = dedup_clusters(pairs)

@@ -287,10 +287,22 @@ def test_q22_anti_join_with_pruned_build(spark, sf_dir):
     assert read and all("o_totalprice" not in ln for ln in read)
 
 
-def test_grouped_topk_uses_window_group_limit(spark, sf_dir):
-    # the rank filter must be pushed into the window operator so each
-    # map task keeps only k rows per group BEFORE the exchange
-    plan = _plan(spark, sf_dir, "top_orders_per_priority")
+@pytest.mark.parametrize(
+    "name",
+    [
+        "top_orders_per_priority",
+        "ann_brute_force",
+        "ann_ivf",
+        "bm25_search",
+        "source_cap_docs",
+        "a2_keyed_keep_first",
+    ],
+)
+def test_grouped_topk_uses_window_group_limit(spark, sf_dir, name):
+    # top_k_per_group callers: the rank filter must be pushed into the
+    # window operator so each map task keeps only k rows per group
+    # BEFORE the exchange
+    plan = _plan(spark, sf_dir, name)
     assert "WindowGroupLimit" in plan
 
 

@@ -9,17 +9,19 @@ each example is a distributed job.
 from __future__ import annotations
 
 import json
+from collections import Counter
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from vacancy_gpt_etl_pipeline_spark.functions.json_parse import safe_json_parse_text
-from vacancy_gpt_etl_pipeline_spark.operators.dedup import dedup_exact, dedup_keep_first
+from vacancy_gpt_etl_pipeline_spark.operators.dedup import dedup_exact
 from vacancy_gpt_etl_pipeline_spark.operators.enrichment import (
     UNDEFINED,
     Enricher,
     _process_chunk,
 )
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 
 # ---------------------------------------------------------------------------
 # parser: never raises, returns list-or-None
@@ -147,11 +149,44 @@ def test_keep_first_is_deterministic_min(spark, rows):
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(rows, "k int, v int")
-    out = dedup_keep_first(df, ["k"], [F.asc("v")])
+    out = top_k_per_group(df, ["k"], [F.asc("v")])
     got = {r["k"]: r["v"] for r in out.collect()}
     expect = {}
     for k, v in rows:
         expect[k] = min(expect.get(k, v), v)
+    assert got == expect
+
+
+@given(
+    rows=small_rows.filter(lambda r: len(r) > 0),
+    k=st.integers(1, 4),
+    rank_col=st.sampled_from([None, "rank"]),
+)
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+def test_top_k_per_group_bounded_and_partitioning_free(spark, rows, k, rank_col):
+    """For ANY rows and k: at most k rows per group, exactly the k
+    smallest (v, i) per key, the same rows after a repartition, and the
+    rank column kept only when asked for."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(kk, v, i) for i, (kk, v) in enumerate(rows)], "k int, v int, i int"
+    )
+    order = [F.asc("v"), F.asc("i")]  # total: i is unique
+    out = top_k_per_group(df, ["k"], order, k, rank_col=rank_col)
+    assert out.columns == ["k", "v", "i"] + ([rank_col] if rank_col else [])
+    got = sorted(tuple(r) for r in out.collect())
+    again = top_k_per_group(df.repartition(3), ["k"], order, k, rank_col=rank_col)
+    assert sorted(tuple(r) for r in again.collect()) == got
+    groups: dict = {}
+    for i, (kk, v) in enumerate(rows):
+        groups.setdefault(kk, []).append((v, i))
+    expect = sorted(
+        (kk, v, i, *([rank] if rank_col else []))
+        for kk, members in groups.items()
+        for rank, (v, i) in enumerate(sorted(members)[:k], start=1)
+    )
+    assert max(Counter(r[0] for r in got).values()) <= k
     assert got == expect
 
 

@@ -7,7 +7,6 @@ from vacancy_gpt_etl_pipeline_spark.operators.enrichment import (
 from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
     dedup_exact,
     dedup_exact_text,
-    dedup_keep_first,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
@@ -29,6 +28,7 @@ from vacancy_gpt_etl_pipeline_spark.operators.sketches import (
     hll_sketch_table,
 )
 from vacancy_gpt_etl_pipeline_spark.operators.asof import asof_join
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 from vacancy_gpt_etl_pipeline_spark.operators.graph import (
     connected_components,
     dedup_clusters,
@@ -114,7 +114,6 @@ __all__ = [
     "enrich_column",
     "dedup_exact",
     "dedup_exact_text",
-    "dedup_keep_first",
     "minhash_near_duplicates",
     "ngram_jaccard_pairs",
     "simhash_near_duplicates",
@@ -130,6 +129,7 @@ __all__ = [
     "hll_rollup",
     "hll_sketch_table",
     "asof_join",
+    "top_k_per_group",
     "bm25_topk",
     "connected_components",
     "dedup_clusters",

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
+
 
 def asof_join(
     left: DataFrame,
@@ -45,12 +47,7 @@ def asof_join(
 
     r = right
     if seq_col is not None:
-        dw = Window.partitionBy(*on, ts_col).orderBy(F.desc(seq_col))
-        r = (
-            r.withColumn("_rn", F.row_number().over(dw))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        r = top_k_per_group(r, [*on, ts_col], [F.desc(seq_col)])
     r_tagged = r.select(
         *on,
         F.col(ts_col),

@@ -25,7 +25,7 @@ from vacancy_gpt_etl_pipeline_spark.functions.text import (
     token_count,
     tokens,
 )
-from vacancy_gpt_etl_pipeline_spark.operators.dedup import dedup_keep_first
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 
 
 def profile_for_curation(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -65,7 +65,7 @@ def curate_documents(
     surviving (id, n_tokens, quality, fingerprint) rows — the manifest a
     downstream tokenization job joins back against the raw corpus."""
     filtered = quality_filter(df, text_col, id_col, min_quality, min_tokens, max_tokens)
-    return dedup_keep_first(filtered, ["fingerprint"], [F.asc(id_col)])
+    return top_k_per_group(filtered, ["fingerprint"], [F.asc(id_col)])
 
 
 def adaptive_quality_floor(

@@ -22,26 +22,14 @@ from vacancy_gpt_etl_pipeline_spark.operators.caching import (
     CacheScope,
     persist_in,
 )
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 
 
 def dedup_exact(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
     """A1/A2: distinct rows (or by key subset). Survivor is arbitrary — use
-    :func:`dedup_keep_first` when the reference's keep-first order matters."""
+    :func:`~vacancy_gpt_etl_pipeline_spark.operators.relational.top_k_per_group`
+    (k = 1) when the reference's keep-first order matters."""
     return df.dropDuplicates(subset) if subset else df.dropDuplicates()
-
-
-def dedup_keep_first(
-    df: DataFrame, key_cols: list[str], order_cols: list
-) -> DataFrame:
-    """Deterministic keep-first dedup: survivor = first row per key under
-    ``order_cols`` (e.g. ``[F.asc("_input_file")]`` to mirror the reference's
-    pandas keep='first' file order, dag/...py:125)."""
-    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def dedup_exact_text(
@@ -564,12 +552,8 @@ def keyed_incremental_gate(
     seen = history.select(key_col).where(
         F.col(key_col).isNotNull()
     ).distinct()
-    w = Window.partitionBy(key_col).orderBy(F.asc(id_col))
-    fresh = (
-        batch.where(F.col(key_col).isNotNull())
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+    fresh = top_k_per_group(
+        batch.where(F.col(key_col).isNotNull()), [key_col], [F.asc(id_col)]
     )
     return fresh.join(seen, key_col, "left_anti")
 
@@ -598,12 +582,7 @@ def incremental_dedup(
 
     seen = history.select(_h(text_col).alias("content_hash")).distinct()
     batch = new_docs.withColumn("content_hash", _h(text_col))
-    w = Window.partitionBy("content_hash").orderBy(F.asc(id_col))
-    fresh = (
-        batch.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    fresh = top_k_per_group(batch, ["content_hash"], [F.asc(id_col)])
     return fresh.join(seen, "content_hash", "left_anti").drop("content_hash")
 
 
@@ -683,17 +662,12 @@ def incremental_neardup(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    w = Window.partitionBy("_bid").orderBy(
-        F.desc("jaccard"), F.asc("_hid")
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            F.col("_bid").alias("batch_id"),
-            F.col("_hid").alias("matched_id"),
-            "jaccard",
-        )
+    return top_k_per_group(
+        scored, ["_bid"], [F.desc("jaccard"), F.asc("_hid")]
+    ).select(
+        F.col("_bid").alias("batch_id"),
+        F.col("_hid").alias("matched_id"),
+        "jaccard",
     )
 
 
@@ -946,8 +920,6 @@ def seq_near_pairs(
             "banded candidate generation is only exhaustive for "
             "max_diff < n_bands (contiguous bands, pigeonhole)"
         )
-    from pyspark.sql import Window
-
     reps = (
         df.select(
             F.col(seq_col).alias("_seq_s"), F.col(id_col).alias("_id")
@@ -1053,14 +1025,7 @@ def seq_near_veto(
             "banded candidate generation is only exhaustive for "
             "max_diff < n_bands (contiguous bands, pigeonhole)"
         )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(seq_col).orderBy(id_col)
-    reps = (
-        batch.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    reps = top_k_per_group(batch, [seq_col], [id_col])
     hist_fp = history.select(seq_col).distinct()
     exact = reps.join(hist_fp, seq_col, "left_anti")
 

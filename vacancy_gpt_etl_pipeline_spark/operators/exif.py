@@ -27,7 +27,8 @@ tier, like the MP3/ADTS/WebP censuses.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
+from itertools import accumulate
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -393,27 +394,31 @@ def _build_tiff(i: int) -> bytes:
     return out
 
 
-def synthesize_tiff_payload(
-    df: DataFrame, id_col: str = "doc_id"
+def _tiff_payload(
+    df: DataFrame, id_col: str, build: Callable[[int], bytes]
 ) -> DataFrame:
-    """Deterministic standalone-TIFF fixture (Arrow ``mapInPandas``;
-    the :func:`synthesize_exif_payload` pattern — per-row Python
-    assembly because dual endianness + chained IFD offsets make hex
-    concatenation unreadable). Closed forms in :func:`_build_tiff`."""
+    """``(asset_id, content)``: ``build(id)`` per row of ``df[id_col]``
+    (Arrow ``mapInPandas``; per-row Python assembly because dual
+    endianness and chained IFD offsets make hex concatenation
+    unreadable)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids = [int(x) for x in pdf[id_col]]
             yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "content": [_build_tiff(i) for i in ids],
-                }
+                {"asset_id": ids, "content": [build(i) for i in ids]}
             )
 
-    return df.select(id_col).mapInPandas(
-        run, "asset_id long, content binary"
-    )
+    return df.select(id_col).mapInPandas(run, "asset_id long, content binary")
+
+
+def synthesize_tiff_payload(
+    df: DataFrame, id_col: str = "doc_id"
+) -> DataFrame:
+    """Deterministic standalone-TIFF fixture (the
+    :func:`synthesize_exif_payload` pattern). Closed forms in
+    :func:`_build_tiff`."""
+    return _tiff_payload(df, id_col, _build_tiff)
 
 
 def _packbits_decode(src: bytes, expected: int) -> bytes | None:
@@ -709,6 +714,75 @@ def _tiff_gray(b: bytes):
     return 255 - g if photo == 0 else g
 
 
+def _tiff_strip_file(
+    e: str,
+    w: int,
+    h: int,
+    bits: int,
+    comp: int,
+    photo: int,
+    spp: int,
+    rps: int,
+    strips: list[bytes],
+    truncate: bool,
+    extra: tuple[tuple[int, int], ...] = (),
+) -> bytes:
+    """One single-IFD strip TIFF in byte order ``e``: the 8-byte header,
+    the IFD (the nine baseline tags, then the ``extra`` (tag, value)
+    SHORT entries), the out-of-line values — the RGB BitsPerSample
+    triple when ``spp == 3`` and, for more than one strip, the strip
+    offset and byte-count arrays — then the strip bytes. ``truncate``
+    cuts the file mid-strip (the quarantine class)."""
+
+    def entry(tag, typ, cnt, raw4):
+        return struct.pack(e + "HHL", tag, typ, cnt) + raw4
+
+    def short4(v):
+        return struct.pack(e + "H", v) + b"\x00\x00"
+
+    def long4(v):
+        return struct.pack(e + "L", v)
+
+    n = len(strips)
+    counts = [len(s) for s in strips]
+    val_off = 8 + 2 + 12 * (9 + len(extra)) + 4
+    bits_tail = struct.pack(e + "HHH", 8, 8, 8) if spp == 3 else b""
+    bits_raw = long4(val_off) if spp == 3 else short4(bits)
+    arr_off = val_off + len(bits_tail)
+    if n > 1:
+        offs = list(accumulate(counts[:-1], initial=arr_off + 8 * n))
+        arrays = struct.pack(e + "L" * n, *offs) + struct.pack(e + "L" * n, *counts)
+        so_raw, sc_raw = long4(arr_off), long4(arr_off + 4 * n)
+    else:
+        arrays = b""
+        so_raw, sc_raw = long4(arr_off), long4(counts[0])
+    entries = [
+        entry(0x0100, 3, 1, short4(w)),
+        entry(0x0101, 3, 1, short4(h)),
+        entry(0x0102, 3, spp, bits_raw),
+        entry(0x0103, 3, 1, short4(comp)),
+        entry(0x0106, 3, 1, short4(photo)),
+        entry(0x0111, 4, n, so_raw),
+        entry(0x0115, 3, 1, short4(spp)),
+        entry(0x0116, 3, 1, short4(rps)),
+        entry(0x0117, 4, n, sc_raw),
+        *[entry(tag, 3, 1, short4(v)) for tag, v in extra],
+    ]
+    out = (
+        (b"II" if e == "<" else b"MM")
+        + struct.pack(e + "HL", 42, 8)
+        + struct.pack(e + "H", len(entries))
+        + b"".join(entries)
+        + struct.pack(e + "L", 0)
+        + bits_tail
+        + arrays
+        + b"".join(strips)
+    )
+    if truncate:
+        out = out[: len(out) - max(1, counts[-1] // 2)]
+    return out
+
+
 def _build_tiff_px(i: int) -> bytes:
     """One deterministic PIXEL-bearing TIFF fixture payload — the
     decode tier's twin of :func:`_build_tiff` (which carries tags
@@ -746,64 +820,9 @@ def _build_tiff_px(i: int) -> bytes:
         rows_here = min(rps, h - r0)
         seg = bytes(raw[r0 * w * spp : (r0 + rows_here) * w * spp])
         strips.append(_packbits_encode(seg) if comp == 32773 else seg)
-    n_strips = len(strips)
-
-    def entry(tag, typ, cnt, raw4):
-        return struct.pack(e + "HHL", tag, typ, cnt) + raw4
-
-    def short4(v):
-        return struct.pack(e + "H", v) + b"\x00\x00"
-
-    def long4(v):
-        return struct.pack(e + "L", v)
-
-    n_entries = 9
-    val_off = 8 + 2 + 12 * n_entries + 4
-    tail: list[bytes] = []
-    if spp == 3:
-        bits_raw = long4(val_off + sum(len(t) for t in tail))
-        tail.append(struct.pack(e + "HHH", 8, 8, 8))
-    else:
-        bits_raw = short4(8)
-    arr_bytes = (4 * n_strips if n_strips > 1 else 0) * 2
-    pos = val_off + sum(len(t) for t in tail) + arr_bytes
-    offs = []
-    for s in strips:
-        offs.append(pos)
-        pos += len(s)
-    if n_strips > 1:
-        so_raw = long4(val_off + sum(len(t) for t in tail))
-        tail.append(struct.pack(e + "L" * n_strips, *offs))
-        sc_raw = long4(val_off + sum(len(t) for t in tail))
-        tail.append(
-            struct.pack(e + "L" * n_strips, *[len(s) for s in strips])
-        )
-    else:
-        so_raw = long4(offs[0])
-        sc_raw = long4(len(strips[0]))
-    entries = [
-        entry(0x0100, 3, 1, short4(w)),
-        entry(0x0101, 3, 1, short4(h)),
-        entry(0x0102, 3, spp, bits_raw),
-        entry(0x0103, 3, 1, short4(comp)),
-        entry(0x0106, 3, 1, short4(photo)),
-        entry(0x0111, 4, n_strips, so_raw),
-        entry(0x0115, 3, 1, short4(spp)),
-        entry(0x0116, 3, 1, short4(rps)),
-        entry(0x0117, 4, n_strips, sc_raw),
-    ]
-    out = (
-        (b"II" if e == "<" else b"MM")
-        + struct.pack(e + "HL", 42, 8)
-        + struct.pack(e + "H", n_entries)
-        + b"".join(entries)
-        + struct.pack(e + "L", 0)
-        + b"".join(tail)
-        + b"".join(strips)
+    return _tiff_strip_file(
+        e, w, h, 8, comp, photo, spp, rps, strips, i % 37 == 0
     )
-    if i % 37 == 0:
-        out = out[: len(out) - max(1, len(strips[-1]) // 2)]
-    return out
 
 
 def _build_tiff_cx(i: int) -> bytes:
@@ -864,65 +883,19 @@ def _build_tiff_cx(i: int) -> bytes:
     for r0 in range(0, h, rps):
         seg = b"".join(rows_raw[r0 : r0 + rps])
         strips.append(seg if comp == 1 else _lzw_encode(seg))
-    n_strips = len(strips)
-
-    def entry(tag, typ, cnt, raw4):
-        return struct.pack(e + "HHL", tag, typ, cnt) + raw4
-
-    def short4(v):
-        return struct.pack(e + "H", v) + b"\x00\x00"
-
-    def long4(v):
-        return struct.pack(e + "L", v)
-
-    n_entries = 10
-    val_off = 8 + 2 + 12 * n_entries + 4
-    tail: list[bytes] = []
-    if spp == 3:
-        bits_raw = long4(val_off + sum(len(t) for t in tail))
-        tail.append(struct.pack(e + "HHH", 8, 8, 8))
-    else:
-        bits_raw = short4(1 if bilevel else 8)
-    arr_bytes = (4 * n_strips if n_strips > 1 else 0) * 2
-    pos = val_off + sum(len(t) for t in tail) + arr_bytes
-    offs = []
-    for s in strips:
-        offs.append(pos)
-        pos += len(s)
-    if n_strips > 1:
-        so_raw = long4(val_off + sum(len(t) for t in tail))
-        tail.append(struct.pack(e + "L" * n_strips, *offs))
-        sc_raw = long4(val_off + sum(len(t) for t in tail))
-        tail.append(
-            struct.pack(e + "L" * n_strips, *[len(s) for s in strips])
-        )
-    else:
-        so_raw = long4(offs[0])
-        sc_raw = long4(len(strips[0]))
-    entries = [
-        entry(0x0100, 3, 1, short4(w)),
-        entry(0x0101, 3, 1, short4(h)),
-        entry(0x0102, 3, spp, bits_raw),
-        entry(0x0103, 3, 1, short4(comp)),
-        entry(0x0106, 3, 1, short4(photo)),
-        entry(0x0111, 4, n_strips, so_raw),
-        entry(0x0115, 3, 1, short4(spp)),
-        entry(0x0116, 3, 1, short4(rps)),
-        entry(0x0117, 4, n_strips, sc_raw),
-        entry(0x013D, 3, 1, short4(pred)),
-    ]
-    out = (
-        (b"II" if e == "<" else b"MM")
-        + struct.pack(e + "HL", 42, 8)
-        + struct.pack(e + "H", n_entries)
-        + b"".join(entries)
-        + struct.pack(e + "L", 0)
-        + b"".join(tail)
-        + b"".join(strips)
+    return _tiff_strip_file(
+        e,
+        w,
+        h,
+        1 if bilevel else 8,
+        comp,
+        photo,
+        spp,
+        rps,
+        strips,
+        i % 37 == 0,
+        extra=((0x013D, pred),),
     )
-    if i % 37 == 0:
-        out = out[: len(out) - max(1, len(strips[-1]) // 2)]
-    return out
 
 
 def synthesize_tiff_cx_payload(
@@ -930,20 +903,7 @@ def synthesize_tiff_cx_payload(
 ) -> DataFrame:
     """Deterministic compressed/extended TIFF fixture (closed forms in
     :func:`_build_tiff_cx`); emits (asset_id, content)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(x) for x in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "content": [_build_tiff_cx(i) for i in ids],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(
-        run, "asset_id long, content binary"
-    )
+    return _tiff_payload(df, id_col, _build_tiff_cx)
 
 
 def synthesize_tiff_pixel_payload(
@@ -953,20 +913,7 @@ def synthesize_tiff_pixel_payload(
     closed forms in :func:`_build_tiff_px`). Emits (asset_id,
     content) — the :func:`synthesize_tiff_payload` contract with real
     strip data behind the tags."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(x) for x in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "content": [_build_tiff_px(i) for i in ids],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(
-        run, "asset_id long, content binary"
-    )
+    return _tiff_payload(df, id_col, _build_tiff_px)
 
 
 def census_exif(

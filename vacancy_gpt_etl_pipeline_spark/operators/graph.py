@@ -39,15 +39,6 @@ from vacancy_gpt_etl_pipeline_spark.operators.caching import (
     persist_in,
 )
 
-# rounds used by the most recent connected_components call — read by
-# tests and visible in bench stderr so a future timing regression can be
-# attributed to iteration count vs per-round cost (VERDICT r5 item 8).
-# LAST_CONVERGED distinguishes a genuine fixpoint from max_iter
-# exhaustion (both can report rounds == max_iter).
-LAST_CONVERGENCE_ROUNDS: int | None = None
-LAST_CONVERGED: bool | None = None
-
-
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round: every node u connects each strictly-larger
     neighbor to u's current minimum (min over N(u) ∪ {u})."""
@@ -109,7 +100,8 @@ def connected_components(
     stable between rounds (the paper's convergence criterion: both
     operations are no-ops exactly when the graph is a disjoint union of
     min-rooted stars). ``max_iter`` is a safety bound — O(log n) rounds
-    suffice, so 25 covers any graph this engine will ever see.
+    suffice, so 25 covers any graph this engine will ever see; hitting it
+    raises ``RuntimeError`` rather than return a partial labelling.
     """
     edges = (
         pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -118,23 +110,19 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     prev = _edge_fingerprint(edges)
-    rounds = 0
-    converged = False
-    for _ in range(max_iter):
+    for rounds in range(1, max_iter + 1):
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        rounds += 1
         cur = _edge_fingerprint(edges)
         if cur == prev:
-            converged = True
             break
         prev = cur
-    global LAST_CONVERGENCE_ROUNDS, LAST_CONVERGED
-    LAST_CONVERGENCE_ROUNDS = rounds
-    LAST_CONVERGED = converged
-    status = "converged" if converged else "NOT converged (max_iter hit)"
+    else:
+        raise RuntimeError(
+            f"connected components did not converge within {max_iter} "
+            "rounds; raise max_iter (the graph is deeper than expected)"
+        )
     print(
-        f"[graph] connected_components: {rounds} rounds, "
-        f"{prev[0]} edges, {status}",
+        f"[graph] connected_components: {rounds} rounds, {prev[0]} edges",
         file=sys.stderr,
     )
     # Converged state is a star forest of (child → root) edges with

@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
+
 # cos(pi*(2x+1)*u/16) * 8192, rounded — LUT[u][x]. These literals are
 # the single source of truth: the DuckDB oracle embeds THE SAME numbers
 # (queries.py builds its VALUES list from this constant), so both
@@ -363,12 +365,7 @@ def phash_incremental(
         )
     from pyspark.sql import Window
 
-    w = Window.partitionBy("b0", "b1", "b2", "b3").orderBy("asset_id")
-    reps = (
-        batch_hashes.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    reps = top_k_per_group(batch_hashes, ["b0", "b1", "b2", "b3"], ["asset_id"])
     # ONE dedup of the large history table serves both gates (the
     # anti-join and the band index below) — two differently-projected
     # dedups would shuffle the O(corpus-distinct) history twice per

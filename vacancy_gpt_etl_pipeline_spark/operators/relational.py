@@ -34,6 +34,31 @@ def top_k_by_count(df: DataFrame, col: str, k: int) -> DataFrame:
     return frequency(df, col).limit(k)
 
 
+def top_k_per_group(
+    df: DataFrame,
+    by: list,
+    order: list,
+    k: int = 1,
+    rank_col: str | None = None,
+) -> DataFrame:
+    """The first ``k`` rows of every ``by`` group under ``order``: keyed
+    keep-first dedup (k = 1; the reference's keep='first'
+    ``drop_duplicates(subset=['id'])``, dag/vacancy_pipline_gpt_rerty.py:125)
+    and every per-group or per-query top-k.
+
+    ``order`` must be a total order within a group (end it with a unique
+    key): with ties the survivors depend on the partitioning. The
+    ``row_number`` + ``<= k`` filter shape is what lets Spark plan
+    ``WindowGroupLimit`` — a map-side per-group limit ahead of the
+    exchange, so the shuffle carries at most k rows per group per map
+    task. With ``rank_col`` the 1-based rank is kept (appended) under
+    that name; otherwise it is dropped."""
+    rank = rank_col or "_rn"
+    w = Window.partitionBy(*by).orderBy(*order)
+    out = df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+    return out if rank_col else out.drop(rank)
+
+
 def ratio_of_total(
     count_col: str = "count", out_col: str = "pct", ndigits: int = 1
 ) -> Column:
@@ -93,14 +118,9 @@ def merge_upsert(
     tagged = snapshot.withColumn("_src", F.lit(0)).unionByName(
         updates.withColumn("_src", F.lit(1))
     )
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.desc(version_col), F.desc("_src")
-    )
-    return (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
+    return top_k_per_group(
+        tagged, key_cols, [F.desc(version_col), F.desc("_src")]
+    ).drop("_src")
 
 
 def scd2_history(

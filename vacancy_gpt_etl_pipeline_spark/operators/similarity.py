@@ -1,15 +1,30 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Scale extension (north star). Two tiers:
+Scale extension (north star). Four families:
 
-- :func:`knn_brute_force` — exact cosine top-k. O(queries × corpus); right
-  answer for bounded query sets (the query side is broadcast, the corpus is
-  streamed through one narrow stage — no shuffle of the corpus).
-- :func:`knn_lsh` — random-hyperplane LSH buckets prune the corpus before
-  scoring, the standard recall/cost knob at 100 TB (see PAPERS.md: REPOSE
-  ICDE'21 partitions by sign-random-projection the same way).
-- :func:`embedding_near_duplicates` — cosine near-dup pairs via the same
-  bucketing, the embedding analogue of MinHash dedup.
+- Exact: :func:`knn_brute_force` — cosine top-k, O(queries × corpus);
+  right for bounded query sets (the query side is broadcast, the corpus
+  streams through one narrow stage — no shuffle of the corpus).
+  :func:`incremental_topk_merge` maintains such a top-k across corpus
+  batches without rescoring old ones.
+- LSH: :func:`knn_lsh` — random-hyperplane buckets prune the corpus
+  before scoring (REPOSE, ICDE'21, partitions by sign-random-projection
+  the same way); :func:`embedding_near_duplicates` finds cosine near-dup
+  pairs through the same bucketing.
+- IVF: a centroid quantizer (:func:`sampled_centroids`,
+  :func:`lloyd_refine`, :func:`ivf_assign`, :func:`ivf_assign_two_level`)
+  and probe search over the ``nprobe`` nearest cells — full precision
+  (:func:`knn_ivf`, :func:`knn_ivf_adaptive`), int8 scalar-quantized
+  (:func:`knn_ivf_int8`) or product-quantized with optional exact
+  rescoring (:func:`pq_codebook`, :func:`pq_encode`, :func:`knn_ivf_pq`).
+- SemDeDup: :func:`semdedup` and :func:`semdedup_incremental` — cosine
+  near-dup removal within quantizer cells, the semantic tier of the
+  dedup ladder.
+
+Every per-query top-k and every probe selection is
+:func:`~vacancy_gpt_etl_pipeline_spark.operators.relational.top_k_per_group`
+(via :func:`_top_neighbors` / :func:`_probe_cells`), so each plans a
+``WindowGroupLimit`` ahead of its exchange.
 
 Dot products stay JVM-side and, when the embedding width is known (the
 ``dim`` parameter every operator threads through), unroll into
@@ -23,9 +38,10 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import functions as F
 
 from vacancy_gpt_etl_pipeline_spark.operators.caching import CacheScope, persist_in
-from pyspark.sql import functions as F
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 
 
 def _dot_sql(a: str, b: str, dim: int) -> str:
@@ -91,6 +107,18 @@ def unit_normalize(
     )
 
 
+def _top_neighbors(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """Per-query top-k by ``score_col`` (descending, neighbor id breaks
+    ties): ``(query_id, neighbor_id, <score_col>, rank)``."""
+    return top_k_per_group(
+        scored,
+        ["query_id"],
+        [F.desc(score_col), F.asc("neighbor_id")],
+        k,
+        rank_col="rank",
+    ).select("query_id", "neighbor_id", score_col, "rank")
+
+
 def knn_brute_force(
     corpus: DataFrame,
     queries: DataFrame,
@@ -119,16 +147,7 @@ def knn_brute_force(
     )
     if exclude_self:
         scored = scored.where(F.col("query_id") != F.col("neighbor_id"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_neighbors(scored, "cosine", k)
 
 
 def _coef_sql(c: float) -> str:
@@ -258,14 +277,7 @@ def knn_lsh(
         "neighbor_id",
         cosine_similarity_col("_qv", "_cv", dim=dim).alias("cosine"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_neighbors(scored, "cosine", k)
 
 
 def sampled_centroids(
@@ -304,6 +316,14 @@ def _cell_scores(
     return df.crossJoin(F.broadcast(c)).withColumn(
         "_ccos", cosine_similarity_col(vec_col, "_cent", dim=dim)
     )
+
+
+def _probe_cells(q_scored: DataFrame, vec_col: str, nprobe: int) -> DataFrame:
+    """Each query's ``nprobe`` best-scored cells from :func:`_cell_scores`
+    (cell id breaks ties): ``(query_id, <vec_col>, cell)``."""
+    return top_k_per_group(
+        q_scored, ["query_id"], [F.desc("_ccos"), F.asc("cell")], nprobe
+    ).select("query_id", vec_col, "cell")
 
 
 def ivf_assign(
@@ -478,14 +498,7 @@ def knn_ivf(
         centroids,
         dim,
     )
-    from pyspark.sql import Window
-
-    pw = Window.partitionBy("query_id").orderBy(F.desc("_ccos"), F.asc("cell"))
-    probes = (
-        q_scored.withColumn("_crank", F.row_number().over(pw))
-        .where(F.col("_crank") <= nprobe)
-        .select("query_id", "_qv", "cell")
-    )
+    probes = _probe_cells(q_scored, "_qv", nprobe)
     scored = (
         assigned.join(F.broadcast(probes), "cell")
         .where(F.col("query_id") != F.col(id_col))
@@ -495,12 +508,7 @@ def knn_ivf(
             cosine_similarity_col("_qv", vec_col, dim=dim).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_neighbors(scored, "cosine", k)
 
 
 def lloyd_refine(
@@ -848,22 +856,13 @@ def incremental_topk_merge(
     same (query, neighbor) pair re-submitted by a later batch carries
     the same score (scores are functional), so the dedup keeps the
     result well-defined."""
-    from pyspark.sql import Window
-
     cols = ["query_id", "neighbor_id", "cosine"]
     merged = (
         prev_topk.select(*cols)
         .unionByName(new_scored.select(*cols))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        merged.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_neighbors(merged, "cosine", k)
 
 
 def knn_ivf_adaptive(
@@ -1034,16 +1033,8 @@ def knn_ivf_int8(
         centroids,
         dim,
     )
-    from pyspark.sql import Window
-
-    pw = Window.partitionBy("query_id").orderBy(F.desc("_ccos"), F.asc("cell"))
     probes = quantize_unit_int8(
-        q_scored.withColumn("_crank", F.row_number().over(pw))
-        .where(F.col("_crank") <= nprobe)
-        .select("query_id", "_fq", "cell"),
-        "_fq",
-        dim,
-        out_col="_qq",
+        _probe_cells(q_scored, "_fq", nprobe), "_fq", dim, out_col="_qq"
     )
     scored = (
         qcorp.join(F.broadcast(probes), "cell")
@@ -1054,14 +1045,7 @@ def knn_ivf_int8(
             F.expr(_int_dot_sql("_qq", "_qv", dim)).alias("dot_q"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot_q"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "dot_q", "rank")
-    )
+    return _top_neighbors(scored, "dot_q", k)
 
 
 def _sub_slice(s: int, sub: int) -> range:
@@ -1117,8 +1101,6 @@ def pq_codebook(
     the LIMIT beneath it, so the single-task sort touches codebook
     metadata, never data. Dense 0-based codes are what let
     :func:`pq_encode` emit tinyints."""
-    from pyspark.sql import Window
-
     w = Window.orderBy(id_col)
     return (
         corpus.where((F.col(id_col) % stride) == 0)
@@ -1249,15 +1231,7 @@ def knn_ivf_pq(
         "_fq",
     )
     q_scored = _cell_scores(nq, "_fq", centroids, dim)
-    from pyspark.sql import Window
-
-    pw = Window.partitionBy("query_id").orderBy(F.desc("_ccos"), F.asc("cell"))
-    probes = persist_in(
-        q_scored.withColumn("_crank", F.row_number().over(pw))
-        .where(F.col("_crank") <= nprobe)
-        .select("query_id", "_fq", "cell"),
-        cache_scope,
-    )
+    probes = persist_in(_probe_cells(q_scored, "_fq", nprobe), cache_scope)
     # per-query ADC lookup table: ONE flat int64 array per probe row
     # (index code_id·m + s, code-major), carried inside the broadcast
     # probe frame, so ADC scoring is a map-side array-lookup sum over
@@ -1317,14 +1291,7 @@ def knn_ivf_pq(
         F.col(id_col).alias("neighbor_id"),
         F.expr(f"(CAST(0 AS BIGINT) + {adc_sum})").alias("score_q"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score_q"), F.asc("neighbor_id")
-    )
-    adc = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k * (rescore_mult or 1))
-        .select("query_id", "neighbor_id", "score_q", "rank")
-    )
+    adc = _top_neighbors(scored, "score_q", k * (rescore_mult or 1))
     if rescore_mult is None:
         return adc
     # refine: exact rounded cosine over the bounded ADC short-list only.
@@ -1349,11 +1316,4 @@ def knn_ivf_pq(
             cosine_similarity_col("_fq", "_nv", dim=dim).alias("cosine"),
         )
     )
-    rw = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        resc.withColumn("rank", F.row_number().over(rw))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_neighbors(resc, "cosine", k)

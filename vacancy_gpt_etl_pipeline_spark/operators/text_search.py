@@ -20,8 +20,10 @@ corpus token stream:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 
 
 def _tokens(text_col: str):
@@ -98,12 +100,9 @@ def bm25_topk(
             ).alias("score")
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return top_k_per_group(
+        scored, ["query_id"], [F.desc("score"), F.asc("doc_id")], k, rank_col="rank"
+    ).select("query_id", "doc_id", "score", "rank")
 
 
 def tfidf_keywords(
@@ -153,14 +152,9 @@ def tfidf_keywords(
             ),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("score"), F.asc("term")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("doc_id", "term", "score", "rank")
-    )
+    return top_k_per_group(
+        scored, ["doc_id"], [F.desc("score"), F.asc("term")], k, rank_col="rank"
+    ).select("doc_id", "term", "score", "rank")
 
 
 def pmi_collocations(

@@ -17,13 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vacancy_gpt_etl_pipeline_spark.operators.dedup import dedup_keep_first
 from vacancy_gpt_etl_pipeline_spark.operators.enrichment import (
     UNDEFINED,
     UNSPECIFIED,
     Enricher,
     enrich_column,
 )
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 from vacancy_gpt_etl_pipeline_spark.sources.csv_source import (
     latest_k_paths,
     list_csv_files,
@@ -67,10 +67,10 @@ def run_pipeline(
     raw = read_vacancies_csv(spark, picked)
     if observer is not None:
         raw = observer.stage(raw, "ingest")
-    deduped = dedup_keep_first(
+    deduped = top_k_per_group(
         raw.dropDuplicates([c for c in raw.columns if c != "_input_file"]),
-        key_cols=["id"],
-        order_cols=[F.asc("_input_file")],
+        ["id"],
+        [F.asc("_input_file")],
     )
     if observer is not None:
         deduped = observer.stage(deduped, "deduped")

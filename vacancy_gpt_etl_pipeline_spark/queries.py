@@ -52,7 +52,6 @@ from vacancy_gpt_etl_pipeline_spark.functions.text import (
 )
 from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
     dedup_exact_text,
-    dedup_keep_first,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     seq_near_pairs,
@@ -121,7 +120,10 @@ from vacancy_gpt_etl_pipeline_spark.operators.audio_fp import (
     fingerprint_wav,
     synthesize_tone_payload,
 )
-from vacancy_gpt_etl_pipeline_spark.operators.relational import ratio_of_total
+from vacancy_gpt_etl_pipeline_spark.operators.relational import (
+    ratio_of_total,
+    top_k_per_group,
+)
 from vacancy_gpt_etl_pipeline_spark.operators.epub import (
     extract_epub_chapters,
     synthesize_epub_payload,
@@ -396,7 +398,7 @@ def a2_keyed_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 deterministic variant: keep-first survivor per key under an explicit
     order (dag/...py:125 keep='first' made reproducible)."""
     o = _t(spark, sf_dir, "orders")
-    latest = dedup_keep_first(
+    latest = top_k_per_group(
         o, ["o_custkey"], [F.desc("o_orderdate"), F.asc("o_orderkey")]
     )
     return latest.select(
@@ -1333,16 +1335,12 @@ def dedup_survivor_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clusters = dedup_clusters(pairs)
     ranked = clusters.join(docs.select("doc_id", "n_chars"), "doc_id")
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.desc("n_chars"), F.asc("doc_id")
-    )
-    ranked = ranked.withColumn("_rn", F.row_number().over(w))
-    survivors = ranked.where(F.col("_rn") == 1).select(
-        "cluster_id", F.col("doc_id").alias("survivor_id")
-    )
+    survivors = top_k_per_group(
+        ranked, ["cluster_id"], [F.desc("n_chars"), F.asc("doc_id")]
+    ).select("cluster_id", F.col("doc_id").alias("survivor_id"))
     return (
-        ranked.where(F.col("_rn") > 1)
-        .join(survivors, "cluster_id")
+        ranked.join(survivors, "cluster_id")
+        .where(F.col("doc_id") != F.col("survivor_id"))
         .select("doc_id", "cluster_id", "survivor_id")
         .orderBy("doc_id")
     )
@@ -2250,12 +2248,10 @@ def modal_priority_per_status(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.desc("n"), F.asc("o_orderpriority")
-    )
     return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
+        top_k_per_group(
+            counts, ["o_orderstatus"], [F.desc("n"), F.asc("o_orderpriority")]
+        )
         .select(
             "o_orderstatus",
             F.col("o_orderpriority").alias("modal_priority"),
@@ -3660,7 +3656,7 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered = prof.where(
         (F.col("quality") >= 0.5) & F.col("n_tokens").between(20, 80)
     )
-    deduped = dedup_keep_first(filtered, ["fingerprint"], [F.asc("doc_id")]).select(
+    deduped = top_k_per_group(filtered, ["fingerprint"], [F.asc("doc_id")]).select(
         "doc_id", "text", "source", "n_chars"
     )
     # three consumers below — materialize once (same boundary rule as
@@ -9953,14 +9949,13 @@ def top_orders_per_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .select("o_orderpriority", "rn", "o_orderkey", "o_totalprice")
-    )
+    return top_k_per_group(
+        orders,
+        ["o_orderpriority"],
+        [F.desc("o_totalprice"), F.asc("o_orderkey")],
+        5,
+        rank_col="rn",
+    ).select("o_orderpriority", "rn", "o_orderkey", "o_totalprice")
 
 
 TOP_PER_GROUP_SQL = """
@@ -12072,15 +12067,12 @@ def training_mix_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
     fp = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
-    wfp = Window.partitionBy("_fp").orderBy("doc_id")
     # persisted: both the classifier word explode and the survivor
     # join read this frame — unpersisted, the fingerprint window runs
     # twice over the corpus
     deduped = (
-        docs.withColumn("_fp", fp)
-        .withColumn("_rn", F.row_number().over(wfp))
-        .where(F.col("_rn") == 1)
-        .drop("_fp", "_rn")
+        top_k_per_group(docs.withColumn("_fp", fp), ["_fp"], ["doc_id"])
+        .drop("_fp")
         .persist()
     )
     kept = (
@@ -12732,14 +12724,13 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("rrf_score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("rrf_score"), F.asc("doc_id")
-    )
-    return (
-        fused.withColumn("fused_rank", F.row_number().over(w))
-        .where(F.col("fused_rank") <= 10)
-        .orderBy("query_id", "fused_rank")
-    )
+    return top_k_per_group(
+        fused,
+        ["query_id"],
+        [F.desc("rrf_score"), F.asc("doc_id")],
+        10,
+        rank_col="fused_rank",
+    ).orderBy("query_id", "fused_rank")
 
 
 def _hybrid_rrf_sql() -> str:
@@ -12877,12 +12868,14 @@ def source_cap_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = d.select(
         "doc_id", "source", quality_score("text").alias("quality")
     )
-    w = Window.partitionBy("source").orderBy(
-        F.desc("quality"), F.asc("doc_id")
-    )
     return (
-        scored.withColumn("rank_in_source", F.row_number().over(w))
-        .where(F.col("rank_in_source") <= cap)
+        top_k_per_group(
+            scored,
+            ["source"],
+            [F.desc("quality"), F.asc("doc_id")],
+            cap,
+            rank_col="rank_in_source",
+        )
         .select("source", "doc_id", "quality", "rank_in_source")
         .orderBy("source", "rank_in_source")
     )
@@ -13684,12 +13677,7 @@ def crawl_frontier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         normalize_url(raw).alias("norm_url"),
         url_host(raw).alias("host"),
     )
-    w_dup = Window.partitionBy("norm_url").orderBy("doc_id")
-    uniq = (
-        cand.withColumn("_rn", F.row_number().over(w_dup))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    uniq = top_k_per_group(cand, ["norm_url"], ["doc_id"])
     gated = uniq.where(~F.col("norm_url").rlike(AD_PATH_PATTERN))
     hn = F.regexp_extract("host", "^h([0-9]+)\\.", 1).cast("int")
     # rules derive from the PRE-window candidate frame: the prefixes
@@ -13727,12 +13715,14 @@ def crawl_frontier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = allowed.select(
         "host", "doc_id", "norm_url", quality_score("text").alias("quality")
     )
-    w_budget = Window.partitionBy("host").orderBy(
-        F.desc("quality"), F.asc("doc_id")
-    )
     return (
-        scored.withColumn("rank_in_host", F.row_number().over(w_budget))
-        .where(F.col("rank_in_host") <= _FRONTIER_HOST_BUDGET)
+        top_k_per_group(
+            scored,
+            ["host"],
+            [F.desc("quality"), F.asc("doc_id")],
+            _FRONTIER_HOST_BUDGET,
+            rank_col="rank_in_host",
+        )
         .select("host", "rank_in_host", "doc_id", "norm_url", "quality")
         .orderBy("host", "rank_in_host")
     )

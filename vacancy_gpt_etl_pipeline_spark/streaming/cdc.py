@@ -32,10 +32,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vacancy_gpt_etl_pipeline_spark.operators.diff import snapshot_diff
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 from vacancy_gpt_etl_pipeline_spark.streaming.gate import BATCH_COL, drain
 from vacancy_gpt_etl_pipeline_spark.streaming.upsert import (
     _snapshot_ids,
@@ -48,12 +49,7 @@ def _upsert(prev: DataFrame, batch: DataFrame, key_cols: list[str]) -> DataFrame
     tagged = prev.withColumn("_src", F.lit(0)).unionByName(
         batch.withColumn("_src", F.lit(1))
     )
-    w = Window.partitionBy(*key_cols).orderBy(F.desc("_src"))
-    return (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
+    return top_k_per_group(tagged, key_cols, [F.desc("_src")]).drop("_src")
 
 
 def write_stream_changelog(
@@ -85,12 +81,7 @@ def write_stream_changelog(
             if order_col is not None
             else F.desc(F.struct(*compare_cols))
         )
-        wb = Window.partitionBy(*key_cols).orderBy(order)
-        batch_flat = (
-            batch_df.withColumn("_rn_b", F.row_number().over(wb))
-            .where(F.col("_rn_b") == 1)
-            .select(*cols)
-        )
+        batch_flat = top_k_per_group(batch_df, key_cols, [order]).select(*cols)
         prev_path = latest_snapshot(state_root)
         if prev_path is None:
             prev = spark.createDataFrame([], batch_flat.schema)

@@ -75,6 +75,7 @@ from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
     _shingled,
     content_hash_col,
 )
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
     BATCH_COL,
     commit,
@@ -166,13 +167,9 @@ def apply_neardup_gate_batch(
         # keep-first within batch (the incremental_dedup contract), then
         # checkpoint: the frame feeds the prefix collect, the exact gate,
         # and the shingle stage
-        w = Window.partitionBy("content_hash").orderBy(F.asc("doc_id"))
-        fresh = (
-            hashed.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-            .localCheckpoint()
-        )
+        fresh = top_k_per_group(
+            hashed, ["content_hash"], [F.asc("doc_id")]
+        ).localCheckpoint()
         # exact gate against the pruned hash index (prefix collect is
         # metadata-sized: ≤ 256 distinct 2-hex-char values)
         hash_pbs = [

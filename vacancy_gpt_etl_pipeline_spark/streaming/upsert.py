@@ -25,9 +25,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 from vacancy_gpt_etl_pipeline_spark.streaming.gate import BATCH_COL, drain
 
 
@@ -60,14 +61,9 @@ def read_upserted(
     same union+window shape as ``relational.merge_upsert`` (one shuffle,
     WindowGroupLimit prunes per-key history map-side)."""
     log = spark.read.parquet(log_path)
-    w = Window.partitionBy(*key_cols).orderBy(
-        F.desc(version_col), F.desc(BATCH_COL)
-    )
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn", BATCH_COL)
-    )
+    return top_k_per_group(
+        log, key_cols, [F.desc(version_col), F.desc(BATCH_COL)]
+    ).drop(BATCH_COL)
 
 
 def _snapshot_ids(
