@@ -4,7 +4,10 @@ quarantine paths, zip-entry bomb guard, and the Spark round trip."""
 from __future__ import annotations
 
 import io
+import random
 import zipfile
+
+from test_parser_robustness import _mutations
 
 from vacancy_gpt_etl_pipeline_spark.operators.epub import (
     WORDS_PER_CHAPTER,
@@ -137,6 +140,38 @@ def test_corrupt_deflate_data_quarantines_not_raises():
     assert ch is not None
     assert "ch1.xhtml" not in [c[1] for c in ch]
     assert "ch0.xhtml" in [c[1] for c in ch]
+
+
+def _central_record(b: bytes, name: bytes) -> int:
+    """Offset of ``name``'s central-directory record."""
+    pos = b.find(b"PK\x01\x02")
+    while b[pos + 46 : pos + 46 + len(name)] != name:
+        pos = b.find(b"PK\x01\x02", pos + 4)
+    return pos
+
+
+def test_zipfile_errors_quarantine_not_raise():
+    """zipfile raises more than BadZipFile on a corrupt archive:
+    NotImplementedError (zip version, compression method, strong
+    encryption), RuntimeError (an encrypted entry) and ValueError
+    (negative seek, non-UTF-8 OPF path). An entry that cannot be read
+    skips its chapter; an archive that cannot be read quarantines as
+    None; neither raises out of the worker."""
+    base = build_epub(5, "w " * 90)  # 3 chapters
+    # central-directory flag bits (encrypted) / compression method (99)
+    for field, value in ((8, 0x1), (10, 99)):
+        b = bytearray(base)
+        rec = _central_record(b, b"OEBPS/ch1.xhtml")
+        b[rec + field : rec + field + 2] = value.to_bytes(2, "little")
+        assert [c[1] for c in parse_epub(bytes(b))] == [
+            "ch0.xhtml",
+            "ch2.xhtml",
+        ]
+    rng = random.Random(191)
+    for doc_id, text in ((3, "alpha beta " * 45), (8, "one " * 140), (12, "")):
+        for payload in _mutations(rng, build_epub(doc_id, text), 300):
+            r = parse_epub(payload)
+            assert r is None or isinstance(r, list)
 
 
 def test_manifest_attribute_order_is_free():

@@ -276,6 +276,37 @@ def test_truncation_quarantine_never_raises():
         _jpeg_channel_means(bytes(mutated))
 
 
+def test_corrupt_sampling_factors_and_dc_tables_quarantine():
+    """A zero sampling factor (ZeroDivisionError) and a DC predictor
+    driven past int64 by a corrupt DC table (OverflowError) used to
+    escape the decoder's ValueError contract and fail the decode task;
+    both now quarantine."""
+    import random
+
+    from test_parser_robustness import _mutations
+
+    from vacancy_gpt_etl_pipeline_spark.operators.multimodal import (
+        _jpeg_fixture,
+        _mjpeg_avi_fixture,
+    )
+
+    still = bytearray(_jpeg_fixture(5))
+    sof = still.find(b"\xff\xc0")
+    still[sof + 11] = 0x01  # first component: h=0, v=1
+    with pytest.raises(ValueError, match="sampling factors"):
+        jpeg.decode_baseline_jpeg(bytes(still))
+    assert _jpeg_channel_means(bytes(still)) == (None, None, None)
+    # seeded corpora that reach each error (found by mutation fuzzing)
+    for base, seed, n in (
+        (_jpeg_fixture(5), 31, 16),  # OverflowError in the DC predictor
+        (_jpeg_fixture(5), 286, 23),  # ZeroDivisionError
+    ):
+        for payload in _mutations(random.Random(seed), base, n):
+            _jpeg_channel_means(payload)
+    for payload in _mutations(random.Random(19), _mjpeg_avi_fixture(4), 19):
+        list(jpeg.parse_mjpeg_avi_stats(payload))
+
+
 def test_avi_metadata_parse():
     from vacancy_gpt_etl_pipeline_spark.operators.multimodal import (
         _parse_avi_metadata,

@@ -899,3 +899,108 @@ def test_mp4_truncated_mvhd_v1_quarantines_duration():
     dur, tscale, ntr, hnd, w, h = meta
     assert dur is None and tscale is None
     assert (ntr, hnd) == (1, "soun")
+
+
+# --- header fields that do not fit the Int32 census columns ---------------
+# Each of these used to fail the whole decode task: the unsigned header
+# value overflowed the Int32 column on the way to Arrow.
+
+
+def _bmp_4x2(height_field: int) -> bytes:
+    """A 4x2 24-bpp BMP whose header height is ``height_field`` (signed
+    LE32: negative = top-down rows); 12-byte rows, no padding."""
+    return (
+        b"BM" + (54 + 24).to_bytes(4, "little") + b"\x00\x00\x00\x00"
+        + (54).to_bytes(4, "little")
+        + (40).to_bytes(4, "little") + (4).to_bytes(4, "little")
+        + height_field.to_bytes(4, "little", signed=True)
+        + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
+        + (0).to_bytes(4, "little") + (24).to_bytes(4, "little")
+        + (2835).to_bytes(4, "little") + (2835).to_bytes(4, "little")
+        + (0).to_bytes(8, "little")
+        + bytes(range(24))
+    )
+
+
+def test_top_down_bmp_decodes_with_signed_height(spark):
+    """A valid top-down BMP stores its height negated; read signed (as
+    phash._bmp_gray does) it censuses as height -2 with null channel
+    means instead of an unsigned ~4.29e9 that failed the task."""
+    df = spark.createDataFrame(
+        [(1, bytearray(_bmp_4x2(-2))), (2, bytearray(_bmp_4x2(2)))],
+        "asset_id long, content binary",
+    )
+    out = {r.asset_id: r for r in decode_images(df).collect()}
+    top_down, bottom_up = out[1], out[2]
+    assert (top_down.fmt, top_down.width, top_down.height) == ("bmp", 4, -2)
+    assert top_down.bit_depth == 24 and top_down.mean_b is None
+    assert (bottom_up.width, bottom_up.height) == (4, 2)
+    assert bottom_up.mean_b is not None
+
+
+def test_png_dims_past_int32_are_malformed(spark):
+    """PNG caps IHDR width/height at 2^31-1; a larger field is a
+    malformed header: a 'png' row with null dims, not a failed task."""
+    bad = bytearray(GOLDEN_PNG_1x1)
+    bad[16:20] = (2**31).to_bytes(4, "big")
+    df = spark.createDataFrame(
+        [(1, bad), (2, bytearray(GOLDEN_PNG_1x1))],
+        "asset_id long, content binary",
+    )
+    out = {r.asset_id: r for r in decode_images(df).collect()}
+    assert (out[1].fmt, out[1].width, out[1].height) == ("png", None, None)
+    assert out[1].bit_depth is None and out[1].n_bytes == len(bad)
+    assert (out[2].width, out[2].height, out[2].bit_depth) == (1, 1, 8)
+
+
+def test_wav_sample_rate_past_int32_is_malformed(spark):
+    """A WAV sample rate of 2^31 or more does not fit the Int32 column:
+    the row keeps fmt='wav' with null fields, like a corrupt FLAC."""
+    from vacancy_gpt_etl_pipeline_spark.operators.multimodal import (
+        decode_audio,
+    )
+
+    bad = bytearray(GOLDEN_PCM_WAV)
+    bad[24:28] = (2**31).to_bytes(4, "little")
+    df = spark.createDataFrame(
+        [(1, bad), (2, bytearray(GOLDEN_PCM_WAV))],
+        "asset_id long, content binary",
+    )
+    out = {r.asset_id: r for r in decode_audio(df).collect()}
+    r = out[1]
+    assert (r.fmt, r.channels, r.sample_rate, r.bits_per_sample) == (
+        "wav", None, None, None
+    )
+    assert r.n_samples is None and r.n_bytes == len(bad)
+    assert (out[2].sample_rate, out[2].n_samples) == (8000, 3)
+
+
+def test_oversized_container_fields_are_malformed():
+    """The same overflow in three more walkers, checked on the pure
+    parsers: AVI avih DWORDs and Y4M W/H past 2^31-1 read as malformed
+    (null field / no stream), and a GIF LZW minimum code size past 8
+    (no byte-sized color index needs it) yields null means instead of
+    raising ValueError from the code table."""
+    import numpy as np
+
+    from vacancy_gpt_etl_pipeline_spark.operators import jpeg
+    from vacancy_gpt_etl_pipeline_spark.operators.multimodal import (
+        _gif_channel_means,
+        _parse_avi_metadata,
+        _parse_y4m_header,
+    )
+
+    frame = jpeg.encode_baseline_jpeg([np.zeros((8, 8), np.uint8)], 8, 8)
+    avi = bytearray(jpeg.build_mjpeg_avi([frame], 8, 8))
+    avih = avi.find(b"avih") + 8
+    avi[avih + 32 : avih + 36] = (2**31).to_bytes(4, "little")  # width
+    avi[avih + 16 : avih + 20] = (2**32 - 1).to_bytes(4, "little")  # frames
+    w, h, nf, dur, ntr, hnd = _parse_avi_metadata(bytes(avi))
+    assert (w, h, nf, dur, hnd) == (None, 8, None, None, "vids:MJPG")
+    y4m = b"YUV4MPEG2 W2147483648 H2 F25:1 C444\nFRAME\n" + bytes(12)
+    assert _parse_y4m_header(y4m) is None
+    assert _parse_y4m_header(y4m.replace(b"W2147483648", b"W2")) == (2, 2, 27)
+    gif = bytearray(_build_gif(2, 2, [0, 1, 2, 3], list(range(12))))
+    assert _gif_channel_means(bytes(gif)) != (None, None, None)
+    gif[13 + 12 + 10] = 9  # LZW minimum code size
+    assert _gif_channel_means(bytes(gif)) == (None, None, None)

@@ -1,13 +1,16 @@
 """Quarantine-not-fail under arbitrary corruption: the container/
-metadata walkers (ustar, WebP, EXIF, MP3/ID3) must never raise on
-mutated or random bytes — every outcome is either a valid parse or a
-clean quarantine signal. Seeded mutation fuzz over real fixture
+metadata walkers (ustar, WebP, EXIF, MP3/ID3) and the decoders' parse
+functions (MP3/ADTS, WAV/FLAC, images, Y4M/AVI/MP4, PDF, EPUB, WARC)
+must never raise on mutated or random bytes — every outcome is either a
+valid parse or a clean quarantine signal. Seeded mutation fuzz over real fixture
 payloads plus pure-noise buffers; any uncaught exception here is
 exactly the crash a 100 TB crawl shard would hit mid-job."""
 
 from __future__ import annotations
 
 import random
+
+import pytest
 
 from vacancy_gpt_etl_pipeline_spark.operators.exif import (
     _build_exif_jpeg,
@@ -221,3 +224,117 @@ def test_tiff_cx_decoder_never_raises():
         for payload in _mutations(rng, base, 250):
             r = _tiff_gray(payload)
             assert r is None or isinstance(r, np.ndarray)
+
+
+# --- every payload parse function behind operators.payloads.map_payloads:
+# seeded mutations of real fixtures must give rows (or []) that the
+# harness turns into a frame of the decoder's schema — no exception from
+# the parse AND no value that overflows its column (an unsigned header
+# field past Int32 used to fail the whole task at the Arrow cast).
+
+
+def _y4m_base() -> bytes:
+    frame = b"FRAME\n" + bytes((7 * j) % 256 for j in range(3 * 4 * 2))
+    return b"YUV4MPEG2 W4 H2 F25:1 Ip A1:1 C444\n" + frame * 3
+
+
+def _warc_shard() -> bytes:
+    from vacancy_gpt_etl_pipeline_spark.operators.warc import (
+        _gzip_member,
+        _http_response,
+        _warc_record,
+    )
+
+    body = b"<html><body><p>fuzz corpus</p></body></html>"
+    return b"".join(
+        _gzip_member(
+            _warc_record(
+                "response",
+                f"0000-{k}",
+                "2026-01-01T00:00:00Z",
+                _http_response(body * (k + 1)),
+                [("WARC-Target-URI", f"https://example.org/{k}"),
+                 ("Content-Type", "application/http; msgtype=response")],
+            )
+        )
+        for k in range(3)
+    )
+
+
+def _payload_cases():
+    """(parse, schema, base payloads) per parse function."""
+    from functools import partial
+
+    from test_mp3_census import _adts_header, _frame
+    from test_multimodal_decode import (
+        GOLDEN_BMP_2x2,
+        GOLDEN_PCM_WAV,
+        _build_gif,
+        _build_png,
+        _golden_mp4,
+    )
+
+    from vacancy_gpt_etl_pipeline_spark.operators import (
+        epub,
+        mp3,
+        multimodal as mm,
+        pdf,
+        warc,
+    )
+
+    id3 = (
+        b"ID3\x03\x00\x00\x00\x00\x00\x15"
+        b"TIT2\x00\x00\x00\x0b\x00\x00\x00hello tests"
+    )
+    png = _build_png(
+        3, 4, bytes((5 * k) % 256 for k in range(36)), [0, 1, 2, 4]
+    )
+    gif = _build_gif(4, 3, [k % 4 for k in range(12)], list(range(12)))
+    y4m, avi = _y4m_base(), mm._mjpeg_avi_fixture(4)
+    return {
+        "mp3": (mp3._mp3_census_rows, mp3.MP3_CENSUS_SCHEMA,
+                [id3 + _frame(br_idx=9) * 3, _frame(layer=1, br_idx=8) * 2]),
+        "adts": (mp3._adts_census_rows, mp3.ADTS_CENSUS_SCHEMA,
+                 [(_adts_header(flen=40) + bytes(33)) * 3]),
+        "audio": (mm._audio_rows, mm.DECODED_AUDIO_SCHEMA,
+                  [GOLDEN_PCM_WAV, mm._flac_fixture(7)]),
+        "image": (mm._image_rows, mm.DECODED_IMAGE_SCHEMA,
+                  [GOLDEN_BMP_2x2, png, gif, mm._jpeg_fixture(5)]),
+        "video_meta": (mm._video_meta_rows, mm.VIDEO_META_SCHEMA,
+                       [y4m, _golden_mp4(), avi]),
+        "video_frames": (mm._video_frame_rows, mm.DECODED_FRAME_SCHEMA,
+                         [y4m, avi]),
+        "frame_samples": (
+            partial(mm._frame_sample_rows, every_n_bytes=64,
+                    decode_stub=True, every_nth_frame=2),
+            mm.FRAME_SAMPLE_SCHEMA, [y4m, avi],
+        ),
+        "pdf": (pdf._pdf_text_rows, pdf.PDF_TEXT_SCHEMA,
+                [pdf.build_pdf(3, "lorem ipsum dolor " * 30)]),
+        "epub": (epub._chapter_rows, epub.EPUB_CHAPTER_SCHEMA,
+                 [epub.build_epub(4, "sit amet " * 50)]),
+        "warc": (warc._record_rows, warc.WARC_RECORD_SCHEMA, [_warc_shard()]),
+    }
+
+
+_PAYLOAD_CASES = (
+    "mp3", "adts", "audio", "image", "video_meta", "video_frames",
+    "frame_samples", "pdf", "epub", "warc",
+)
+
+
+@pytest.mark.parametrize("name", _PAYLOAD_CASES)
+def test_payload_parse_never_raises(name):
+    from vacancy_gpt_etl_pipeline_spark.operators.payloads import (
+        payload_frame,
+    )
+
+    parse, schema, bases = _payload_cases()[name]
+    rng = random.Random(sum(map(ord, name)))
+    payloads = [b"", *bases, *_noise(rng, 20)]
+    for base in bases:
+        payloads += list(_mutations(rng, base, 120))
+    n_rows = 0
+    for b in payloads:
+        n_rows += len(payload_frame([1], [b], parse, schema))
+    assert n_rows > 0

@@ -20,8 +20,9 @@ int64 ``re² + im²``; the peak is argmax with a fixed smallest-bin tie
 break. The DuckDB oracle embeds THE SAME table literals, so both
 engines do identical integer arithmetic.
 
-Scale shape: fingerprinting is Arrow ``mapInPandas`` (a 16×8 int64
-matmul per window — microseconds per asset); duplicate grouping is one
+Scale shape: fingerprinting is one parse function per payload under
+:func:`operators.payloads.map_payloads` (a 16×8 int64 matmul per
+window — microseconds per asset); duplicate grouping is one
 map-side-combinable groupBy on the fingerprint string. The raw PCM
 column never crosses a shuffle.
 
@@ -31,16 +32,13 @@ extension inventory.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .multimodal import WAV_HEADER_LEN, _le32_hex, _parse_wav_header
+from .payloads import map_payloads
 
 # cos/sin(2*pi*j/16) * 4096, rounded — shared with the DuckDB oracle
 # (queries.py builds its VALUES list from these constants).
@@ -98,37 +96,29 @@ def fingerprint_pcm(samples: np.ndarray) -> tuple[int, str]:
     return len(tops), "-".join(map(str, tops))
 
 
+def _fingerprint_rows(b: bytes) -> list[dict]:
+    """The fingerprint row of a canonical mono 16-bit PCM WAV; any
+    other payload is dropped."""
+    fmt, channels, _rate, bits, _ = _parse_wav_header(b)
+    if fmt != "wav" or channels != 1 or bits != 16:
+        return []
+    data_size = int.from_bytes(b[40:44], "little")
+    pcm = b[WAV_HEADER_LEN : WAV_HEADER_LEN + data_size]
+    samples = np.frombuffer(pcm[: len(pcm) // 2 * 2], dtype="<i2")
+    n_windows, fp = fingerprint_pcm(samples)
+    return [dict(n_samples=len(samples), n_windows=n_windows, fingerprint=fp)]
+
+
 def fingerprint_wav(
     df: DataFrame, id_col: str = "asset_id", content_col: str = "content"
 ) -> DataFrame:
     """Fingerprint canonical mono 16-bit PCM WAV payloads by decoding
-    the real bytes (Arrow ``mapInPandas``). Non-WAV / non-mono-16-bit
-    payloads are dropped (quarantine-not-fail; ``decode_audio``'s
-    census names them)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in AUDIO_FP_SCHEMA}
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                fmt, channels, rate, bits, _ = _parse_wav_header(b)
-                if fmt != "wav" or channels != 1 or bits != 16:
-                    continue
-                data_size = int.from_bytes(b[40:44], "little")
-                pcm = b[WAV_HEADER_LEN : WAV_HEADER_LEN + data_size]
-                samples = np.frombuffer(
-                    pcm[: len(pcm) // 2 * 2], dtype="<i2"
-                )
-                n_windows, fp = fingerprint_pcm(samples)
-                rows["asset_id"].append(int(aid))
-                rows["n_samples"].append(len(samples))
-                rows["n_windows"].append(n_windows)
-                rows["fingerprint"].append(fp)
-            out = pd.DataFrame(rows)
-            out["n_windows"] = out["n_windows"].astype("Int32")
-            yield out
-
-    return df.select(id_col, content_col).mapInPandas(run, AUDIO_FP_SCHEMA)
+    the real bytes (:func:`operators.payloads.map_payloads`). Non-WAV /
+    non-mono-16-bit payloads are dropped (quarantine-not-fail;
+    ``decode_audio``'s census names them)."""
+    return map_payloads(
+        df, id_col, content_col, _fingerprint_rows, AUDIO_FP_SCHEMA
+    )
 
 
 def audio_fp_dup_groups(fps: DataFrame) -> DataFrame:

@@ -14,10 +14,10 @@ Both directions ship: :func:`synthesize_epub_payload` writes
 deterministic conformant EPUBs (fixed timestamps so shard bytes are
 reproducible; chapters slice the document's words WORDS_PER_CHAPTER at
 a time — closed-form for the SQL oracle), and
-:func:`extract_epub_chapters` is the ingestion operator (Arrow
-``mapInPandas``, one output row per spine chapter, quarantine on
-malformed containers, per-entry decompressed-size cap against zip
-bombs).
+:func:`extract_epub_chapters` is the ingestion operator (one parse
+function under :func:`operators.payloads.map_payloads`, one output row
+per spine chapter, quarantine on malformed containers, per-entry
+decompressed-size cap against zip bombs).
 """
 from __future__ import annotations
 
@@ -37,6 +37,8 @@ from vacancy_gpt_etl_pipeline_spark.functions.html import (
     _HTML_STRIP_PATTERNS,
 )
 
+from .payloads import map_payloads
+
 __all__ = [
     "synthesize_epub_payload",
     "extract_epub_chapters",
@@ -46,6 +48,20 @@ __all__ = [
 WORDS_PER_CHAPTER = 40
 
 _MAX_ENTRY_BYTES = 64 * 1024 * 1024
+
+# what zipfile raises on a corrupt archive or entry: bad central
+# directory or CRC, truncated or invalid deflate data, negative seeks,
+# unsupported zip versions / compression methods (NotImplementedError)
+# and encrypted entries (RuntimeError)
+_ZIP_ERRORS = (
+    zipfile.BadZipFile,
+    zlib.error,
+    EOFError,
+    OSError,
+    NotImplementedError,
+    RuntimeError,
+    ValueError,
+)
 
 EPUB_PAYLOAD_SCHEMA = T.StructType(
     [
@@ -176,8 +192,9 @@ def _read_entry(zf: zipfile.ZipFile, name: str) -> bytes | None:
     header promises more than the cap is never inflated) and read-time
     quarantine: a valid central directory does not guarantee valid
     deflate data or CRC, so corruption surfacing mid-read (zlib error,
-    CRC BadZipFile, truncation) returns None instead of escaping the
-    Python worker."""
+    CRC BadZipFile, truncation, an unsupported compression method or
+    zip version, an encrypted entry) returns None instead of escaping
+    the Python worker."""
     try:
         info = zf.getinfo(name)
     except KeyError:
@@ -187,19 +204,20 @@ def _read_entry(zf: zipfile.ZipFile, name: str) -> bytes | None:
     try:
         with zf.open(info) as fh:
             return fh.read(_MAX_ENTRY_BYTES + 1)
-    except (zipfile.BadZipFile, zlib.error, EOFError, OSError):
+    except _ZIP_ERRORS:
         return None
 
 
 def parse_epub(b: bytes) -> list[tuple[int, str, str]] | None:
     """Spine-ordered ``(chapter_idx, href, text)`` of one EPUB, or None
-    (quarantine) when the container chain is malformed: not a zip,
-    wrong/missing mimetype, unresolvable container.xml/OPF.  A spine
-    item whose chapter entry is missing is skipped (quarantine at the
-    finest granularity), like the PDF extractor's per-stream rule."""
+    (quarantine) when the container chain is malformed: not a zip (or a
+    zip :mod:`zipfile` cannot open), wrong/missing mimetype,
+    unresolvable container.xml/OPF.  A spine item whose chapter entry is
+    missing or unreadable is skipped (quarantine at the finest
+    granularity), like the PDF extractor's per-stream rule."""
     try:
         zf = zipfile.ZipFile(io.BytesIO(b))
-    except zipfile.BadZipFile:
+    except _ZIP_ERRORS:
         return None
     with zf:
         mt = _read_entry(zf, "mimetype")
@@ -211,7 +229,9 @@ def parse_epub(b: bytes) -> list[tuple[int, str, str]] | None:
         m = re.search(rb'full-path="([^"]+)"', cont)
         if not m:
             return None
-        opf_path = m.group(1).decode("utf-8")
+        # undecodable names cannot match an entry: the chain (OPF) or the
+        # chapter then quarantines like a missing one
+        opf_path = m.group(1).decode("utf-8", "replace")
         opf = _read_entry(zf, opf_path)
         if opf is None:
             return None
@@ -226,12 +246,14 @@ def parse_epub(b: bytes) -> list[tuple[int, str, str]] | None:
             mid = re.search(rb'(?<![-:\w])id="([^"]+)"', tag)
             mhref = re.search(rb'(?<![-:\w])href="([^"]+)"', tag)
             if mid and mhref:
-                hrefs[mid.group(1).decode()] = mhref.group(1).decode()
+                hrefs[mid.group(1).decode("utf-8", "replace")] = (
+                    mhref.group(1).decode("utf-8", "replace")
+                )
         refs: list[str] = []
         for sm in re.finditer(rb"<itemref\b[^>]*>", opf):
             mref = re.search(rb'(?<![-:\w])idref="([^"]+)"', sm.group(0))
             if mref:
-                refs.append(mref.group(1).decode())
+                refs.append(mref.group(1).decode("utf-8", "replace"))
         out: list[tuple[int, str, str]] = []
         idx = 0
         for ref in refs:
@@ -248,33 +270,18 @@ def parse_epub(b: bytes) -> list[tuple[int, str, str]] | None:
         return out
 
 
+def _chapter_rows(b: bytes) -> list[dict]:
+    return [
+        {"chapter_idx": idx, "href": href, "text": text}
+        for idx, href, text in parse_epub(b) or []
+    ]
+
+
 def extract_epub_chapters(
     df: DataFrame, content_col: str = "content", id_col: str = "asset_id"
 ) -> DataFrame:
-    """The ingestion operator: one row per spine chapter."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, blob in zip(pdf[id_col], pdf[content_col]):
-                if blob is None:
-                    continue
-                chapters = parse_epub(bytes(blob))
-                if chapters is None:
-                    continue
-                for idx, href, text in chapters:
-                    rows.append(
-                        {
-                            "asset_id": int(aid),
-                            "chapter_idx": idx,
-                            "href": href,
-                            "text": text,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in EPUB_CHAPTER_SCHEMA.fields]
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        run, EPUB_CHAPTER_SCHEMA
+    """The ingestion operator: one row per spine chapter
+    (:func:`operators.payloads.map_payloads`)."""
+    return map_payloads(
+        df, id_col, content_col, _chapter_rows, EPUB_CHAPTER_SCHEMA
     )

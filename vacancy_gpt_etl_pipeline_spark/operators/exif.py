@@ -32,8 +32,9 @@ from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .payloads import map_payloads
 
 EXIF_CENSUS_SCHEMA = T.StructType(
     [
@@ -310,46 +311,26 @@ def _parse_tiff(b: bytes):
     )
 
 
+def _tiff_census_rows(b: bytes) -> list[dict]:
+    """One census row; malformed payloads quarantine as
+    ``fmt='tiff?'`` with null census columns."""
+    parsed = _parse_tiff(b)
+    if parsed is None:
+        return [{"fmt": "tiff?"}]
+    names = ("byte_order", "width", "height", "bits_per_sample",
+             "compression", "n_ifds", "n_ifd0_entries")
+    return [{"fmt": "tiff", **dict(zip(names, parsed))}]
+
+
 def census_tiff(
     df: DataFrame, id_col: str = "asset_id", content_col: str = "content"
 ) -> DataFrame:
-    """Walk every payload's TIFF IFD chain (Arrow ``mapInPandas``);
-    malformed payloads quarantine as ``fmt='tiff?'`` with null census
-    columns — the census_exif contract on the standalone container."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in TIFF_CENSUS_SCHEMA}
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                parsed = _parse_tiff(b)
-                rows["asset_id"].append(int(aid))
-                if parsed is None:
-                    rows["fmt"].append("tiff?")
-                    for k in (
-                        "byte_order",
-                        "width",
-                        "height",
-                        "bits_per_sample",
-                        "compression",
-                        "n_ifds",
-                        "n_ifd0_entries",
-                    ):
-                        rows[k].append(None)
-                    continue
-                (order, w, h, bits, comp, n_ifds, n0) = parsed
-                rows["fmt"].append("tiff")
-                rows["byte_order"].append(order)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["bits_per_sample"].append(bits)
-                rows["compression"].append(comp)
-                rows["n_ifds"].append(n_ifds)
-                rows["n_ifd0_entries"].append(n0)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, content_col).mapInPandas(
-        run, TIFF_CENSUS_SCHEMA
+    """Walk every payload's TIFF IFD chain
+    (:func:`operators.payloads.map_payloads`); malformed payloads
+    quarantine as ``fmt='tiff?'`` with null census columns — the
+    census_exif contract on the standalone container."""
+    return map_payloads(
+        df, id_col, content_col, _tiff_census_rows, TIFF_CENSUS_SCHEMA
     )
 
 
@@ -916,53 +897,29 @@ def synthesize_tiff_pixel_payload(
     return _tiff_payload(df, id_col, _build_tiff_px)
 
 
+def _exif_census_rows(b: bytes) -> list[dict]:
+    """One census row: quarantine (``fmt='jpeg?'``, null columns), a
+    clean JPEG without Exif (``fmt='jpeg'``, ``has_gps=false``, null
+    metadata) — a PII audit must be able to tell 'no GPS present' from
+    'unparseable' — or the decoded census."""
+    parsed = _parse_exif(b)
+    if parsed is None:
+        return [{"fmt": "jpeg?"}]
+    if parsed == NO_EXIF:
+        return [{"fmt": "jpeg", "has_gps": False}]
+    names = ("byte_order", "make", "orientation", "datetime_original",
+             "has_gps", "gps_lat", "n_ifd0_entries")
+    return [{"fmt": "jpeg", **dict(zip(names, parsed))}]
+
+
 def census_exif(
     df: DataFrame, id_col: str = "asset_id", content_col: str = "content"
 ) -> DataFrame:
-    """Walk every payload's JPEG segments + EXIF TIFF structure (Arrow
-    ``mapInPandas``); malformed payloads quarantine as ``fmt='jpeg?'``
-    with null census columns."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in EXIF_CENSUS_SCHEMA}
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                parsed = _parse_exif(b)
-                rows["asset_id"].append(int(aid))
-                if parsed is None or parsed == NO_EXIF:
-                    # quarantine ('jpeg?') vs clean-but-metadata-free
-                    # ('jpeg', has_gps=false): a PII audit must be able
-                    # to tell 'no GPS present' from 'unparseable'
-                    rows["fmt"].append(
-                        "jpeg?" if parsed is None else "jpeg"
-                    )
-                    rows["has_gps"].append(
-                        None if parsed is None else False
-                    )
-                    for k in (
-                        "byte_order",
-                        "make",
-                        "orientation",
-                        "datetime_original",
-                        "gps_lat",
-                        "n_ifd0_entries",
-                    ):
-                        rows[k].append(None)
-                    continue
-                (order, make, orientation, dt, has_gps, lat, n0) = parsed
-                rows["fmt"].append("jpeg")
-                rows["byte_order"].append(order)
-                rows["make"].append(make)
-                rows["orientation"].append(orientation)
-                rows["datetime_original"].append(dt)
-                rows["has_gps"].append(has_gps)
-                rows["gps_lat"].append(lat)
-                rows["n_ifd0_entries"].append(n0)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, content_col).mapInPandas(
-        run, EXIF_CENSUS_SCHEMA
+    """Walk every payload's JPEG segments + EXIF TIFF structure
+    (:func:`operators.payloads.map_payloads`); malformed payloads
+    quarantine as ``fmt='jpeg?'`` with null census columns."""
+    return map_payloads(
+        df, id_col, content_col, _exif_census_rows, EXIF_CENSUS_SCHEMA
     )
 
 
@@ -1063,22 +1020,7 @@ def _build_exif_jpeg(i: int) -> bytes:
 def synthesize_exif_payload(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Deterministic EXIF-JPEG fixture (Arrow ``mapInPandas``; per-row
-    Python assembly because TIFF offsets + dual endianness make hex
-    concatenation unreadable — the wds tarfile-for-synthesis
-    precedent). All fields are the closed forms in
+    """Deterministic EXIF-JPEG fixture (per-row Python assembly in
+    :func:`_tiff_payload`). All fields are the closed forms in
     :func:`_build_exif_jpeg`'s docstring."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(x) for x in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "content": [_build_exif_jpeg(i) for i in ids],
-                }
-            )
-
-    return df.select(id_col).mapInPandas(
-        run, "asset_id long, content binary"
-    )
+    return _tiff_payload(df, id_col, _build_exif_jpeg)

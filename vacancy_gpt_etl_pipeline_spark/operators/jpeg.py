@@ -532,8 +532,9 @@ def _decode_scan(
     # non-divisor factors (e.g. h=2 with hmax=3) would silently produce
     # undersized planes and wrong means after the crop — reject them
     # loudly here so the failure is a quarantined ValueError, not bad data
+    # (a zero factor, which divides nothing, included)
     for c in scan:
-        if vmax % c["v"] or hmax % c["h"]:
+        if not c["v"] or not c["h"] or vmax % c["v"] or hmax % c["h"]:
             raise ValueError(
                 "non-divisor sampling factors "
                 f"(h={c['h']}/{hmax}, v={c['v']}/{vmax}) unsupported"
@@ -563,6 +564,9 @@ def _decode_scan(
                         zz = np.zeros(64, dtype=np.int64)
                         size = rd.read_symbol(dc_tab)
                         pred[ci] += _extend(rd.receive(size), size)
+                        if not -(1 << 63) <= pred[ci] < 1 << 63:
+                            # a corrupt DC table's huge size categories
+                            raise ValueError("DC predictor past int64")
                         zz[0] = pred[ci]
                         k = 1
                         while k < 64:

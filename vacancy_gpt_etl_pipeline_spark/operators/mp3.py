@@ -28,8 +28,9 @@ Parser scope (stated loudly):
   * free-format (bitrate index 0) and bad indices (15) quarantine the
     stream with ``fmt='mp3?'`` and null census columns.
 
-Scale shape: payloads are opaque binary cells; the walk is Arrow
-``mapInPandas``, one payload per row, embarrassingly parallel, and
+Scale shape: payloads are opaque binary cells; the walk is one parse
+function per payload under :func:`operators.payloads.map_payloads`
+(the shared Arrow ``mapInPandas`` body), embarrassingly parallel, and
 reads ONLY the 4 header bytes of each frame (``O(n_frames)`` seeks,
 not ``O(n_bytes)`` scans).
 
@@ -41,15 +42,12 @@ operators beyond the reference).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .multimodal import _be32_hex
+from .payloads import map_payloads
 
 # MPEG-1 Layer III bitrate table, index 1..14 → kbps (ISO 11172-3
 # Table B.2); index 0 = free format, 15 = forbidden.
@@ -213,64 +211,46 @@ MP3_CENSUS_SCHEMA = T.StructType(
 )
 
 
+def _mp3_census_rows(b: bytes) -> list[dict]:
+    """One census row (see the module docstring); an absent or invalid
+    first frame header quarantines as ``fmt='mp3?'``."""
+    tag_bytes, title = _parse_id3v2(b)
+    row = {"title": title, "id3_bytes": tag_bytes, "n_bytes": len(b)}
+    i = tag_bytes
+    first = _frame_info(b, i)
+    if first is None:
+        return [{**row, "fmt": "mp3?"}]
+    _, vgroup, layer, kbps0, sr, mode, spf = first
+    n_frames = 0
+    n_samples = 0
+    cbr = True
+    while True:
+        info = _frame_info(b, i)
+        if info is None:
+            break
+        flen, _, _, kbps, _, _, spf_f = info
+        cbr = cbr and kbps == kbps0
+        n_frames += 1
+        n_samples += spf_f
+        i += flen
+    return [dict(row, fmt="mp3", version="MPEG" + vgroup, layer=layer,
+                 channel_mode=mode, sample_rate=sr, bitrate_kbps=kbps0,
+                 is_cbr=cbr, n_frames=n_frames,
+                 duration_sec=n_samples / sr)]
+
+
 def census_mp3(
     df: DataFrame, id_col: str = "asset_id", content_col: str = "content"
 ) -> DataFrame:
-    """Walk every payload's ID3v2 tag + MPEG frame chain (Arrow
-    ``mapInPandas``) and emit the census row described in the module
-    docstring. A payload whose first frame header is absent or invalid
-    quarantines as ``fmt='mp3?'`` with null census columns —
-    quarantine-not-fail, same contract as :func:`decode_images`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in MP3_CENSUS_SCHEMA}
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                tag_bytes, title = _parse_id3v2(b)
-                i = tag_bytes
-                first = _frame_info(b, i)
-                rows["asset_id"].append(int(aid))
-                rows["id3_bytes"].append(tag_bytes)
-                rows["n_bytes"].append(len(b))
-                rows["title"].append(title)
-                if first is None:
-                    rows["fmt"].append("mp3?")
-                    for c in ("version", "layer", "channel_mode",
-                              "sample_rate", "bitrate_kbps", "is_cbr",
-                              "n_frames", "duration_sec"):
-                        rows[c].append(None)
-                    continue
-                _, vgroup, layer, kbps0, sr, mode, spf = first
-                n_frames = 0
-                n_samples = 0
-                cbr = True
-                while True:
-                    info = _frame_info(b, i)
-                    if info is None:
-                        break
-                    flen, _, _, kbps, _, _, spf_f = info
-                    cbr = cbr and kbps == kbps0
-                    n_frames += 1
-                    n_samples += spf_f
-                    i += flen
-                rows["fmt"].append("mp3")
-                rows["version"].append("MPEG" + vgroup)
-                rows["layer"].append(layer)
-                rows["channel_mode"].append(mode)
-                rows["sample_rate"].append(sr)
-                rows["bitrate_kbps"].append(kbps0)
-                rows["is_cbr"].append(cbr)
-                rows["n_frames"].append(n_frames)
-                rows["duration_sec"].append(n_samples / sr)
-            out = pd.DataFrame(rows)
-            out["layer"] = out["layer"].astype("Int32")
-            out["sample_rate"] = out["sample_rate"].astype("Int32")
-            out["bitrate_kbps"] = out["bitrate_kbps"].astype("Int32")
-            out["n_frames"] = out["n_frames"].astype("Int64")
-            yield out
-
-    return df.select(id_col, content_col).mapInPandas(run, MP3_CENSUS_SCHEMA)
+    """Walk every payload's ID3v2 tag + MPEG frame chain
+    (:func:`operators.payloads.map_payloads`) and emit the census row
+    described in the module docstring. A payload whose first frame
+    header is absent or invalid quarantines as ``fmt='mp3?'`` with null
+    census columns — quarantine-not-fail, same contract as
+    :func:`decode_images`."""
+    return map_payloads(
+        df, id_col, content_col, _mp3_census_rows, MP3_CENSUS_SCHEMA
+    )
 
 
 # --- fixture synthesizer -------------------------------------------------
@@ -409,53 +389,38 @@ def _adts_frame_info(b: bytes, i: int):
     return flen, mpeg_id, profile, sr, ch, n_blocks
 
 
+def _adts_census_rows(b: bytes) -> list[dict]:
+    """One census row; an invalid first frame quarantines as
+    ``fmt='aac?'``."""
+    first = _adts_frame_info(b, 0)
+    if first is None:
+        return [{"fmt": "aac?", "n_bytes": len(b)}]
+    _, mpeg_id, profile, sr, ch, _ = first
+    i = 0
+    n_frames = 0
+    n_samples = 0
+    while True:
+        info = _adts_frame_info(b, i)
+        if info is None:
+            break
+        flen, _, _, _, _, n_blocks = info
+        n_frames += 1
+        n_samples += 1024 * n_blocks
+        i += flen
+    return [dict(fmt="aac", mpeg_id=mpeg_id, profile=profile,
+                 sample_rate=sr, channels=ch, n_frames=n_frames,
+                 n_bytes=len(b), duration_sec=n_samples / sr)]
+
+
 def census_adts(
     df: DataFrame, id_col: str = "asset_id", content_col: str = "content"
 ) -> DataFrame:
     """Walk every payload's ADTS frame chain and census it —
     ``duration_sec`` is sample-exact (1024 samples per raw data block).
     Invalid first frame quarantines as ``fmt='aac?'``."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in ADTS_CENSUS_SCHEMA}
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                first = _adts_frame_info(b, 0)
-                rows["asset_id"].append(int(aid))
-                rows["n_bytes"].append(len(b))
-                if first is None:
-                    rows["fmt"].append("aac?")
-                    for c in ("mpeg_id", "profile", "sample_rate",
-                              "channels", "n_frames", "duration_sec"):
-                        rows[c].append(None)
-                    continue
-                _, mpeg_id, profile, sr, ch, _ = first
-                i = 0
-                n_frames = 0
-                n_samples = 0
-                while True:
-                    info = _adts_frame_info(b, i)
-                    if info is None:
-                        break
-                    flen, _, _, _, _, n_blocks = info
-                    n_frames += 1
-                    n_samples += 1024 * n_blocks
-                    i += flen
-                rows["fmt"].append("aac")
-                rows["mpeg_id"].append(mpeg_id)
-                rows["profile"].append(profile)
-                rows["sample_rate"].append(sr)
-                rows["channels"].append(ch)
-                rows["n_frames"].append(n_frames)
-                rows["duration_sec"].append(n_samples / sr)
-            out = pd.DataFrame(rows)
-            out["sample_rate"] = out["sample_rate"].astype("Int32")
-            out["channels"] = out["channels"].astype("Int32")
-            out["n_frames"] = out["n_frames"].astype("Int64")
-            yield out
-
-    return df.select(id_col, content_col).mapInPandas(run, ADTS_CENSUS_SCHEMA)
+    return map_payloads(
+        df, id_col, content_col, _adts_census_rows, ADTS_CENSUS_SCHEMA
+    )
 
 
 def synthesize_adts_payload(

@@ -23,17 +23,20 @@ genuinely need ffmpeg; :func:`sample_frames` emits real frames for Y4M
 and MJPEG-AVI payloads and falls back to a documented deterministic
 slicer only for those codecs.
 
-Scale notes: binary payloads dominate row size, so ``mapInPandas`` with a
-small ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds executor
-memory; feature extraction emits small fixed-width columns, so the payload
-is dropped as early as the plan allows (select pruning keeps parquet from
+Scale notes: every decoder here is one parse function per payload under
+:func:`operators.payloads.map_payloads` (the shared Arrow ``mapInPandas``
+body). Binary payloads dominate row size, so a small
+``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds executor memory;
+feature extraction emits small fixed-width columns, so the payload is
+dropped as early as the plan allows (select pruning keeps parquet from
 even reading it when only metadata is touched).
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -42,10 +45,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import flac, jpeg
+from .payloads import map_payloads
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 PNG_HEADER_LEN = 33  # 8 sig + 4 len + 4 'IHDR' + 13 data + 4 CRC
 GIF_HEADER_LEN = 13  # 6 sig + 4 dims + packed + bg + aspect
+# largest value of the Int32 census columns; a header field past it is
+# malformed (PNG caps IHDR dims at 2^31-1 by spec)
+_INT32_MAX = 2**31 - 1
+
+
+def _int32(v: int) -> int | None:
+    """``v``, or None when it does not fit an Int32 census column."""
+    return v if -_INT32_MAX - 1 <= v <= _INT32_MAX else None
 
 
 def attach_text_payload(df: DataFrame, text_col: str = "text", modality: str = "image") -> DataFrame:
@@ -351,86 +363,62 @@ def _parse_wav_header(
     return ("unknown", None, None, None, None)
 
 
+def _pcm_stats(samples: np.ndarray) -> tuple:
+    """(n_samples, peak |amplitude|, exact mean |amplitude|) of decoded
+    PCM samples — integer sum / count, one IEEE division; nulls for an
+    empty stream."""
+    if not samples.size:
+        return None, None, None
+    absd = np.abs(samples.astype(np.int64))
+    return int(samples.size), int(absd.max()), int(absd.sum()) / samples.size
+
+
+def _audio_rows(b: bytes) -> list[dict]:
+    """One decoded-audio row (see :func:`decode_audio`). A corrupt FLAC
+    stream quarantines to a null-stats 'flac' row, a WAV whose sample
+    rate does not fit the Int32 column to a null-field 'wav' row."""
+    n_s = peak = mean = None
+    if b[:4] == b"fLaC":
+        # route through the real FLAC decoder (operators/flac.py): Rice
+        # residuals, fixed predictors, CRCs and STREAMINFO MD5 verified
+        fmt = "flac"
+        try:
+            rate, ch, bits, samples = flac.decode_flac(b)
+            dur = (samples.size // max(ch, 1)) / rate if rate else None
+            n_s, peak, mean = _pcm_stats(samples)
+        except (ValueError, struct.error, IndexError, KeyError):
+            ch = rate = bits = dur = None
+    else:
+        fmt, ch, rate, bits, dur = _parse_wav_header(b)
+        if fmt == "wav" and _int32(rate) is None:
+            ch = rate = bits = dur = None
+    if fmt == "wav" and bits == 16:
+        data_size = int.from_bytes(b[40:44], "little")
+        data = b[WAV_HEADER_LEN : WAV_HEADER_LEN + data_size]
+        n_s, peak, mean = _pcm_stats(
+            np.frombuffer(data[: len(data) - (len(data) % 2)], dtype="<i2")
+        )
+    return [dict(fmt=fmt, channels=ch, sample_rate=rate,
+                 bits_per_sample=bits, n_bytes=len(b), duration_sec=dur,
+                 n_samples=n_s, peak_abs=peak, mean_abs=mean)]
+
+
 def decode_audio(
     df: DataFrame,
     id_col: str = "asset_id",
     content_col: str = "content",
 ) -> DataFrame:
     """Decode audio payloads by parsing the REAL RIFF/WAVE bytes — the
-    audio twin of :func:`decode_images`, same Arrow ``mapInPandas``
-    shape. Header fields (channels/rate/bits/duration) come from the
-    fmt chunk; for 16-bit PCM the DATA chunk is then actually decoded —
-    little-endian int16 frames → sample count, peak |amplitude|, and
-    exact mean |amplitude| (integer sum / count, one IEEE division)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "asset_id": [],
-                "fmt": [],
-                "channels": [],
-                "sample_rate": [],
-                "bits_per_sample": [],
-                "n_bytes": [],
-                "duration_sec": [],
-                "n_samples": [],
-                "peak_abs": [],
-                "mean_abs": [],
-            }
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                n_s = peak = mean = None
-                if b[:4] == b"fLaC":
-                    # route through the real FLAC decoder (operators/
-                    # flac.py): Rice residuals, fixed predictors, CRCs
-                    # and STREAMINFO MD5 all verified; a corrupt stream
-                    # quarantines to a null-stats 'flac' row
-                    fmt, ch, rate, bits, dur = "flac", None, None, None, None
-                    try:
-                        rate, ch, bits, samples = flac.decode_flac(b)
-                        dur = (
-                            (samples.size // max(ch, 1)) / rate
-                            if rate
-                            else None
-                        )
-                        if samples.size:
-                            n_s = int(samples.size)
-                            absd = np.abs(samples.astype(np.int64))
-                            peak = int(absd.max())
-                            mean = int(absd.sum()) / n_s
-                    except (ValueError, struct.error, IndexError, KeyError):
-                        ch = rate = bits = dur = None
-                        n_s = peak = mean = None
-                else:
-                    fmt, ch, rate, bits, dur = _parse_wav_header(b)
-                if fmt == "wav" and bits == 16:
-                    data_size = int.from_bytes(b[40:44], "little")
-                    data = b[WAV_HEADER_LEN : WAV_HEADER_LEN + data_size]
-                    samples = np.frombuffer(
-                        data[: len(data) - (len(data) % 2)], dtype="<i2"
-                    ).astype(np.int64)
-                    if samples.size:
-                        n_s = int(samples.size)
-                        absd = np.abs(samples)
-                        peak = int(absd.max())
-                        mean = int(absd.sum()) / n_s
-                rows["asset_id"].append(int(aid))
-                rows["fmt"].append(fmt)
-                rows["channels"].append(ch)
-                rows["sample_rate"].append(rate)
-                rows["bits_per_sample"].append(bits)
-                rows["n_bytes"].append(len(b))
-                rows["duration_sec"].append(dur)
-                rows["n_samples"].append(n_s)
-                rows["peak_abs"].append(peak)
-                rows["mean_abs"].append(mean)
-            out = pd.DataFrame(rows)
-            for c in ("channels", "sample_rate", "bits_per_sample", "peak_abs"):
-                out[c] = out[c].astype("Int32")
-            out["n_samples"] = out["n_samples"].astype("Int64")
-            yield out
-
-    return df.select(id_col, content_col).mapInPandas(run, DECODED_AUDIO_SCHEMA)
+    audio twin of :func:`decode_images`, same
+    :func:`operators.payloads.map_payloads` shape. Header fields
+    (channels/rate/bits/duration) come from the fmt chunk; for 16-bit
+    PCM the DATA chunk is then actually decoded — little-endian int16
+    frames → sample count, peak |amplitude|, and exact mean |amplitude|
+    (integer sum / count, one IEEE division). FLAC payloads decode
+    through :mod:`operators.flac` to the same statistics."""
+    return map_payloads(
+        df, id_col, content_col, _audio_rows, DECODED_AUDIO_SCHEMA
+    )
 
 
 DECODED_IMAGE_SCHEMA = T.StructType(
@@ -453,18 +441,19 @@ def _parse_image_header(b: bytes) -> tuple[str | None, int | None, int | None, i
     """(fmt, width, height, bit_depth, body_offset) from real header bytes.
 
     PNG: IHDR data starts at byte 16 — width/height are big-endian u32,
-    bit depth is the following byte. GIF87a/89a: logical screen width and
-    height are little-endian u16 at bytes 6 and 8. Anything else is
-    'unknown' (nulls) — quarantine-not-fail, like the corrupt-JSONL path.
+    bit depth is the following byte; dims past 2^31-1 are malformed
+    (null fields). GIF87a/89a: logical screen width and height are
+    little-endian u16 at bytes 6 and 8. BMP: width/height are signed
+    LE32 — a negative height is a top-down pixel array, censused as-is
+    with null channel means. Anything else is 'unknown' (nulls) —
+    quarantine-not-fail, like the corrupt-JSONL path.
     """
     if len(b) >= PNG_HEADER_LEN and b[:8] == PNG_SIG and b[12:16] == b"IHDR":
-        return (
-            "png",
-            int.from_bytes(b[16:20], "big"),
-            int.from_bytes(b[20:24], "big"),
-            b[24],
-            PNG_HEADER_LEN,
-        )
+        w = _int32(int.from_bytes(b[16:20], "big"))
+        h = _int32(int.from_bytes(b[20:24], "big"))
+        if w is None or h is None:
+            return ("png", None, None, None, PNG_HEADER_LEN)
+        return ("png", w, h, b[24], PNG_HEADER_LEN)
     if len(b) >= GIF_HEADER_LEN and b[:6] in (b"GIF87a", b"GIF89a"):
         return (
             "gif",
@@ -476,8 +465,8 @@ def _parse_image_header(b: bytes) -> tuple[str | None, int | None, int | None, i
     if len(b) >= BMP_HEADER_LEN and b[:2] == b"BM":
         return (
             "bmp",
-            int.from_bytes(b[18:22], "little"),
-            int.from_bytes(b[22:26], "little"),
+            int.from_bytes(b[18:22], "little", signed=True),
+            int.from_bytes(b[22:26], "little", signed=True),
             int.from_bytes(b[28:30], "little"),
             int.from_bytes(b[10:14], "little"),
         )
@@ -699,7 +688,10 @@ def _gif_lzw_decode(
     """GIF-variant LZW: LSB-first packed variable-width codes, dictionary
     reset on CLEAR, width growth at 2^size up to 12 bits. Pure
     arithmetic — no codec library. Returns exactly ``n_pixels`` color
-    indices or None."""
+    indices or None (also for a minimum code size past the 8 bits a
+    byte-sized color index needs)."""
+    if min_code_size > 8:
+        return None
     clear = 1 << min_code_size
     end = clear + 1
     code_size = min_code_size + 1
@@ -812,71 +804,47 @@ def _gif_channel_means(
     return (None, None, None)
 
 
+def _image_rows(b: bytes) -> list[dict]:
+    """One decoded-image row (see :func:`decode_images`)."""
+    fmt, w, h, depth, off = _parse_image_header(b)
+    body = np.frombuffer(b, dtype=np.uint8)[off:]
+    mb = mg = mr = None
+    if fmt == "bmp" and depth == 24:
+        mb, mg, mr = _bmp_channel_means(b, w, h, off)
+    elif fmt == "png":
+        mb, mg, mr = _png_channel_means(b)
+    elif fmt == "gif":
+        mb, mg, mr = _gif_channel_means(b)
+    elif fmt == "jpeg":
+        mb, mg, mr = _jpeg_channel_means(b)
+    luma = round(float(body.mean()), 6) if body.size else 0.0
+    return [dict(fmt=fmt, width=w, height=h, bit_depth=depth,
+                 n_bytes=len(b), mean_luma=luma,
+                 mean_b=mb, mean_g=mg, mean_r=mr)]
+
+
 def decode_images(
     df: DataFrame,
     id_col: str = "asset_id",
     content_col: str = "content",
 ) -> DataFrame:
     """Decode image payloads to (fmt, width, height, bit_depth, n_bytes,
-    mean_luma, channel means) by parsing the REAL bytes (Arrow-batched
-    ``mapInPandas`` — per-payload work is the genuine shape of a decode
-    stage). ALL four formats now decode to samples when the payload
-    carries them: BMP pixel arrays (:func:`_bmp_channel_means`), PNG via
-    stdlib-zlib IDAT inflate + scanline unfiltering
-    (:func:`_png_channel_means`), GIF via a pure-arithmetic LZW decoder
-    (:func:`_gif_channel_means`), and baseline JPEG through the full
-    T.81 Huffman/IDCT stack with BT.601 RGB conversion
-    (:func:`_jpeg_channel_means`). Header-only payloads (e.g. the JVM
-    fixture synthesizer's PNG-with-text-body) yield null channel means —
-    quarantine-not-fail. ``mean_luma`` is the mean of the raw body bytes
-    behind the header — the format-agnostic statistic."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "asset_id": [],
-                "fmt": [],
-                "width": [],
-                "height": [],
-                "bit_depth": [],
-                "n_bytes": [],
-                "mean_luma": [],
-                "mean_b": [],
-                "mean_g": [],
-                "mean_r": [],
-            }
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                fmt, w, h, depth, off = _parse_image_header(b)
-                body = np.frombuffer(b, dtype=np.uint8)[off:]
-                mb = mg = mr = None
-                if fmt == "bmp" and depth == 24:
-                    mb, mg, mr = _bmp_channel_means(b, w, h, off)
-                elif fmt == "png":
-                    mb, mg, mr = _png_channel_means(b)
-                elif fmt == "gif":
-                    mb, mg, mr = _gif_channel_means(b)
-                elif fmt == "jpeg":
-                    mb, mg, mr = _jpeg_channel_means(b)
-                rows["asset_id"].append(int(aid))
-                rows["fmt"].append(fmt)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["bit_depth"].append(depth)
-                rows["n_bytes"].append(len(b))
-                rows["mean_luma"].append(
-                    round(float(body.mean()), 6) if body.size else 0.0
-                )
-                rows["mean_b"].append(mb)
-                rows["mean_g"].append(mg)
-                rows["mean_r"].append(mr)
-            out = pd.DataFrame(rows)
-            out["width"] = out["width"].astype("Int32")
-            out["height"] = out["height"].astype("Int32")
-            out["bit_depth"] = out["bit_depth"].astype("Int32")
-            yield out
-
-    return df.select(id_col, content_col).mapInPandas(run, DECODED_IMAGE_SCHEMA)
+    mean_luma, channel means) by parsing the REAL bytes
+    (:func:`operators.payloads.map_payloads` — per-payload work is the
+    genuine shape of a decode stage). ALL four formats now decode to
+    samples when the payload carries them: BMP pixel arrays
+    (:func:`_bmp_channel_means`), PNG via stdlib-zlib IDAT inflate +
+    scanline unfiltering (:func:`_png_channel_means`), GIF via a
+    pure-arithmetic LZW decoder (:func:`_gif_channel_means`), and
+    baseline JPEG through the full T.81 Huffman/IDCT stack with BT.601
+    RGB conversion (:func:`_jpeg_channel_means`). Header-only payloads
+    (e.g. the JVM fixture synthesizer's PNG-with-text-body) yield null
+    channel means — quarantine-not-fail. ``mean_luma`` is the mean of
+    the raw body bytes behind the header — the format-agnostic
+    statistic."""
+    return map_payloads(
+        df, id_col, content_col, _image_rows, DECODED_IMAGE_SCHEMA
+    )
 
 
 FRAME_SAMPLE_SCHEMA = T.StructType(
@@ -888,6 +856,35 @@ FRAME_SAMPLE_SCHEMA = T.StructType(
 )
 
 
+def _frame_sample_rows(
+    b: bytes, every_n_bytes: int, decode_stub: bool, every_nth_frame: int
+) -> list[dict]:
+    """The sampled frames of one payload (see :func:`sample_frames`)."""
+    if b.startswith(Y4M_MAGIC):
+        frames = (
+            (idx, data.tobytes()) for idx, _w, _h, data in _iter_y4m_frames(b)
+        )
+    elif b[:4] == b"RIFF" and jpeg.avi_video_fourcc(b) == "MJPG":
+        # REAL sampling for MJPEG AVIs too: each emitted frame is the
+        # self-contained baseline JPEG still
+        frames = jpeg.iter_avi_mjpeg_frames(b)
+    elif not decode_stub:
+        raise NotImplementedError(
+            "inter-predicted-codec frame sampling requires ffmpeg (raw "
+            "Y4M and MJPEG-AVI decode dependency-free)"
+        )
+    else:
+        return [
+            {"frame_idx": i, "frame_bytes": b[off : off + every_n_bytes]}
+            for i, off in enumerate(range(0, len(b), every_n_bytes))
+        ]
+    return [
+        {"frame_idx": idx, "frame_bytes": data}
+        for idx, data in frames
+        if idx % every_nth_frame == 0
+    ]
+
+
 def sample_frames(
     df: DataFrame,
     every_n_bytes: int = 64,
@@ -896,7 +893,8 @@ def sample_frames(
     decode_stub: bool = True,
     every_nth_frame: int = 1,
 ) -> DataFrame:
-    """Video frame sampling (1→N row expansion through mapInPandas).
+    """Video frame sampling (1→N row expansion through
+    :func:`operators.payloads.map_payloads`).
 
     Y4M payloads get REAL sampling: the stream header is parsed, the
     FRAME markers walked, and every ``every_nth_frame``-th frame's raw
@@ -921,43 +919,13 @@ def sample_frames(
         )
     if every_n_bytes < 1:
         raise ValueError(f"every_n_bytes must be >= 1, got {every_n_bytes}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"asset_id": [], "frame_idx": [], "frame_bytes": []}
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                if b.startswith(Y4M_MAGIC):
-                    for idx, _w, _h, data in _iter_y4m_frames(b):
-                        if idx % every_nth_frame:
-                            continue
-                        rows["asset_id"].append(int(aid))
-                        rows["frame_idx"].append(idx)
-                        rows["frame_bytes"].append(data.tobytes())
-                    continue
-                if b[:4] == b"RIFF" and jpeg.avi_video_fourcc(b) == "MJPG":
-                    # REAL sampling for MJPEG AVIs too: each emitted
-                    # frame is the self-contained baseline JPEG still
-                    for idx, jpg in jpeg.iter_avi_mjpeg_frames(b):
-                        if idx % every_nth_frame:
-                            continue
-                        rows["asset_id"].append(int(aid))
-                        rows["frame_idx"].append(idx)
-                        rows["frame_bytes"].append(jpg)
-                    continue
-                if not decode_stub:
-                    raise NotImplementedError(
-                        "inter-predicted-codec frame sampling requires "
-                        "ffmpeg (raw Y4M and MJPEG-AVI decode "
-                        "dependency-free)"
-                    )
-                for i, off in enumerate(range(0, len(b), every_n_bytes)):
-                    rows["asset_id"].append(int(aid))
-                    rows["frame_idx"].append(i)
-                    rows["frame_bytes"].append(b[off : off + every_n_bytes])
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, content_col).mapInPandas(run, FRAME_SAMPLE_SCHEMA)
+    parse = partial(
+        _frame_sample_rows,
+        every_n_bytes=every_n_bytes,
+        decode_stub=decode_stub,
+        every_nth_frame=every_nth_frame,
+    )
+    return map_payloads(df, id_col, content_col, parse, FRAME_SAMPLE_SCHEMA)
 
 
 # --- Y4M video: the uncompressed container, decodable without a codec ----
@@ -1046,6 +1014,63 @@ def _solid_block_planes(i: int, f: int, w: int, h: int) -> list[np.ndarray]:
     ]
 
 
+def _media_payload(
+    df: DataFrame,
+    id_col: str,
+    build: Callable[[int], bytes],
+    modality: str,
+    mime_type: str,
+) -> DataFrame:
+    """``MULTIMODAL_PAYLOAD_SCHEMA`` rows: ``build(id)`` per row of
+    ``df[id_col]`` (Arrow ``mapInPandas``; per-row Python assembly for
+    the codecs whose entropy coding is not Catalyst arithmetic)."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = [int(x) for x in pdf[id_col]]
+            yield pd.DataFrame(
+                {
+                    "asset_id": ids,
+                    "content": [build(i) for i in ids],
+                    "modality": [modality] * len(ids),
+                    "mime_type": [mime_type] * len(ids),
+                }
+            )
+
+    return df.select(F.col(id_col).cast("bigint").alias(id_col)).mapInPandas(
+        run, MULTIMODAL_PAYLOAD_SCHEMA
+    )
+
+
+def _flac_fixture(i: int) -> bytes:
+    n = i % 300 + 40
+    rate = (8000, 16000, 44100)[i % 3]
+    k = np.arange(n, dtype=np.int64)
+    u = (i * 13 + k * 7) % 65536
+    samples = np.where(u >= 32768, u - 65536, u).astype(np.int16)
+    return flac.encode_flac(samples, rate, block_size=64)
+
+
+def _jpeg_fixture(i: int) -> bytes:
+    w = (i % 4 + 1) * 8
+    h = (i % 2 + 1) * 8
+    return jpeg.encode_baseline_jpeg(
+        _solid_block_planes(i, 0, w, h), w, h, restart_interval=i % 3
+    )
+
+
+def _mjpeg_avi_fixture(i: int) -> bytes:
+    w = (i % 4 + 1) * 8
+    h = (i % 2 + 1) * 8
+    frames = [
+        jpeg.encode_baseline_jpeg(
+            _solid_block_planes(i, f, w, h), w, h, restart_interval=i % 3
+        )
+        for f in range(i % 3 + 1)
+    ]
+    return jpeg.build_mjpeg_avi(frames, w, h)
+
+
 def synthesize_flac_payload(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1056,39 +1081,11 @@ def synthesize_flac_payload(
     read as int16 — with ``n = id mod 300 + 40`` samples (1..6 blocks
     at block size 64, so multi-frame streams and the frame-number
     UTF-8 coding are exercised) and the 8000/16000/44100 rate cycle.
-    Built in ``mapInPandas`` like the JPEG synthesizers: Rice coding is
-    not Catalyst arithmetic. The oracle recomputes every statistic from
-    the formula without touching a byte — the hash only matches if the
-    whole encode→Rice→decode round trip is lossless."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "asset_id": [],
-                "content": [],
-                "modality": [],
-                "mime_type": [],
-            }
-            for did in pdf[id_col]:
-                i = int(did)
-                n = i % 300 + 40
-                rate = (8000, 16000, 44100)[i % 3]
-                k = np.arange(n, dtype=np.int64)
-                u = (i * 13 + k * 7) % 65536
-                samples = np.where(u >= 32768, u - 65536, u).astype(
-                    np.int16
-                )
-                out["asset_id"].append(i)
-                out["content"].append(
-                    flac.encode_flac(samples, rate, block_size=64)
-                )
-                out["modality"].append("audio")
-                out["mime_type"].append("audio/flac")
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col).cast("bigint").alias(id_col)).mapInPandas(
-        run, MULTIMODAL_PAYLOAD_SCHEMA
-    )
+    Built in :func:`_media_payload` like the JPEG synthesizers: Rice
+    coding is not Catalyst arithmetic. The oracle recomputes every
+    statistic from the formula without touching a byte — the hash only
+    matches if the whole encode→Rice→decode round trip is lossless."""
+    return _media_payload(df, id_col, _flac_fixture, "audio", "audio/flac")
 
 
 def synthesize_jpeg_payload(
@@ -1097,38 +1094,10 @@ def synthesize_jpeg_payload(
     """Deterministic baseline-JPEG still fixture: one real entropy-coded
     JPEG per row (``w = (id%4+1)·8``, ``h = (id%2+1)·8``, restart
     interval ``id%3``), content per :func:`_solid_block_planes` so the
-    decode oracle is closed-form. Built in ``mapInPandas`` for the same
-    reason as :func:`synthesize_mjpeg_avi_payload` (entropy coding is
-    not Catalyst arithmetic)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "asset_id": [],
-                "content": [],
-                "modality": [],
-                "mime_type": [],
-            }
-            for did in pdf[id_col]:
-                i = int(did)
-                w = (i % 4 + 1) * 8
-                h = (i % 2 + 1) * 8
-                out["asset_id"].append(i)
-                out["content"].append(
-                    jpeg.encode_baseline_jpeg(
-                        _solid_block_planes(i, 0, w, h),
-                        w,
-                        h,
-                        restart_interval=i % 3,
-                    )
-                )
-                out["modality"].append("image")
-                out["mime_type"].append("image/jpeg")
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col).cast("bigint").alias(id_col)).mapInPandas(
-        run, MULTIMODAL_PAYLOAD_SCHEMA
-    )
+    decode oracle is closed-form. Built in :func:`_media_payload` for the
+    same reason as :func:`synthesize_mjpeg_avi_payload` (entropy coding
+    is not Catalyst arithmetic)."""
+    return _media_payload(df, id_col, _jpeg_fixture, "image", "image/jpeg")
 
 
 def synthesize_mjpeg_avi_payload(
@@ -1139,8 +1108,8 @@ def synthesize_mjpeg_avi_payload(
     wrapped in a minimal valid RIFF-AVI container — the compressed-video
     fixture matching :mod:`operators.jpeg`'s decode path.
 
-    Unlike the sibling synthesizers this one is built in an Arrow
-    ``mapInPandas`` stage, not JVM-side SQL: JPEG entropy coding
+    Unlike the JVM-side synthesizers this one is built in an Arrow
+    ``mapInPandas`` stage (:func:`_media_payload`): JPEG entropy coding
     (bit-packed canonical Huffman with FF-byte stuffing) is genuinely
     not expressible as Catalyst column arithmetic. The ORACLE stays
     byte-free because the content is closed-form: frame ``f`` of asset
@@ -1154,38 +1123,8 @@ def synthesize_mjpeg_avi_payload(
     ``id%3+1`` frames, restart interval ``id%3`` (0 = none) — the DRI/
     RSTn path is exercised by two-thirds of the corpus.
     """
-    rest_mod = 3
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "asset_id": [],
-                "content": [],
-                "modality": [],
-                "mime_type": [],
-            }
-            for did in pdf[id_col]:
-                i = int(did)
-                w = (i % 4 + 1) * 8
-                h = (i % 2 + 1) * 8
-                nf = i % 3 + 1
-                frames = [
-                    jpeg.encode_baseline_jpeg(
-                        _solid_block_planes(i, f, w, h),
-                        w,
-                        h,
-                        restart_interval=i % rest_mod,
-                    )
-                    for f in range(nf)
-                ]
-                out["asset_id"].append(i)
-                out["content"].append(jpeg.build_mjpeg_avi(frames, w, h))
-                out["modality"].append("video")
-                out["mime_type"].append("video/x-msvideo")
-            yield pd.DataFrame(out)
-
-    return df.select(F.col(id_col).cast("bigint").alias(id_col)).mapInPandas(
-        run, MULTIMODAL_PAYLOAD_SCHEMA
+    return _media_payload(
+        df, id_col, _mjpeg_avi_fixture, "video", "video/x-msvideo"
     )
 
 
@@ -1205,10 +1144,10 @@ DECODED_FRAME_SCHEMA = T.StructType(
 def _parse_y4m_header(b: bytes) -> tuple[int, int, int] | None:
     """(w, h, header_end) of a C444 YUV4MPEG2 stream header, or None —
     the ONE place the Y4M header boundary lives (the frame walkers and
-    the pHash tier all route through it). Malformed W/H tokens and
-    non-C444 colorspaces (including C444alpha, whose 4-plane frames
-    would desynchronize a 3-plane stride walk) quarantine as None,
-    never raise."""
+    the pHash tier all route through it). Malformed W/H tokens (dims
+    past 2^31-1 included) and non-C444 colorspaces (including
+    C444alpha, whose 4-plane frames would desynchronize a 3-plane
+    stride walk) quarantine as None, never raise."""
     if not b.startswith(Y4M_MAGIC):
         return None
     nl = b.find(b"\n")
@@ -1226,7 +1165,7 @@ def _parse_y4m_header(b: bytes) -> tuple[int, int, int] | None:
                 c444 = False
     except ValueError:
         return None
-    if not w or not h or w < 0 or h < 0 or not c444:
+    if not (c444 and w and h and 0 < min(w, h) <= max(w, h) <= _INT32_MAX):
         return None
     return w, h, nl + 1
 
@@ -1273,6 +1212,15 @@ def _parse_y4m(b: bytes) -> Iterator[tuple[int, int, int, float, float, float]]:
         )
 
 
+def _video_frame_rows(b: bytes) -> list[dict]:
+    """Per-frame statistics of one Y4M or MJPEG-AVI payload (see
+    :func:`decode_video_frames`); anything else yields no rows."""
+    riff = b[:4] == b"RIFF"
+    stats = jpeg.parse_mjpeg_avi_stats(b) if riff else _parse_y4m(b)
+    names = ("frame_idx", "width", "height", "mean_y", "mean_u", "mean_v")
+    return [dict(zip(names, frame)) for frame in stats]
+
+
 def decode_video_frames(
     df: DataFrame,
     id_col: str = "asset_id",
@@ -1293,46 +1241,16 @@ def decode_video_frames(
     are not a Spark problem. MJPEG is the one mainstream compressed
     format whose frames are independently decodable stills, which is
     why it decodes here and they don't. The intended integration point
-    for the rest is swapping the Arrow ``mapInPandas`` body for an
-    ffmpeg call — the Spark-side plumbing (schema, 1→N expansion,
-    partitioning, batch shape) is exactly what those payloads need and
-    is fully exercised by the Y4M and MJPEG paths. Until then mp4
+    for the rest is swapping this parse function for an ffmpeg call —
+    the Spark-side plumbing (schema, 1→N expansion, partitioning, batch
+    shape) is exactly what those payloads need and is fully exercised
+    by the Y4M and MJPEG paths. Until then mp4
     stops at container metadata (:func:`video_container_metadata`);
     :func:`sample_frames` shares both parsers and stubs only
     inter-predicted payloads."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {
-                "asset_id": [],
-                "frame_idx": [],
-                "width": [],
-                "height": [],
-                "mean_y": [],
-                "mean_u": [],
-                "mean_v": [],
-            }
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                stats = (
-                    jpeg.parse_mjpeg_avi_stats(b)
-                    if b[:4] == b"RIFF"
-                    else _parse_y4m(b)
-                )
-                for idx, w, h, my, mu, mv in stats:
-                    rows["asset_id"].append(int(aid))
-                    rows["frame_idx"].append(idx)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["mean_y"].append(my)
-                    rows["mean_u"].append(mu)
-                    rows["mean_v"].append(mv)
-            out = pd.DataFrame(rows)
-            for c in ("frame_idx", "width", "height"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return df.select(id_col, content_col).mapInPandas(run, DECODED_FRAME_SCHEMA)
+    return map_payloads(
+        df, id_col, content_col, _video_frame_rows, DECODED_FRAME_SCHEMA
+    )
 
 
 # --- MP4/ISO-BMFF container metadata: pure-stdlib box walk ---------------
@@ -1628,10 +1546,11 @@ def _parse_avi_metadata(
     for cid, data in jpeg._iter_riff_chunks(b):
         if cid == b"avih" and len(data) >= 40:
             uspf, _mbps, _pad, _flags, total = struct.unpack("<5I", data[:20])
-            w = int.from_bytes(data[32:36], "little")
-            h = int.from_bytes(data[36:40], "little")
-            nf = total
-            if uspf:
+            # DWORD fields past the Int32 columns are malformed: nulls
+            w = _int32(int.from_bytes(data[32:36], "little"))
+            h = _int32(int.from_bytes(data[36:40], "little"))
+            nf = _int32(total)
+            if uspf and nf is not None:
                 dur = total * uspf / 1_000_000
         elif cid == b"strh" and len(data) >= 8:
             handlers.append(
@@ -1640,6 +1559,33 @@ def _parse_avi_metadata(
                 + data[4:8].decode("ascii", "replace")
             )
     return (w, h, nf, dur, len(handlers), ",".join(handlers) or None)
+
+
+def _video_meta_rows(b: bytes) -> list[dict]:
+    """One container-metadata row (see :func:`video_metadata`);
+    unrecognized payloads quarantine as a ``container=NULL`` row."""
+    y4m = _parse_y4m_metadata(b)
+    if y4m is not None:
+        w, h, nf, dur = y4m
+        return [dict(container="y4m", width=w, height=h, n_frames=nf,
+                     duration_sec=dur, video_codec="rawvideo")]
+    mp4 = _parse_mp4_metadata(b)
+    if mp4 is not None:
+        dur, tscale, ntr, hnd, w, h = mp4
+        vc, ac = _parse_mp4_codecs(b)
+        return [dict(container="isobmff", width=w, height=h,
+                     duration_sec=dur, timescale=tscale, n_tracks=ntr,
+                     handlers=hnd, video_codec=vc, audio_codec=ac)]
+    avi = _parse_avi_metadata(b)
+    if avi is not None:
+        w, h, nf, dur, ntr, hnd = avi
+        # the strh fourcc already parsed into handlers names the codec;
+        # MJPG is the one this engine actually decodes (operators/jpeg.py)
+        vc = "mjpeg" if "MJPG" in (hnd or "") else None
+        return [dict(container="riff-avi", width=w, height=h, n_frames=nf,
+                     duration_sec=dur, n_tracks=ntr, handlers=hnd,
+                     video_codec=vc)]
+    return [{}]
 
 
 def video_metadata(
@@ -1654,61 +1600,12 @@ def video_metadata(
     (dims, frame count, duration, stream handlers) from the avih/strh
     headers — no codec anywhere. Unrecognized payloads quarantine as
     container=NULL rows (1:1 with input, so anti-join recovers the
-    reject set). Runs as one Arrow mapInPandas projection; only (id,
-    content) are read, so payload pruning upstream still applies."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in VIDEO_META_SCHEMA}
-
-            def emit(aid, container=None, w=None, h=None, nf=None,
-                     dur=None, tscale=None, ntr=None, hnd=None,
-                     vcodec=None, acodec=None):
-                rows["asset_id"].append(int(aid))
-                rows["container"].append(container)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_frames"].append(nf)
-                rows["duration_sec"].append(dur)
-                rows["timescale"].append(tscale)
-                rows["n_tracks"].append(ntr)
-                rows["handlers"].append(hnd)
-                rows["video_codec"].append(vcodec)
-                rows["audio_codec"].append(acodec)
-
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                y4m = _parse_y4m_metadata(b)
-                if y4m is not None:
-                    w, h, nf, dur = y4m
-                    emit(aid, "y4m", w, h, nf, dur, vcodec="rawvideo")
-                    continue
-                mp4 = _parse_mp4_metadata(b)
-                if mp4 is not None:
-                    dur, tscale, ntr, hnd, w, h = mp4
-                    vc, ac = _parse_mp4_codecs(b)
-                    emit(aid, "isobmff", w, h, None, dur, tscale, ntr,
-                         hnd, vc, ac)
-                    continue
-                avi = _parse_avi_metadata(b)
-                if avi is not None:
-                    w, h, nf, dur, ntr, hnd = avi
-                    # the strh fourcc already parsed into handlers
-                    # names the codec; MJPG is the one this engine
-                    # actually decodes (operators/jpeg.py)
-                    vc = "mjpeg" if "MJPG" in (hnd or "") else None
-                    emit(aid, "riff-avi", w, h, nf, dur, None, ntr,
-                         hnd, vc)
-                    continue
-                emit(aid)
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "n_frames", "n_tracks"):
-                out[c] = out[c].astype("Int32")
-            for c in ("timescale",):
-                out[c] = out[c].astype("Int64")
-            yield out
-
-    return df.select(id_col, content_col).mapInPandas(run, VIDEO_META_SCHEMA)
+    reject set). Runs as one :func:`operators.payloads.map_payloads`
+    projection; only (id, content) are read, so payload pruning
+    upstream still applies."""
+    return map_payloads(
+        df, id_col, content_col, _video_meta_rows, VIDEO_META_SCHEMA
+    )
 
 
 # fixed-layout ISO-BMFF templates for synthesize_mp4_payload: every box

@@ -23,9 +23,9 @@ Both directions ship:
   concatenates the text-showing operators; page count comes from
   ``/Type /Page`` object census.
 
-Scale design: Arrow ``mapInPandas`` over document-sized payloads (the
-same shape as operators/jpeg.py — per-payload CPU-dense Python is the
-genuine boundary), quarantine-not-fail on malformed payloads, and a cap
+Scale design: one parse function per document-sized payload under
+:func:`operators.payloads.map_payloads` (per-payload CPU-dense Python is
+the genuine boundary), quarantine-not-fail on malformed payloads, and a cap
 on inflated bytes so a crafted 2 KB bomb cannot take executor memory.
 """
 from __future__ import annotations
@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .payloads import map_payloads
 
 __all__ = [
     "synthesize_pdf_payload",
@@ -350,33 +352,19 @@ def parse_pdf(b: bytes) -> tuple[int, int, str] | None:
     return n_pages, n_streams, " ".join(lines)
 
 
+def _pdf_text_rows(b: bytes) -> list[dict]:
+    parsed = parse_pdf(b)
+    if parsed is None:
+        return []
+    n_pages, n_streams, text = parsed
+    return [{"n_pages": n_pages, "n_streams": n_streams, "text": text}]
+
+
 def extract_pdf_text(
     df: DataFrame, content_col: str = "content", id_col: str = "asset_id"
 ) -> DataFrame:
-    """The extraction operator: one row per parseable PDF payload."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_ in batches:
-            rows = []
-            for aid, blob in zip(pdf_[id_col], pdf_[content_col]):
-                if blob is None:
-                    continue
-                parsed = parse_pdf(bytes(blob))
-                if parsed is None:
-                    continue
-                n_pages, n_streams, text = parsed
-                rows.append(
-                    {
-                        "asset_id": int(aid),
-                        "n_pages": n_pages,
-                        "n_streams": n_streams,
-                        "text": text,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PDF_TEXT_SCHEMA.fields]
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        run, PDF_TEXT_SCHEMA
+    """The extraction operator: one row per parseable PDF payload
+    (:func:`operators.payloads.map_payloads`)."""
+    return map_payloads(
+        df, id_col, content_col, _pdf_text_rows, PDF_TEXT_SCHEMA
     )

@@ -31,8 +31,9 @@ Two consumers, split the way a 100 TB image crawl actually dedups:
     1..max) via the band join, with a per-bucket fan-out cap like
     every other near-dup operator in the engine.
 
-Scale shape: hashing is Arrow ``mapInPandas`` (one int64 8x8 matmul
-per image — microseconds); groups are one map-side-combinable
+Scale shape: hashing is one parse function per payload under
+:func:`operators.payloads.map_payloads` (one int64 8x8 matmul per
+image — microseconds); groups are one map-side-combinable
 aggregate on a 16-byte key; the pair path shuffles on (band_idx,
 band_value) buckets only. No plan node touches raw pixels after the
 hash projection, so the 100 TB payload column never crosses a shuffle.
@@ -44,15 +45,13 @@ reference).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vacancy_gpt_etl_pipeline_spark.operators.exif import _tiff_gray
+from vacancy_gpt_etl_pipeline_spark.operators.payloads import map_payloads
 from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 
 # cos(pi*(2x+1)*u/16) * 8192, rounded — LUT[u][x]. These literals are
@@ -130,36 +129,26 @@ def phash64(gray: np.ndarray) -> tuple[int, int, int, int]:
     return tuple(bands)  # type: ignore[return-value]
 
 
+def _hash_row(gray: np.ndarray) -> dict:
+    """``b0..b3`` and ``hash_hex`` of a grayscale matrix."""
+    b0, b1, b2, b3 = phash64(gray)
+    hex_ = f"{b0:04x}{b1:04x}{b2:04x}{b3:04x}"
+    return dict(b0=b0, b1=b1, b2=b2, b3=b3, hash_hex=hex_)
+
+
+def _bmp_phash_rows(b: bytes) -> list[dict]:
+    gray = _bmp_gray(b)
+    return [] if gray is None else [_hash_row(gray)]
+
+
 def phash_bmp(
     df: DataFrame, id_col: str = "asset_id", content_col: str = "content"
 ) -> DataFrame:
-    """Hash BMP payloads to (b0..b3, hash_hex) via Arrow
-    ``mapInPandas``. Non-BMP / malformed payloads are dropped
-    (quarantine-not-fail; the census tier names them)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in PHASH_SCHEMA}
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                gray = _bmp_gray(b)
-                if gray is None:
-                    continue
-                b0, b1, b2, b3 = phash64(gray)
-                rows["asset_id"].append(int(aid))
-                rows["b0"].append(b0)
-                rows["b1"].append(b1)
-                rows["b2"].append(b2)
-                rows["b3"].append(b3)
-                rows["hash_hex"].append(
-                    f"{b0:04x}{b1:04x}{b2:04x}{b3:04x}"
-                )
-            out = pd.DataFrame(rows)
-            for c in ("b0", "b1", "b2", "b3"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return df.select(id_col, content_col).mapInPandas(run, PHASH_SCHEMA)
+    """Hash BMP payloads to (b0..b3, hash_hex)
+    (:func:`operators.payloads.map_payloads`). Non-BMP / malformed
+    payloads are dropped (quarantine-not-fail; the census tier names
+    them)."""
+    return map_payloads(df, id_col, content_col, _bmp_phash_rows, PHASH_SCHEMA)
 
 
 TIFF_PHASH_SCHEMA = T.StructType(
@@ -176,50 +165,28 @@ TIFF_PHASH_SCHEMA = T.StructType(
 )
 
 
+def _tiff_phash_rows(b: bytes) -> list[dict]:
+    gray = _tiff_gray(b)
+    if gray is None:
+        return []
+    h, w = gray.shape
+    return [{"width": w, "height": h, **_hash_row(gray)}]
+
+
 def phash_tiff(
     df: DataFrame, id_col: str = "asset_id", content_col: str = "content"
 ) -> DataFrame:
     """Hash baseline-TIFF payloads to (width, height, b0..b3,
-    hash_hex) via Arrow ``mapInPandas`` — the fifth image population
-    a scanned-document corpus contributes (r14 verdict item 2). The
-    decode boundary lives in :mod:`operators.exif` (``_tiff_gray``:
-    uncompressed + PackBits strips, WhiteIsZero/BlackIsZero/RGB),
-    exactly as the Y4M tier borrows :mod:`operators.multimodal` —
-    ONE parser per container, no drift between census and hash tiers.
-    Undecodable payloads are dropped (quarantine-not-fail; the census
-    tier names them)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .exif import _tiff_gray
-
-        for pdf in batches:
-            rows: dict[str, list] = {
-                f.name: [] for f in TIFF_PHASH_SCHEMA
-            }
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                gray = _tiff_gray(b)
-                if gray is None:
-                    continue
-                h, w = gray.shape
-                b0, b1, b2, b3 = phash64(gray)
-                rows["asset_id"].append(int(aid))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["b0"].append(b0)
-                rows["b1"].append(b1)
-                rows["b2"].append(b2)
-                rows["b3"].append(b3)
-                rows["hash_hex"].append(
-                    f"{b0:04x}{b1:04x}{b2:04x}{b3:04x}"
-                )
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "b0", "b1", "b2", "b3"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return df.select(id_col, content_col).mapInPandas(
-        run, TIFF_PHASH_SCHEMA
+    hash_hex) (:func:`operators.payloads.map_payloads`) — the fifth
+    image population a scanned-document corpus contributes (r14 verdict
+    item 2). The decode boundary lives in :mod:`operators.exif`
+    (``_tiff_gray``: uncompressed + PackBits strips,
+    WhiteIsZero/BlackIsZero/RGB), exactly as the Y4M tier borrows
+    :mod:`operators.multimodal` — ONE parser per container, no drift
+    between census and hash tiers. Undecodable payloads are dropped
+    (quarantine-not-fail; the census tier names them)."""
+    return map_payloads(
+        df, id_col, content_col, _tiff_phash_rows, TIFF_PHASH_SCHEMA
     )
 
 
@@ -254,43 +221,32 @@ def _y4m_y_planes(b: bytes):
     return w, h, frames
 
 
+def _y4m_phash_rows(b: bytes) -> list[dict]:
+    parsed = _y4m_y_planes(b)
+    if parsed is None:
+        return []
+    w, h, frames = parsed
+    fps = ["{:04x}{:04x}{:04x}{:04x}".format(*phash64(y)) for y in frames]
+    return [dict(width=w, height=h, n_frames=len(frames),
+                 video_fp="-".join(fps))]
+
+
 def phash_y4m(
     df: DataFrame, id_col: str = "asset_id", content_col: str = "content"
 ) -> DataFrame:
-    """Per-FRAME perceptual hashing for raw C444 Y4M video: the luma
-    plane of every frame is pHashed (:func:`phash64`) and the video's
-    fingerprint is the ordered per-frame hash sequence — so a re-
-    encoded / brightness-shifted copy of the same footage collapses to
-    the same fingerprint, frame count and all. Near-dup for the fourth
+    """Per-FRAME perceptual hashing for raw C444 Y4M video
+    (:func:`operators.payloads.map_payloads`): the luma plane of every
+    frame is pHashed (:func:`phash64`) and the video's fingerprint is
+    the ordered per-frame hash sequence — so a re-encoded /
+    brightness-shifted copy of the same footage collapses to the same
+    fingerprint, frame count and all. Near-dup for the fourth
     modality, on top of text (dedup.py), image (this module) and audio
     (audio_fp.py). Non-Y4M payloads are dropped (quarantine-not-fail);
     inter-predicted codecs remain the documented decode boundary
     (multimodal.py:decode_video_frames)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in VIDEO_PHASH_SCHEMA}
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                parsed = _y4m_y_planes(b)
-                if parsed is None:
-                    continue
-                w, h, frames = parsed
-                fps = [
-                    "{:04x}{:04x}{:04x}{:04x}".format(*phash64(y))
-                    for y in frames
-                ]
-                rows["asset_id"].append(int(aid))
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_frames"].append(len(frames))
-                rows["video_fp"].append("-".join(fps))
-            out = pd.DataFrame(rows)
-            for c in ("width", "height", "n_frames"):
-                out[c] = out[c].astype("Int32")
-            yield out
-
-    return df.select(id_col, content_col).mapInPandas(run, VIDEO_PHASH_SCHEMA)
+    return map_payloads(
+        df, id_col, content_col, _y4m_phash_rows, VIDEO_PHASH_SCHEMA
+    )
 
 
 def video_phash_dup_groups(fps: DataFrame) -> DataFrame:

@@ -16,9 +16,10 @@ both directions dependency-free:
   HTTP response, and emits one row per record.
 
 Scale design: shards are the unit of parallelism exactly as on Common
-Crawl (one ~1 GB warc.gz per task).  Parsing is Arrow ``mapInPandas``
-over the shard frame — per-shard CPU-dense Python, the genuine shape
-for byte-stream decode (same rationale as operators/jpeg.py).  Member
+Crawl (one ~1 GB warc.gz per task).  Parsing is one parse function per
+shard under :func:`operators.payloads.map_payloads` — per-shard
+CPU-dense Python, the genuine shape for byte-stream decode (same
+rationale as operators/jpeg.py).  Member
 splitting uses ``decompressobj(...).unused_data`` so a shard streams in
 one pass; a malformed member is quarantined (skipped), never fatal to
 the task, per the multimodal module's quarantine-not-fail contract.
@@ -34,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .payloads import map_payloads
 
 __all__ = [
     "synthesize_warc_payload",
@@ -364,32 +367,25 @@ def _parse_warc_member(raw: bytes) -> dict | None:
     }
 
 
+def _record_rows(b: bytes) -> list[dict]:
+    """One row per parseable record of a shard; malformed members are
+    skipped."""
+    rows = []
+    for idx, raw in enumerate(_iter_gzip_members(b)):
+        rec = _parse_warc_member(raw)
+        if rec is not None:
+            rows.append({"member_idx": idx, **rec})
+    return rows
+
+
 def read_warc_records(
     df: DataFrame, content_col: str = "content", id_col: str = "shard_id"
 ) -> DataFrame:
     """The WARC ingestion operator: one input row per shard, one output
-    row per successfully parsed record.  Arrow ``mapInPandas`` so one
-    task handles whole shards (the crawl-scale parallelism granule) and
-    malformed members quarantine without failing the task."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for sid, blob in zip(pdf[id_col], pdf[content_col]):
-                if blob is None:
-                    continue
-                for idx, raw in enumerate(_iter_gzip_members(bytes(blob))):
-                    rec = _parse_warc_member(raw)
-                    if rec is None:
-                        continue
-                    rec["shard_id"] = int(sid)
-                    rec["member_idx"] = idx
-                    rows.append(rec)
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in WARC_RECORD_SCHEMA.fields],
-            )
-
-    return df.select(id_col, content_col).mapInPandas(
-        run, WARC_RECORD_SCHEMA
+    row per successfully parsed record
+    (:func:`operators.payloads.map_payloads`, so one task handles whole
+    shards — the crawl-scale parallelism granule — and malformed members
+    quarantine without failing the task)."""
+    return map_payloads(
+        df, id_col, content_col, _record_rows, WARC_RECORD_SCHEMA
     )

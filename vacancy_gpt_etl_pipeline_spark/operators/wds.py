@@ -35,12 +35,13 @@ from __future__ import annotations
 
 import io
 import tarfile
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .payloads import map_payloads
 
 MEMBER_SCHEMA = T.StructType(
     [
@@ -182,57 +183,35 @@ def _parse_ustar(b: bytes):
         i = advance
 
 
+def _member_rows(b: bytes) -> list[dict]:
+    """One row per member of a tar shard, or — on any corruption — the
+    shard's single all-null quarantine row (see :func:`tar_members`)."""
+    rows = []
+    try:
+        for name, size, off, tf, payload in _parse_ustar(b):
+            key, _, ext = name.rsplit("/", 1)[-1].partition(".")
+            rows.append(dict(name=name, key=key, ext=ext, size=size,
+                             offset=off, typeflag=tf, content=payload))
+    except ValueError:
+        return [{}]
+    return rows
+
+
 def tar_members(
     df: DataFrame,
     id_col: str = "shard_id",
     content_col: str = "content",
 ) -> DataFrame:
-    """Explode tar shards into member rows (Arrow ``mapInPandas``; one
-    task parses whole shards — the WebDataset granule). ``key``/``ext``
-    split WebDataset-style on the FIRST dot of the basename. Malformed
-    shards quarantine WHOLE-SHARD: exactly one quarantine row (name
-    NULL) and NONE of the members parsed before the corruption — a
-    shard appearing in both the valid-member and quarantine
-    populations would let consumers ingest its partial members as if
-    clean (tar has no resync point; the shard is the re-fetch unit)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in MEMBER_SCHEMA}
-
-            def add(sid, name, key, ext, size, offset, tf, content):
-                rows["shard_id"].append(sid)
-                rows["name"].append(name)
-                rows["key"].append(key)
-                rows["ext"].append(ext)
-                rows["size"].append(size)
-                rows["offset"].append(offset)
-                rows["typeflag"].append(tf)
-                rows["content"].append(content)
-
-            for sid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                sid = int(sid)
-                # buffer so mid-walk corruption discards the shard's
-                # already-parsed members (whole-shard quarantine)
-                buffered: list[tuple] = []
-                try:
-                    for name, size, off, tf, payload in _parse_ustar(b):
-                        base = name.rsplit("/", 1)[-1]
-                        dot = base.find(".")
-                        key = base[:dot] if dot >= 0 else base
-                        ext = base[dot + 1 :] if dot >= 0 else ""
-                        buffered.append(
-                            (sid, name, key, ext, size, off, tf, payload)
-                        )
-                except ValueError:
-                    add(sid, None, None, None, None, None, None, None)
-                    continue
-                for row in buffered:
-                    add(*row)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, content_col).mapInPandas(run, MEMBER_SCHEMA)
+    """Explode tar shards into member rows
+    (:func:`operators.payloads.map_payloads`; one task parses whole
+    shards — the WebDataset granule). ``key``/``ext`` split
+    WebDataset-style on the FIRST dot of the basename. Malformed shards
+    quarantine WHOLE-SHARD: exactly one quarantine row (name NULL) and
+    NONE of the members parsed before the corruption — a shard
+    appearing in both the valid-member and quarantine populations would
+    let consumers ingest its partial members as if clean (tar has no
+    resync point; the shard is the re-fetch unit)."""
+    return map_payloads(df, id_col, content_col, _member_rows, MEMBER_SCHEMA)
 
 
 def wds_samples(members: DataFrame) -> DataFrame:

@@ -27,12 +27,11 @@ quarantine-not-fail, the decode_images contract.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .payloads import map_payloads
 
 WEBP_CENSUS_SCHEMA = T.StructType(
     [
@@ -102,43 +101,25 @@ def _parse_webp(b: bytes):
     return variant, w, h, alpha, n_chunks
 
 
+def _census_rows(b: bytes) -> list[dict]:
+    """One census row; a malformed container quarantines as
+    ``fmt='webp?'`` with null census columns."""
+    parsed = _parse_webp(b)
+    if parsed is None:
+        return [{"fmt": "webp?", "n_bytes": len(b)}]
+    names = ("variant", "width", "height", "has_alpha", "n_chunks")
+    return [{"fmt": "webp", "n_bytes": len(b), **dict(zip(names, parsed))}]
+
+
 def census_webp(
     df: DataFrame, id_col: str = "asset_id", content_col: str = "content"
 ) -> DataFrame:
-    """Walk every payload's RIFF chunk chain (Arrow ``mapInPandas``)
-    and emit one census row per asset; malformed containers quarantine
-    as ``fmt='webp?'`` with null census columns."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in WEBP_CENSUS_SCHEMA}
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                b = bytes(content) if content is not None else b""
-                parsed = _parse_webp(b)
-                rows["asset_id"].append(int(aid))
-                rows["n_bytes"].append(len(b))
-                if parsed is None:
-                    rows["fmt"].append("webp?")
-                    for k in (
-                        "variant",
-                        "width",
-                        "height",
-                        "has_alpha",
-                        "n_chunks",
-                    ):
-                        rows[k].append(None)
-                    continue
-                variant, w, h, alpha, n_chunks = parsed
-                rows["fmt"].append("webp")
-                rows["variant"].append(variant)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["has_alpha"].append(alpha)
-                rows["n_chunks"].append(n_chunks)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, content_col).mapInPandas(
-        run, WEBP_CENSUS_SCHEMA
+    """Walk every payload's RIFF chunk chain and emit one census row
+    per asset (:func:`operators.payloads.map_payloads`); malformed
+    containers quarantine as ``fmt='webp?'`` with null census
+    columns."""
+    return map_payloads(
+        df, id_col, content_col, _census_rows, WEBP_CENSUS_SCHEMA
     )
 
 
