@@ -9,7 +9,36 @@ import struct
 from vacancy_gpt_etl_pipeline_spark.operators.exif import (
     _build_exif_jpeg,
     _parse_exif,
+    census_exif,
+    census_tiff,
 )
+
+
+def _long_ifd(e: str, entries: list[tuple[int, int]]) -> bytes:
+    """One IFD of LONG-typed ``(tag, value)`` entries, no next IFD."""
+    return (
+        struct.pack(e + "H", len(entries))
+        + b"".join(struct.pack(e + "HHLL", t, 4, 1, v) for t, v in entries)
+        + struct.pack(e + "L", 0)
+    )
+
+
+def _long_tiff(width: int) -> bytes:
+    """A TIFF whose ImageWidth/ImageLength are LONG (4-byte) fields."""
+    return b"II" + struct.pack("<HL", 42, 8) + _long_ifd(
+        "<", [(0x0100, width), (0x0101, 48), (0x0102, 8)]
+    )
+
+
+def _long_orientation_jpeg(orientation: int) -> bytes:
+    """A JPEG whose Exif IFD0 Orientation is a LONG (4-byte) field."""
+    app1 = b"Exif\x00\x00MM" + struct.pack(">HL", 42, 8) + _long_ifd(
+        ">", [(0x0112, orientation)]
+    )
+    return (
+        b"\xff\xd8\xff\xe1" + struct.pack(">H", len(app1) + 2) + app1
+        + b"\xff\xd9"
+    )
 
 
 def test_both_byte_orders_golden():
@@ -368,3 +397,29 @@ def test_tiff_cx_decode_all_classes():
     # checksum-free format: IFD entries carry no checksum, so the tag
     # patch alone flips the decode verdict
     assert _tiff_gray(bytes(b)) is None
+
+
+def test_long_fields_past_int32_census_as_null(spark):
+    """A LONG ImageWidth or Orientation of 2^31 or more does not fit
+    the Int32 census column: the row keeps its other fields and the
+    field reads null, instead of the cast failing the task."""
+    df = spark.createDataFrame(
+        [(1, _long_tiff(2**31)), (2, _long_tiff(2**32 - 1)),
+         (3, _long_tiff(64))],
+        "asset_id long, content binary",
+    )
+    got = {
+        r["asset_id"]: (r["fmt"], r["width"], r["height"])
+        for r in census_tiff(df).collect()
+    }
+    assert got == {1: ("tiff", None, 48), 2: ("tiff", None, 48),
+                   3: ("tiff", 64, 48)}
+    df = spark.createDataFrame(
+        [(1, _long_orientation_jpeg(2**31)), (2, _long_orientation_jpeg(6))],
+        "asset_id long, content binary",
+    )
+    got = {
+        r["asset_id"]: (r["fmt"], r["byte_order"], r["orientation"])
+        for r in census_exif(df).collect()
+    }
+    assert got == {1: ("jpeg", "MM", None), 2: ("jpeg", "MM", 6)}

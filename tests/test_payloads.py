@@ -54,3 +54,19 @@ def test_long_next_to_null_stays_exact():
 def test_empty_batch_has_the_schema_columns():
     out = payload_frame([], [], _parse, SCHEMA)
     assert list(out.columns) == SCHEMA.fieldNames() and len(out) == 0
+
+
+def test_int_past_its_column_is_null():
+    """An int outside its column's range reads null (the harness's one
+    fit rule, whichever parser produced it); the range ends still fit."""
+    vals = [2**31 - 1, -(2**31), 2**31, -(2**31) - 1, 2**32 - 1]
+    totals = [2**63 - 1, -(2**63), 2**63, -(2**63) - 1, 0]
+
+    def parse(b: bytes) -> list[dict]:
+        return [{"n": n, "total": t} for n, t in zip(vals, totals)]
+
+    out = payload_frame([1], [b"x"], parse, SCHEMA)
+    assert out["n"].tolist()[:2] == vals[:2]
+    assert out["n"].isna().tolist() == [False, False, True, True, True]
+    assert out["total"].tolist()[:2] == totals[:2]
+    assert out["total"].isna().tolist() == [False, False, True, True, False]

@@ -350,6 +350,33 @@ def test_warc_status_rejects_int_coercible_nondigits():
         assert _parse_warc_member(rec)["http_status"] is None, bad
 
 
+def test_warc_oversized_status_and_negative_length_quarantine(spark):
+    """A 10-digit HTTP status passes the ASCII-decimal gate but does not
+    fit the Int32 column: it reads null instead of failing the shard. A
+    negative Content-Length is a framing violation (the slice would run
+    from the end of the member): the record quarantines."""
+    ok = _warc_record(
+        "response", "ok", "2026-01-01T00:00:00Z",
+        b"HTTP/1.1 200 OK\r\n\r\nfine",
+        [("Content-Type", "application/http; msgtype=response")],
+    )
+    wide = _warc_record(
+        "response", "wide", "2026-01-01T00:00:00Z",
+        b"HTTP/1.1 3000000000 OK\r\n\r\nbody",
+        [("Content-Type", "application/http; msgtype=response")],
+    )
+    neg = _warc_record("resource", "neg", "2026-01-01T00:00:00Z", b"abc")
+    neg = neg.replace(b"Content-Length: 3", b"Content-Length: -87")
+    assert _parse_warc_member(neg) is None
+    shard = b"".join(_gzip_member(r) for r in (wide, neg, ok))
+    df = spark.createDataFrame([(1, shard)], "shard_id long, content binary")
+    got = sorted(
+        (r["record_id"], r["member_idx"], r["http_status"])
+        for r in read_warc_records(df).collect()
+    )
+    assert got == [("urn:uuid:ok", 2, 200), ("urn:uuid:wide", 0, None)]
+
+
 def test_warc_shard_inflated_ceiling_bounds_discard_cpu():
     from vacancy_gpt_etl_pipeline_spark.operators import warc as W
 

@@ -50,15 +50,15 @@ WORDS_PER_CHAPTER = 40
 _MAX_ENTRY_BYTES = 64 * 1024 * 1024
 
 # what zipfile raises on a corrupt archive or entry: bad central
-# directory or CRC, truncated or invalid deflate data, negative seeks,
-# unsupported zip versions / compression methods (NotImplementedError)
-# and encrypted entries (RuntimeError)
+# directory or CRC, truncated or invalid deflate data, negative seeks
+# (ValueError), and RuntimeError for encrypted entries and — through
+# its subclass NotImplementedError — unsupported zip versions and
+# compression methods
 _ZIP_ERRORS = (
     zipfile.BadZipFile,
     zlib.error,
     EOFError,
     OSError,
-    NotImplementedError,
     RuntimeError,
     ValueError,
 )

@@ -28,13 +28,11 @@ from __future__ import annotations
 
 import struct
 from itertools import accumulate
-from typing import Callable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .payloads import map_payloads
+from .payloads import map_payloads, synthesize_payloads
 
 EXIF_CENSUS_SCHEMA = T.StructType(
     [
@@ -375,31 +373,13 @@ def _build_tiff(i: int) -> bytes:
     return out
 
 
-def _tiff_payload(
-    df: DataFrame, id_col: str, build: Callable[[int], bytes]
-) -> DataFrame:
-    """``(asset_id, content)``: ``build(id)`` per row of ``df[id_col]``
-    (Arrow ``mapInPandas``; per-row Python assembly because dual
-    endianness and chained IFD offsets make hex concatenation
-    unreadable)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(x) for x in pdf[id_col]]
-            yield pd.DataFrame(
-                {"asset_id": ids, "content": [build(i) for i in ids]}
-            )
-
-    return df.select(id_col).mapInPandas(run, "asset_id long, content binary")
-
-
 def synthesize_tiff_payload(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Deterministic standalone-TIFF fixture (the
     :func:`synthesize_exif_payload` pattern). Closed forms in
     :func:`_build_tiff`."""
-    return _tiff_payload(df, id_col, _build_tiff)
+    return synthesize_payloads(df, id_col, _build_tiff)
 
 
 def _packbits_decode(src: bytes, expected: int) -> bytes | None:
@@ -884,7 +864,7 @@ def synthesize_tiff_cx_payload(
 ) -> DataFrame:
     """Deterministic compressed/extended TIFF fixture (closed forms in
     :func:`_build_tiff_cx`); emits (asset_id, content)."""
-    return _tiff_payload(df, id_col, _build_tiff_cx)
+    return synthesize_payloads(df, id_col, _build_tiff_cx)
 
 
 def synthesize_tiff_pixel_payload(
@@ -894,7 +874,7 @@ def synthesize_tiff_pixel_payload(
     closed forms in :func:`_build_tiff_px`). Emits (asset_id,
     content) — the :func:`synthesize_tiff_payload` contract with real
     strip data behind the tags."""
-    return _tiff_payload(df, id_col, _build_tiff_px)
+    return synthesize_payloads(df, id_col, _build_tiff_px)
 
 
 def _exif_census_rows(b: bytes) -> list[dict]:
@@ -1021,6 +1001,6 @@ def synthesize_exif_payload(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Deterministic EXIF-JPEG fixture (per-row Python assembly in
-    :func:`_tiff_payload`). All fields are the closed forms in
-    :func:`_build_exif_jpeg`'s docstring."""
-    return _tiff_payload(df, id_col, _build_exif_jpeg)
+    :func:`operators.payloads.synthesize_payloads`). All fields are the
+    closed forms in :func:`_build_exif_jpeg`'s docstring."""
+    return synthesize_payloads(df, id_col, _build_exif_jpeg)

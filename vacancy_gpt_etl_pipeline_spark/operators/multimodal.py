@@ -35,17 +35,16 @@ even reading it when only metadata is touched).
 from __future__ import annotations
 
 import struct
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from functools import partial
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import flac, jpeg
-from .payloads import map_payloads
+from .payloads import map_payloads, synthesize_payloads
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 PNG_HEADER_LEN = 33  # 8 sig + 4 len + 4 'IHDR' + 13 data + 4 CRC
@@ -1014,34 +1013,6 @@ def _solid_block_planes(i: int, f: int, w: int, h: int) -> list[np.ndarray]:
     ]
 
 
-def _media_payload(
-    df: DataFrame,
-    id_col: str,
-    build: Callable[[int], bytes],
-    modality: str,
-    mime_type: str,
-) -> DataFrame:
-    """``MULTIMODAL_PAYLOAD_SCHEMA`` rows: ``build(id)`` per row of
-    ``df[id_col]`` (Arrow ``mapInPandas``; per-row Python assembly for
-    the codecs whose entropy coding is not Catalyst arithmetic)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(x) for x in pdf[id_col]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": ids,
-                    "content": [build(i) for i in ids],
-                    "modality": [modality] * len(ids),
-                    "mime_type": [mime_type] * len(ids),
-                }
-            )
-
-    return df.select(F.col(id_col).cast("bigint").alias(id_col)).mapInPandas(
-        run, MULTIMODAL_PAYLOAD_SCHEMA
-    )
-
-
 def _flac_fixture(i: int) -> bytes:
     n = i % 300 + 40
     rate = (8000, 16000, 44100)[i % 3]
@@ -1081,11 +1052,15 @@ def synthesize_flac_payload(
     read as int16 — with ``n = id mod 300 + 40`` samples (1..6 blocks
     at block size 64, so multi-frame streams and the frame-number
     UTF-8 coding are exercised) and the 8000/16000/44100 rate cycle.
-    Built in :func:`_media_payload` like the JPEG synthesizers: Rice
-    coding is not Catalyst arithmetic. The oracle recomputes every
-    statistic from the formula without touching a byte — the hash only
-    matches if the whole encode→Rice→decode round trip is lossless."""
-    return _media_payload(df, id_col, _flac_fixture, "audio", "audio/flac")
+    Built in :func:`operators.payloads.synthesize_payloads` like the
+    JPEG synthesizers: Rice coding is not Catalyst arithmetic. The
+    oracle recomputes every statistic from the formula without touching
+    a byte — the hash only matches if the whole encode→Rice→decode
+    round trip is lossless."""
+    return synthesize_payloads(
+        df, id_col, _flac_fixture, MULTIMODAL_PAYLOAD_SCHEMA,
+        modality="audio", mime_type="audio/flac",
+    )
 
 
 def synthesize_jpeg_payload(
@@ -1094,10 +1069,14 @@ def synthesize_jpeg_payload(
     """Deterministic baseline-JPEG still fixture: one real entropy-coded
     JPEG per row (``w = (id%4+1)·8``, ``h = (id%2+1)·8``, restart
     interval ``id%3``), content per :func:`_solid_block_planes` so the
-    decode oracle is closed-form. Built in :func:`_media_payload` for the
-    same reason as :func:`synthesize_mjpeg_avi_payload` (entropy coding
-    is not Catalyst arithmetic)."""
-    return _media_payload(df, id_col, _jpeg_fixture, "image", "image/jpeg")
+    decode oracle is closed-form. Built in
+    :func:`operators.payloads.synthesize_payloads` for the same reason as
+    :func:`synthesize_mjpeg_avi_payload` (entropy coding is not Catalyst
+    arithmetic)."""
+    return synthesize_payloads(
+        df, id_col, _jpeg_fixture, MULTIMODAL_PAYLOAD_SCHEMA,
+        modality="image", mime_type="image/jpeg",
+    )
 
 
 def synthesize_mjpeg_avi_payload(
@@ -1109,11 +1088,12 @@ def synthesize_mjpeg_avi_payload(
     fixture matching :mod:`operators.jpeg`'s decode path.
 
     Unlike the JVM-side synthesizers this one is built in an Arrow
-    ``mapInPandas`` stage (:func:`_media_payload`): JPEG entropy coding
-    (bit-packed canonical Huffman with FF-byte stuffing) is genuinely
-    not expressible as Catalyst column arithmetic. The ORACLE stays
-    byte-free because the content is closed-form: frame ``f`` of asset
-    ``id`` is a grid of solid 8×8 blocks where raster-order block ``k``
+    ``mapInPandas`` stage (:func:`operators.payloads.synthesize_payloads`):
+    JPEG entropy coding (bit-packed canonical Huffman with FF-byte
+    stuffing) is genuinely not expressible as Catalyst column
+    arithmetic. The ORACLE stays byte-free because the content is
+    closed-form: frame ``f`` of asset ``id`` is a grid of solid 8×8
+    blocks where raster-order block ``k``
     has luma ``(id·37 + f·11 + k·29) mod 256`` (chroma = luma+85 / +170
     mod 256, 4:4:4). Per the exactness contract in
     :mod:`operators.jpeg`, solid blocks under the DC-step-8 fixture
@@ -1123,8 +1103,9 @@ def synthesize_mjpeg_avi_payload(
     ``id%3+1`` frames, restart interval ``id%3`` (0 = none) — the DRI/
     RSTn path is exercised by two-thirds of the corpus.
     """
-    return _media_payload(
-        df, id_col, _mjpeg_avi_fixture, "video", "video/x-msvideo"
+    return synthesize_payloads(
+        df, id_col, _mjpeg_avi_fixture, MULTIMODAL_PAYLOAD_SCHEMA,
+        modality="video", mime_type="video/x-msvideo",
     )
 
 

@@ -15,8 +15,14 @@ order and nullable-int columns — so a decoder is one pure function
 The quarantine-not-fail rule therefore lives in each parse function's
 return value: a malformed payload becomes a quarantine row (null fields
 or a ``'webp?'``-style marker) or no row, and never an exception that
-fails the task. Parse functions are module-level, so tests call them
-without a Spark session.
+fails the task. The harness owns one rule of its own: an int that does
+not fit its Integer/Long column (a 32-bit header field read unsigned, a
+decimal token past 2^31) is written as null, whichever parser produced
+it. Parse functions are module-level, so tests call them without a
+Spark session.
+
+:func:`synthesize_payloads` is the inverse, for the deterministic
+fixture synthesizers: ``build(id) -> bytes`` per row of an id column.
 """
 
 from __future__ import annotations
@@ -29,9 +35,20 @@ from pyspark.sql import types as T
 
 Parse = Callable[[bytes], list[dict]]
 
-# pandas' nullable integer dtypes: an int next to a None stays an int
-# instead of riding through float64, which is exact only below 2**53
-_NULLABLE_INT = {T.IntegerType: "Int32", T.LongType: "Int64"}
+# pandas' nullable integer dtypes and the bit width of their range: an
+# int next to a None stays an int instead of riding through float64,
+# which is exact only below 2**53
+_NULLABLE_INT = {T.IntegerType: ("Int32", 31), T.LongType: ("Int64", 63)}
+
+
+def _int_array(values: list, dtype: str, bits: int) -> pd.arrays.IntegerArray:
+    """``values`` as a nullable int array; a value outside the column's
+    range is null (quarantine), not the cast error that fails the task."""
+    lo, hi = -(2**bits), 2**bits
+    return pd.array(
+        [v if v is None or lo <= v < hi else None for v in values],
+        dtype=dtype,
+    )
 
 
 def payload_frame(
@@ -39,7 +56,8 @@ def payload_frame(
 ) -> pd.DataFrame:
     """The output frame for one batch: ``parse`` applied to each
     payload (null content reads as ``b""``), ``int(id)`` written into
-    the schema's first field, columns in schema order."""
+    the schema's first field, columns in schema order, ints that do not
+    fit their column as null."""
     id_name, *names = schema.fieldNames()
     cols: dict[str, list] = {n: [] for n in schema.fieldNames()}
     for pid, content in zip(ids, contents):
@@ -51,7 +69,7 @@ def payload_frame(
     return pd.DataFrame(
         {
             f.name: (
-                pd.array(cols[f.name], dtype=_NULLABLE_INT[type(f.dataType)])
+                _int_array(cols[f.name], *_NULLABLE_INT[type(f.dataType)])
                 if type(f.dataType) in _NULLABLE_INT
                 else cols[f.name]
             )
@@ -77,3 +95,36 @@ def map_payloads(
             yield payload_frame(pdf[id_col], pdf[content_col], parse, schema)
 
     return df.select(id_col, content_col).mapInPandas(run, schema)
+
+
+#: the fixture synthesizers' output: one payload per id
+PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("asset_id", T.LongType()),
+        T.StructField("content", T.BinaryType()),
+    ]
+)
+
+
+def synthesize_payloads(
+    df: DataFrame,
+    id_col: str,
+    build: Callable[[int], bytes],
+    schema: T.StructType = PAYLOAD_SCHEMA,
+    **constants: str,
+) -> DataFrame:
+    """``(asset_id, content, *constants)`` rows of ``schema``:
+    ``build(id)`` per row of ``df[id_col]``, each keyword a constant
+    column (Arrow ``mapInPandas``; per-row Python assembly for the
+    fixtures whose bytes are not Catalyst arithmetic — entropy coding,
+    chained IFD offsets)."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = [int(x) for x in pdf[id_col]]
+            consts = {k: [v] * len(ids) for k, v in constants.items()}
+            yield pd.DataFrame(
+                {"asset_id": ids, "content": [build(i) for i in ids], **consts}
+            )
+
+    return df.select(id_col).mapInPandas(run, schema)

@@ -295,7 +295,8 @@ def _iter_gzip_members(b: bytes) -> Iterator[bytes]:
 def _parse_warc_member(raw: bytes) -> dict | None:
     """One WARC record from one inflated member.  Returns the parsed
     field dict or None (quarantine) for anything that violates framing:
-    missing version line, unterminated header block, short block."""
+    missing version line, unterminated header block, negative or short
+    block."""
     if not raw.startswith(b"WARC/"):
         return None
     split = raw.find(b"\r\n\r\n")
@@ -318,7 +319,7 @@ def _parse_warc_member(raw: bytes) -> dict | None:
     except ValueError:
         return None
     block = raw[split + 4 : split + 4 + clen]
-    if len(block) < clen:
+    if clen < 0 or len(block) < clen:
         return None
     rid = headers.get("warc-record-id", "")
     if rid.startswith("<") and rid.endswith(">"):

@@ -126,12 +126,3 @@ def configure_session(spark: SparkSession) -> None:
     # which Spark rejects by default; read as long and convert on load
     # (sources/parquet_source.py restores a µs TimestampType column).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # reading a table with more than 32 partition directories lists them
-    # in a Spark job of one task per directory (default cap 10000): every
-    # read of a 256-way `pb`-partitioned streaming-gate index paid a
-    # 256-task job — 2.3 s against 0.3 s with one listing task per slot
-    # (local[8], 3-batch index).
-    spark.conf.set(
-        "spark.sql.sources.parallelPartitionDiscovery.parallelism",
-        str(max(1, spark.sparkContext.defaultParallelism)),
-    )

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 BATCH_COL = "_batch_id"
 
 _OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+_LISTING_TASKS = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
 #: read errors that mean "no history yet": the path is missing, or a
 #: crash left a directory with no data files (UNABLE_TO_INFER_SCHEMA)
@@ -54,14 +55,26 @@ def read_index(
     frame of ``schema`` (or None when no schema is given). Only the
     no-history cases are caught — a corrupt or unreadable index must
     FAIL the batch (gating against a silently-empty history would
-    re-admit every duplicate ever ingested)."""
+    re-admit every duplicate ever ingested).
+
+    An index partitioned 256 ways (``pb``) has more directories than
+    Spark lists on the driver, so the read lists them in a Spark job of
+    one task per directory by default; the read caps that job at one
+    task per slot (a 3-batch index on local[8], 4 cores: 1.4 s → 0.35 s
+    per read) and restores the session's setting afterwards."""
     from pyspark.errors import AnalysisException
 
+    prev_tasks = spark.conf.get(_LISTING_TASKS)
+    spark.conf.set(
+        _LISTING_TASKS, str(max(1, spark.sparkContext.defaultParallelism))
+    )
     try:
         return spark.read.parquet(path)
     except AnalysisException as e:
         if not any(tag in str(e) for tag in _NO_HISTORY):
             raise
+    finally:
+        spark.conf.set(_LISTING_TASKS, prev_tasks)
     return None if schema is None else spark.createDataFrame([], schema)
 
 
