@@ -1,6 +1,6 @@
 """Round-9 hardening tests: bloom key-type canonicalization, derived
-offsets-frame sum types, empty-input guards, adaptive enrichment
-join-back, and deep-BFS lineage checkpointing."""
+offsets-frame sum types, empty-input guards and the adaptive enrichment
+join-back."""
 
 from __future__ import annotations
 
@@ -14,7 +14,6 @@ from vacancy_gpt_etl_pipeline_spark.operators.bloom import (
     bloom_semi_join,
     canonical_hash_type,
 )
-from vacancy_gpt_etl_pipeline_spark.operators.graph import shortest_paths
 from vacancy_gpt_etl_pipeline_spark.operators.linalg import pca_model
 from vacancy_gpt_etl_pipeline_spark.operators.ranking import offsets_frame, ranked_local
 
@@ -152,35 +151,6 @@ def test_pca_model_empty_gram_raises(spark):
     )
     with pytest.raises(ValueError, match="gram frame is empty"):
         pca_model(gram, k=2)
-
-
-# ------------------------------------------------------------- deep BFS
-
-
-def test_shortest_paths_deep_traversal_checkpoints(spark):
-    # 31-node path graph, BFS from node 0 at max_hops=25 with a tight
-    # checkpoint interval: correctness unchanged AND the returned
-    # frame's parsed plan stays bounded (lineage truncated) instead of
-    # growing linearly through 25 unions
-    n = 31
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
-    )
-    sources = spark.createDataFrame([(0,)], "node long")
-    out = shortest_paths(edges, sources, max_hops=25, checkpoint_every=5)
-    got = {r["node"]: r["dist"] for r in out.collect()}
-    assert got == {i: i for i in range(26)}
-    # past the last checkpoint at hop 25, at most checkpoint_every
-    # levels of union lineage remain in the logical plan
-    plan = out._jdf.queryExecution().logical().toString()
-    assert plan.count("Union") <= 6, plan[:2000]
-
-
-def test_shortest_paths_checkpoint_interval_validated(spark):
-    edges = spark.createDataFrame([(0, 1)], "src long, dst long")
-    sources = spark.createDataFrame([(0,)], "node long")
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        shortest_paths(edges, sources, max_hops=2, checkpoint_every=0)
 
 
 # ------------------------------------------------- adaptive enrichment join

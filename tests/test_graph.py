@@ -324,3 +324,21 @@ def test_shortest_paths_releases_caches_via_scope(spark):
             break
         time.sleep(0.1)
     assert not (_ids() & added)
+
+
+def test_shortest_paths_deep_path_plan_stays_flat(spark):
+    from vacancy_gpt_etl_pipeline_spark.operators.graph import shortest_paths
+
+    # 31-node path graph, BFS from node 0 at max_hops=25: correctness
+    # AND a returned plan that does not nest one level's lineage into
+    # the next (the result is a union of checkpointed frontiers)
+    n = 31
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+    )
+    sources = spark.createDataFrame([(0,)], "node long")
+    out = shortest_paths(edges, sources, max_hops=25)
+    got = {r["node"]: r["dist"] for r in out.collect()}
+    assert got == {i: i for i in range(26)}
+    plan = out._jdf.queryExecution().logical().toString()
+    assert plan.count("Union") <= 6, plan[:2000]

@@ -113,3 +113,42 @@ def test_label_propagation_invariants(spark, edges, iters):
             stack.extend(sym[u])
     for v, l in got.items():
         assert comp[l] == comp[v], (v, l)
+
+
+# ---------------------------------------------------------------------------
+# shortest_paths against a pure-Python multi-source BFS on random graphs
+# ---------------------------------------------------------------------------
+
+
+@given(
+    edges=edge_lists,
+    seeds=st.lists(st.integers(min_value=0, max_value=12), max_size=3),
+    max_hops=st.integers(min_value=0, max_value=4),
+)
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+def test_shortest_paths_matches_python_bfs(spark, edges, seeds, max_hops):
+    """Edges are undirected (duplicates, reversed pairs and self-loops
+    included); seed 99 is absent from the graph and still reports
+    dist 0."""
+    from vacancy_gpt_etl_pipeline_spark.operators.graph import shortest_paths
+
+    seeds = seeds + [99]
+    df = spark.createDataFrame(edges, "src: long, dst: long")
+    src = spark.createDataFrame([(s,) for s in seeds], "node: long")
+    got = {r.node: r.dist for r in shortest_paths(df, src, max_hops).collect()}
+
+    adj: dict[int, set] = {}
+    for a, b in edges:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    want = {s: 0 for s in seeds}
+    level = set(want)
+    for hop in range(1, max_hops + 1):
+        level = {u for v in level for u in adj.get(v, ())} - set(want)
+        want.update((u, hop) for u in level)
+    assert got == want

@@ -8,7 +8,8 @@ a handle, every invocation leaks cached blocks for the session's lifetime
 and a long-lived service accumulates executor storage pressure until LRU
 eviction starts thrashing.
 
-``CacheScope`` is that handle::
+``CacheScope`` is that handle (it also frees the ``localCheckpoint``
+blocks taken through it, see ``checkpoint_in``)::
 
     with CacheScope() as scope:
         pairs = minhash_near_duplicates(docs, cache_scope=scope)
@@ -26,7 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class CacheScope:
-    """Collects persisted DataFrames; ``release()`` unpersists them all.
+    """Collects persisted DataFrames and local checkpoints;
+    ``release()`` unpersists them all.
 
     Context-manager use unpersists on exit. ``release`` is idempotent and
     non-blocking (``unpersist(blocking=False)``): the blocks are dropped
@@ -36,16 +38,28 @@ class CacheScope:
 
     def __init__(self) -> None:
         self._frames: list[DataFrame] = []
+        self._checkpoints: list[tuple[BlockRelease, set[int]]] = []
 
     def persist(self, df: DataFrame) -> DataFrame:
         """Persist ``df`` and track it for release."""
         self._frames.append(df)
         return df.persist()
 
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """Eager ``localCheckpoint`` of ``df``; its blocks are tracked
+        for release."""
+        blocks = BlockRelease(df.sparkSession)
+        out, ids = blocks.checkpoint(df)
+        self._checkpoints.append((blocks, ids))
+        return out
+
     def release(self) -> None:
         for f in self._frames:
             f.unpersist(blocking=False)
+        for blocks, ids in self._checkpoints:
+            blocks.free(ids)
         self._frames.clear()
+        self._checkpoints.clear()
 
     def __enter__(self) -> "CacheScope":
         return self
@@ -58,6 +72,12 @@ class CacheScope:
 def persist_in(df: DataFrame, scope: CacheScope | None) -> DataFrame:
     """Persist ``df``, tracked in ``scope`` when one is given."""
     return scope.persist(df) if scope is not None else df.persist()
+
+
+def checkpoint_in(df: DataFrame, scope: CacheScope | None) -> DataFrame:
+    """Eager ``localCheckpoint`` of ``df``, its blocks freed by
+    ``scope.release()`` when a scope is given."""
+    return scope.checkpoint(df) if scope is not None else df.localCheckpoint(eager=True)
 
 
 class BlockRelease:

@@ -37,8 +37,9 @@ Why this shape at 100 TB:
   are exactly-once per key — proven under injected first-attempt task
   crashes in tests/test_enrichment_retry_idempotence.py (local[4,2]).
 - The mapping table is bounded by key cardinality → broadcast join back, no
-  shuffle of the big side. For unbounded key spaces pass
-  ``broadcast_mapping=False`` to fall back to a shuffle hash join.
+  shuffle of the big side, while its estimated size fits
+  ``spark.sql.autoBroadcastJoinThreshold``; above that the join back is a
+  plain shuffle join.
 """
 
 from __future__ import annotations
@@ -250,7 +251,7 @@ def _process_chunk(
 
 #: conservative per-cell estimate for the broadcast sizing below — short
 #: labels/flags (the enrichment contract's outputs) average well under
-#: this; long-output enrichers should pass broadcast_mapping=False
+#: this
 _EST_CELL_BYTES = 64
 
 
@@ -277,7 +278,6 @@ def enrich_column(
     max_retries: int = 1,
     defaults: dict[str, str] | None = None,
     sleep_s: float = 0.0,
-    broadcast_mapping: bool | None = None,
     empty_key_default: str | None = None,
     max_partitions: int | None = None,
     keys_from: DataFrame | None = None,
@@ -289,13 +289,12 @@ def enrich_column(
     back → coalesce defaults. See module docstring for the 100 TB
     rationale.
 
-    ``broadcast_mapping=None`` (default) picks the join-back strategy
-    ADAPTIVELY from the already-counted ``n_keys``: broadcast while the
-    estimated mapping size fits ``spark.sql.autoBroadcastJoinThreshold``,
-    plain shuffle join above it. A static broadcast was the last
-    scale-killer edge here — at 100 M distinct keys the mapping is GBs
-    and a forced broadcast OOMs the driver (r8 verdict). Pass
-    True/False to override the estimate in either direction.
+    The join-back strategy is picked ADAPTIVELY from the already-counted
+    ``n_keys``: broadcast while the estimated mapping size fits
+    ``spark.sql.autoBroadcastJoinThreshold``, plain shuffle join above
+    it. A static broadcast was the last scale-killer edge here — at
+    100 M distinct keys the mapping is GBs and a forced broadcast OOMs
+    the driver.
 
     The partition count is capped at ``max_partitions`` (default
     ``defaultParallelism``): one task per slot, each owning ~n/slots
@@ -358,12 +357,9 @@ def enrich_column(
         # once-per-key-per-action (tested in test_enrichment_failures).
         mapping = keys_df.repartition(n_parts).mapInPandas(run, schema=schema).persist()
 
-    if broadcast_mapping is None:
-        broadcast_mapping = _mapping_fits_broadcast(
-            df.sparkSession, n_keys, 1 + len(out_cols)
-        )
+    fits = _mapping_fits_broadcast(df.sparkSession, n_keys, 1 + len(out_cols))
     joined = df.join(
-        F.broadcast(mapping) if broadcast_mapping else mapping,
+        F.broadcast(mapping) if fits else mapping,
         keyed == mapping["original"],
         "left",
     ).drop("original")

@@ -29,6 +29,7 @@ Scale notes:
 from __future__ import annotations
 
 import sys
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame
@@ -36,13 +37,49 @@ from pyspark.sql import functions as F
 
 from vacancy_gpt_etl_pipeline_spark.operators.caching import (
     CacheScope,
+    checkpoint_in,
     persist_in,
 )
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The undirected edge set of ``edges`` (columns src, dst): one long
+    ``(src, dst)`` row per edge with src < dst — duplicates and reversed
+    duplicates merged by ONE distinct over E rows, self-loops dropped."""
+    return (
+        edges.select(
+            F.least("src", "dst").cast("long").alias("src"),
+            F.greatest("src", "dst").cast("long").alias("dst"),
+        )
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """``edges`` ∪ its reversal, with no distinct: for an
+    :func:`_undirected` set the two halves are disjoint (src < dst vs
+    src > dst), so the union is already distinct."""
+    return edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+def _degrees(und: DataFrame, name: str = "deg") -> DataFrame:
+    """``(node, <name>)``: each node's edge count in the undirected
+    edge set ``und``."""
+    return (
+        und.select(F.col("src").alias("node"))
+        .unionAll(und.select(F.col("dst").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias(name))
+    )
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round: every node u connects each strictly-larger
     neighbor to u's current minimum (min over N(u) ∪ {u})."""
-    nbrs = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    nbrs = _symmetric(edges)
     mins = nbrs.groupBy("src").agg(
         F.least(F.min("dst"), F.first("src")).alias("_m")
     )
@@ -103,12 +140,9 @@ def connected_components(
     suffice, so 25 covers any graph this engine will ever see; hitting it
     raises ``RuntimeError`` rather than return a partial labelling.
     """
-    edges = (
+    edges = _undirected(
         pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    ).localCheckpoint(eager=True)
     prev = _edge_fingerprint(edges)
     for rounds in range(1, max_iter + 1):
         edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
@@ -245,30 +279,19 @@ def count_triangles(edges: DataFrame) -> DataFrame:
       a second time;
     - per-node attribution: triangles explode ×3 then aggregate.
     """
-    a, b = F.least("src", "dst"), F.greatest("src", "dst")
-    und = (
-        edges.select(a.cast("long").alias("a"), b.cast("long").alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    und = _undirected(edges)
+    deg = _degrees(und)
     # orient each edge from (deg, id)-smaller endpoint to larger; keep
     # the head's (deg, id) so the wedge join can order its two heads
     # without re-joining degree
-    withdeg = (
-        und.join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), "a")
-        .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), "b")
+    withdeg = und.join(deg.toDF("src", "ds"), "src").join(
+        deg.toDF("dst", "dd"), "dst"
     )
-    fwd = F.struct("da", "a") < F.struct("db", "b")
+    fwd = F.struct("ds", "src") < F.struct("dd", "dst")
     oriented = withdeg.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("dv"),
+        F.when(fwd, F.col("src")).otherwise(F.col("dst")).alias("u"),
+        F.when(fwd, F.col("dst")).otherwise(F.col("src")).alias("v"),
+        F.when(fwd, F.col("dd")).otherwise(F.col("ds")).alias("dv"),
     )
     e1 = oriented.select(
         F.col("u"), F.col("v").alias("v1"), F.col("dv").alias("d1")
@@ -325,28 +348,16 @@ def k_core_detailed(
     rounds ran without reaching the fixpoint and ``frame`` is the
     partially-peeled (superset) edge census, NOT the k-core — callers
     that need a guarantee should use :func:`k_core`, which raises."""
-    a, b = F.least("src", "dst"), F.greatest("src", "dst")
-    current = (
-        edges.select(a.cast("long").alias("a"), b.cast("long").alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    current = _undirected(edges).localCheckpoint(eager=True)
     n_edges = current.count()
     converged = False
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
-        deg = (
-            current.select(F.col("a").alias("node"))
-            .unionAll(current.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("deg"))
+        keep = _degrees(current).where(F.col("deg") >= k).select("node")
+        pruned = current.join(keep.toDF("src"), "src", "left_semi").join(
+            keep.toDF("dst"), "dst", "left_semi"
         )
-        keep = deg.where(F.col("deg") >= k).select("node")
-        pruned = current.join(
-            keep.withColumnRenamed("node", "a"), "a", "left_semi"
-        ).join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
         pruned = pruned.localCheckpoint(eager=True)
         n_new = pruned.count()
         current = pruned
@@ -354,13 +365,7 @@ def k_core_detailed(
             converged = True
             break
         n_edges = n_new
-    census = (
-        current.select(F.col("a").alias("node"))
-        .unionAll(current.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-    )
-    return KCoreResult(census, rounds, converged)
+    return KCoreResult(_degrees(current, "core_degree"), rounds, converged)
 
 
 def k_core(edges: DataFrame, k: int, max_iter: int = 12) -> DataFrame:
@@ -382,7 +387,6 @@ def label_propagation(
     edges: DataFrame,
     iterations: int = 3,
     cache_scope: CacheScope | None = None,
-    edges_canonical: bool = False,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (community
     detection): label₀(v) = v; labelₖ₊₁(v) = the most frequent label
@@ -395,30 +399,18 @@ def label_propagation(
     the graph even where synchronous LPA would oscillate (bipartite
     flip-flop), and the registry oracle can replay it as unrolled SQL.
 
-    Scale shape: each round is one equi-join of the label frame into
-    the symmetrized edge list (both (long, long) frames) plus a
-    two-level aggregate — (v, label) counts, then a per-v arg-min over
-    ``struct(-count, label)``. Edges are persisted once; the label
-    frame is node-sized. Lineage is linear in the fixed round count, so
-    no checkpointing is needed at the default depth.
+    ``edges`` is read as UNDIRECTED: duplicates, reversed duplicates
+    and self-loops count once / not at all, whatever the orientation.
 
-    ``edges_canonical=True``: caller guarantees single-orientation
-    pairs (duplicates fine), letting the post-union distinct drop —
-    the distinct single-orientation set and its reversal are disjoint,
-    so their union is already distinct. One shuffle over E instead of
-    E + 2E (same contract as :func:`shortest_paths`)."""
-    e = (
-        edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    sym_u = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    sym = persist_in(
-        sym_u if edges_canonical else sym_u.distinct(),
-        cache_scope,
-    )
+    Scale shape: the undirected edge set costs one distinct over E
+    rows; its symmetrization is a plain union (no second shuffle) and
+    is persisted once. Each round is one equi-join of the label frame
+    into that (long, long) edge list plus a two-level aggregate —
+    (v, label) counts, then a per-v arg-min over ``struct(-count,
+    label)``. The label frame is node-sized. Lineage is linear in the
+    fixed round count, so no checkpointing is needed at the default
+    depth."""
+    sym = persist_in(_symmetric(_undirected(edges)), cache_scope)
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -450,94 +442,54 @@ def shortest_paths(
     sources: DataFrame,
     max_hops: int = 6,
     cache_scope: CacheScope | None = None,
-    checkpoint_every: int = 8,
-    edges_canonical: bool = False,
 ) -> DataFrame:
     """Multi-source BFS hop distances on an UNDIRECTED graph: returns
     ``(node, dist)`` with the minimum number of hops from any source
     node, exploring at most ``max_hops`` levels (unreached nodes are
-    absent). Classic frontier-expansion BFS made distributed: each
-    level is ONE equi-join of the current frontier into the symmetrized
-    edge list (shuffle keyed on node id) plus a LEFT ANTI join against
-    the settled set — nodes are expanded exactly once, so total work is
-    O(edges within the explored ball), never O(edges × hops). The
-    frontier and settled frames are persisted per level (released via
-    ``cache_scope``) and the frontier count doubles as the early-exit
-    fixpoint probe, so a graph with eccentricity < max_hops stops
-    early. Lineage is truncated with ``localCheckpoint`` every
-    ``checkpoint_every`` levels — same pattern as
-    :func:`connected_components` / k-core — so deep (hundred-hop)
-    traversals don't blow up plan size or re-execute the whole prefix
-    on cache eviction; between checkpoints lineage growth is bounded by
-    the interval.
+    absent). Sources are the first column of ``sources``.
+
+    Two-frontier BFS: on an undirected graph a neighbour of a node at
+    distance h is at distance h−1, h or h+1, so the next level is
+
+        F(h+1) = N(F(h)) − (F(h) ∪ F(h−1))
+
+    — ONE equi-join of the frontier into the symmetrized edge list
+    (shuffle keyed on node id) plus one anti-join against the two
+    latest frontiers. No settled set is carried, so each level's plan
+    is the same size whatever the depth, and every node is expanded
+    exactly once: total work is O(edges within the explored ball).
+    Each frontier is checkpointed eagerly when it is made (its blocks
+    freed by ``cache_scope`` when one is given); an empty frontier ends
+    the loop early. The result is the union of the frontiers, a flat
+    union of checkpointed scans.
+
+    The symmetrized edge list is the undirected edge set (one distinct
+    over E rows) plus its reversal, persisted once.
 
     Isolated sources (no edges) still report dist 0 — "distance to the
-    nearest seed" is well-defined for the seed itself.
-
-    ``edges_canonical=True`` is the caller's guarantee that every pair
-    appears in a single orientation only (e.g. always ``src < dst``;
-    duplicates are fine — the operator dedups). The symmetrizing union
-    of a distinct single-orientation set with its reversal is distinct
-    by construction (the two orientations are disjoint sets), so the
-    distinct moves BEFORE the union — one shuffle over E rows instead
-    of 2E (optimization guide §2.3, shuffle fewer bytes). Semantics
-    are identical; only the exchange placement changes."""
+    nearest seed" is well-defined for the seed itself."""
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    # no pre-union distinct in the generic path: the post-union distinct
-    # dedups everything, so a second shuffle over the raw edge list
-    # would be pure overhead
-    e = edges.select(
-        F.col("src").cast("long"), F.col("dst").cast("long")
-    ).where(F.col("src") != F.col("dst"))
-    if edges_canonical:
-        e = e.distinct()
-        sym = persist_in(
-            e.union(
-                e.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            ),
-            cache_scope,
-        )
-    else:
-        sym = persist_in(
-            e.union(
-                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            ).distinct(),
-            cache_scope,
-        )
-    src_col = sources.columns[0]
-    frontier = persist_in(
-        sources.select(F.col(src_col).cast("long").alias("node"))
+    sym = persist_in(_symmetric(_undirected(edges)), cache_scope)
+    frontier = checkpoint_in(
+        sources.select(F.col(sources.columns[0]).cast("long").alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("bigint")),
         cache_scope,
     )
-    settled = frontier
+    levels, seen = [frontier], frontier.select("node")
     for hop in range(1, max_hops + 1):
-        reached = (
+        nxt = checkpoint_in(
             frontier.join(sym, F.col("node") == F.col("src"))
             .select(F.col("dst").alias("node"))
             .distinct()
-        )
-        fresh = persist_in(
-            reached.join(settled, "node", "left_anti").withColumn(
-                "dist", F.lit(hop).cast("bigint")
-            ),
+            .join(seen, "node", "left_anti")
+            .withColumn("dist", F.lit(hop).cast("bigint")),
             cache_scope,
         )
-        if fresh.count() == 0:  # materializes the persist + fixpoint probe
+        if nxt.isEmpty():
             break
-        settled = persist_in(settled.union(fresh), cache_scope)
-        frontier = fresh
-        if hop % checkpoint_every == 0:
-            # truncate the union-chain lineage; eager so the cut
-            # happens now, while the per-level persists are still warm
-            settled = settled.localCheckpoint(eager=True)
-            frontier = frontier.localCheckpoint(eager=True)
-    return settled
+        levels.append(nxt)
+        seen = frontier.select("node").union(nxt.select("node"))
+        frontier = nxt
+    return reduce(DataFrame.union, levels)

@@ -2604,16 +2604,7 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kcore_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 1997 part co-purchase edge list kcore_parts peels (also used
-    by the convergence-bound test).
-
-    CONTRACT (r15 ADVICE): the ``x.l_partkey < y.l_partkey`` join
-    predicate below is what makes every emitted pair single-orientation
-    (src < dst) — the guarantee shortest_paths_parts and
-    label_prop_parts assert via ``edges_canonical=True``. Passing True
-    with mixed-orientation edges would silently double-count label
-    votes in label_propagation (its post-union distinct is dropped
-    under the flag), so re-verify both call sites if this derivation
-    ever changes."""
+    by the convergence-bound test)."""
     li = (
         _t(spark, sf_dir, "lineitem")
         .where(
@@ -2675,8 +2666,8 @@ def shortest_paths_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shares the kcore/triangle/LPA edge derivation. The oracle is an
     INDEPENDENT formulation: DuckDB's WITH RECURSIVE fixpoint explores
     every (node, dist ≤ 4) pair and collapses with MIN, while the Spark
-    side runs the frontier/anti-join loop that expands each node
-    exactly once — two different algorithms agreeing on the distance
+    side runs the two-frontier BFS that expands each node exactly
+    once — two different algorithms agreeing on the distance
     map, not a replayed mirror."""
     from vacancy_gpt_etl_pipeline_spark.operators.graph import shortest_paths
 
@@ -2685,23 +2676,9 @@ def shortest_paths_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("p_brand") == "Brand#1")
         .select("p_partkey")
     )
-    # edges_canonical: the co-purchase join emits src < dst only, so
-    # the operator dedups BEFORE symmetrizing — the distinct shuffle
-    # covers E rows instead of 2E (r15-opt, guide §2.3).
-    # checkpoint_every=2 (r16, guide §5 plan truncation): the default
-    # interval of 8 never fires at max_hops=4, and the BFS recurrence's
-    # ANALYZED plan grows ~2^hops (settled_h embeds settled_{h-1} twice:
-    # once in the union, once under fresh_h's anti-join) — 325 k
-    # formatted-plan lines whose driver-side construction dominated the
-    # entry (the round-15 driver's worst entry at 10 s). Truncating the
-    # lineage at hops 2 and 4 collapses the final plan to 51 lines;
-    # interleaved A/B min-of-4: 7.23 s -> 3.90 s, rows identical
-    # (checkpoint_every=1 measured the same 3.90 s — 2 does it with
-    # half the checkpoint jobs).
-    return shortest_paths(
-        _kcore_edges(spark, sf_dir), seeds, max_hops=4,
-        edges_canonical=True, checkpoint_every=2,
-    ).orderBy("node")
+    return shortest_paths(_kcore_edges(spark, sf_dir), seeds, max_hops=4).orderBy(
+        "node"
+    )
 
 
 SHORTEST_PATHS_SQL = """
@@ -2743,11 +2720,7 @@ def label_prop_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         label_propagation,
     )
 
-    # edges_canonical: co-purchase pairs are src < dst by construction
-    # — one distinct over E instead of E + 2E (r15-opt, guide §2.3)
-    labels = label_propagation(
-        _kcore_edges(spark, sf_dir), iterations=3, edges_canonical=True
-    )
+    labels = label_propagation(_kcore_edges(spark, sf_dir), iterations=3)
     return (
         labels.groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_members"))
