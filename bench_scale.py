@@ -401,10 +401,14 @@ def main() -> None:
         from vacancy_gpt_etl_pipeline_spark.operators.multimodal import (
             synthesize_bmp_payload,
         )
+        from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
+            BATCH_COL,
+            read_history,
+            read_index,
+        )
         from vacancy_gpt_etl_pipeline_spark.streaming.phash_gate import (
-            batch_band_pairs,
+            INDEX_SCHEMA,
             index_rows,
-            read_index_fingerprints,
         )
         from vacancy_gpt_etl_pipeline_spark.streaming.neardup_gate import (
             apply_neardup_gate_batch,
@@ -419,7 +423,8 @@ def main() -> None:
             probe = phash_bmp(
                 synthesize_bmp_payload(probe_docs, "doc_id")
             ).localCheckpoint()
-            pairs = batch_band_pairs(probe)
+            touched = index_rows(probe, 0).select("band_idx", "pb")
+            pairs = [tuple(r) for r in touched.distinct().collect()]
             img_row: dict[str, float] = {}
             for scale in (1, 10):
                 idx_path = os.path.join(tmp, f"img_idx_x{scale}")
@@ -436,13 +441,24 @@ def main() -> None:
                 ).write.mode("overwrite").partitionBy(
                     "band_idx", "pb"
                 ).parquet(idx_path)
-                for mode, p in (("pruned", pairs), ("unpruned", None)):
+                for mode in ("pruned", "unpruned"):
                     best = None
                     for _ in range(2):
                         t0 = time.perf_counter()
-                        hist = read_index_fingerprints(
-                            spark, idx_path, pairs=p
-                        )
+                        if mode == "pruned":
+                            hist = read_history(
+                                spark, idx_path, INDEX_SCHEMA, touched, 1
+                            )
+                        else:
+                            # the same partition-value collect and
+                            # own-batch exclusion read_history runs, so
+                            # the two timings differ only in the
+                            # partition filter
+                            touched.distinct().collect()
+                            hist = read_index(
+                                spark, idx_path, INDEX_SCHEMA
+                            ).where(f"{BATCH_COL} != 1")
+                        hist = hist.select("asset_id", "b0", "b1", "b2", "b3")
                         phash_incremental(probe, hist).write.mode(
                             "overwrite"
                         ).format("noop").save()

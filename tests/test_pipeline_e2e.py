@@ -175,3 +175,25 @@ def test_empty_input_early_exit(spark, tmp_path):
         spark, str(tmp_path / "nothing_here"), TITLE_ENRICHER, FIELD_ENRICHER
     )
     assert df.count() == 0
+
+
+def test_keep_first_survives_a_later_exact_copy(spark, tmp_path):
+    """An exact copy of the first file's row in a later file must not
+    hand the id to a middle file's version. The padding makes the last
+    file the largest, so Spark scans it first."""
+    a = ["1", "Аналитик данных в финтех", "финтех", 250000, "2024-01-10"]
+    b = ["1", "СТАРШИЙ аналитик (дубль)", "финтех", 999999, "2024-01-12"]
+    pad = [
+        [str(i), f"Разработчик {i}", "айти", 100000 + i, "2024-01-13"]
+        for i in range(100, 400)
+    ]
+    _csv(tmp_path / "vacancies_20240101_000000.csv", [a])
+    _csv(tmp_path / "vacancies_20240102_000000.csv", [b])
+    _csv(tmp_path / "vacancies_20240103_000000.csv", [a, *pad])
+    df = run_pipeline(
+        spark, str(tmp_path), TITLE_ENRICHER, FIELD_ENRICHER, max_retries=0
+    )
+    rows = {r["id"]: r for r in df.collect()}
+    assert len(rows) == 1 + len(pad)
+    assert rows["1"]["title"] == a[1]
+    assert rows["1"]["salary_to"] == 250000

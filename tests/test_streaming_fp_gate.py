@@ -19,11 +19,13 @@ from vacancy_gpt_etl_pipeline_spark.operators.phash import (
 )
 from vacancy_gpt_etl_pipeline_spark.streaming.fp_gate import (
     BATCH_COL,
+    _index_schema,
     apply_fp_gate_batch,
     compact_fp_index,
     write_stream_audio_fp_gate,
     write_stream_video_fp_gate,
 )
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import read_history
 
 _SCHEMA = "asset_id long, content binary"
 
@@ -190,8 +192,10 @@ def test_audio_index_read_is_partition_pruned(spark, sf_dir, tmp_path):
         audio_fp_incremental,
         "fingerprint",
     )
-    raw = spark.read.parquet(idx)
-    pruned = raw.where(F.col("pb").isin([0, 1, 2]))
+    touched = spark.createDataFrame([(0,), (1,), (2,)], "pb int")
+    pruned = read_history(
+        spark, idx, _index_schema("fingerprint"), touched, 1
+    )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m is not None and "pb" in m.group(1)

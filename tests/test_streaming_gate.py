@@ -1,13 +1,15 @@
-"""The streaming dedup gates' shared commit protocol
-(streaming/gate.py): an index directory a crashed first append left
-without data files reads as empty history, and every gate micro-batch
-(plus the incremental BPE trainer) frees the RDD blocks it created."""
+"""The streaming dedup gates' shared protocol (streaming/gate.py): an
+index directory a crashed first append left without data files reads
+as empty history, every gate micro-batch (plus the incremental BPE
+trainer) frees the RDD blocks it created, and compaction never writes
+over an existing directory."""
 
 from __future__ import annotations
 
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from vacancy_gpt_etl_pipeline_spark.operators.audio_fp import (
@@ -23,12 +25,15 @@ from vacancy_gpt_etl_pipeline_spark.operators.tokenize import (
 )
 from vacancy_gpt_etl_pipeline_spark.streaming.fp_gate import (
     apply_fp_gate_batch,
+    compact_fp_index,
 )
 from vacancy_gpt_etl_pipeline_spark.streaming.neardup_gate import (
     apply_neardup_gate_batch,
+    compact_neardup_indexes,
 )
 from vacancy_gpt_etl_pipeline_spark.streaming.phash_gate import (
     apply_phash_gate_batch,
+    compact_phash_index,
 )
 from vacancy_gpt_etl_pipeline_spark.streaming.semdedup_gate import (
     apply_semdedup_gate_batch,
@@ -36,6 +41,7 @@ from vacancy_gpt_etl_pipeline_spark.streaming.semdedup_gate import (
 from vacancy_gpt_etl_pipeline_spark.streaming.seq_near_gate import (
     apply_seq_near_gate_batch,
     audio_fingerprinter,
+    compact_seq_near_index,
 )
 
 
@@ -124,7 +130,7 @@ def _survivor_ids(spark, out, id_col):
     )
 
 
-@pytest.mark.parametrize("gate", ["audio_fp", "phash", "seq_near", "neardup"])
+@pytest.mark.parametrize("gate", sorted(GATES))
 def test_empty_index_directory_reads_as_no_history(
     spark, sf_dir, tmp_path, gate
 ):
@@ -162,6 +168,32 @@ def test_gate_batch_frees_its_blocks(spark, sf_dir, tmp_path, gate):
     before = _persistent_rdd_ids(spark)
     run(batch, str(tmp_path / "out"), *(str(tmp_path / n) for n in index_names))
     assert _persistent_rdd_ids(spark) == before
+
+
+# each compactor as fn(spark, index_path, dest_path)
+COMPACTORS = {
+    "fp": lambda spark, src, dest: compact_fp_index(
+        spark, src, dest, "fingerprint"
+    ),
+    "phash": compact_phash_index,
+    "seq_near": compact_seq_near_index,
+    "neardup": lambda spark, src, dest: compact_neardup_indexes(
+        spark, src, src, dest, dest
+    ),
+}
+
+
+@pytest.mark.parametrize("compactor", sorted(COMPACTORS))
+def test_compaction_refuses_existing_destination(spark, tmp_path, compactor):
+    """Compaction writes a NEW directory, so readers of an earlier one
+    stay consistent: an existing destination is an error and is left
+    as it was."""
+    dest = tmp_path / "dest"
+    dest.mkdir()
+    (dest / "keep").write_text("earlier compaction")
+    with pytest.raises(AnalysisException):
+        COMPACTORS[compactor](spark, str(tmp_path / "index"), str(dest))
+    assert os.listdir(dest) == ["keep"]
 
 
 def test_incremental_bpe_trainer_frees_its_blocks(spark):

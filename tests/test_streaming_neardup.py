@@ -218,10 +218,9 @@ def test_text_gate_index_reads_are_partition_pruned(
     suppresses candidate generation from ubiquitous shingles."""
     import re
 
-    from vacancy_gpt_etl_pipeline_spark.streaming.gate import read_index
+    from vacancy_gpt_etl_pipeline_spark.streaming.gate import read_history
     from vacancy_gpt_etl_pipeline_spark.streaming.neardup_gate import (
         HASH_INDEX_SCHEMA,
-        _pruned,
     )
 
     docs = _docs(spark, sf_dir)
@@ -230,15 +229,18 @@ def test_text_gate_index_reads_are_partition_pruned(
     pidx = str(tmp_path / "postings")
     apply_neardup_gate_batch(docs.where("doc_id < 200"), 0, out, hidx, pidx)
 
-    idx = read_index(spark, hidx, HASH_INDEX_SCHEMA)
-    pruned = _pruned(idx, ["00", "01", "ff"], None)
+    def history(pbs):
+        touched = spark.createDataFrame([(pb,) for pb in pbs], "pb string")
+        return read_history(spark, hidx, HASH_INDEX_SCHEMA, touched, 1)
+
+    pruned = history(["00", "01", "ff"])
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m is not None and "pb" in m.group(1)
     got = {r["pb"] for r in pruned.select("pb").distinct().collect()}
     assert got <= {"00", "01", "ff"}
     # disjoint prefix list → empty history
-    assert _pruned(idx, [], None).count() == 0
+    assert history([]).count() == 0
 
     # fan-out cap: with max_shingle_fanout=0 every candidate is
     # suppressed, so even a byte-copy of history passes the NEAR gate
@@ -308,3 +310,31 @@ def test_compact_neardup_indexes_preserve_gate_decisions(
     assert _ids(spark.read.parquet(out_a)) == _ids(
         spark.read.parquet(out_b)
     )
+
+
+def test_all_digit_hash_prefixes_still_gate_later_batches(spark, tmp_path):
+    """A hash index whose ``pb`` directories are all digits ("06") must
+    still read its prefixes as strings. Spark would otherwise infer an
+    int column, and a later batch with a "7a" prefix would fail its
+    pruned read on every retry."""
+    from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
+        content_hash_col,
+    )
+
+    cands = spark.createDataFrame(
+        [(i, f"vacancy number {i} analyst role in fintech") for i in range(64)],
+        _SCHEMA,
+    )
+    rows = cands.select(
+        "text", content_hash_col("text", True).alias("h")
+    ).collect()
+    digits = next(r.text for r in rows if r.h[:2].isdigit())
+    letter = next(r.text for r in rows if not r.h[:2].isdigit())
+    out = str(tmp_path / "out")
+    hidx, pidx = str(tmp_path / "h"), str(tmp_path / "p")
+    apply_neardup_gate_batch(
+        spark.createDataFrame([(1, digits)], _SCHEMA), 0, out, hidx, pidx
+    )
+    b1 = spark.createDataFrame([(2, digits), (3, letter)], _SCHEMA)
+    apply_neardup_gate_batch(b1, 1, out, hidx, pidx)
+    assert _ids(spark.read.parquet(out).where(f"{BATCH_COL} = 1")) == [3]

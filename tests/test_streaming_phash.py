@@ -22,6 +22,8 @@ from vacancy_gpt_etl_pipeline_spark.streaming.phash_gate import (
 )
 
 _SCHEMA = "asset_id long, content binary"
+# the fingerprint columns the gate keeps from its history read
+_FP_COLS = ("asset_id", "b0", "b1", "b2", "b3")
 
 
 def _drop_assets(spark, docs, src, name: str, relabel: int = 0):
@@ -179,10 +181,10 @@ def test_gate_history_read_is_partition_pruned(spark, sf_dir, tmp_path):
     pair list disjoint from a fingerprint's bands excludes that
     fingerprint while the full read keeps it."""
     from vacancy_gpt_etl_pipeline_spark.operators.phash import phash_bmp
+    from vacancy_gpt_etl_pipeline_spark.streaming.gate import read_history
     from vacancy_gpt_etl_pipeline_spark.streaming.phash_gate import (
         apply_phash_gate_batch,
-        batch_band_pairs,
-        read_index_fingerprints,
+        index_rows,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -199,8 +201,11 @@ def test_gate_history_read_is_partition_pruned(spark, sf_dir, tmp_path):
             docs.where("doc_id >= 200 AND doc_id < 220"), "doc_id"
         )
     )
-    pairs = batch_band_pairs(batch)
-    pruned = read_index_fingerprints(spark, index, pairs=pairs)
+    touched = index_rows(batch, 0).select("band_idx", "pb")
+    pairs = [tuple(r) for r in touched.distinct().collect()]
+    pruned = read_history(spark, index, INDEX_SCHEMA, touched, 1).select(
+        *_FP_COLS
+    )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     import re
 
@@ -208,7 +213,7 @@ def test_gate_history_read_is_partition_pruned(spark, sf_dir, tmp_path):
     assert m is not None and "band_idx" in m.group(1)
     # lossless for the gate: every full-read fingerprint sharing a band
     # prefix with the batch is present in the pruned read
-    full = read_index_fingerprints(spark, index)
+    full = read_index(spark, index, INDEX_SCHEMA).select(*_FP_COLS)
     batch_pairs_set = set(pairs)
 
     def fps(df):
@@ -224,8 +229,9 @@ def test_gate_history_read_is_partition_pruned(spark, sf_dir, tmp_path):
     }
     assert fps(pruned) == expected
     # disjoint pair list → empty history
-    assert read_index_fingerprints(
-        spark, index, pairs=[(0, 9999)]
+    disjoint = spark.createDataFrame([(0, 9999)], "band_idx int, pb int")
+    assert read_history(
+        spark, index, INDEX_SCHEMA, disjoint, 1
     ).count() == 0
 
 
@@ -235,11 +241,11 @@ def test_compact_phash_index_preserves_gate_decisions(
     """Compaction collapses retry-duplicated rows to one per logical
     key, keeps the (band_idx, pb) partitioning, and leaves every gate
     decision unchanged."""
+    from vacancy_gpt_etl_pipeline_spark.streaming.gate import read_history
     from vacancy_gpt_etl_pipeline_spark.streaming.phash_gate import (
         apply_phash_gate_batch,
-        batch_band_pairs,
         compact_phash_index,
-        read_index_fingerprints,
+        index_rows,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -269,15 +275,13 @@ def test_compact_phash_index_preserves_gate_decisions(
             .withColumn("asset_id", F.col("asset_id") + 900000)
         )
     )
-    pairs = batch_band_pairs(batch)
-    before_gate = _survivor_set(
-        phash_incremental(
-            batch, read_index_fingerprints(spark, index, pairs=pairs)
+    touched = index_rows(batch, 0).select("band_idx", "pb")
+
+    def history(path):
+        return read_history(spark, path, INDEX_SCHEMA, touched, 1).select(
+            *_FP_COLS
         )
-    )
-    after_gate = _survivor_set(
-        phash_incremental(
-            batch, read_index_fingerprints(spark, compacted, pairs=pairs)
-        )
-    )
+
+    before_gate = _survivor_set(phash_incremental(batch, history(index)))
+    after_gate = _survivor_set(phash_incremental(batch, history(compacted)))
     assert before_gate == after_gate

@@ -12,8 +12,10 @@ from vacancy_gpt_etl_pipeline_spark.operators.similarity import (
     sampled_centroids,
     semdedup_incremental,
 )
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import read_history
 from vacancy_gpt_etl_pipeline_spark.streaming.semdedup_gate import (
     BATCH_COL,
+    INDEX_SCHEMA,
     apply_semdedup_gate_batch,
     write_stream_semdedup_gate,
 )
@@ -189,9 +191,40 @@ def test_semdedup_gate_index_read_is_cell_pruned(spark, sf_dir, tmp_path):
     some_cells = [
         r["cell"] for r in idx.select("cell").distinct().limit(2).collect()
     ]
-    pruned = idx.where(F.col("cell").isin(some_cells))
+    touched = spark.createDataFrame([(c,) for c in some_cells], "cell long")
+    pruned = read_history(spark, index, INDEX_SCHEMA, touched, 1)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m is not None and "cell" in m.group(1)
     got = {r["cell"] for r in pruned.select("cell").distinct().collect()}
     assert got == set(some_cells)
+
+
+def test_cells_past_int32_still_gate_later_batches(spark, tmp_path):
+    """A cell is its centroid's vec_id, so an index whose vec_ids pass
+    2^31 has ``cell=`` directories past the int range. The declared
+    index schema must read them, or every later batch with history
+    fails its read on every retry."""
+    base = 3_000_000_000
+    out = str(tmp_path / "out")
+    index, cents = str(tmp_path / "index"), str(tmp_path / "cents")
+    b0 = spark.createDataFrame(
+        [(base, [1.0, 0.0, 0.0, 0.0]), (base + 1, [0.0, 1.0, 0.0, 0.0])],
+        _SCHEMA,
+    )
+    apply_semdedup_gate_batch(
+        b0, 0, out, index, cents, n_centroids=2, stride=1, dim=4
+    )
+    b1 = spark.createDataFrame(
+        [
+            (base + 10, [1.0, 0.01, 0.0, 0.0]),
+            (base + 11, [0.0, 0.0, 1.0, 0.0]),
+        ],
+        _SCHEMA,
+    )
+    apply_semdedup_gate_batch(
+        b1, 1, out, index, cents, n_centroids=2, stride=1, dim=4
+    )
+    assert _ids(spark.read.parquet(out).where(f"{BATCH_COL} = 1")) == [
+        base + 11
+    ]

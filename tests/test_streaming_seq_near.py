@@ -12,14 +12,18 @@ from vacancy_gpt_etl_pipeline_spark.operators.audio_fp import (
     synthesize_tone_payload,
 )
 from vacancy_gpt_etl_pipeline_spark.operators.dedup import seq_near_veto
+from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
+    read_history,
+    read_index,
+)
 from vacancy_gpt_etl_pipeline_spark.streaming.seq_near_gate import (
     BATCH_COL,
+    INDEX_SCHEMA,
     SEQ_COL,
     apply_seq_near_gate_batch,
     audio_fingerprinter,
-    batch_band_pairs,
     compact_seq_near_index,
-    read_index_sequences,
+    index_rows,
     write_stream_seq_near_gate,
 )
 
@@ -162,17 +166,16 @@ def test_near_gate_history_read_is_partition_pruned(
             docs.where("doc_id >= 200 AND doc_id < 220"), "doc_id"
         )
     )
-    pairs = batch_band_pairs(batch)
-    pruned = read_index_sequences(spark, index, pairs=pairs)
+    touched = index_rows(batch, 0).select("band_idx", "pb")
+    pairs = [tuple(r) for r in touched.distinct().collect()]
+    pruned = read_history(spark, index, INDEX_SCHEMA, touched, 1).select(
+        "asset_id", SEQ_COL
+    )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m is not None and "band_idx" in m.group(1)
     # lossless: every history sequence sharing a (band_idx, pb) with
     # the batch survives the pruned read
-    from vacancy_gpt_etl_pipeline_spark.streaming.seq_near_gate import (
-        index_rows,
-    )
-
     full_rows = spark.read.parquet(index).collect()
     pairs_set = set(pairs)
     expected = {
@@ -185,8 +188,9 @@ def test_near_gate_history_read_is_partition_pruned(
         for r in pruned.distinct().collect()
     }
     assert got == expected and got
+    disjoint = spark.createDataFrame([(0, 9999)], "band_idx int, pb int")
     assert (
-        read_index_sequences(spark, index, pairs=[(0, 9999)]).count()
+        read_history(spark, index, INDEX_SCHEMA, disjoint, 1).count()
         == 0
     )
 
@@ -240,11 +244,17 @@ def test_compact_seq_near_index_preserves_decisions(spark, tmp_path):
     compact_seq_near_index(spark, index, dest)
     a = sorted(
         (r["asset_id"], r[SEQ_COL])
-        for r in read_index_sequences(spark, index).distinct().collect()
+        for r in read_index(spark, index, INDEX_SCHEMA)
+        .select("asset_id", SEQ_COL)
+        .distinct()
+        .collect()
     )
     b = sorted(
         (r["asset_id"], r[SEQ_COL])
-        for r in read_index_sequences(spark, dest).distinct().collect()
+        for r in read_index(spark, dest, INDEX_SCHEMA)
+        .select("asset_id", SEQ_COL)
+        .distinct()
+        .collect()
     )
     assert a == b
     n_raw = spark.read.parquet(index).count()

@@ -5,7 +5,7 @@ Reference: 5 Airflow tasks exchanging `list[dict]` through XCom
 process hop and XCom caps data size. Here the whole chain is a single
 logical plan:
 
-    read.csv(latest-k) → union → dropDuplicates → dropDuplicates(id)
+    read.csv(latest-k) → union → keep-first per id (file, then content)
     → enrich(title) → enrich(field) → metadata columns → sink
 
 Catalyst analyzes/optimizes it as a unit; the only process boundaries left
@@ -67,10 +67,12 @@ def run_pipeline(
     raw = read_vacancies_csv(spark, picked)
     if observer is not None:
         raw = observer.stage(raw, "ingest")
+    # the reference's exact dedup then keep-first by id, in one window:
+    # the earliest file's row wins, and an exact copy of it in a later
+    # file cannot displace it
+    content = [c for c in raw.columns if c != "_input_file"]
     deduped = top_k_per_group(
-        raw.dropDuplicates([c for c in raw.columns if c != "_input_file"]),
-        ["id"],
-        [F.asc("_input_file")],
+        raw, ["id"], [F.asc("_input_file"), *map(F.asc, content)]
     )
     if observer is not None:
         deduped = observer.stage(deduped, "deduped")

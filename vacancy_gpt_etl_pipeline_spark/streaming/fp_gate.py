@@ -17,9 +17,7 @@ index — so the state is the simplest of the family:
 - **fingerprint index**: one row per surviving asset,
   ``(fp, asset_id, _batch_id)``, partitioned by ``pb`` =
   ``xxhash64(fp) mod 256``. A batch reads only the partitions its own
-  fingerprints hash into (the prune-key collect is metadata-sized:
-  ≤ 256 ints), and a fingerprint's full posting set lives in its one
-  partition, so pruning is lossless for the exact gate.
+  fingerprints hash into.
 
 Delivery class: the family's commit protocol (streaming/gate.py).
 Retry duplicates within a committed batch id are harmless to the exact
@@ -39,8 +37,9 @@ from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
 from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
     BATCH_COL,
     commit,
+    compact_index,
     drain,
-    read_index,
+    read_history,
 )
 
 
@@ -79,16 +78,15 @@ def apply_fp_gate_batch(
         # the fingerprint frame feeds the prune collect AND the gate —
         # the checkpoint keeps the Arrow decode single-pass
         fps = fingerprinter(batch_df).localCheckpoint()
-        pbs = [
-            r["pb"]
-            for r in fps.where(F.col(key_col).isNotNull())
-            .select(pb_expr.alias("pb"))
-            .distinct()
-            .collect()
-        ]
-        idx = read_index(spark, index_path, _index_schema(key_col))
-        idx = idx.where(F.col("pb").isin(pbs) if pbs else F.lit(False))
-        hist = idx.where(F.col(BATCH_COL) != F.lit(batch_id))
+        # lossless: an exact match has the batch fingerprint's own pb,
+        # and a fingerprint's whole posting set lives in that partition
+        hist = read_history(
+            spark,
+            index_path,
+            _index_schema(key_col),
+            fps.where(F.col(key_col).isNotNull()).select(pb_expr.alias("pb")),
+            batch_id,
+        )
         survivors = gate(fps, hist).localCheckpoint()
         index = survivors.select(
             key_col,
@@ -162,20 +160,7 @@ def compact_fp_index(
     dest_path: str,
     key_col: str,
 ) -> None:
-    """Log-compaction (the family contract: new immutable directory,
-    same ``pb`` partitioning, no concurrent writer): one row per
-    fingerprint, MIN asset_id so the keep-first survivor is unchanged,
-    MAX batch id so own-batch exclusion can never re-fire for
-    checkpoint-committed batches."""
-    (
-        read_index(spark, index_path, _index_schema(key_col))
-        .groupBy("pb", key_col)
-        .agg(
-            F.min("asset_id").alias("asset_id"),
-            F.max(BATCH_COL).alias(BATCH_COL),
-        )
-        .select(key_col, "asset_id", BATCH_COL, "pb")
-        .write.mode("error")
-        .partitionBy("pb")
-        .parquet(dest_path)
-    )
+    """Log-compaction (streaming/gate.compact_index): one row per
+    fingerprint, MIN asset_id."""
+    schema = _index_schema(key_col)
+    compact_index(spark, index_path, dest_path, schema, ("pb",), "asset_id")

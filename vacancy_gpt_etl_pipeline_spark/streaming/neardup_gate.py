@@ -79,8 +79,9 @@ from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
     BATCH_COL,
     commit,
+    compact_index,
     drain,
-    read_index,
+    read_history,
 )
 
 HASH_INDEX_SCHEMA = T.StructType(
@@ -101,16 +102,6 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("pb", T.IntegerType()),
     ]
 )
-
-
-def _pruned(
-    idx: DataFrame, pbs: list, exclude_batch_id: int | None
-) -> DataFrame:
-    pred = F.col("pb").isin(pbs) if pbs else F.lit(False)
-    idx = idx.where(pred)
-    if exclude_batch_id is not None:
-        idx = idx.where(F.col(BATCH_COL) != F.lit(exclude_batch_id))
-    return idx
 
 
 def _shingle_postings(docs: DataFrame, n: int) -> DataFrame:
@@ -170,31 +161,26 @@ def apply_neardup_gate_batch(
         fresh = top_k_per_group(
             hashed, ["content_hash"], [F.asc("doc_id")]
         ).localCheckpoint()
-        # exact gate against the pruned hash index (prefix collect is
-        # metadata-sized: ≤ 256 distinct 2-hex-char values)
-        hash_pbs = [
-            r["pb"]
-            for r in fresh.select(
-                F.substring("content_hash", 1, 2).alias("pb")
-            )
-            .distinct()
-            .collect()
-        ]
-        seen = _pruned(
-            read_index(spark, hash_index_path, HASH_INDEX_SCHEMA),
-            hash_pbs,
+        # exact gate — lossless: an equal hash has the same prefix
+        seen = read_history(
+            spark,
+            hash_index_path,
+            HASH_INDEX_SCHEMA,
+            fresh.select(F.substring("content_hash", 1, 2).alias("pb")),
             batch_id,
         ).select("content_hash")
         exact = fresh.join(seen, "content_hash", "left_anti").localCheckpoint()
 
-        # near gate: batch shingles vs pruned postings, raw Jaccard
+        # near gate: batch shingles vs pruned postings, raw Jaccard —
+        # lossless: a history doc's intersection with a batch doc is
+        # its postings of the batch's shingles, and a shingle's whole
+        # posting list lives in its one pb partition
         bsh = _shingle_postings(exact, n).localCheckpoint()
-        post_pbs = [
-            r["pb"] for r in bsh.select("pb").distinct().collect()
-        ]
-        hist = _pruned(
-            read_index(spark, postings_index_path, POSTINGS_SCHEMA),
-            post_pbs,
+        hist = read_history(
+            spark,
+            postings_index_path,
+            POSTINGS_SCHEMA,
+            bsh.select("pb"),
             batch_id,
         )
         # A retried-then-committed EARLIER batch leaves duplicate
@@ -313,35 +299,13 @@ def compact_neardup_indexes(
     hash_dest: str,
     postings_dest: str,
 ) -> None:
-    """Log-compaction for the text gate's two indexes (same contract as
-    streaming/phash_gate.compact_phash_index: new immutable
-    directories, same partitioning, no concurrent writer). Hash index:
-    one row per content_hash, MIN doc_id (survivor hashes are unique
-    across committed batches by construction, so only retry duplicates
-    collapse). Postings index: one row per (s_hash, doc_id) — every
-    history document stays a distinct near-gate candidate; ``n_sh`` is
-    constant per document so any contributing row's value is correct."""
-    (
-        read_index(spark, hash_index_path, HASH_INDEX_SCHEMA)
-        .groupBy("pb", "content_hash")
-        .agg(
-            F.min("doc_id").alias("doc_id"),
-            F.max(BATCH_COL).alias(BATCH_COL),
-        )
-        .select("content_hash", "doc_id", BATCH_COL, "pb")
-        .write.mode("error")
-        .partitionBy("pb")
-        .parquet(hash_dest)
+    """Log-compaction (streaming/gate.compact_index) of both indexes.
+    Hash index: one row per content_hash, MIN doc_id. Postings index:
+    one row per (s_hash, doc_id) — ``n_sh`` is constant per document —
+    so every history document stays a distinct near-gate candidate."""
+    compact_index(
+        spark, hash_index_path, hash_dest, HASH_INDEX_SCHEMA, ("pb",), "doc_id"
     )
-    (
-        read_index(spark, postings_index_path, POSTINGS_SCHEMA)
-        .groupBy("pb", "s_hash", "doc_id")
-        .agg(
-            F.first("n_sh").alias("n_sh"),
-            F.max(BATCH_COL).alias(BATCH_COL),
-        )
-        .select("s_hash", "doc_id", "n_sh", BATCH_COL, "pb")
-        .write.mode("error")
-        .partitionBy("pb")
-        .parquet(postings_dest)
+    compact_index(
+        spark, postings_index_path, postings_dest, POSTINGS_SCHEMA, ("pb",)
     )

@@ -17,19 +17,14 @@ O(distinct-content) structure an ingest keeps hot.
 Index layout (r12 verdict item 5 — pruned history reads): one row per
 (surviving fingerprint, band), partitioned on disk by ``band_idx``
 (0-3) and ``pb`` (the band value's high byte, 256 values — 1024
-directories total). A micro-batch can only collide with history
-fingerprints that share at least one exact 16-bit band (the pigeonhole
-guarantee the near gate is built on), and the EXACT gate's matches
-share band 0 in particular, so the gate reads only the (band_idx, pb)
+directories total). The gate reads only the (band_idx, pb)
 partitions covered by the batch's own band values — at
 billions-of-fingerprints index scale that prunes the history scan to
-the batch's working set instead of the whole table. The candidate
-pair list is collected driver-side but is metadata-sized by
-construction: at most 4 bands x 256 prefixes = 1024 values.
+the batch's working set instead of the whole table.
 
 Delivery class: the family's commit protocol (streaming/gate.py);
 :func:`compact_phash_index` is the log-compaction of a long-lived
-index (the streaming/upsert.py pattern).
+index.
 """
 
 from __future__ import annotations
@@ -46,8 +41,9 @@ from vacancy_gpt_etl_pipeline_spark.operators.phash import (
 from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
     BATCH_COL,
     commit,
+    compact_index,
     drain,
-    read_index,
+    read_history,
 )
 
 #: On-disk index row schema (band-exploded; ``band_idx``/``pb`` are the
@@ -105,60 +101,6 @@ def index_rows(hashes: DataFrame, batch_id: int) -> DataFrame:
     )
 
 
-def batch_band_pairs(hashes: DataFrame) -> list[tuple[int, int]]:
-    """Distinct ``(band_idx, pb)`` pairs a batch can touch. The collect
-    is metadata-sized by construction: ≤ 4 bands × 256 prefixes = 1024
-    rows regardless of batch size."""
-    rows = (
-        index_rows(hashes, 0)
-        .select("band_idx", "pb")
-        .distinct()
-        .collect()
-    )
-    return [(r["band_idx"], r["pb"]) for r in rows]
-
-
-def read_index_fingerprints(
-    spark: SparkSession,
-    index_path: str,
-    pairs: list[tuple[int, int]] | None = None,
-    exclude_batch_id: int | None = None,
-) -> DataFrame:
-    """History fingerprints for the gate, as a ``phash_incremental``-
-    compatible ``(asset_id, b0..b3)`` frame.
-
-    With ``pairs`` (the current batch's band/prefix working set) the
-    scan keeps only matching ``(band_idx, pb)`` partitions — partition
-    pruning, visible as PartitionFilters in the scan node. Pruning is
-    lossless for the gate: any history fingerprint that could match the
-    batch (exactly, or within Hamming < 4) shares at least one exact
-    band value with it, and ALL index rows for that (band_idx, prefix)
-    live in one partition, so the fingerprint survives reconstruction.
-    ``exclude_batch_id`` removes the current batch's own (possibly
-    partial) appends from a previous failed attempt — the retry
-    idempotence contract."""
-    idx = read_index(spark, index_path, INDEX_SCHEMA)
-    if pairs is not None:
-        by_band: dict[int, list[int]] = {}
-        for band_idx, pb in pairs:
-            by_band.setdefault(band_idx, []).append(pb)
-        if not by_band:
-            idx = idx.where(F.lit(False))
-        else:
-            pred = None
-            for band_idx, pbs in by_band.items():
-                leg = (F.col("band_idx") == band_idx) & F.col("pb").isin(pbs)
-                pred = leg if pred is None else (pred | leg)
-            idx = idx.where(pred)
-    if exclude_batch_id is not None:
-        idx = idx.where(F.col(BATCH_COL) != F.lit(exclude_batch_id))
-    # fingerprint-level reconstruction: band-exploded rows collapse on
-    # the full hash (phash_incremental re-dedups to min-asset reps and
-    # re-explodes its own band index, so the operator stays the single
-    # implementation of the gate semantics)
-    return idx.select("asset_id", "b0", "b1", "b2", "b3")
-
-
 def apply_phash_gate_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -178,12 +120,18 @@ def apply_phash_gate_batch(
     # gate) — the checkpoint keeps the Arrow BMP decode single-pass.
     with BlockRelease(spark):
         hashes = phash_bmp(batch_df).localCheckpoint()
-        hist = read_index_fingerprints(
+        # lossless: a history fingerprint that matches the batch exactly
+        # or within Hamming < 4 shares an exact band value with it
+        # (pigeonhole), and all index rows of one (band_idx, pb) live in
+        # one partition. The gate re-dedups the band-exploded rows to
+        # min-asset fingerprints and re-explodes its own band index.
+        hist = read_history(
             spark,
             index_path,
-            pairs=batch_band_pairs(hashes),
-            exclude_batch_id=batch_id,
-        )
+            INDEX_SCHEMA,
+            index_rows(hashes, 0).select("band_idx", "pb"),
+            batch_id,
+        ).select("asset_id", "b0", "b1", "b2", "b3")
         survivors = phash_incremental(
             hashes, hist, max_hamming=max_hamming, max_bucket=max_bucket
         ).localCheckpoint()
@@ -226,38 +174,13 @@ def write_stream_phash_gate(
 def compact_phash_index(
     spark: SparkSession, index_path: str, dest_path: str
 ) -> None:
-    """Log-compaction for a long-lived gate index (the
-    streaming/upsert.py snapshot pattern): retried micro-batches
-    double-append rows within their own batch id, and a years-long
-    drain accumulates them. Compaction rewrites ONE row per logical key
-    — (band_idx, pb, band_val, full hash), keeping the MIN asset_id so
-    the gate's keep-first representative (and therefore every future
-    survivor id) is unchanged — into a NEW immutable directory with the
-    same (band_idx, pb) partitioning. Never in-place: concurrent
-    readers of the old index stay consistent; the caller switches paths
-    between drains (no concurrent writer, like every compactor here).
-    ``_batch_id`` is kept as the MAX contributing batch — by switch
-    time those batches are checkpoint-committed, so own-batch exclusion
-    can never re-fire for them."""
-    (
-        read_index(spark, index_path, INDEX_SCHEMA)
-        .groupBy("band_idx", "pb", "band_val", "b0", "b1", "b2", "b3")
-        .agg(
-            F.min("asset_id").alias("asset_id"),
-            F.max(BATCH_COL).alias(BATCH_COL),
-        )
-        .select(
-            "asset_id",
-            "b0",
-            "b1",
-            "b2",
-            "b3",
-            "band_val",
-            BATCH_COL,
-            "band_idx",
-            "pb",
-        )
-        .write.mode("error")
-        .partitionBy("band_idx", "pb")
-        .parquet(dest_path)
+    """Log-compaction (streaming/gate.compact_index): one row per
+    (band_idx, pb, band_val, full hash), MIN asset_id."""
+    compact_index(
+        spark,
+        index_path,
+        dest_path,
+        INDEX_SCHEMA,
+        ("band_idx", "pb"),
+        "asset_id",
     )

@@ -11,11 +11,10 @@ State is TWO persisted tables:
   bootstrap rewrites the identical table) and read-only afterwards: a
   growing corpus must keep its quantizer stable or every past cell
   assignment becomes unreadable.
-- **vector index** — ``(vec_id, embedding, cell, _batch_id)``
-  PARTITIONED BY cell: a micro-batch can only be vetoed by history in
-  the cells it routes to, so the gate reads just those partitions
-  (the cell list is a metadata-sized collect, ≤ C values). Same
-  pruned-read layout as the band/prefix indexes of the other gates.
+- **vector index** — ``(vec_id, embedding, _batch_id, cell)``
+  PARTITIONED BY cell: the gate reads just the cells the batch routes
+  to. Same pruned-read layout as the band/prefix indexes of the other
+  gates.
 
 Delivery class: the family's commit protocol (streaming/gate.py). A
 crash mid-bootstrap leaves a file-less centroid directory, which
@@ -28,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
 from vacancy_gpt_etl_pipeline_spark.operators.similarity import (
@@ -39,7 +39,18 @@ from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
     BATCH_COL,
     commit,
     drain,
+    read_history,
     read_index,
+)
+
+INDEX_SCHEMA = T.StructType(
+    [
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        T.StructField(BATCH_COL, T.LongType()),
+        # a cell is its centroid's vec_id (sampled_centroids), so long
+        T.StructField("cell", T.LongType()),
+    ]
 )
 
 
@@ -69,19 +80,12 @@ def apply_semdedup_gate_batch(
                 "overwrite"
             ).parquet(centroids_path)
             cents = spark.read.parquet(centroids_path)
-        # the gate needs history only in the batch's own cells — collect
-        # the cell list (≤ n_centroids values) and prune the index read
         assigned = ivf_assign(batch, cents, dim=dim).localCheckpoint()
-        cells = [
-            r["cell"] for r in assigned.select("cell").distinct().collect()
-        ]
-        idx = read_index(spark, index_path)
-        if idx is None:
-            hist_assigned = assigned.where(F.lit(False))
-        else:
-            hist_assigned = idx.where(
-                F.col("cell").isin(cells) if cells else F.lit(False)
-            ).where(F.col(BATCH_COL) != F.lit(batch_id))
+        # lossless: the gate compares a batch vector only with history
+        # in its own cell
+        hist_assigned = read_history(
+            spark, index_path, INDEX_SCHEMA, assigned.select("cell"), batch_id
+        )
         survivors = semdedup_incremental(
             batch,
             history=None,

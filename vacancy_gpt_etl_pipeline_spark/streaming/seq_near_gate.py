@@ -39,8 +39,9 @@ from vacancy_gpt_etl_pipeline_spark.operators.dedup import seq_near_veto
 from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
     BATCH_COL,
     commit,
+    compact_index,
     drain,
-    read_index,
+    read_history,
 )
 
 SEQ_COL = "seq"
@@ -107,56 +108,6 @@ def index_rows(
     )
 
 
-def batch_band_pairs(
-    seqs: DataFrame, n_bands: int = 3, sep: str = "-"
-) -> list[tuple[int, int]]:
-    """Distinct ``(band_idx, pb)`` pairs the batch can touch —
-    metadata-sized by construction (≤ n_bands × 256 rows regardless
-    of batch size)."""
-    rows = (
-        index_rows(seqs, 0, n_bands=n_bands, sep=sep)
-        .select("band_idx", "pb")
-        .distinct()
-        .collect()
-    )
-    return [(r["band_idx"], r["pb"]) for r in rows]
-
-
-def read_index_sequences(
-    spark: SparkSession,
-    index_path: str,
-    pairs: list[tuple[int, int]] | None = None,
-    exclude_batch_id: int | None = None,
-) -> DataFrame:
-    """History sequences for the gate as (asset_id, seq). With
-    ``pairs`` the scan keeps only matching (band_idx, pb) partitions
-    (PartitionFilters in the scan node — pinned in tests); pruning is
-    lossless because any history sequence that can match the batch
-    exactly or within the near threshold shares a non-empty band
-    value (and its length) with it. ``exclude_batch_id`` removes the
-    current batch's own partial appends — the retry contract."""
-    idx = read_index(spark, index_path, INDEX_SCHEMA)
-    if pairs is not None:
-        by_band: dict[int, list[int]] = {}
-        for band_idx, pb in pairs:
-            by_band.setdefault(band_idx, []).append(pb)
-        if not by_band:
-            idx = idx.where(F.lit(False))
-        else:
-            pred = None
-            for band_idx, pbs in by_band.items():
-                leg = (F.col("band_idx") == band_idx) & F.col("pb").isin(
-                    pbs
-                )
-                pred = leg if pred is None else (pred | leg)
-            idx = idx.where(pred)
-    if exclude_batch_id is not None:
-        idx = idx.where(F.col(BATCH_COL) != F.lit(exclude_batch_id))
-    # sequence-level reconstruction: the gate operator re-derives its
-    # own bands (one implementation of the gate semantics)
-    return idx.select("asset_id", SEQ_COL)
-
-
 def apply_seq_near_gate_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -177,12 +128,18 @@ def apply_seq_near_gate_batch(
     spark = batch_df.sparkSession
     with BlockRelease(spark):
         seqs = fingerprinter(batch_df).localCheckpoint()
-        hist = read_index_sequences(
+        # lossless: a history sequence that matches the batch exactly or
+        # within the near threshold has its length and shares a
+        # non-empty band value with it, so it has an index row in a
+        # (band_idx, pb) the batch's own bands hash into. The gate
+        # re-derives its own bands from the full sequences.
+        hist = read_history(
             spark,
             index_path,
-            pairs=batch_band_pairs(seqs, n_bands=n_bands),
-            exclude_batch_id=batch_id,
-        )
+            INDEX_SCHEMA,
+            index_rows(seqs, 0, n_bands=n_bands).select("band_idx", "pb"),
+            batch_id,
+        ).select("asset_id", SEQ_COL)
         survivors = seq_near_veto(
             seqs,
             hist,
@@ -260,19 +217,9 @@ def video_fingerprinter(batch_df: DataFrame) -> DataFrame:
 def compact_seq_near_index(
     spark: SparkSession, index_path: str, dest_path: str
 ) -> None:
-    """Log-compaction for a long-lived index (the streaming/upsert.py
-    snapshot pattern): collapse retried-batch duplicates to one row
-    per (asset_id, band_idx, band_val), keeping the smallest batch id
-    — decisions are preserved because the gate only reads the
-    sequence set."""
-    idx = read_index(spark, index_path, INDEX_SCHEMA)
-    (
-        idx.groupBy("asset_id", SEQ_COL, "band_val", "band_idx", "pb")
-        .agg(F.min(BATCH_COL).alias(BATCH_COL))
-        .select(
-            "asset_id", SEQ_COL, "band_val", BATCH_COL, "band_idx", "pb"
-        )
-        .write.mode("overwrite")
-        .partitionBy("band_idx", "pb")
-        .parquet(dest_path)
+    """Log-compaction (streaming/gate.compact_index): one row per
+    (asset_id, band_idx, band_val) — the gate only reads the sequence
+    set, so decisions are preserved."""
+    compact_index(
+        spark, index_path, dest_path, INDEX_SCHEMA, ("band_idx", "pb")
     )
