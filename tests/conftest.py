@@ -16,7 +16,13 @@ def spark():
         os.path.join(os.path.dirname(__file__), "mock_enrichers.py")
     )
     yield s
-    s.stop()
+    # A suite that restarts Spark in the same process (perfbench/tests)
+    # stops this context and shuts its gateway down; stop only a context
+    # that is still the live one, so a real stop error still surfaces.
+    from pyspark import SparkContext
+
+    if SparkContext._active_spark_context is s.sparkContext:
+        s.stop()
 
 
 @pytest.fixture(scope="session")

@@ -21,7 +21,11 @@ from vacancy_gpt_etl_pipeline_spark.operators.enrichment import (
     Enricher,
     _process_chunk,
 )
-from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
+from vacancy_gpt_etl_pipeline_spark.operators.relational import (
+    bucket_pairs,
+    cap_buckets,
+    top_k_per_group,
+)
 
 # ---------------------------------------------------------------------------
 # parser: never raises, returns list-or-None
@@ -187,6 +191,69 @@ def test_top_k_per_group_bounded_and_partitioning_free(spark, rows, k, rank_col)
         for rank, (v, i) in enumerate(sorted(members)[:k], start=1)
     )
     assert max(Counter(r[0] for r in got).values()) <= k
+    assert got == expect
+
+
+bucket_rows = st.lists(
+    st.tuples(st.integers(0, 2), st.integers(0, 1), st.integers(0, 3)),
+    min_size=0,
+    max_size=20,
+)
+bucket_keys = st.sampled_from([["a"], ["a", "b"]])
+bucket_cap = st.one_of(st.none(), st.integers(1, 4))
+
+
+def _bucket_frame(spark, rows):
+    """(a, b, v, i) rows: bucket keys a/b, a carried value v, unique id i."""
+    return spark.createDataFrame(
+        [(a, b, v, i) for i, (a, b, v) in enumerate(rows)],
+        "a int, b int, v int, i int",
+    )
+
+
+def _kept(rows, keys, cap):
+    """The rows a cap of ``cap`` keeps, computed in Python."""
+    key = lambda r: tuple(r[c] for c in keys)  # noqa: E731
+    recs = [dict(a=a, b=b, v=v, i=i) for i, (a, b, v) in enumerate(rows)]
+    size = Counter(key(r) for r in recs)
+    return key, [r for r in recs if cap is None or size[key(r)] <= cap]
+
+
+@given(rows=bucket_rows, keys=bucket_keys, cap=bucket_cap)
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+def test_cap_buckets_keeps_exactly_the_small_buckets(spark, rows, keys, cap):
+    """For ANY rows, keys and cap: exactly the rows of buckets with at
+    most ``cap`` rows survive, with the input's columns, the same rows
+    after a repartition, and ``cap=None`` is the frame itself."""
+    df = _bucket_frame(spark, rows)
+    out = cap_buckets(df, keys, cap)
+    if cap is None:
+        assert out is df
+    assert out.columns == df.columns
+    got = sorted(tuple(r) for r in out.collect())
+    again = cap_buckets(df.repartition(3), keys, cap)
+    assert sorted(tuple(r) for r in again.collect()) == got
+    _, kept = _kept(rows, keys, cap)
+    assert got == sorted((r["a"], r["b"], r["v"], r["i"]) for r in kept)
+
+
+@given(rows=bucket_rows, keys=bucket_keys, cap=bucket_cap)
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+def test_bucket_pairs_is_every_same_bucket_pair_once(spark, rows, keys, cap):
+    """For ANY rows, keys and cap: the self-join of the capped frame is
+    exactly the same-bucket pairs with id_a < id_b, each once, with the
+    carried column from each side."""
+    capped = cap_buckets(_bucket_frame(spark, rows), keys, cap)
+    out = bucket_pairs(capped, keys, "i", ["v"])
+    assert out.columns == ["id_a", "id_b", "v_a", "v_b"]
+    got = sorted(tuple(r) for r in out.collect())
+    key, kept = _kept(rows, keys, cap)
+    expect = sorted(
+        (x["i"], y["i"], x["v"], y["v"])
+        for x in kept
+        for y in kept
+        if key(x) == key(y) and x["i"] < y["i"]
+    )
     assert got == expect
 
 

@@ -11,18 +11,28 @@ DataFrame compositions — shingle/signature/band steps stay JVM-side
 (higher-order array functions + xxhash64), so the only shuffles are the
 band-bucket groupBys, which is the canonical LSH-at-scale layout: candidate
 generation cost is O(rows × bands), never O(rows²).
+
+Every near-dup operator here (and in phash.py, fuzzy.py and the streaming
+text gate) makes candidates by ONE rule: hash rows into buckets, drop the
+buckets holding more than a cap (``relational.cap_buckets``), self-join
+each bucket on ``id_a < id_b`` (``relational.bucket_pairs``), then score
+the pairs. The operators differ only in the bucket key and the score.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from vacancy_gpt_etl_pipeline_spark.operators.caching import (
     CacheScope,
     persist_in,
 )
-from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
+from vacancy_gpt_etl_pipeline_spark.operators.relational import (
+    bucket_pairs,
+    cap_buckets,
+    top_k_per_group,
+)
 
 
 def dedup_exact(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
@@ -144,10 +154,9 @@ def minhash_near_duplicates(
       shingle → ``num_hashes`` minhashes (xxhash64 with per-hash salt,
       array_min over the shingle array) → hash each of ``bands`` signature
       bands → explode to (id, band, band_hash) — ids and hashes ONLY, the
-      shingle arrays never enter the shuffle — → drop buckets larger than
+      shingle arrays never enter the shuffle — → cap the buckets at
       ``max_bucket`` (a 16-rows/band collision across that many docs means a
-      degenerate template, not near-duplicates; it is also the quadratic
-      blowup, so the cap is the skew guard) → self-join per bucket →
+      degenerate template, not near-duplicates) → self-join per bucket →
       candidate (id_a, id_b) pairs → optional exact-Jaccard verification,
       joining the shingle sets back by id for candidates only.
 
@@ -208,29 +217,11 @@ def minhash_near_duplicates(
         for b in range(bands)
     ]
     banded = sig.select("_id", F.posexplode(F.array(*band_cols)).alias("_band", "_bh"))
-    if max_bucket is not None:
-        bucket_w = Window.partitionBy("_band", "_bh")
-        banded = (
-            banded.withColumn("_bc", F.count("*").over(bucket_w))
-            .where(F.col("_bc") <= max_bucket)
-            .drop("_bc")
-        )
+    buckets = ["_band", "_bh"]
     # persisted: both sides of the bucket self-join read this frame — fixed
     # width (id, band, hash), so the cache is O(rows × bands) small
-    banded = persist_in(banded, cache_scope)
-
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l._band") == F.col("r._band"))
-            & (F.col("l._bh") == F.col("r._bh"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    banded = persist_in(cap_buckets(banded, buckets, max_bucket), cache_scope)
+    cand = bucket_pairs(banded, buckets, "_id").dropDuplicates(["id_a", "id_b"])
     if not verify:
         return cand
     sha = shingled.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
@@ -278,9 +269,8 @@ def simhash_near_duplicates(
     ``n_tables=4, max_hamming=3``: 16-bit blocks collide 256× less often
     for unrelated docs, shrinking the candidate join.
 
-    ``max_bucket`` drops degenerate blocks (e.g. the all-zeros block every
-    short doc shares) before the self-join — same skew rationale as
-    :func:`minhash_near_duplicates`.
+    ``max_bucket`` caps each (table, block) bucket, e.g. the all-zeros
+    block every short doc shares.
 
     All JVM-side: token hash via xxhash64, bit votes via higher-order
     aggregate over bit positions.
@@ -363,11 +353,11 @@ def simhash_near_duplicates(
             .cast("bigint")
             .alias("_slo"),
         )
-        carry_cols = ["_shi", "_slo"]
+        carry = ["_shi", "_slo"]
         block_of = lambda t: F.substring("_sim", 2 * t + 1, 2)  # noqa: E731
         hamming_expr = (
-            F.bit_count(F.col("l._shi").bitwiseXOR(F.col("r._shi")))
-            + F.bit_count(F.col("l._slo").bitwiseXOR(F.col("r._slo")))
+            F.bit_count(F.col("_shi_a").bitwiseXOR(F.col("_shi_b")))
+            + F.bit_count(F.col("_slo_a").bitwiseXOR(F.col("_slo_b")))
         ).cast("int")
     else:
         # Bit votes via explode → ``bits`` conditional-SUM aggregates, NOT
@@ -407,43 +397,25 @@ def simhash_near_duplicates(
         )
         block_bits = bits // n_tables
         mask = (1 << block_bits) - 1
-        carry_cols = []
+        carry = ["_sim"]
         block_of = lambda t: F.shiftrightunsigned(  # noqa: E731
             "_sim", t * block_bits
         ).bitwiseAND(F.lit(mask))
         hamming_expr = F.bit_count(
-            F.col("l._sim").bitwiseXOR(F.col("r._sim"))
+            F.col("_sim_a").bitwiseXOR(F.col("_sim_b"))
         )
     blocks = sim.select(
-        "_id",
-        "_sim",
-        *carry_cols,
+        "*",
         F.posexplode(F.array(*[block_of(t) for t in range(n_tables)])).alias(
             "_tbl", "_blk"
         ),
     )
-    if max_bucket is not None:
-        bucket_w = Window.partitionBy("_tbl", "_blk")
-        blocks = (
-            blocks.withColumn("_bc", F.count("*").over(bucket_w))
-            .where(F.col("_bc") <= max_bucket)
-            .drop("_bc")
-        )
+    buckets = ["_tbl", "_blk"]
     # persisted for the self-join (see minhash_near_duplicates)
-    blocks = persist_in(blocks, cache_scope)
-    l, r = blocks.alias("l"), blocks.alias("r")
+    blocks = persist_in(cap_buckets(blocks, buckets, max_bucket), cache_scope)
     cand = (
-        l.join(
-            r,
-            (F.col("l._tbl") == F.col("r._tbl"))
-            & (F.col("l._blk") == F.col("r._blk"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            hamming_expr.alias("hamming"),
-        )
+        bucket_pairs(blocks, buckets, "_id", carry)
+        .select("id_a", "id_b", hamming_expr.alias("hamming"))
         # hamming-filter BEFORE dropDuplicates: the predicate is map-side
         # in the join stage, so the dedup shuffle carries only true
         # near-dups (~0.05% of candidates at sf0.1: 234 of 408 k), not the
@@ -477,21 +449,15 @@ def ngram_jaccard_pairs(
     """
     shingled = _shingled(df, text_col, id_col, n, cache_scope)
     ex = shingled.select("_id", F.explode("_sh").alias("_s"))
-    if max_shingle_freq is not None:
-        freq_w = Window.partitionBy("_s")
-        ex = ex.withColumn("_f", F.count("*").over(freq_w)).where(
-            F.col("_f") <= max_shingle_freq
-        ).drop("_f")
     # persisted: read three times (sizes + both self-join sides)
-    ex = persist_in(ex, cache_scope)
+    ex = persist_in(cap_buckets(ex, ["_s"], max_shingle_freq), cache_scope)
     # sizes from the POST-filter shingle sets, so the Jaccard denominator is
     # consistent with the intersection counts (pre-filter sizes would bias
     # the score downward for docs containing frequent shingles)
     sizes = ex.groupBy("_id").agg(F.count("*").alias("_n"))
-    l, r = ex.alias("l"), ex.alias("r")
     inter = (
-        l.join(r, (F.col("l._s") == F.col("r._s")) & (F.col("l._id") < F.col("r._id")))
-        .groupBy(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
+        bucket_pairs(ex, ["_s"], "_id")
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("_inter"))
     )
     sa = sizes.select(F.col("_id").alias("id_a"), F.col("_n").alias("_na"))
@@ -777,26 +743,11 @@ def winnowing_pairs(
     false positives at ~1/8 the posting volume.
     """
     fps = winnow_fingerprints(df, text_col, id_col, k=k, w=w, max_chars=max_chars)
-    if max_fp_freq is not None:
-        freq_w = Window.partitionBy("fp")
-        fps = (
-            fps.withColumn("_f", F.count("*").over(freq_w))
-            .where(F.col("_f") <= max_fp_freq)
-            .drop("_f")
-        )
     # persisted: both self-join sides re-read the fingerprint pipeline
-    fps = persist_in(fps, cache_scope)
-    l, r = fps.alias("l"), fps.alias("r")
+    fps = persist_in(cap_buckets(fps, ["fp"], max_fp_freq), cache_scope)
     return (
-        l.join(
-            r,
-            (F.col("l.fp") == F.col("r.fp"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
+        bucket_pairs(fps, ["fp"], id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )
@@ -875,6 +826,47 @@ def exact_substring_dedup(
     )
 
 
+_SEQ_BUCKET = ["_n", "band_idx", "band_val"]
+
+
+def _seq_bands(
+    df: DataFrame, seq: str, n_bands: int, max_diff: int, sep: str
+) -> DataFrame:
+    """``df`` with ``_n`` (the element count of ``seq``) and one row per
+    non-empty contiguous band: ``band_idx`` k and ``band_val`` =
+    elements ``[k·n/B, (k+1)·n/B)`` joined by ``sep``. Sequences with
+    ``n <= max_diff`` get no bands (exempt from the near relation)."""
+    k = F.col("band_idx")
+    n = F.col("_n")
+    start = F.floor(k * n / F.lit(n_bands)).cast("int")
+    length = F.floor((k + 1) * n / F.lit(n_bands)).cast("int") - start
+    return (
+        df.withColumn("_n", F.size(F.split(seq, sep)))
+        .where(F.col("_n") > max_diff)
+        .select(
+            "*",
+            F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias(
+                "band_idx"
+            ),
+        )
+        .withColumn(
+            "band_val",
+            F.array_join(F.slice(F.split(seq, sep), start + 1, length), sep),
+        )
+        .where(length >= 1)
+    )
+
+
+def _seq_diff(a: str, b: str, sep: str):
+    """Element Hamming of two equal-length ``sep``-joined sequences."""
+    return F.size(
+        F.filter(
+            F.zip_with(F.split(a, sep), F.split(b, sep), lambda x, y: x != y),
+            lambda v: v,
+        )
+    )
+
+
 def seq_near_pairs(
     df: DataFrame,
     seq_col: str,
@@ -905,9 +897,9 @@ def seq_near_pairs(
     are the groupBy dedup path's job, the
     :func:`phash.phash_neardup_pairs` scale rule. Sequences with
     ``n <= max_diff`` are exempt (1 differing element of 2 is 50%
-    different content, not a near-dup). ``max_bucket`` is the
-    family's fan-out cap: over-full (length, band) buckets drop from
-    pair generation (their members still collapse via exact groups).
+    different content, not a near-dup). ``max_bucket`` caps each
+    (length, band) bucket (``relational.cap_buckets``); members of an
+    over-full bucket still collapse via the exact groups.
 
     ``reps_precomputed=True`` skips the internal min-id aggregation —
     the caller attests one row per distinct sequence keyed by its
@@ -929,64 +921,18 @@ def seq_near_pairs(
             F.min(id_col).alias("_id")
         )
     )
-    reps = reps.withColumn(
-        "_n", F.size(F.split("_seq_s", sep))
-    ).where(F.col("_n") > max_diff)
-    k = F.col("band_idx")
-    n = F.col("_n")
-    start = F.floor(k * n / F.lit(n_bands)).cast("int")
-    length = F.floor((k + 1) * n / F.lit(n_bands)).cast("int") - start
-    bands = (
-        reps.select(
-            "_id",
-            "_seq_s",
-            "_n",
-            F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias(
-                "band_idx"
-            ),
-        )
-        .withColumn(
-            "band_val",
-            F.array_join(
-                F.slice(F.split("_seq_s", sep), start + 1, length), sep
-            ),
-        )
-        .where(length >= 1)
-    )
-    bucket_w = Window.partitionBy("_n", "band_idx", "band_val")
-    eligible = (
-        bands.withColumn("_bn", F.count(F.lit(1)).over(bucket_w))
-        .where(F.col("_bn") <= max_bucket)
-        .drop("_bn")
-    )
-    left = eligible.select(
-        F.col("_id").alias("id_a"),
-        F.col("_seq_s").alias("_sa"),
-        "_n",
-        "band_idx",
-        "band_val",
-    )
-    right = eligible.select(
-        F.col("_id").alias("id_b"),
-        F.col("_seq_s").alias("_sb"),
-        "_n",
-        "band_idx",
-        "band_val",
-    )
-    diff = F.size(
-        F.filter(
-            F.zip_with(
-                F.split("_sa", sep),
-                F.split("_sb", sep),
-                lambda x, y: x != y,
-            ),
-            lambda v: v,
-        )
+    eligible = cap_buckets(
+        _seq_bands(reps, "_seq_s", n_bands, max_diff, sep),
+        _SEQ_BUCKET,
+        max_bucket,
     )
     return (
-        left.join(right, ["_n", "band_idx", "band_val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", diff.cast("int").alias("n_diff"))
+        bucket_pairs(eligible, _SEQ_BUCKET, "_id", ["_seq_s"])
+        .select(
+            "id_a",
+            "id_b",
+            _seq_diff("_seq_s_a", "_seq_s_b", sep).cast("int").alias("n_diff"),
+        )
         .where(
             (F.col("n_diff") >= min_diff)
             & (F.col("n_diff") <= max_diff)
@@ -1014,7 +960,7 @@ def seq_near_veto(
     gate), and (3) no history sequence of the SAME length is within
     ``max_diff`` differing elements (the near veto, banded as in
     :func:`seq_near_pairs`: contiguous bands, pigeonhole-sound for
-    ``max_diff < n_bands``, fan-out cap on the HISTORY leg only,
+    ``max_diff < n_bands``, ``max_bucket`` on the HISTORY leg only,
     sequences with ``n <= max_diff`` exempt from the near veto but
     not the exact gate). History is never re-deduped. Returns the
     surviving batch rows."""
@@ -1029,62 +975,23 @@ def seq_near_veto(
     hist_fp = history.select(seq_col).distinct()
     exact = reps.join(hist_fp, seq_col, "left_anti")
 
-    def bands(df: DataFrame, side: str) -> DataFrame:
-        k = F.col("band_idx")
-        n = F.col("_n")
-        start = F.floor(k * n / F.lit(n_bands)).cast("int")
-        length = (
-            F.floor((k + 1) * n / F.lit(n_bands)).cast("int") - start
-        )
-        return (
-            df.select(
-                F.col(seq_col).alias(f"fp_{side}"),
-                *(
-                    [F.col(id_col).alias(f"id_{side}")]
-                    if side == "b"
-                    else []
-                ),
-            )
-            .withColumn("_n", F.size(F.split(f"fp_{side}", sep)))
-            .where(F.col("_n") > max_diff)
-            .select(
-                "*",
-                F.explode(
-                    F.sequence(F.lit(0), F.lit(n_bands - 1))
-                ).alias("band_idx"),
-            )
-            .withColumn(
-                "band_val",
-                F.array_join(
-                    F.slice(
-                        F.split(f"fp_{side}", sep), start + 1, length
-                    ),
-                    sep,
-                ),
-            )
-            .where(length >= 1)
-        )
-
-    bucket_w = Window.partitionBy("_n", "band_idx", "band_val")
-    hist_bands = (
-        bands(hist_fp, "h")
-        .withColumn("_bn", F.count(F.lit(1)).over(bucket_w))
-        .where(F.col("_bn") <= max_bucket)
-        .drop("_bn")
+    hist_bands = cap_buckets(
+        _seq_bands(
+            hist_fp.select(F.col(seq_col).alias("fp_h")),
+            "fp_h", n_bands, max_diff, sep,
+        ),
+        _SEQ_BUCKET,
+        max_bucket,
     )
-    batch_bands = bands(exact, "b")
-    ham = F.size(
-        F.filter(
-            F.zip_with(
-                F.split("fp_b", sep),
-                F.split("fp_h", sep),
-                lambda x, y: x != y,
-            ),
-            lambda v: v,
-        )
+    batch_bands = _seq_bands(
+        exact.select(
+            F.col(seq_col).alias("fp_b"), F.col(id_col).alias("id_b")
+        ),
+        "fp_b", n_bands, max_diff, sep,
     )
+    ham = _seq_diff("fp_b", "fp_h", sep)
     near_dropped = (
-        batch_bands.join(hist_bands, ["_n", "band_idx", "band_val"])
+        batch_bands.join(hist_bands, _SEQ_BUCKET)
         .where((ham >= 1) & (ham <= max_diff))
         .select(F.col("id_b").alias(id_col))
         .distinct()

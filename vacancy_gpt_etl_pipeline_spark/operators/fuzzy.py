@@ -20,15 +20,20 @@ START of a string escapes the prefix pass but not the suffix pass and
 vice versa, so any pair whose edits all fall within one end is recovered;
 the only remaining misses are pairs with simultaneous prefix AND suffix
 edits (distance ≥ 2 split across both ends) — asserted against an
-unblocked exact join in tests/test_fuzzy.py. ``max_block`` caps
-degenerate blocks per pass (the skew guard every candidate-generation
-operator here carries).
+unblocked exact join in tests/test_fuzzy.py. ``max_block`` caps each
+(pass, key, length) block through ``relational.cap_buckets``, the fan-out
+cap of the near-dup family.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from vacancy_gpt_etl_pipeline_spark.operators.relational import (
+    bucket_pairs,
+    cap_buckets,
+)
 
 BLOCK_PASSES = ("prefix", "suffix")
 
@@ -94,28 +99,11 @@ def fuzzy_self_join(
     spill = tagged.where(
         F.col("_lr") >= F.lit(length_bucket - max_distance)
     ).withColumn("_lb", F.col("_lb") + 1)
-    blocked = tagged.unionByName(spill).drop("_lr")
-    if max_block is not None:
-        w = Window.partitionBy("_pass", "_bk", "_lb")
-        blocked = (
-            blocked.withColumn("_bc", F.count("*").over(w))
-            .where(F.col("_bc") <= max_block)
-            .drop("_bc")
-        )
-    l, r = blocked.alias("l"), blocked.alias("r")
+    block = ["_pass", "_bk", "_lb"]
+    blocked = cap_buckets(tagged.unionByName(spill).drop("_lr"), block, max_block)
     pairs = (
-        l.join(
-            r,
-            (F.col("l._pass") == F.col("r._pass"))
-            & (F.col("l._bk") == F.col("r._bk"))
-            & (F.col("l._lb") == F.col("r._lb"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            F.levenshtein(F.col("l._t"), F.col("r._t")).alias("distance"),
-        )
+        bucket_pairs(blocked, block, "_id", ["_t"])
+        .select("id_a", "id_b", F.levenshtein("_t_a", "_t_b").alias("distance"))
         # distance filter BEFORE dropDuplicates: map-side in the join
         # stage, so the dedup shuffle carries only true matches (straddle
         # and multi-pass duplication can emit a pair several times)

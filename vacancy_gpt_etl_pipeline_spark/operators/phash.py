@@ -52,7 +52,11 @@ from pyspark.sql import types as T
 
 from vacancy_gpt_etl_pipeline_spark.operators.exif import _tiff_gray
 from vacancy_gpt_etl_pipeline_spark.operators.payloads import map_payloads
-from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
+from vacancy_gpt_etl_pipeline_spark.operators.relational import (
+    bucket_pairs,
+    cap_buckets,
+    top_k_per_group,
+)
 
 # cos(pi*(2x+1)*u/16) * 8192, rounded — LUT[u][x]. These literals are
 # the single source of truth: the DuckDB oracle embeds THE SAME numbers
@@ -296,6 +300,31 @@ def video_phash_incremental(
     )
 
 
+_BUCKET = ["band_idx", "band_val"]
+
+
+def _bands(df: DataFrame, id_as: str = "asset_id", b_as: str = "b") -> DataFrame:
+    """``(asset_id, b0..b3)`` rows as one row per 16-bit band, renamed to
+    ``(id_as, {b_as}0..3, band_idx, band_val)``: ``band_val`` is the
+    band's 16 bits, and the whole hash rides along for the Hamming."""
+    band = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(k).alias("band_idx"), F.col(f"b{k}").alias("band_val")
+                )
+                for k in range(4)
+            ]
+        )
+    ).alias("band")
+    words = [f"{b_as}{k}" for k in range(4)]
+    return df.select(
+        F.col("asset_id").alias(id_as),
+        *[F.col(f"b{k}").alias(w) for k, w in enumerate(words)],
+        band,
+    ).select(id_as, *words, "band.band_idx", "band.band_val")
+
+
 def phash_incremental(
     batch_hashes: DataFrame,
     history_hashes: DataFrame,
@@ -319,8 +348,6 @@ def phash_incremental(
             "banded candidate generation is only exhaustive for "
             "max_hamming < 4 (4 bands, pigeonhole)"
         )
-    from pyspark.sql import Window
-
     reps = top_k_per_group(batch_hashes, ["b0", "b1", "b2", "b3"], ["asset_id"])
     # ONE dedup of the large history table serves both gates (the
     # anti-join and the band index below) — two differently-projected
@@ -335,30 +362,6 @@ def phash_incremental(
         "left_anti",
     )
 
-    def bands(df: DataFrame, side: str) -> DataFrame:
-        return df.select(
-            F.col("asset_id").alias(f"id_{side}"),
-            *[F.col(f"b{k}").alias(f"{side}{k}") for k in range(4)],
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(k).alias("band_idx"),
-                            F.col(f"b{k}").alias("band_val"),
-                        )
-                        for k in range(4)
-                    ]
-                )
-            ).alias("band"),
-        ).select(
-            f"id_{side}",
-            *[f"{side}{k}" for k in range(4)],
-            "band.band_idx",
-            "band.band_val",
-        )
-
-    bucket_w = Window.partitionBy("band_idx", "band_val")
-
     # Fan-out cap on the HISTORY leg only (r12 advice): capping the
     # batch leg by its own bucket size silently ADMITTED every asset of
     # an over-full batch bucket past the near gate — a recall hole the
@@ -370,19 +373,16 @@ def phash_incremental(
     # unbounded side). Over-full HISTORY buckets still lose their veto
     # (admit-direction, documented) — the same conservative direction as
     # every LSH cap in the dedup family.
-    hist_bands = (
-        bands(hist_reps, "h")
-        .withColumn("_n", F.count(F.lit(1)).over(bucket_w))
-        .where(F.col("_n") <= max_bucket)
-        .drop("_n")
+    hist_bands = cap_buckets(
+        _bands(hist_reps, "id_h", "h"), _BUCKET, max_bucket
     )
-    batch_bands = bands(exact, "b")
+    batch_bands = _bands(exact, "id_b", "b")
     hamming = sum(
         F.bit_count(F.col(f"b{k}").bitwiseXOR(F.col(f"h{k}")))
         for k in range(4)
     )
     near_dropped = (
-        batch_bands.join(hist_bands, ["band_idx", "band_val"])
+        batch_bands.join(hist_bands, _BUCKET)
         .where((hamming >= 1) & (hamming <= max_hamming))
         .select(F.col("id_b").alias("asset_id"))
         .distinct()
@@ -436,12 +436,10 @@ def phash_neardup_pairs(
     between representatives those don't exist, and within a
     fingerprint they belong to the groupBy path.
 
-    ``max_bucket`` is the standard fan-out cap of the near-dup family:
-    a band value held by more than ``max_bucket`` assets (a degenerate
-    corpus — e.g. a single logo re-encoded millions of times) is
-    dropped from PAIR generation with the same rationale as
-    ``dedup.py``'s LSH caps — its members still collapse via the
-    dedup-groups path. Requires ``max_hamming < 4`` so the pigeonhole
+    ``max_bucket`` caps each (band_idx, band_val) bucket
+    (``relational.cap_buckets``); the members of an over-full band (one
+    logo re-encoded millions of times) still collapse via
+    :func:`phash_dedup_groups`. Requires ``max_hamming < 4`` so the pigeonhole
     band guarantee holds; raises ValueError otherwise (the honest
     failure the semdedup sizing guard models).
 
@@ -459,8 +457,6 @@ def phash_neardup_pairs(
             "max_hamming < 4 (4 bands, pigeonhole); use more bands or "
             "brute force for looser thresholds"
         )
-    from pyspark.sql import Window
-
     reps = (
         hashes.select("b0", "b1", "b2", "b3", "asset_id")
         if reps_precomputed
@@ -472,52 +468,13 @@ def phash_neardup_pairs(
     # below computes Hamming inline — no re-join against the hash table
     # (both join legs read the reps aggregation's exchange, which Spark
     # shares via ReusedExchange instead of recomputing the decode)
-    bands = reps.select(
-        "asset_id",
-        "b0",
-        "b1",
-        "b2",
-        "b3",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(k).alias("band_idx"),
-                        F.col(f"b{k}").alias("band_val"),
-                    )
-                    for k in range(4)
-                ]
-            )
-        ).alias("band"),
-    ).select("asset_id", "b0", "b1", "b2", "b3", "band.band_idx", "band.band_val")
-    # fan-out cap via a PARTITIONED window count; pair generation
-    # streams through the join, never materializing a bucket's O(s²)
-    # pair set in memory the way a collect_list would
-    bucket_w = Window.partitionBy("band_idx", "band_val")
-    eligible = (
-        bands.withColumn("bucket_n", F.count(F.lit(1)).over(bucket_w))
-        .where(F.col("bucket_n") <= max_bucket)
-        .drop("bucket_n")
-    )
-    left = eligible.select(
-        "band_idx",
-        "band_val",
-        F.col("asset_id").alias("id_a"),
-        *[F.col(f"b{k}").alias(f"a{k}") for k in range(4)],
-    )
-    right = eligible.select(
-        "band_idx",
-        "band_val",
-        F.col("asset_id").alias("id_b"),
-        *[F.col(f"b{k}").alias(f"bb{k}") for k in range(4)],
-    )
+    eligible = cap_buckets(_bands(reps), _BUCKET, max_bucket)
+    words = ["b0", "b1", "b2", "b3"]
     hamming = sum(
-        F.bit_count(F.col(f"a{k}").bitwiseXOR(F.col(f"bb{k}")))
-        for k in range(4)
+        F.bit_count(F.col(f"{w}_a").bitwiseXOR(F.col(f"{w}_b"))) for w in words
     )
     return (
-        left.join(right, ["band_idx", "band_val"])
-        .where(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(eligible, _BUCKET, "asset_id", words)
         .select("id_a", "id_b", hamming.cast("int").alias("hamming"))
         .where(
             (F.col("hamming") >= min_hamming)

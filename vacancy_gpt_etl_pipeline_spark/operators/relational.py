@@ -7,6 +7,9 @@ what Catalyst already optimizes.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -57,6 +60,49 @@ def top_k_per_group(
     w = Window.partitionBy(*by).orderBy(*order)
     out = df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
     return out if rank_col else out.drop(rank)
+
+
+def cap_buckets(df: DataFrame, keys: list, cap: int | None) -> DataFrame:
+    """The rows of every ``keys`` bucket that holds at most ``cap`` rows:
+    the fan-out cap of the near-dup candidate rule. A bucket with s rows
+    makes s²/2 candidate pairs, so a degenerate one (a shingle in every
+    doc, one logo re-encoded a million times) is dropped from PAIR
+    generation instead of exploding the join; its members can still meet
+    through their other buckets. ``cap=None`` returns ``df`` itself.
+
+    A partitioned window count (one shuffle on the keys), not a groupBy
+    joined back, and no ``collect_list``: no bucket is ever held in memory
+    as one value."""
+    if cap is None:
+        return df
+    w = Window.partitionBy(*keys)
+    return (
+        df.withColumn("_bc", F.count(F.lit(1)).over(w))
+        .where(F.col("_bc") <= cap)
+        .drop("_bc")
+    )
+
+
+def bucket_pairs(
+    df: DataFrame, keys: list, id_col: str, carry: list | tuple = ()
+) -> DataFrame:
+    """Every pair of rows that share a ``keys`` bucket, once per bucket,
+    as ``(id_a, id_b, <c>_a, <c>_b for c in carry)`` with ``id_a <
+    id_b``: the self-join of the near-dup candidate rule. ``carry``
+    columns ride along from each side so the caller scores the pair
+    without joining back by id. A pair that shares several buckets comes
+    out once per bucket; the caller's dedup or groupBy collapses it."""
+    on = reduce(
+        operator.and_,
+        [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+        + [F.col(f"l.{id_col}") < F.col(f"r.{id_col}")],
+    )
+    sides = (("l", "a"), ("r", "b"))
+    return df.alias("l").join(df.alias("r"), on).select(
+        F.col(f"l.{id_col}").alias("id_a"),
+        F.col(f"r.{id_col}").alias("id_b"),
+        *[F.col(f"{s}.{c}").alias(f"{c}_{x}") for c in carry for s, x in sides],
+    )
 
 
 def ratio_of_total(

@@ -157,34 +157,6 @@ def _coef_sql(c: float) -> str:
     return f"CAST('{float(c)!r}' AS DOUBLE)"
 
 
-def _lit_dot_sql(vec: str, coefs: list[float]) -> str:
-    """<vector column, literal coefficient list> unrolled as one SQL
-    string. NEVER wrap the literals in ``F.array`` and dot against that:
-    the unrolled dot replicates the whole 64-literal array node into every
-    ``element_at`` term, and with 32 planes the LOGICAL PLAN grows to
-    millions of nodes — measured 72 s of analyzer time for ann_lsh at
-    sf0.1, data execution being milliseconds. And never build the chain as
-    Python Column ops — see :func:`_dot_sql` (py4j build cost)."""
-    terms = " + ".join(
-        f"CAST(element_at(`{vec}`, {i + 1}) AS DOUBLE) * {_coef_sql(c)}"
-        for i, c in enumerate(coefs)
-    )
-    return f"(CAST(0.0 AS DOUBLE) + {terms})"
-
-
-def _rhp_bucket(
-    vec_col: str, planes: list[list[float]], dim: int | None = None
-) -> Column:
-    """Random-hyperplane LSH bucket id: sign bits of <v, p_i> packed into a
-    long. One ``F.expr`` string → pure JVM expression (``dim`` is unused —
-    plane width fixes the unroll — and kept for call symmetry)."""
-    bits = " + ".join(
-        f"CAST({_lit_dot_sql(vec_col, p)} > 0 AS BIGINT) * {1 << i}"
-        for i, p in enumerate(planes)
-    )
-    return F.expr(f"(CAST(0 AS BIGINT) + {bits})")
-
-
 def _bucket_frame(
     df: DataFrame,
     tables: list[list[list[float]]],
@@ -207,10 +179,10 @@ def _bucket_frame(
     that a shuffle round dominates, at which point the dots belong in a
     vectorized Arrow batch (mapInPandas) instead.
 
-    Value parity with :func:`_rhp_bucket`: per-plane sums accumulate in
-    array order within one map task (explode output never splits a
-    vector), so doubles are bit-identical and the sign bits — hence
-    buckets — match the SQL oracles exactly.
+    Value parity with the oracles' ``queries._rhp_bucket_sql``: per-plane
+    sums accumulate in array order within one map task (explode output
+    never splits a vector), so doubles are bit-identical and the sign
+    bits — hence buckets — match the SQL oracles exactly.
     """
     planes = [p for t in tables for p in t]
     b = len(tables[0])

@@ -152,7 +152,6 @@ from vacancy_gpt_etl_pipeline_spark.sources.parquet_source import (
     read_table,
     widen_scan,
 )
-from vacancy_gpt_etl_pipeline_spark.session import configure_session
 from vacancy_gpt_etl_pipeline_spark.streaming.windows import (
     session_window_agg,
     sliding_window_agg,
@@ -191,7 +190,6 @@ def _t(
     at executor parallelism and widen_scan returns the scan unchanged
     when it is already at least that wide, so production-wide scans
     are untouched."""
-    configure_session(spark)
     return read_table(
         spark, sf_dir, name, widen=widen, widen_target=widen_target
     )
@@ -1578,7 +1576,7 @@ def _pseudo_tables(n_tables: int, planes_per_table: int, dim: int = 64):
 
 
 def _rhp_bucket_sql(vec_expr: str, planes: list[list[float]]) -> str:
-    """DuckDB expression for the same sign-bit bucket _rhp_bucket computes."""
+    """DuckDB expression for the sign-bit bucket similarity._bucket_frame computes."""
     terms = [
         f"CAST(list_inner_product({vec_expr}, [{', '.join(repr(x) for x in p)}]) > 0 AS BIGINT) * {1 << i}"
         for i, p in enumerate(planes)
@@ -5733,33 +5731,44 @@ def multimodal_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # group's min-id representative). Unscoped persist follows the
     # semdedup precedent: the bench/oracle harnesses clear the cache
     # per query.
-    img_w = Window.partitionBy("hash_hex")
-    imgw = (
-        img.withColumn("keep_id", F.min("asset_id").over(img_w))
-        .withColumn("_n", F.count(F.lit(1)).over(img_w))
-        .persist()
-    )
-    image_drops = imgw.where(
-        (F.col("_n") >= 2) & (F.col("asset_id") != F.col("keep_id"))
-    ).select(
-        F.lit("image").alias("modality"),
-        "keep_id",
-        F.col("asset_id").alias("drop_id"),
-    )
-    reps = imgw.where(F.col("asset_id") == F.col("keep_id")).select(
-        "asset_id", "b0", "b1", "b2", "b3"
-    )
-    near = phash_neardup_pairs(
-        reps, min_hamming=1, max_hamming=2, reps_precomputed=True
-    )
-    image_near = (
-        near.groupBy("id_b")
-        .agg(F.min("id_a").alias("keep_id"))
-        .select(
-            F.lit("image_near").alias("modality"),
-            "keep_id",
-            F.col("id_b").alias("drop_id"),
+    def drops_and_reps(frame: DataFrame, key: str, modality: str, rep_cols):
+        w = Window.partitionBy(key)
+        fw = (
+            frame.withColumn("keep_id", F.min("asset_id").over(w))
+            .withColumn("_cnt", F.count(F.lit(1)).over(w))
+            .persist()
         )
+        d = fw.where(
+            (F.col("_cnt") >= 2) & (F.col("asset_id") != F.col("keep_id"))
+        ).select(
+            F.lit(modality).alias("modality"),
+            "keep_id",
+            F.col("asset_id").alias("drop_id"),
+        )
+        reps = fw.where(F.col("asset_id") == F.col("keep_id")).select(
+            "asset_id", *rep_cols
+        )
+        return d, reps
+
+    def near_rows(pairs: DataFrame, modality: str) -> DataFrame:
+        return (
+            pairs.groupBy("id_b")
+            .agg(F.min("id_a").alias("keep_id"))
+            .select(
+                F.lit(modality).alias("modality"),
+                "keep_id",
+                F.col("id_b").alias("drop_id"),
+            )
+        )
+
+    image_drops, img_reps = drops_and_reps(
+        img, "hash_hex", "image", ["b0", "b1", "b2", "b3"]
+    )
+    image_near = near_rows(
+        phash_neardup_pairs(
+            img_reps, min_hamming=1, max_hamming=2, reps_precomputed=True
+        ),
+        "image_near",
     )
     # r14 verdict item 2: the scanned-document TIFF population joins
     # as the fifth image leg — every document's pixel-bearing TIFF
@@ -5784,42 +5793,17 @@ def multimodal_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both its exact drops and the near tier's min-id representatives
     # (reps_precomputed — the Arrow decode and the fingerprint
     # shuffle run once per modality, not once per branch).
-    def drops_and_reps(frame: DataFrame, key: str, modality: str):
-        w = Window.partitionBy(key)
-        fw = (
-            frame.withColumn("keep_id", F.min("asset_id").over(w))
-            .withColumn("_cnt", F.count(F.lit(1)).over(w))
-            .persist()
-        )
-        d = fw.where(
-            (F.col("_cnt") >= 2) & (F.col("asset_id") != F.col("keep_id"))
-        ).select(
-            F.lit(modality).alias("modality"),
-            "keep_id",
-            F.col("asset_id").alias("drop_id"),
-        )
-        reps = fw.where(F.col("asset_id") == F.col("keep_id")).select(
-            "asset_id", key
-        )
-        return d, reps
-
     def near_leg(reps: DataFrame, key: str, modality: str) -> DataFrame:
         pairs = seq_near_pairs(
             reps, key, min_diff=1, max_diff=2, n_bands=3,
             reps_precomputed=True,
         )
-        return (
-            pairs.groupBy("id_b")
-            .agg(F.min("id_a").alias("keep_id"))
-            .select(
-                F.lit(modality).alias("modality"),
-                "keep_id",
-                F.col("id_b").alias("drop_id"),
-            )
-        )
+        return near_rows(pairs, modality)
 
-    audio_drops, aud_reps = drops_and_reps(aud, "fingerprint", "audio")
-    video_drops, vid_reps = drops_and_reps(vid, "video_fp", "video")
+    audio_drops, aud_reps = drops_and_reps(
+        aud, "fingerprint", "audio", ["fingerprint"]
+    )
+    video_drops, vid_reps = drops_and_reps(vid, "video_fp", "video", ["video_fp"])
     return (
         drops(text, "text", "text")
         .unionByName(image_drops)

@@ -186,7 +186,6 @@ def load_tables(
     register_views: bool = True,
 ) -> dict[str, DataFrame]:
     """Load testdata tables; optionally register temp views for the SQL surface."""
-    configure_session(spark)
     out: dict[str, DataFrame] = {}
     for name in names:
         df = read_table(spark, sf_dir, name)

@@ -66,7 +66,7 @@ gate excludes its own batch id from both index reads.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -75,7 +75,10 @@ from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
     _shingled,
     content_hash_col,
 )
-from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
+from vacancy_gpt_etl_pipeline_spark.operators.relational import (
+    cap_buckets,
+    top_k_per_group,
+)
 from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
     BATCH_COL,
     commit,
@@ -194,12 +197,7 @@ def apply_neardup_gate_batch(
         # fan-out cap: a shingle's history posting list is fully contained
         # in its partition, so the df count under pruning is EXACT
         # (counted AFTER the dedupe, so the cap sees distinct docs)
-        fan_w = Window.partitionBy("s_hash")
-        hist = (
-            hist.withColumn("_df", F.count(F.lit(1)).over(fan_w))
-            .where(F.col("_df") <= max_shingle_fanout)
-            .drop("_df")
-        )
+        hist = cap_buckets(hist, ["s_hash"], max_shingle_fanout)
         inter = (
             bsh.select("s_hash", F.col("doc_id").alias("_bid"), "n_sh")
             .join(
