@@ -18,7 +18,6 @@ driver parses.
 
 from __future__ import annotations
 
-import gc
 import glob
 import json
 import os
@@ -142,6 +141,7 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from vacancy_gpt_etl_pipeline_spark.operators.caching import CacheScope
     from vacancy_gpt_etl_pipeline_spark.queries import queries
     from vacancy_gpt_etl_pipeline_spark.session import get_spark
 
@@ -181,26 +181,19 @@ def main() -> None:
                 continue  # a failed query stays failed; don't re-run it
             t0 = time.perf_counter()
             g0 = _jvm_gc_ms()
+            # the region frees every persist and checkpoint the query
+            # made, so each measurement is independent — accumulated
+            # storage + GC pressure inflated late-registry queries ~2×
+            # (22.7s vs 11.1s standalone for dedup_simhash at sf0.1)
             try:
-                df = fn(spark, sf_dir)
-                df.write.mode("overwrite").format("noop").save()
-                runs[name].append(round(time.perf_counter() - t0, 3))
-                gc_ms[name].append(_jvm_gc_ms() - g0)
+                with CacheScope(spark):
+                    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+                    runs[name].append(round(time.perf_counter() - t0, 3))
+                    gc_ms[name].append(_jvm_gc_ms() - g0)
             except Exception:
                 print(f"[bench] {name}: FAILED", file=sys.stderr)
                 traceback.print_exc(file=sys.stderr)
                 runs[name].append(-1.0)
-            # drop persists leaked by the previous run (the near-dup
-            # operators persist candidate frames internally) so each
-            # measurement is independent — without this, accumulated
-            # storage + GC pressure inflated late-registry queries ~2×
-            # (22.7s vs 11.1s standalone for dedup_simhash at sf0.1)
-            spark.catalog.clearCache()
-            # clearCache misses localCheckpoint RDDs (connected components
-            # truncates lineage per round); dropping the Python refs lets
-            # the ContextCleaner reclaim those blocks before the next run
-            df = None
-            gc.collect()
     timings: dict[str, float] = {}
     total = 0.0
     for name, per_run in runs.items():

@@ -47,6 +47,7 @@ def _vhash(cols: list[str], rows: list[tuple]) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from vacancy_gpt_etl_pipeline_spark.operators.caching import CacheScope
     from vacancy_gpt_etl_pipeline_spark.queries import REGISTRY
     from vacancy_gpt_etl_pipeline_spark.session import get_spark
 
@@ -69,8 +70,9 @@ def main() -> int:
             "err": None,
         }
         try:
-            sdf = spec.spark(spark, sf_dir)
-            srows = [tuple(r) for r in sdf.collect()]
+            with CacheScope(spark):
+                sdf = spec.spark(spark, sf_dir)
+                srows = [tuple(r) for r in sdf.collect()]
             entry["spark_rows"] = len(srows)
             res = con.execute(spec.oracle)
             dcols = [d[0] for d in res.description]
@@ -95,7 +97,6 @@ def main() -> int:
         results[name] = entry
         status = "ok" if ok else "FAIL"
         print(f"[oracle-self] {name}: {status}", file=sys.stderr)
-        spark.catalog.clearCache()
 
     scale = os.path.basename(os.path.normpath(sf_dir))
     out_path = os.path.join(

@@ -1,6 +1,6 @@
 """Edge-semantics tests for the round-2 advisory fixes: stateful timeout
-re-arming, deterministic salting, single-file sink mode contract, and
-cache-scope hygiene."""
+re-arming, deterministic salting and the single-file sink mode contract
+(cache-region hygiene lives in test_caching.py)."""
 
 from __future__ import annotations
 
@@ -8,12 +8,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import CacheScope
-from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
-    minhash_near_duplicates,
-    ngram_jaccard_pairs,
-    simhash_near_duplicates,
-)
 from vacancy_gpt_etl_pipeline_spark.operators.skew import salted_agg, with_salt
 from vacancy_gpt_etl_pipeline_spark.sources.sinks import write_normalized_csv
 from vacancy_gpt_etl_pipeline_spark.streaming.stateful import (
@@ -143,48 +137,6 @@ def test_single_file_rejects_append(spark, tmp_path):
         )
 
 
-# ------------------------------------------------------------- cache scope
-
-
-def _planted_docs(spark):
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [(i, base + f" doc{i}") for i in range(40)]
-    rows += [(100 + i, base + f" doc{i} extra") for i in range(5)]
-    return spark.createDataFrame(rows, ["doc_id", "text"])
-
-
-def _cached_rdd_count(spark):
-    return len(spark.sparkContext._jsc.getPersistentRDDs())
-
-
-@pytest.mark.parametrize(
-    "op",
-    [
-        lambda df, scope: minhash_near_duplicates(
-            df, "text", "doc_id", cache_scope=scope
-        ),
-        lambda df, scope: simhash_near_duplicates(
-            df, "text", "doc_id", cache_scope=scope
-        ),
-        lambda df, scope: ngram_jaccard_pairs(
-            df, "text", "doc_id", cache_scope=scope
-        ),
-    ],
-    ids=["minhash", "simhash", "ngram"],
-)
-def test_cache_scope_releases_all_persisted_frames(spark, op):
-    """Library contract: materialize inside the scope, and NO cached RDDs
-    from the operator survive scope exit — a long-lived session running
-    many dedup calls must not accumulate executor storage."""
-    spark.catalog.clearCache()
-    before = _cached_rdd_count(spark)
-    docs = _planted_docs(spark)
-    with CacheScope() as scope:
-        op(docs, scope).count()
-        assert _cached_rdd_count(spark) > before  # caches were in use
-    assert _cached_rdd_count(spark) == before
-
-
 # ----------------------------------------------------- round-8 ADVICE fixes
 
 
@@ -276,25 +228,3 @@ def test_sample_frames_invalid_stride_raises_on_driver(spark):
         sample_frames(df, every_nth_frame=0)
     with pytest.raises(ValueError, match="every_n_bytes"):
         sample_frames(df, every_n_bytes=0)
-
-
-def test_ranking_cache_scope_releases_sorted_frame(spark):
-    """grouped_ntile persists the range-sorted frame; with a CacheScope
-    the persist is released deterministically after the consuming
-    action (ADVICE r7: no cache accumulation in long-lived sessions)."""
-    from vacancy_gpt_etl_pipeline_spark.operators.ranking import (
-        grouped_ntile,
-    )
-
-    spark.catalog.clearCache()
-    before = _cached_rdd_count(spark)
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 7).alias("v")
-    )
-    with CacheScope() as scope:
-        out = grouped_ntile(
-            df, [F.asc("v"), F.asc("id")], 4, "q", cache_scope=scope
-        )
-        assert out.count() == 100
-        assert _cached_rdd_count(spark) > before
-    assert _cached_rdd_count(spark) == before

@@ -234,36 +234,6 @@ def test_label_propagation_ignores_self_loops_and_direction(spark):
     assert set(got) == {1, 2, 3}  # self-loop node still present via 2-1
 
 
-def test_pagerank_and_lpa_release_caches_via_scope(spark):
-    from vacancy_gpt_etl_pipeline_spark.operators.caching import CacheScope
-    from vacancy_gpt_etl_pipeline_spark.operators.graph import (
-        label_propagation,
-        pagerank,
-    )
-
-    def _ids():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-    spark.catalog.clearCache()
-    before = _ids()
-    df = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (2, 1), (3, 2), (1, 3)], "src: long, dst: long"
-    )
-    with CacheScope() as scope:
-        pagerank(df, iterations=2, cache_scope=scope).count()
-        label_propagation(df, 2, cache_scope=scope).count()
-        added = _ids() - before
-        assert added  # the loop invariants really were persisted
-    # release() unpersists NON-blocking — poll briefly for the async drop
-    import time
-
-    for _ in range(50):
-        if not (_ids() & added):
-            break
-        time.sleep(0.1)
-    assert not (_ids() & added)
-
-
 def test_shortest_paths_hand_graph(spark):
     from vacancy_gpt_etl_pipeline_spark.operators.graph import shortest_paths
 
@@ -300,30 +270,6 @@ def test_shortest_paths_zero_hops_and_validation(spark):
     assert got == {1: 0}
     with pytest.raises(ValueError):
         shortest_paths(edges, seeds, max_hops=-1)
-
-
-def test_shortest_paths_releases_caches_via_scope(spark):
-    from vacancy_gpt_etl_pipeline_spark.operators.caching import CacheScope
-    from vacancy_gpt_etl_pipeline_spark.operators.graph import shortest_paths
-
-    def _ids():
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-
-    spark.catalog.clearCache()
-    before = _ids()
-    edges = spark.createDataFrame([(1, 2), (2, 3)], "src: long, dst: long")
-    seeds = spark.createDataFrame([(1,)], "node: long")
-    with CacheScope() as scope:
-        shortest_paths(edges, seeds, max_hops=2, cache_scope=scope).count()
-        added = _ids() - before
-        assert added
-    import time
-
-    for _ in range(50):
-        if not (_ids() & added):
-            break
-        time.sleep(0.1)
-    assert not (_ids() & added)
 
 
 def test_shortest_paths_deep_path_plan_stays_flat(spark):

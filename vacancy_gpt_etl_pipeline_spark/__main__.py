@@ -150,6 +150,7 @@ def main(argv: list[str] | None = None, out=None) -> int:
             out.write(name + "\n")
         return 0
 
+    from vacancy_gpt_etl_pipeline_spark.operators.caching import CacheScope
     from vacancy_gpt_etl_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name=f"cli-{args.cmd}", cpus=args.cpus)
@@ -158,8 +159,9 @@ def main(argv: list[str] | None = None, out=None) -> int:
         if args.name not in REGISTRY:
             print(f"unknown query: {args.name} (try `list`)", file=sys.stderr)
             return 2
-        df = REGISTRY[args.name].spark(spark, args.sf_dir)
-        n = _emit(df, args.limit, args.format, out)
+        with CacheScope(spark):
+            df = REGISTRY[args.name].spark(spark, args.sf_dir)
+            n = _emit(df, args.limit, args.format, out)
         print(f"[cli] {args.name}: {n} rows", file=sys.stderr)
         return 0
 
@@ -187,16 +189,19 @@ def main(argv: list[str] | None = None, out=None) -> int:
         title_e, field_e = _default_enrichers()
 
     observer = PipelineObserver()
-    result = run_pipeline(
-        spark,
-        args.input,
-        title_e,
-        field_e,
-        latest_k=args.latest_k,
-        observer=observer,
-    )
-    path = timestamped_path(args.output)
-    write_normalized_csv(result, path, single_file=args.single_file)
+    # the region owns the enrichment key sets and mappings run_pipeline
+    # persists; they are freed once the sink has written
+    with CacheScope(spark):
+        result = run_pipeline(
+            spark,
+            args.input,
+            title_e,
+            field_e,
+            latest_k=args.latest_k,
+            observer=observer,
+        )
+        path = timestamped_path(args.output)
+        write_normalized_csv(result, path, single_file=args.single_file)
     for stage, count in observer.row_counts().items():
         print(f"[cli] {stage}: {count} rows", file=sys.stderr)
     out.write(path + "\n")

@@ -44,10 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import (
-    CacheScope,
-    persist_in,
-)
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 
 #: bits per packed word
 _WORD = 64
@@ -180,7 +177,6 @@ def bloom_semi_join(
     small_key: str,
     num_bits: int = 1 << 17,
     num_hashes: int = 3,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """EXACT left-semi join of ``big`` against ``small``'s keys, with a
     Bloom pre-filter ahead of the shuffle: build the filter from
@@ -188,7 +184,7 @@ def bloom_semi_join(
     and semi-join only the surviving rows — the verifying join removes
     every false positive, so the result equals ``big.join(small,
     big_key == small_key, "left_semi")`` row for row. The filter frame
-    is persisted (released via ``cache_scope``) because each of the
+    is persisted because each of the
     ``num_hashes`` lookups broadcasts it.
 
     Build and probe hash through a COMMON canonical type derived from
@@ -199,9 +195,8 @@ def bloom_semi_join(
     canon = canonical_hash_type(
         small.schema[small_key].dataType, big.schema[big_key].dataType
     )
-    bloom = persist_in(
+    bloom = caching.persist(
         build_bloom(small, small_key, num_bits, num_hashes, canon),
-        cache_scope,
     )
     pref = bloom_prefilter(big, big_key, bloom, num_bits, num_hashes, canon)
     return pref.join(

@@ -1,124 +1,107 @@
-"""Cache lifetime management for operators that persist intermediates.
+"""The one owner of cached intermediates: every persist and checkpoint
+in the package goes through :func:`persist` or :func:`checkpoint`, and
+a :class:`CacheScope` region frees what was made inside it.
 
-The near-dup operators persist frames that are read several times within
-one returned plan (shingle sets, band/block tables). Because the returned
-DataFrame is lazy, the operator itself can never know when it is safe to
-unpersist — only the caller does, after materializing the result. Without
-a handle, every invocation leaks cached blocks for the session's lifetime
-and a long-lived service accumulates executor storage pressure until LRU
-eviction starts thrashing.
+The engine returns lazy plans, so an operator that persists a frame it
+reads several times (shingle sets, band tables, loop invariants) or
+checkpoints a loop round can never know when the blocks may go — only
+whoever runs the sink does. That caller opens a region around the build
+and the sink::
 
-``CacheScope`` is that handle (it also frees the ``localCheckpoint``
-blocks taken through it, see ``checkpoint_in``)::
+    with CacheScope(spark):
+        pairs = minhash_near_duplicates(docs)
+        pairs.write.parquet(out)          # materialize INSIDE the region
+    # every persist and checkpoint made above is freed here
 
-    with CacheScope() as scope:
-        pairs = minhash_near_duplicates(docs, cache_scope=scope)
-        pairs.write.parquet(out)          # materialize INSIDE the scope
-    # all intermediate caches are unpersisted here
+On exit, normal or by exception, the region
 
-Operators that accept ``cache_scope=None`` keep the fire-and-forget
-behavior (caches linger until evicted) — acceptable for one-shot jobs,
-not for services.
+- unpersists every frame persisted through :func:`persist` while it was
+  the innermost region (this also drops the session's cache entry), and
+- frees every RDD block that appeared since entry: local checkpoints,
+  which ``DataFrame.unpersist`` cannot reach, and anything else
+  persisted meanwhile.
+
+Regions nest; an inner region frees its own blocks when it exits, the
+outer one the rest. A loop that must drop an earlier round's blocks
+before the loop ends hands that checkpoint to :meth:`CacheScope.free`.
+
+The block rule is an id diff over the context's persistent RDDs, so an
+RDD another driver thread persists while a region is open is freed with
+the region.
+
+Outside any region both helpers are plain ``persist()`` and
+``localCheckpoint(eager=True)``: the blocks stay until Spark's LRU
+evicts them, as for any one-shot job.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+#: open regions, innermost last
+_regions: list[CacheScope] = []
+
+
+def _rdd_ids(jsc) -> set[int]:
+    return set(jsc.getPersistentRDDs().keySet().toArray())
+
+
+def _free_rdds(jsc, ids: set[int]) -> None:
+    live = jsc.getPersistentRDDs()
+    for rid in ids:
+        rdd = live.get(rid)
+        if rdd is not None:
+            rdd.unpersist(False)
+
 
 class CacheScope:
-    """Collects persisted DataFrames and local checkpoints;
-    ``release()`` unpersists them all.
-
-    Context-manager use unpersists on exit. ``release`` is idempotent and
-    non-blocking (``unpersist(blocking=False)``): the blocks are dropped
-    asynchronously, which is safe because nothing references them after
-    the scope ends.
-    """
-
-    def __init__(self) -> None:
-        self._frames: list[DataFrame] = []
-        self._checkpoints: list[tuple[BlockRelease, set[int]]] = []
-
-    def persist(self, df: DataFrame) -> DataFrame:
-        """Persist ``df`` and track it for release."""
-        self._frames.append(df)
-        return df.persist()
-
-    def checkpoint(self, df: DataFrame) -> DataFrame:
-        """Eager ``localCheckpoint`` of ``df``; its blocks are tracked
-        for release."""
-        blocks = BlockRelease(df.sparkSession)
-        out, ids = blocks.checkpoint(df)
-        self._checkpoints.append((blocks, ids))
-        return out
-
-    def release(self) -> None:
-        for f in self._frames:
-            f.unpersist(blocking=False)
-        for blocks, ids in self._checkpoints:
-            blocks.free(ids)
-        self._frames.clear()
-        self._checkpoints.clear()
-
-    def __enter__(self) -> "CacheScope":
-        return self
-
-    def __exit__(self, *exc) -> bool:
-        self.release()
-        return False
-
-
-def persist_in(df: DataFrame, scope: CacheScope | None) -> DataFrame:
-    """Persist ``df``, tracked in ``scope`` when one is given."""
-    return scope.persist(df) if scope is not None else df.persist()
-
-
-def checkpoint_in(df: DataFrame, scope: CacheScope | None) -> DataFrame:
-    """Eager ``localCheckpoint`` of ``df``, its blocks freed by
-    ``scope.release()`` when a scope is given."""
-    return scope.checkpoint(df) if scope is not None else df.localCheckpoint(eager=True)
-
-
-class BlockRelease:
-    """Frees the RDD blocks created inside its ``with`` block.
-
-    ``DataFrame.unpersist()`` does not free ``localCheckpoint`` blocks
-    (they live in the RDD block store, not the relation cache), so a
-    loop that checkpoints once per round or per micro-batch pins one
-    RDD per iteration unless something releases it. On entry the scope
-    records the ids of ``getPersistentRDDs``; on exit it unpersists
-    every id that appeared since. ``checkpoint``/``free`` let a loop
-    release blocks before the scope ends.
-
-    Assumes one driver thread creates persistent RDDs while the scope
-    is open: an RDD another thread persists in that window is freed
-    with the scope's own.
-    """
+    """A region that frees the persists and checkpoints made inside it
+    (see the module docstring for the rule)."""
 
     def __init__(self, spark: SparkSession) -> None:
         self._jsc = spark.sparkContext._jsc
+        self._frames: list[DataFrame] = []
+        self._checkpoints: list[tuple[DataFrame, set[int]]] = []
 
-    def _ids(self) -> set[int]:
-        return set(self._jsc.getPersistentRDDs().keySet().toArray())
+    def free(self, df: DataFrame) -> None:
+        """Free the blocks of ``df``, a frame :func:`checkpoint` made in
+        this region, before the region ends."""
+        for i, (f, ids) in enumerate(self._checkpoints):
+            if f is df:
+                del self._checkpoints[i]
+                _free_rdds(self._jsc, ids)
+                return
+        raise ValueError("frame was not checkpointed in this region")
 
-    def checkpoint(self, df: DataFrame) -> tuple[DataFrame, set[int]]:
-        """``df.localCheckpoint()`` and the ids of the blocks it made."""
-        before = self._ids()
-        out = df.localCheckpoint()
-        return out, self._ids() - before
-
-    def free(self, ids: set[int]) -> None:
-        live = self._jsc.getPersistentRDDs()
-        for rid in ids:
-            rdd = live.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-
-    def __enter__(self) -> "BlockRelease":
-        self._before = self._ids()
+    def __enter__(self) -> CacheScope:
+        self._before = _rdd_ids(self._jsc)
+        _regions.append(self)
         return self
 
     def __exit__(self, *exc) -> bool:
-        self.free(self._ids() - self._before)
+        _regions.remove(self)
+        for f in self._frames:
+            f.unpersist(blocking=False)
+        _free_rdds(self._jsc, _rdd_ids(self._jsc) - self._before)
+        self._frames.clear()
+        self._checkpoints.clear()
         return False
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """``df.persist()``, unpersisted when the innermost region exits."""
+    if _regions:
+        _regions[-1]._frames.append(df)
+    return df.persist()
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``df.localCheckpoint()``; inside a region its blocks are
+    freed on exit, or earlier through :meth:`CacheScope.free`."""
+    if not _regions:
+        return df.localCheckpoint(eager=True)
+    region = _regions[-1]
+    before = _rdd_ids(region._jsc)
+    out = df.localCheckpoint(eager=True)
+    region._checkpoints.append((out, _rdd_ids(region._jsc) - before))
+    return out

@@ -25,6 +25,7 @@ from vacancy_gpt_etl_pipeline_spark.functions.text import (
     token_count,
     tokens,
 )
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 
 
@@ -130,7 +131,6 @@ def remove_boilerplate_ngrams(
     id_col: str = "doc_id",
     n: int = 3,
     min_doc_frequency: int = 30,
-    cache_scope=None,
 ) -> DataFrame:
     """Corpus-level boilerplate removal (the CCNet/RefinedWeb-style
     dedup-within-documents step): token ``n``-grams that occur in at
@@ -161,14 +161,11 @@ def remove_boilerplate_ngrams(
     """
     from pyspark.sql.functions import broadcast
 
-    from vacancy_gpt_etl_pipeline_spark.operators.caching import persist_in
-
-    toks_arr = persist_in(
+    toks_arr = caching.persist(
         df.select(
             F.col(id_col).alias("_id"),
             F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_toks"),
         ),
-        cache_scope,
     )
     # (doc, pos, token) — pos is 1-based
     positions = toks_arr.select(
@@ -185,11 +182,10 @@ def remove_boilerplate_ngrams(
         F.size("_toks") >= n,
         F.sequence(F.lit(1), F.size("_toks") - (n - 1)),
     ).otherwise(F.array().cast("array<int>"))
-    occurrences = persist_in(
+    occurrences = caching.persist(
         toks_arr.where(F.size("_toks") >= n)
         .select("_id", F.explode(starts).alias("_i"), "_toks")
         .select("_id", "_i", F.md5(gram).alias("_gh")),
-        cache_scope,
     )
     boiler = (
         occurrences.groupBy("_gh")

@@ -24,10 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import (
-    CacheScope,
-    persist_in,
-)
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.operators.relational import (
     bucket_pairs,
     cap_buckets,
@@ -66,7 +63,6 @@ def _shingled(
     text_col: str,
     id_col: str,
     n: int,
-    cache_scope: CacheScope | None = None,
     persist: bool = True,
 ) -> DataFrame:
     """``(_id, _sh)`` frame of distinct word n-gram shingles (JVM-side only:
@@ -114,8 +110,8 @@ def _shingled(
     # persisted: every other caller reuses this frame across joins/explodes,
     # and an UNPERSISTED explode re-evaluates the inline array expression
     # per emitted element (measured ~16× at sf0.1). The cache is one string
-    # array per doc; evicted by the executor LRU after the job.
-    return persist_in(out, cache_scope)
+    # array per doc, freed by the caller's CacheScope region.
+    return caching.persist(out)
 
 
 # portable-hash family: (a·base + b) mod P over a 28-bit md5-derived base.
@@ -146,7 +142,6 @@ def minhash_near_duplicates(
     verify: bool = True,
     max_bucket: int | None = 64,
     portable_hash: bool = False,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs.
 
@@ -179,7 +174,7 @@ def minhash_near_duplicates(
     rows_per_band = num_hashes // bands
     # already persisted by _shingled: feeds the signature lineage AND the
     # two verify joins (Spark's MinHashLSH persists for the same reason)
-    shingled = _shingled(df, text_col, id_col, shingle_n, cache_scope)
+    shingled = _shingled(df, text_col, id_col, shingle_n)
 
     # Signature via explode → num_hashes MIN aggregates, NOT higher-order
     # array_min(transform(...)) columns: HOFs are codegen-unsupported, so
@@ -220,7 +215,7 @@ def minhash_near_duplicates(
     buckets = ["_band", "_bh"]
     # persisted: both sides of the bucket self-join read this frame — fixed
     # width (id, band, hash), so the cache is O(rows × bands) small
-    banded = persist_in(cap_buckets(banded, buckets, max_bucket), cache_scope)
+    banded = caching.persist(cap_buckets(banded, buckets, max_bucket))
     cand = bucket_pairs(banded, buckets, "_id").dropDuplicates(["id_a", "id_b"])
     if not verify:
         return cand
@@ -247,7 +242,6 @@ def simhash_near_duplicates(
     max_bucket: int | None = 128,
     feature_n: int = 3,
     portable_hash: bool = False,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: 64-bit signature = sign(Σ feature weight
     vectors), candidate join on ``n_tables`` sub-fingerprint blocks, verified
@@ -290,7 +284,7 @@ def simhash_near_duplicates(
         )
     if portable_hash and (bits != 64 or n_tables != 8):
         raise ValueError("portable_hash requires bits=64, n_tables=8")
-    shingled = _shingled(df, text_col, id_col, feature_n, cache_scope)
+    shingled = _shingled(df, text_col, id_col, feature_n)
     if portable_hash:
         # Hex-digit layout: digit p (1-based, leftmost first) carries vote
         # bits k=0..3 as (digit >> k) & 1. The 16 hex digits decode as TWO
@@ -412,7 +406,7 @@ def simhash_near_duplicates(
     )
     buckets = ["_tbl", "_blk"]
     # persisted for the self-join (see minhash_near_duplicates)
-    blocks = persist_in(cap_buckets(blocks, buckets, max_bucket), cache_scope)
+    blocks = caching.persist(cap_buckets(blocks, buckets, max_bucket))
     cand = (
         bucket_pairs(blocks, buckets, "_id", carry)
         .select("id_a", "id_b", hamming_expr.alias("hamming"))
@@ -434,7 +428,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_freq: int | None = 100,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for all pairs sharing ≥1 shingle.
 
@@ -447,10 +440,10 @@ def ngram_jaccard_pairs(
     :func:`minhash_near_duplicates` and reserve this for candidate
     verification.
     """
-    shingled = _shingled(df, text_col, id_col, n, cache_scope)
+    shingled = _shingled(df, text_col, id_col, n)
     ex = shingled.select("_id", F.explode("_sh").alias("_s"))
     # persisted: read three times (sizes + both self-join sides)
-    ex = persist_in(cap_buckets(ex, ["_s"], max_shingle_freq), cache_scope)
+    ex = caching.persist(cap_buckets(ex, ["_s"], max_shingle_freq))
     # sizes from the POST-filter shingle sets, so the Jaccard denominator is
     # consistent with the intersection counts (pre-filter sizes would bias
     # the score downward for docs containing frequent shingles)
@@ -560,7 +553,6 @@ def incremental_neardup(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_freq: int | None = 100,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """Batch-vs-corpus NEAR-duplicate detection — the re-ingestion gate
     :func:`incremental_dedup` (exact hashes) cannot provide: a crawl
@@ -583,8 +575,8 @@ def incremental_neardup(
     small by definition, so the candidate fan-out is bounded by batch
     size × per-shingle corpus frequency (≤ ``max_shingle_freq``).
     """
-    hsh = _shingled(history, text_col, id_col, n, cache_scope)
-    bsh = _shingled(new_docs, text_col, id_col, n, cache_scope)
+    hsh = _shingled(history, text_col, id_col, n)
+    bsh = _shingled(new_docs, text_col, id_col, n)
     hex0 = hsh.select(F.col("_id").alias("_hid"), F.explode("_sh").alias("_s"))
     bex0 = bsh.select(F.col("_id").alias("_bid"), F.explode("_sh").alias("_s"))
     if max_shingle_freq is not None:
@@ -593,9 +585,7 @@ def incremental_neardup(
         # dropped from the corpus index (semi) and from the batch (anti);
         # NOVEL batch shingles survive — they can't create candidates but
         # must still count in the Jaccard denominator.
-        freq = persist_in(
-            hex0.groupBy("_s").agg(F.count("*").alias("_f")), cache_scope
-        )
+        freq = caching.persist(hex0.groupBy("_s").agg(F.count("*").alias("_f")))
         hex0 = hex0.join(
             freq.where(F.col("_f") <= max_shingle_freq).select("_s"),
             "_s",
@@ -606,8 +596,8 @@ def incremental_neardup(
             "_s",
             "left_anti",
         )
-    hex_ = persist_in(hex0, cache_scope)
-    bex = persist_in(bex0, cache_scope)
+    hex_ = caching.persist(hex0)
+    bex = caching.persist(bex0)
     hsz = hex_.groupBy("_hid").agg(F.count("*").alias("_nh"))
     bsz = bex.groupBy("_bid").agg(F.count("*").alias("_nb"))
     inter = (
@@ -727,7 +717,6 @@ def winnowing_pairs(
     min_shared: int = 5,
     max_fp_freq: int | None = 20,
     max_chars: int | None = 20000,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """Near-dup candidate pairs by shared winnowed fingerprints:
     (id_a, id_b, n_shared) for pairs sharing >= ``min_shared`` fingerprints.
@@ -744,7 +733,7 @@ def winnowing_pairs(
     """
     fps = winnow_fingerprints(df, text_col, id_col, k=k, w=w, max_chars=max_chars)
     # persisted: both self-join sides re-read the fingerprint pipeline
-    fps = persist_in(cap_buckets(fps, ["fp"], max_fp_freq), cache_scope)
+    fps = caching.persist(cap_buckets(fps, ["fp"], max_fp_freq))
     return (
         bucket_pairs(fps, ["fp"], id_col)
         .groupBy("id_a", "id_b")

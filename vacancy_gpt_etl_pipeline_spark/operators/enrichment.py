@@ -58,6 +58,7 @@ from pyspark.sql import types as T
 
 from vacancy_gpt_etl_pipeline_spark.functions.json_parse import safe_json_parse_text
 from vacancy_gpt_etl_pipeline_spark.functions.scalars import non_empty
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.session import parse_size_bytes
 
 # 21-label title taxonomy (dag/vacancy_pipline_gpt_rerty.py:187-209).
@@ -319,15 +320,14 @@ def enrich_column(
             raise ValueError(f"output column {c!r} already exists on input")
 
     keyed = F.trim(F.col(key_col))
-    keys_df = (
+    # persist: the distinct set feeds BOTH the count below and the
+    # mapInPandas scan — without it the full-table distinct shuffle runs
+    # twice (SURVEY §4.3). Freed by the caller's CacheScope region.
+    keys_df = caching.persist(
         (keys_from if keys_from is not None else df)
         .select(keyed.alias("original"))
         .where(non_empty(F.col("original")))
         .distinct()
-        # persist: the distinct set feeds BOTH the count below and the
-        # mapInPandas scan — without it the full-table distinct shuffle runs
-        # twice (SURVEY §4.3). Freed by Spark's LRU once the job ends.
-        .persist()
     )
     n_keys = keys_df.count()  # action on the (small) distinct set only
     schema = T.StructType(
@@ -355,7 +355,9 @@ def enrich_column(
         # otherwise re-run the mapInPandas stage — i.e. re-call the LLM —
         # once per action. Caching makes enrichment cost once-per-key, not
         # once-per-key-per-action (tested in test_enrichment_failures).
-        mapping = keys_df.repartition(n_parts).mapInPandas(run, schema=schema).persist()
+        mapping = caching.persist(
+            keys_df.repartition(n_parts).mapInPandas(run, schema=schema)
+        )
 
     fits = _mapping_fits_broadcast(df.sparkSession, n_keys, 1 + len(out_cols))
     joined = df.join(

@@ -35,11 +35,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import (
-    CacheScope,
-    checkpoint_in,
-    persist_in,
-)
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 
 
 def _undirected(edges: DataFrame) -> DataFrame:
@@ -140,12 +136,12 @@ def connected_components(
     suffice, so 25 covers any graph this engine will ever see; hitting it
     raises ``RuntimeError`` rather than return a partial labelling.
     """
-    edges = _undirected(
-        pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    ).localCheckpoint(eager=True)
+    edges = caching.checkpoint(
+        _undirected(pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    )
     prev = _edge_fingerprint(edges)
     for rounds in range(1, max_iter + 1):
-        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        edges = caching.checkpoint(_small_star(_large_star(edges)))
         cur = _edge_fingerprint(edges)
         if cur == prev:
             break
@@ -190,7 +186,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 5,
     scale: int = PAGERANK_SCALE,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """Integer-quantized PageRank: ranks live in fixed-point units of
     1/scale with ALL arithmetic in exact BIGINT (floor division for the
@@ -227,12 +222,9 @@ def pagerank(
         .distinct()
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-    # persisted loop invariants; released via cache_scope when given
-    # (operators/caching contract — fire-and-forget otherwise)
-    ej = persist_in(e.join(deg, "src").select("src", "dst", "_deg"), cache_scope)
-    nodes = persist_in(
-        ej.select(F.col("src").alias("node")).distinct(), cache_scope
-    )
+    # persisted loop invariants
+    ej = caching.persist(e.join(deg, "src").select("src", "dst", "_deg"))
+    nodes = caching.persist(ej.select(F.col("src").alias("node")).distinct())
     n = nodes.count()  # one scalar job — the n in the closed-form constants
     init = scale // n
     base = (15 * scale) // (100 * n)
@@ -348,7 +340,7 @@ def k_core_detailed(
     rounds ran without reaching the fixpoint and ``frame`` is the
     partially-peeled (superset) edge census, NOT the k-core — callers
     that need a guarantee should use :func:`k_core`, which raises."""
-    current = _undirected(edges).localCheckpoint(eager=True)
+    current = caching.checkpoint(_undirected(edges))
     n_edges = current.count()
     converged = False
     rounds = 0
@@ -358,7 +350,7 @@ def k_core_detailed(
         pruned = current.join(keep.toDF("src"), "src", "left_semi").join(
             keep.toDF("dst"), "dst", "left_semi"
         )
-        pruned = pruned.localCheckpoint(eager=True)
+        pruned = caching.checkpoint(pruned)
         n_new = pruned.count()
         current = pruned
         if n_new == n_edges:
@@ -386,7 +378,6 @@ def k_core(edges: DataFrame, k: int, max_iter: int = 12) -> DataFrame:
 def label_propagation(
     edges: DataFrame,
     iterations: int = 3,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (community
     detection): label₀(v) = v; labelₖ₊₁(v) = the most frequent label
@@ -410,7 +401,7 @@ def label_propagation(
     label)``. The label frame is node-sized. Lineage is linear in the
     fixed round count, so no checkpointing is needed at the default
     depth."""
-    sym = persist_in(_symmetric(_undirected(edges)), cache_scope)
+    sym = caching.persist(_symmetric(_undirected(edges)))
     labels = (
         sym.select(F.col("src").alias("node"))
         .distinct()
@@ -441,7 +432,6 @@ def shortest_paths(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 6,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """Multi-source BFS hop distances on an UNDIRECTED graph: returns
     ``(node, dist)`` with the minimum number of hops from any source
@@ -458,9 +448,8 @@ def shortest_paths(
     latest frontiers. No settled set is carried, so each level's plan
     is the same size whatever the depth, and every node is expanded
     exactly once: total work is O(edges within the explored ball).
-    Each frontier is checkpointed eagerly when it is made (its blocks
-    freed by ``cache_scope`` when one is given); an empty frontier ends
-    the loop early. The result is the union of the frontiers, a flat
+    Each frontier is checkpointed eagerly when it is made; an empty
+    frontier ends the loop early. The result is the union of the frontiers, a flat
     union of checkpointed scans.
 
     The symmetrized edge list is the undirected edge set (one distinct
@@ -470,22 +459,20 @@ def shortest_paths(
     nearest seed" is well-defined for the seed itself."""
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    sym = persist_in(_symmetric(_undirected(edges)), cache_scope)
-    frontier = checkpoint_in(
+    sym = caching.persist(_symmetric(_undirected(edges)))
+    frontier = caching.checkpoint(
         sources.select(F.col(sources.columns[0]).cast("long").alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("bigint")),
-        cache_scope,
     )
     levels, seen = [frontier], frontier.select("node")
     for hop in range(1, max_hops + 1):
-        nxt = checkpoint_in(
+        nxt = caching.checkpoint(
             frontier.join(sym, F.col("node") == F.col("src"))
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(seen, "node", "left_anti")
             .withColumn("dist", F.lit(hop).cast("bigint")),
-            cache_scope,
         )
         if nxt.isEmpty():
             break

@@ -42,10 +42,8 @@ the final plan both read it, and ``_mid`` must be consistent between
 them — guaranteed by the cache; on eviction the recompute is still
 deterministic because the range boundaries, the in-partition sort and
 the monotonic-id layout are all deterministic given the same lineage).
-Callers that manage lifetimes pass ``cache_scope``
-(operators/caching.CacheScope) so the persist is released after the
-consuming action; ``None`` keeps the fire-and-forget behavior
-(bench/tests clear the cache per query).
+The persist goes through ``operators/caching``: the caller's
+``CacheScope`` region releases it after the consuming action.
 """
 
 from __future__ import annotations
@@ -57,10 +55,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import (
-    CacheScope,
-    persist_in,
-)
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 
 __all__ = [
     "collect_rank_stats",
@@ -76,7 +71,6 @@ def ranked_local(
     order_by: Sequence[Column],
     group_cols: Sequence[str] = (),
     num_partitions: int | None = None,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """Range-partition ``df`` on ``group_cols + order_by``, sort within
     partitions, and add ``_pid`` (range partition id) and ``_mid``
@@ -93,12 +87,11 @@ def ranked_local(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
     full_order = [F.col(c) for c in group_cols] + list(order_by)
-    return persist_in(
+    return caching.persist(
         df.repartitionByRange(n_parts, *full_order)
         .sortWithinPartitions(*full_order)
         .withColumn("_pid", F.spark_partition_id())
         .withColumn("_mid", F.monotonically_increasing_id()),
-        cache_scope,
     )
 
 
@@ -251,7 +244,6 @@ def with_global_row_number(
     out_col: str = "row_num",
     group_cols: Sequence[str] = (),
     num_partitions: int | None = None,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """``df`` plus ``out_col`` = ROW_NUMBER() OVER (PARTITION BY
     group_cols ORDER BY order_by) — the general distributed rank
@@ -262,7 +254,7 @@ def with_global_row_number(
     """
     local = ranked_local(
         df, order_by, group_cols=group_cols,
-        num_partitions=num_partitions, cache_scope=cache_scope,
+        num_partitions=num_partitions,
     )
     offs = offsets_frame(local, group_cols)
     keyed = local.join(F.broadcast(offs), ["_pid", *group_cols])
@@ -278,7 +270,6 @@ def grouped_ntile(
     out_col: str,
     group_cols: Sequence[str] = (),
     num_partitions: int | None = None,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """``df`` plus ``out_col`` = NTILE(k) OVER (PARTITION BY group_cols
     ORDER BY order_by) — computed distributedly (see module docstring).
@@ -287,7 +278,7 @@ def grouped_ntile(
     (NULL group keys drop, as under the r7 shape)."""
     local = ranked_local(
         df, order_by, group_cols=group_cols,
-        num_partitions=num_partitions, cache_scope=cache_scope,
+        num_partitions=num_partitions,
     )
     offs = offsets_frame(local, group_cols)
     keyed = local.join(F.broadcast(offs), ["_pid", *group_cols])

@@ -40,7 +40,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import CacheScope, persist_in
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
 
 
@@ -584,7 +584,6 @@ def semdedup(
     vec_col: str = "embedding",
     dim: int | None = None,
     max_cell: int = 10_000,
-    cache_scope: CacheScope | None = None,
     assigned: DataFrame | None = None,
     two_level_threshold: int = 64,
 ) -> DataFrame:
@@ -621,8 +620,7 @@ def semdedup(
     # ``assigned`` injection: pass a precomputed (id, vector, cell)
     # frame — e.g. :func:`ivf_assign_two_level` when the cell count
     # scales with the corpus — and (n_centroids, stride) are ignored.
-    operator_built = assigned is None
-    if operator_built:
+    if assigned is None:
         centroids = sampled_centroids(
             corpus, n_centroids, stride, id_col, vec_col
         )
@@ -642,7 +640,7 @@ def semdedup(
             )
         else:
             assigned = ivf_assign(corpus, centroids, id_col, vec_col, dim)
-    assigned = persist_in(assigned, cache_scope)
+    assigned = caching.persist(assigned)
     # NOT persisted, on measurement: sizes is read twice (the guard
     # aggregate and the `joinable` broadcast build), but both reads
     # re-aggregate from the CACHED assignment — milliseconds at any
@@ -672,14 +670,6 @@ def semdedup(
         F.sum((F.col("_csz") > max_cell).cast("long")).alias("n_over"),
     ).first()
     if _stats.n_cells and _stats.n_over == _stats.n_cells:
-        if cache_scope is None and operator_built:
-            # the guard just materialized the corpus-sized assignment
-            # cache; on the error path nobody downstream will read or
-            # free it — a caller that catches and retries with fixed
-            # sizing would otherwise leak one cached frame per attempt.
-            # A caller-INJECTED frame is the caller's cache to manage
-            # (it may feed several semdedup calls) — never drop it.
-            assigned.unpersist()
         raise ValueError(
             f"semdedup degenerate sizing: all {_stats.n_cells} cells "
             f"exceed max_cell={max_cell}, so no pair would be "
@@ -849,7 +839,6 @@ def knn_ivf_adaptive(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     dim: int | None = None,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """Adaptive IVF search (the continuously-adaptive similarity-search
     pattern, SIGMOD 2020 — PAPERS.md): probe cheaply first, then spend
@@ -866,21 +855,19 @@ def knn_ivf_adaptive(
     frame, so the corpus is never re-bucketed. With min_kth_cosine ≥ 1
     every query escalates and the result degenerates to plain
     nprobe_hi search (asserted in tests)."""
-    assigned = persist_in(
+    assigned = caching.persist(
         ivf_assign(corpus, centroids, id_col=id_col, vec_col=vec_col, dim=dim),
-        cache_scope,
     )
     # persisted: three consumers (the quality aggregate, the strong-rows
     # semi-join, and — through strong_ids — the weak-query anti-join)
     # would otherwise each inline and re-execute the whole lo probe
     # plan; measured 2× end-to-end at sf0.1 (16 s vs 23-32 s warm)
-    lo = persist_in(
+    lo = caching.persist(
         knn_ivf(
             corpus, queries, centroids, k=k, nprobe=nprobe_lo,
             id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
             dim=dim, assigned=assigned,
         ),
-        cache_scope,
     )
     # strong = queries whose lo pass is demonstrably good; EVERYTHING
     # else escalates — including queries with ZERO lo rows (an empty or
@@ -1132,7 +1119,6 @@ def knn_ivf_pq(
     query_id_col: str = "query_id",
     dim: int = 64,
     rescore_mult: int | None = None,
-    cache_scope: CacheScope | None = None,
 ) -> DataFrame:
     """IVF-PQ (Jegou et al., PAMI'11 — the compressed-residency ANN the
     r8 verdict asked for): IVF cells prune the corpus, product-
@@ -1187,10 +1173,9 @@ def knn_ivf_pq(
             ).alias(vcol),
         )
 
-    ncorp = persist_in(unit(corpus.select(id_col, vec_col), vec_col), cache_scope)
-    cb = persist_in(
+    ncorp = caching.persist(unit(corpus.select(id_col, vec_col), vec_col))
+    cb = caching.persist(
         pq_codebook(ncorp, n_codes, code_stride, id_col=id_col, vec_col=vec_col),
-        cache_scope,
     )
     assigned = ivf_assign(ncorp, centroids, id_col=id_col, vec_col=vec_col, dim=dim)
     enc = pq_encode(
@@ -1203,7 +1188,7 @@ def knn_ivf_pq(
         "_fq",
     )
     q_scored = _cell_scores(nq, "_fq", centroids, dim)
-    probes = persist_in(_probe_cells(q_scored, "_fq", nprobe), cache_scope)
+    probes = caching.persist(_probe_cells(q_scored, "_fq", nprobe))
     # per-query ADC lookup table: ONE flat int64 array per probe row
     # (index code_id·m + s, code-major), carried inside the broadcast
     # probe frame, so ADC scoring is a map-side array-lookup sum over

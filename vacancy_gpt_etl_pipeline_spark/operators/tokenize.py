@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 
 Merge = Tuple[str, str]
 
@@ -619,17 +619,17 @@ def bpe_learn_merges(
     wf = words.groupBy("word").agg(
         F.count(F.lit(1)).cast("bigint").alias("freq")
     )
-    seg = wf.select(
-        F.expr(
-            "array_join(transform(sequence(1, length(word)), "
-            f"i -> concat('{SEP}', substring(word, i, 1), '{SEP}')), '')"
-        ).alias("seq"),
-        "freq",
-    ).cache()
-
     merges: list[tuple[str, str, int]] = []
-    cur = seg
-    try:
+    with caching.CacheScope(docs.sparkSession):
+        cur = caching.persist(
+            wf.select(
+                F.expr(
+                    "array_join(transform(sequence(1, length(word)), "
+                    f"i -> concat('{SEP}', substring(word, i, 1), '{SEP}')), '')"
+                ).alias("seq"),
+                "freq",
+            )
+        )
         for _ in range(n_merges):
             best = (
                 _pair_frame(cur)
@@ -651,8 +651,6 @@ def bpe_learn_merges(
                     F.lit(f"{SEP}{x}{y}{SEP}"),
                 ),
             )
-    finally:
-        seg.unpersist()
     return merges
 
 
@@ -713,9 +711,10 @@ def bpe_learn_merges_incremental(
     the RDD block store), so a naive checkpoint-per-round loop
     accumulates one cached RDD per round and per-round cost creeps
     linearly with block-manager pressure (measured +0.1 s/round per
-    16 rounds). The loop therefore frees the PREVIOUS round's
-    checkpoint blocks through :class:`caching.BlockRelease`, which also
-    frees the live ones when the loop ends or fails."""
+    16 rounds). The loop therefore runs in its own ``CacheScope``
+    region: each round hands the PREVIOUS round's checkpoint to
+    ``region.free``, and the region frees the live ones when the loop
+    ends or fails."""
     SEP = _SQL_SEP
     words = docs.select(
         F.explode(
@@ -726,8 +725,8 @@ def bpe_learn_merges_incremental(
         F.count(F.lit(1)).cast("bigint").alias("freq")
     )
     merges: list[tuple[str, str, int]] = []
-    with BlockRelease(docs.sparkSession) as blocks:
-        seg, seg_ids = blocks.checkpoint(
+    with caching.CacheScope(docs.sparkSession) as region:
+        seg = seg_ckpt = caching.checkpoint(
             wf.select(
                 F.expr(
                     "array_join(transform(sequence(1, length(word)), i -> "
@@ -736,7 +735,7 @@ def bpe_learn_merges_incremental(
                 "freq",
             )
         )
-        pairs, pair_ids = blocks.checkpoint(
+        pairs = caching.checkpoint(
             _pair_frame(seg)
             .groupBy("x", "y")
             .agg(F.sum("freq").cast("bigint").alias("pair_count"))
@@ -760,22 +759,21 @@ def bpe_learn_merges_incremental(
             delta = _pair_frame(rewritten).unionByName(
                 _pair_frame(affected, sign=-1)
             )
-            pairs, new_ids = blocks.checkpoint(
+            old_pairs, pairs = pairs, caching.checkpoint(
                 pairs.select("x", "y", F.col("pair_count").alias("freq"))
                 .unionByName(delta)
                 .groupBy("x", "y")
                 .agg(F.sum("freq").cast("bigint").alias("pair_count"))
                 .where(F.col("pair_count") > 0)
             )
-            blocks.free(pair_ids)
-            pair_ids = new_ids
+            region.free(old_pairs)
             seg = seg.withColumn(
                 "seq", F.replace("seq", F.lit(pat), F.lit(rep))
             )
             if (r + 1) % checkpoint_every == 0:
-                seg, new_seg_ids = blocks.checkpoint(seg)
-                blocks.free(seg_ids)
-                seg_ids = new_seg_ids
+                seg = caching.checkpoint(seg)
+                region.free(seg_ckpt)
+                seg_ckpt = seg
     return merges
 
 

@@ -50,6 +50,7 @@ from vacancy_gpt_etl_pipeline_spark.functions.text import (
     stopword_ratio,
     token_count,
 )
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
     dedup_exact_text,
     minhash_near_duplicates,
@@ -3633,7 +3634,7 @@ def curation_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # three consumers below — materialize once (same boundary rule as
     # every exploded frame; recomputing filter+window-dedup 3× loses)
-    deduped = deduped.persist()
+    deduped = caching.persist(deduped)
     pairs = ngram_jaccard_pairs(
         deduped, "text", "doc_id", n=3, threshold=0.5, max_shingle_freq=100
     )
@@ -4642,11 +4643,9 @@ def wds_pack_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole sized_shard_assignment lineage (scan + per-bucket window)
     # a second time; sharing the persisted pack drops it (r16
     # interleaved A/B min-of-4: 3.56 -> 1.41 s, rows identical).
-    # Unscoped persist follows the semdedup precedent: the bench /
-    # oracle harnesses clear the cache per query.
-    packed = pack_wds_shards_sized(
-        samples, shard_bytes=budget, n_buckets=n_buckets
-    ).persist()
+    packed = caching.persist(
+        pack_wds_shards_sized(samples, shard_bytes=budget, n_buckets=n_buckets)
+    )
     members = tar_members(packed.select("shard_id", "content"))
     t, c = F.col("ext") == "txt", F.col("ext") == "cls"
     regroup = (
@@ -5686,7 +5685,7 @@ def multimodal_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         target=min(8, spark.sparkContext.defaultParallelism),
     )
     if _w is not docs:
-        docs = _w.persist()
+        docs = caching.persist(_w)
 
     def drops(frame: DataFrame, key: str, modality: str) -> DataFrame:
         w = Window.partitionBy(key)
@@ -5728,15 +5727,12 @@ def multimodal_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decode and the fingerprint shuffle run once instead of once per
     # branch, and the rep aggregation inside phash_neardup_pairs is
     # skipped via reps_precomputed (a window keep-first row IS the
-    # group's min-id representative). Unscoped persist follows the
-    # semdedup precedent: the bench/oracle harnesses clear the cache
-    # per query.
+    # group's min-id representative).
     def drops_and_reps(frame: DataFrame, key: str, modality: str, rep_cols):
         w = Window.partitionBy(key)
-        fw = (
+        fw = caching.persist(
             frame.withColumn("keep_id", F.min("asset_id").over(w))
             .withColumn("_cnt", F.count(F.lit(1)).over(w))
-            .persist()
         )
         d = fw.where(
             (F.col("_cnt") >= 2) & (F.col("asset_id") != F.col("keep_id"))
@@ -7740,7 +7736,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thread pool was A/B'd in r8 and LOST (5.0-8.9 s vs 4.0 s warm at
     # sf0.1) — three concurrent 32-partition range sorts oversubscribe
     # the same cores; see PLANS.md round 8.
-    per_cust = per_cust.persist()
+    per_cust = caching.persist(per_cust)
     # size-derive each branch's range-partition count from the actual
     # per-customer row count (guide §2: partitioning adaptive to input
     # size, not a constant tuned for either local mode or the cluster).
@@ -11720,10 +11716,9 @@ def source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: three downstream aggregates (src_tot, corpus_w via n,
     # and the term join) would otherwise each replay the corpus-sized
     # explode — the one frame here is vocabulary×sources sized
-    sw = (
+    sw = caching.persist(
         words.groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c_sw"))
-        .persist()
     )
     src_tot = sw.groupBy("source").agg(F.sum("c_sw").alias("n_s"))
     corpus_w = sw.groupBy("word").agg(F.sum("c_sw").alias("c_w"))
@@ -11879,13 +11874,12 @@ def source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _shingled(docs, "text", "doc_id", 3)
     # persisted: read three times (both self-join sides + sizes); an
     # unpersisted plan replays the shingle explode per reader
-    sg = (
+    sg = caching.persist(
         sh.join(
             docs.select(F.col("doc_id").alias("_id"), "source"), "_id"
         )
         .select("source", F.explode("_sh").alias("_g"))
         .distinct()
-        .persist()
     )
     sizes = sg.groupBy("source").agg(F.count(F.lit(1)).alias("n_grams"))
     a = sg.select(F.col("source").alias("source_a"), "_g")
@@ -12026,18 +12020,16 @@ def training_mix_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: both the classifier word explode and the survivor
     # join read this frame — unpersisted, the fingerprint window runs
     # twice over the corpus
-    deduped = (
+    deduped = caching.persist(
         top_k_per_group(docs.withColumn("_fp", fp), ["_fp"], ["doc_id"])
         .drop("_fp")
-        .persist()
     )
-    kept = (
+    kept = caching.persist(
         deduped.join(
             _hashed_logits(spark, deduped).where(F.col("logit_q") > 0),
             "doc_id",
         )
         .select("doc_id", "source", "text")
-        .persist()
     )
     counts = bpe_token_counts(kept).where(F.col("n_tokens") > 0)
     wp = (

@@ -25,10 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import (
-    CacheScope,
-    persist_in,
-)
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 
 CORRUPT_COL = "_corrupt_record"
 
@@ -47,7 +44,6 @@ def read_jsonl(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    cache_scope: CacheScope | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Read JSONL at ``path`` with the DECLARED schema.
 
@@ -57,16 +53,13 @@ def read_jsonl(
     parse, for counting/inspection/replay.
 
     The parsed frame is persisted (required for corrupt-record
-    filtering, see below). Pass ``cache_scope`` so the cache is released
-    after both outputs are drained::
+    filtering, see below); drain both outputs inside a
+    ``caching.CacheScope`` region to release it::
 
-        with CacheScope() as scope:
-            good, bad = read_jsonl(spark, path, schema, cache_scope=scope)
+        with CacheScope(spark):
+            good, bad = read_jsonl(spark, path, schema)
             good.write.parquet(out); bad.count()
         # parsed-frame cache unpersisted here
-
-    Without a scope the cache lingers until executor LRU eviction —
-    acceptable for one-shot jobs, a leak for long-lived services.
     """
     full = (
         spark.read.schema(jsonl_schema_with_quarantine(schema))
@@ -78,7 +71,7 @@ def read_jsonl(
     # filtering on the corrupt column — the column is populated during
     # parsing and a direct filter on the unreferenced raw plan is
     # rejected/undefined (SPARK-21610)
-    full = persist_in(full, cache_scope)
+    full = caching.persist(full)
     good = full.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     quarantine = full.where(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
     return good, quarantine

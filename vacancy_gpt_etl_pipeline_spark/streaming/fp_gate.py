@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
     BATCH_COL,
     commit,
@@ -74,10 +74,10 @@ def apply_fp_gate_batch(
     to the index."""
     spark = batch_df.sparkSession
     pb_expr = F.pmod(F.xxhash64(F.col(key_col)), F.lit(256)).cast("int")
-    with BlockRelease(spark):
+    with caching.CacheScope(spark):
         # the fingerprint frame feeds the prune collect AND the gate —
         # the checkpoint keeps the Arrow decode single-pass
-        fps = fingerprinter(batch_df).localCheckpoint()
+        fps = caching.checkpoint(fingerprinter(batch_df))
         # lossless: an exact match has the batch fingerprint's own pb,
         # and a fingerprint's whole posting set lives in that partition
         hist = read_history(
@@ -87,7 +87,7 @@ def apply_fp_gate_batch(
             fps.where(F.col(key_col).isNotNull()).select(pb_expr.alias("pb")),
             batch_id,
         )
-        survivors = gate(fps, hist).localCheckpoint()
+        survivors = caching.checkpoint(gate(fps, hist))
         index = survivors.select(
             key_col,
             "asset_id",

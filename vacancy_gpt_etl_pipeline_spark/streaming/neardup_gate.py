@@ -70,7 +70,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
     _shingled,
     content_hash_col,
@@ -113,17 +113,11 @@ def _shingle_postings(docs: DataFrame, n: int) -> DataFrame:
     helper), keyed by xxhash64 so the persisted index stores 8-byte
     keys instead of shingle strings.
 
-    ``persist=False`` + ``localCheckpoint`` instead of `_shingled`'s
-    default ``.persist()``: the checkpoint both materializes the array
-    before the explode (the re-evaluation hazard the default persist
-    guards against) and keeps the block in the caller's
-    :class:`caching.BlockRelease` scope so each micro-batch frees its
-    own state —
-    an untracked ``.persist()`` per batch would pile up across a long
-    drain."""
-    sh = _shingled(
-        docs, "text", "doc_id", n, persist=False
-    ).localCheckpoint()
+    ``persist=False`` + a checkpoint instead of `_shingled`'s default
+    persist: the checkpoint materializes the array before the explode
+    (the re-evaluation hazard the default persist guards against), and
+    the caller's ``CacheScope`` region frees it with the micro-batch."""
+    sh = caching.checkpoint(_shingled(docs, "text", "doc_id", n, persist=False))
     ex = sh.select(
         F.col("_id").alias("doc_id"),
         F.size("_sh").cast("int").alias("n_sh"),
@@ -154,16 +148,16 @@ def apply_neardup_gate_batch(
     near-matching history at ``jaccard >= threshold``) land in this
     batch's partition of ``out_path`` and both indexes."""
     spark = batch_df.sparkSession
-    with BlockRelease(spark):
+    with caching.CacheScope(spark):
         hashed = batch_df.withColumn(
             "content_hash", content_hash_col("text", normalize)
         )
         # keep-first within batch (the incremental_dedup contract), then
         # checkpoint: the frame feeds the prefix collect, the exact gate,
         # and the shingle stage
-        fresh = top_k_per_group(
-            hashed, ["content_hash"], [F.asc("doc_id")]
-        ).localCheckpoint()
+        fresh = caching.checkpoint(
+            top_k_per_group(hashed, ["content_hash"], [F.asc("doc_id")])
+        )
         # exact gate — lossless: an equal hash has the same prefix
         seen = read_history(
             spark,
@@ -172,13 +166,13 @@ def apply_neardup_gate_batch(
             fresh.select(F.substring("content_hash", 1, 2).alias("pb")),
             batch_id,
         ).select("content_hash")
-        exact = fresh.join(seen, "content_hash", "left_anti").localCheckpoint()
+        exact = caching.checkpoint(fresh.join(seen, "content_hash", "left_anti"))
 
         # near gate: batch shingles vs pruned postings, raw Jaccard —
         # lossless: a history doc's intersection with a batch doc is
         # its postings of the batch's shingles, and a shingle's whole
         # posting list lives in its one pb partition
-        bsh = _shingle_postings(exact, n).localCheckpoint()
+        bsh = caching.checkpoint(_shingle_postings(exact, n))
         hist = read_history(
             spark,
             postings_index_path,
@@ -228,9 +222,9 @@ def apply_neardup_gate_batch(
             .select(F.col("_bid").alias("doc_id"))
             .distinct()
         )
-        survivors = exact.join(
-            near_dropped, "doc_id", "left_anti"
-        ).localCheckpoint()
+        survivors = caching.checkpoint(
+            exact.join(near_dropped, "doc_id", "left_anti")
+        )
         hash_index = survivors.select(
             "content_hash",
             "doc_id",

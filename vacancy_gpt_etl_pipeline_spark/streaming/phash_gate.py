@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.operators.phash import (
     phash_bmp,
     phash_incremental,
@@ -118,8 +118,8 @@ def apply_phash_gate_batch(
     # survivors, and the index append must not re-read the index being
     # written. hashes feeds two consumers (the pair collect and the
     # gate) — the checkpoint keeps the Arrow BMP decode single-pass.
-    with BlockRelease(spark):
-        hashes = phash_bmp(batch_df).localCheckpoint()
+    with caching.CacheScope(spark):
+        hashes = caching.checkpoint(phash_bmp(batch_df))
         # lossless: a history fingerprint that matches the batch exactly
         # or within Hamming < 4 shares an exact band value with it
         # (pigeonhole), and all index rows of one (band_idx, pb) live in
@@ -132,9 +132,9 @@ def apply_phash_gate_batch(
             index_rows(hashes, 0).select("band_idx", "pb"),
             batch_id,
         ).select("asset_id", "b0", "b1", "b2", "b3")
-        survivors = phash_incremental(
+        survivors = caching.checkpoint(phash_incremental(
             hashes, hist, max_hamming=max_hamming, max_bucket=max_bucket
-        ).localCheckpoint()
+        ))
         commit(
             survivors,
             batch_id,

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.operators.similarity import (
     ivf_assign,
     sampled_centroids,
@@ -70,8 +70,8 @@ def apply_semdedup_gate_batch(
     function for retry-idempotence tests. ``batch_df`` is
     ``(vec_id, embedding array<double>)``."""
     spark = batch_df.sparkSession
-    with BlockRelease(spark):
-        batch = batch_df.localCheckpoint()
+    with caching.CacheScope(spark):
+        batch = caching.checkpoint(batch_df)
         cents = read_index(spark, centroids_path)
         if cents is None:
             # deterministic bootstrap: a retried first batch rewrites the
@@ -80,13 +80,13 @@ def apply_semdedup_gate_batch(
                 "overwrite"
             ).parquet(centroids_path)
             cents = spark.read.parquet(centroids_path)
-        assigned = ivf_assign(batch, cents, dim=dim).localCheckpoint()
+        assigned = caching.checkpoint(ivf_assign(batch, cents, dim=dim))
         # lossless: the gate compares a batch vector only with history
         # in its own cell
         hist_assigned = read_history(
             spark, index_path, INDEX_SCHEMA, assigned.select("cell"), batch_id
         )
-        survivors = semdedup_incremental(
+        survivors = caching.checkpoint(semdedup_incremental(
             batch,
             history=None,
             centroids=cents,
@@ -97,7 +97,7 @@ def apply_semdedup_gate_batch(
                 "cell", "vec_id", "embedding"
             ),
             batch_assigned=assigned,
-        ).localCheckpoint()
+        ))
         index = survivors.join(
             assigned.select("vec_id", "embedding"), "vec_id"
         ).select(

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vacancy_gpt_etl_pipeline_spark.operators.caching import BlockRelease
+from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.operators.dedup import seq_near_veto
 from vacancy_gpt_etl_pipeline_spark.streaming.gate import (
     BATCH_COL,
@@ -126,8 +126,8 @@ def apply_seq_near_gate_batch(
     plain function so retry idempotence is testable without a
     streaming harness."""
     spark = batch_df.sparkSession
-    with BlockRelease(spark):
-        seqs = fingerprinter(batch_df).localCheckpoint()
+    with caching.CacheScope(spark):
+        seqs = caching.checkpoint(fingerprinter(batch_df))
         # lossless: a history sequence that matches the batch exactly or
         # within the near threshold has its length and shares a
         # non-empty band value with it, so it has an index row in a
@@ -140,7 +140,7 @@ def apply_seq_near_gate_batch(
             index_rows(seqs, 0, n_bands=n_bands).select("band_idx", "pb"),
             batch_id,
         ).select("asset_id", SEQ_COL)
-        survivors = seq_near_veto(
+        survivors = caching.checkpoint(seq_near_veto(
             seqs,
             hist,
             SEQ_COL,
@@ -148,7 +148,7 @@ def apply_seq_near_gate_batch(
             max_diff=max_diff,
             n_bands=n_bands,
             max_bucket=max_bucket,
-        ).localCheckpoint()
+        ))
         index = index_rows(survivors, batch_id, n_bands=n_bands)
         commit(
             survivors,
