@@ -525,8 +525,8 @@ def main() -> None:
                 # structural pruning measure on both text indexes
                 from pyspark.sql import functions as Fx
 
-                from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
-                    content_hash_col,
+                from vacancy_gpt_etl_pipeline_spark.functions.text import (
+                    fingerprint,
                 )
                 from vacancy_gpt_etl_pipeline_spark.streaming.neardup_gate import (  # noqa: E501
                     _shingle_postings,
@@ -536,7 +536,7 @@ def main() -> None:
                     r["pb"]
                     for r in probe_txt.select(
                         Fx.substring(
-                            content_hash_col("text"), 1, 2
+                            fingerprint("text"), 1, 2
                         ).alias("pb")
                     )
                     .distinct()

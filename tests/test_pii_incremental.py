@@ -91,10 +91,3 @@ def test_incremental_dedup_keeps_min_id_within_batch(spark):
     batch = _docs(spark, [(20, "same"), (7, "same")])
     rows = incremental_dedup(batch, history).collect()
     assert [r["doc_id"] for r in rows] == [7]
-
-
-def test_incremental_dedup_no_normalize(spark):
-    history = _docs(spark, [(1, "Alpha")])
-    batch = _docs(spark, [(2, "alpha")])
-    kept = incremental_dedup(batch, history, normalize=False).count()
-    assert kept == 1  # case differs → distinct content when not normalizing

@@ -147,16 +147,14 @@ def test_text_gate_retry_idempotent_both_crash_orders(
     # if a previous attempt crashed between the sinks — the retry must
     # not be vetoed by its own fingerprints
     b1 = docs.where("doc_id >= 100 AND doc_id < 150")
-    from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
-        content_hash_col,
-    )
+    from vacancy_gpt_etl_pipeline_spark.functions.text import fingerprint
 
     (
         b1.select(
-            content_hash_col("text").alias("content_hash"),
+            fingerprint("text").alias("content_hash"),
             "doc_id",
             F.lit(1).cast("long").alias(BATCH_COL),
-            F.substring(content_hash_col("text"), 1, 2).alias("pb"),
+            F.substring(fingerprint("text"), 1, 2).alias("pb"),
         )
         .write.mode("append")
         .partitionBy("pb")
@@ -317,16 +315,14 @@ def test_all_digit_hash_prefixes_still_gate_later_batches(spark, tmp_path):
     still read its prefixes as strings. Spark would otherwise infer an
     int column, and a later batch with a "7a" prefix would fail its
     pruned read on every retry."""
-    from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
-        content_hash_col,
-    )
+    from vacancy_gpt_etl_pipeline_spark.functions.text import fingerprint
 
     cands = spark.createDataFrame(
         [(i, f"vacancy number {i} analyst role in fintech") for i in range(64)],
         _SCHEMA,
     )
     rows = cands.select(
-        "text", content_hash_col("text", True).alias("h")
+        "text", fingerprint("text").alias("h")
     ).collect()
     digits = next(r.text for r in rows if r.h[:2].isdigit())
     letter = next(r.text for r in rows if not r.h[:2].isdigit())

@@ -25,8 +25,31 @@ PUNCT_CLASS = r"[.,;:!?'\"()\[\]{}<>/\\|@#$%^&*_+=~-]"
 
 
 def tokens(c: Column | str) -> Column:
+    """Word tokens: the trimmed, lowercased text split on whitespace runs.
+    The one tokenizer of every word-level operator (dedup shingles,
+    n-gram repetition, chunking, packing, BM25, the bigram LM)."""
     col = F.col(c) if isinstance(c, str) else c
     return F.split(F.lower(F.trim(col)), r"\s+")
+
+
+def gram_starts(toks: Column | str, n: int) -> Column:
+    """1-based start positions of the word ``n``-grams of the token array
+    ``toks``; empty when it holds fewer than ``n`` tokens. The guard keeps
+    the range total: Spark's ``sequence(1, stop)`` counts DOWN for
+    stop < 1, and the optimizer may evaluate a projection before the
+    size filter that was meant to protect it."""
+    col = F.col(toks) if isinstance(toks, str) else toks
+    return F.when(
+        F.size(col) >= n, F.sequence(F.lit(1), F.size(col) - (n - 1))
+    ).otherwise(F.array().cast("array<int>"))
+
+
+def gram_at(toks: Column | str, i: Column, n: int) -> Column:
+    """The word ``n``-gram of ``toks`` starting at position ``i``: its
+    words joined by one space. Reference the token array as a real
+    column, not an inline ``tokens(...)`` expression, or codegen
+    re-evaluates the regex split per ``element_at``."""
+    return F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)])
 
 
 def token_count(c: Column | str) -> Column:
@@ -108,8 +131,10 @@ def quality_score(c: Column | str, ndigits: int = 6) -> Column:
 
 
 def fingerprint(c: Column | str) -> Column:
-    """Content fingerprint: md5 over whitespace-normalized lowercase text.
-    Stable across engines → usable as an exact-dedup key everywhere."""
+    """Content key: md5 over the trimmed, whitespace-collapsed, lowercased
+    text. The one exact-dedup key of the engine (``dedup_exact_text``,
+    ``incremental_dedup``, the streaming text gate's hash index, content
+    splits); DuckDB computes the same value, so oracles can mirror it."""
     col = F.col(c) if isinstance(c, str) else c
     return F.md5(F.lower(F.regexp_replace(F.trim(col), r"\s+", " ")))
 

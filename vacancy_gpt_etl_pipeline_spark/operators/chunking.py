@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vacancy_gpt_etl_pipeline_spark.functions.text import tokens
+
 
 def chunk_documents(
     df: DataFrame,
@@ -30,10 +32,9 @@ def chunk_documents(
     """
     if stride <= 0 or stride > chunk_tokens:
         raise ValueError("require 0 < stride <= chunk_tokens")
-    tokens = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    toks = df.select(F.col(id_col).alias("_id"), tokens.alias("_toks")).where(
-        F.size("_toks") > 0
-    )
+    toks = df.select(
+        F.col(id_col).alias("_id"), tokens(text_col).alias("_toks")
+    ).where(F.size("_toks") > 0)
     n = F.size("_toks")
     # number of windows: 1 + ceil(max(n - chunk, 0) / stride)
     n_win = F.lit(1) + F.ceil(

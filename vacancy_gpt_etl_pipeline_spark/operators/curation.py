@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 
 from vacancy_gpt_etl_pipeline_spark.functions.text import (
     fingerprint,
+    gram_at,
+    gram_starts,
     quality_score,
     token_count,
     tokens,
@@ -164,28 +166,19 @@ def remove_boilerplate_ngrams(
     toks_arr = caching.persist(
         df.select(
             F.col(id_col).alias("_id"),
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("_toks"),
+            tokens(text_col).alias("_toks"),
         ),
     )
     # (doc, pos, token) — pos is 1-based
     positions = toks_arr.select(
         "_id", F.posexplode("_toks").alias("_p0", "_tok")
     ).select("_id", (F.col("_p0") + 1).alias("_p"), "_tok")
-    gram = F.concat_ws(
-        " ", *[F.element_at("_toks", F.col("_i") + j) for j in range(n)]
-    )
-    # per-row guard keeps the start-index expression TOTAL: sequence(1,
-    # stop) DESCENDS for stop < 1, and the optimizer may collapse the
-    # size filter into the generate (expression-economy rule 2 /
-    # PLANS.md) — same pattern as operators/dedup._shingled
-    starts = F.when(
-        F.size("_toks") >= n,
-        F.sequence(F.lit(1), F.size("_toks") - (n - 1)),
-    ).otherwise(F.array().cast("array<int>"))
+    # explode the start positions, not a gram array: an unpersisted
+    # explode of an array expression re-evaluates it per emitted element
     occurrences = caching.persist(
         toks_arr.where(F.size("_toks") >= n)
-        .select("_id", F.explode(starts).alias("_i"), "_toks")
-        .select("_id", "_i", F.md5(gram).alias("_gh")),
+        .select("_id", F.explode(gram_starts("_toks", n)).alias("_i"), "_toks")
+        .select("_id", "_i", F.md5(gram_at("_toks", F.col("_i"), n)).alias("_gh")),
     )
     boiler = (
         occurrences.groupBy("_gh")
@@ -257,7 +250,7 @@ def ngram_contamination(
     """
     from vacancy_gpt_etl_pipeline_spark.operators.dedup import _shingled
 
-    # persisted (operators/dedup._shingled default): an UNPERSISTED
+    # persisted by operators/dedup._shingled: an UNPERSISTED
     # explode re-evaluates the inline shingle-array expression per
     # emitted element — measured 70 s vs 2 s at sf0.1 for the 13-gram
     # audit. Each side is read once but EXPLODED many-to-one, which is

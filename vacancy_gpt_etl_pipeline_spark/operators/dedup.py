@@ -8,7 +8,7 @@ Reference parity (SURVEY.md §2.4):
 Scale extensions (north star): exact text dedup by content hash, MinHash+LSH
 near-dup, SimHash near-dup, n-gram Jaccard pair scoring. All are pure
 DataFrame compositions — shingle/signature/band steps stay JVM-side
-(higher-order array functions + xxhash64), so the only shuffles are the
+(higher-order array functions + md5), so the only shuffles are the
 band-bucket groupBys, which is the canonical LSH-at-scale layout: candidate
 generation cost is O(rows × bands), never O(rows²).
 
@@ -17,6 +17,10 @@ text gate) makes candidates by ONE rule: hash rows into buckets, drop the
 buckets holding more than a cap (``relational.cap_buckets``), self-join
 each bucket on ``id_a < id_b`` (``relational.bucket_pairs``), then score
 the pairs. The operators differ only in the bucket key and the score.
+
+The word-level rules they share live in ``functions/text.py``: what a word
+is (``tokens``), what a word n-gram is (``gram_starts``/``gram_at``) and
+what a content key is (``fingerprint``).
 """
 
 from __future__ import annotations
@@ -24,6 +28,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vacancy_gpt_etl_pipeline_spark.functions.text import (
+    fingerprint,
+    gram_at,
+    gram_starts,
+    tokens,
+)
 from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.operators.relational import (
     bucket_pairs,
@@ -43,30 +53,21 @@ def dedup_exact_text(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    normalize: bool = True,
 ) -> DataFrame:
     """Exact content dedup by hash-groupBy: one survivor (min id) per
-    normalized text. At 100 TB: shuffles 1 hash + 1 id per row, never the
-    text payload; the canonical first pass before any near-dup stage."""
-    norm = F.col(text_col)
-    if normalize:
-        norm = F.lower(F.regexp_replace(F.trim(norm), r"\s+", " "))
+    content key (``functions.text.fingerprint``). At 100 TB: shuffles 1
+    hash + 1 id per row, never the text payload; the canonical first pass
+    before any near-dup stage."""
     return (
-        df.select(F.md5(norm).alias("content_hash"), F.col(id_col))
+        df.select(fingerprint(text_col).alias("content_hash"), F.col(id_col))
         .groupBy("content_hash")
         .agg(F.min(id_col).alias("survivor_id"), F.count("*").alias("dup_count"))
     )
 
 
-def _shingled(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    persist: bool = True,
-) -> DataFrame:
+def _shingled(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """``(_id, _sh)`` frame of distinct word n-gram shingles (JVM-side only:
-    split + higher-order transform; no Python).
+    split + higher-order transform; no Python), persisted.
 
     Expression-economy notes (both measured 13× at sf0.1):
     - The token array materializes as a REAL column first and the gram
@@ -74,47 +75,29 @@ def _shingled(
       the lambda makes codegen re-evaluate the regex split per
       ``element_at``.
     - Short docs are filtered on ``size(_toks) >= n`` BEFORE the gram
-      projection (equivalent to filtering empty gram arrays after, since
-      ``sequence(1, size-n+1)`` emits ≥1 index exactly when size ≥ n).
-      Filtering on ``size(_sh)`` after would collapse the filter into the
-      projection and inline the whole shingle expression into the
-      predicate — evaluating it twice per row with the split re-expanded.
+      projection. Filtering on ``size(_sh)`` after would collapse the
+      filter into the projection and inline the whole shingle expression
+      into the predicate — evaluating it twice per row with the split
+      re-expanded.
+
+    Persisted: callers reuse this frame across joins/explodes, and an
+    UNPERSISTED explode re-evaluates the inline array expression per
+    emitted element (measured ~16× at sf0.1; 70 s vs 2 s for the
+    contamination audit). The cache is one string array per doc, freed by
+    the caller's CacheScope region (the streaming text gate's micro-batch
+    is one).
     """
-    tokens = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    toks = df.select(F.col(id_col).alias("_id"), tokens.alias("_toks")).where(
-        F.size("_toks") >= n  # collapses to a second split eval — cheap
-    )
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at("_toks", i + j) for j in range(n)]
-    )
-    idx = F.sequence(F.lit(1), F.size("_toks") - (n - 1))
-    # the per-row length guard makes the expression TOTAL: Spark's
-    # sequence(1, stop) DESCENDS for stop < 1 (yielding out-of-range
-    # element_at indices), and the optimizer may evaluate this projection
-    # before the size(_toks) filter once no persist boundary separates
-    # them (Generate's implicit non-empty filter collapses into the same
-    # predicate). Rows failing the guard are dropped by the WHERE either
-    # way — the branch only exists so evaluation order can't crash.
-    shingles = F.when(
-        F.size("_toks") >= n, F.array_distinct(F.transform(idx, gram))
-    ).otherwise(F.array().cast("array<string>"))
-    out = toks.select("_id", shingles.alias("_sh"))
-    # persist=False is for a caller that materializes this frame itself
-    # before exploding it: streaming/neardup_gate localCheckpoints it so
-    # each micro-batch frees its own blocks. An unpersisted explode
-    # re-evaluates the array expression per emitted element (the
-    # round-5 A/B measured the contamination audit at 70 s vs 2 s), so
-    # the default stays persisted.
-    if not persist:
-        return out
-    # persisted: every other caller reuses this frame across joins/explodes,
-    # and an UNPERSISTED explode re-evaluates the inline array expression
-    # per emitted element (measured ~16× at sf0.1). The cache is one string
-    # array per doc, freed by the caller's CacheScope region.
-    return caching.persist(out)
+    toks = df.select(
+        F.col(id_col).alias("_id"), tokens(text_col).alias("_toks")
+    ).where(F.size("_toks") >= n)  # collapses to a second split eval — cheap
+    grams = F.transform(gram_starts("_toks", n), lambda i: gram_at("_toks", i, n))
+    return caching.persist(toks.select("_id", F.array_distinct(grams).alias("_sh")))
 
 
-# portable-hash family: (a·base + b) mod P over a 28-bit md5-derived base.
+# The one hash family of MinHash and SimHash: every shingle hash derives
+# from md5, which DuckDB computes identically, so the oracles mirror the
+# operators value for value.
+# MinHash: (a·base + b) mod P over a 28-bit md5-derived base.
 # P = 2^31-1 (Mersenne); a < P, base < 2^28 → a·base + b < 2^59, exact in
 # int64 in every engine. Coefficients are seeded so Spark and the SQL
 # oracle embed the SAME literals.
@@ -139,37 +122,30 @@ def minhash_near_duplicates(
     num_hashes: int = 64,
     bands: int = 16,
     jaccard_threshold: float = 0.5,
-    verify: bool = True,
     max_bucket: int | None = 64,
-    portable_hash: bool = False,
 ) -> DataFrame:
-    """MinHash + banded LSH near-duplicate pairs.
+    """MinHash + banded LSH near-duplicate pairs, verified by exact Jaccard.
 
     Pipeline (all built-in):
-      shingle → ``num_hashes`` minhashes (xxhash64 with per-hash salt,
-      array_min over the shingle array) → hash each of ``bands`` signature
-      bands → explode to (id, band, band_hash) — ids and hashes ONLY, the
-      shingle arrays never enter the shuffle — → cap the buckets at
-      ``max_bucket`` (a 16-rows/band collision across that many docs means a
-      degenerate template, not near-duplicates) → self-join per bucket →
-      candidate (id_a, id_b) pairs → optional exact-Jaccard verification,
+      shingle → ``num_hashes`` minhashes → hash each of ``bands``
+      signature bands → explode to (id, band, band_hash) — ids and hashes
+      ONLY, the shingle arrays never enter the shuffle — → cap the buckets
+      at ``max_bucket`` (a 16-rows/band collision across that many docs
+      means a degenerate template, not near-duplicates) → self-join per
+      bucket → candidate (id_a, id_b) pairs → exact-Jaccard verification,
       joining the shingle sets back by id for candidates only.
+
+    Hash family: ONE md5 per shingle yields a 28-bit base integer (7 hex
+    chars — keeps every product below 2^59, overflow-free in any int64
+    engine), and the ``num_hashes`` permutations are affine transforms
+    ``(a_i·base + b_i) mod 2^31-1`` with fixed seeded coefficients — the
+    classical universal-hash family, mirrored symbol-for-symbol by the
+    ``dedup_minhash_lsh`` DuckDB oracle. Each band hashes to the md5 of its
+    ``|``-joined minhashes.
 
     Scale shape: the band explode shuffles O(rows × bands) fixed-width
     tuples; the verify joins shuffle shingles only for candidate ids
     (≈ true near-dups), never for the whole corpus.
-
-    ``portable_hash=True`` swaps xxhash64 for an engine-portable family:
-    ONE md5 per shingle yields a 28-bit base integer (7 hex chars —
-    keeps every product below 2^59, overflow-free in any int64 engine),
-    and the ``num_hashes`` permutations are affine transforms
-    ``(a_i·base + b_i) mod 2^31-1`` with fixed seeded coefficients —
-    the classical universal-hash family, mirrored symbol-for-symbol in
-    SQL. One md5 + 64 multiply-mods per shingle costs ~1/20 of the
-    earlier 64-md5s-per-shingle portable mode (measured 15.6 s → ~4 s
-    at sf0.1). Keep the xxhash64 default in production; portable mode
-    exists so correctness gates can check the banding/bucketing/verify
-    logic value-for-value.
     """
     rows_per_band = num_hashes // bands
     # already persisted by _shingled: feeds the signature lineage AND the
@@ -180,34 +156,32 @@ def minhash_near_duplicates(
     # array_min(transform(...)) columns: HOFs are codegen-unsupported, so
     # 64 of them cost 64 interpreted passes over every shingle array
     # (measured 61.6 s at sf0.1). The exploded form is one
-    # whole-stage-codegen pass computing 64 salted hashes per shingle into
+    # whole-stage-codegen pass computing 64 hashes per shingle into
     # 64 partial-min accumulators; the shuffle carries one 64-long row per
     # doc (map-side combine), never the shingles. Same values either way:
     # min over identical per-shingle hashes.
-    ex = shingled.select("_id", F.explode("_sh").alias("_s"))
-    if portable_hash:
-        coeffs = portable_affine_coeffs(num_hashes)
-        # _base as a real column: the num_hashes references keep
-        # CollapseProject from inlining the md5 into every affine term
-        ex = ex.withColumn(
-            "_base",
-            F.expr("CAST(conv(substring(md5(_s), 1, 7), 16, 10) AS BIGINT)"),
-        )
-        salted = lambda i: F.expr(  # noqa: E731
-            f"({coeffs[i][0]}L * _base + {coeffs[i][1]}L) % {PORTABLE_PRIME}"
-        )
-        band_hash = lambda cols: F.md5(  # noqa: E731
-            F.concat_ws("|", *[c.cast("string") for c in cols])
-        )
-    else:
-        salted = lambda i: F.xxhash64("_s", F.lit(i))  # noqa: E731
-        band_hash = lambda cols: F.xxhash64(*cols)  # noqa: E731
+    coeffs = portable_affine_coeffs(num_hashes)
+    # _base as a real column: the num_hashes references keep
+    # CollapseProject from inlining the md5 into every affine term
+    ex = shingled.select("_id", F.explode("_sh").alias("_s")).withColumn(
+        "_base",
+        F.expr("CAST(conv(substring(md5(_s), 1, 7), 16, 10) AS BIGINT)"),
+    )
     sig = ex.groupBy("_id").agg(
-        *[F.min(salted(i)).alias(f"_h{i}") for i in range(num_hashes)]
+        *[
+            F.min(F.expr(f"({a}L * _base + {b}L) % {PORTABLE_PRIME}")).alias(f"_h{i}")
+            for i, (a, b) in enumerate(coeffs)
+        ]
     )
     band_cols = [
-        band_hash(
-            [F.col(f"_h{b * rows_per_band + r}") for r in range(rows_per_band)]
+        F.md5(
+            F.concat_ws(
+                "|",
+                *[
+                    F.col(f"_h{b * rows_per_band + r}").cast("string")
+                    for r in range(rows_per_band)
+                ],
+            )
         ).alias(f"_b{b}")
         for b in range(bands)
     ]
@@ -217,8 +191,6 @@ def minhash_near_duplicates(
     # width (id, band, hash), so the cache is O(rows × bands) small
     banded = caching.persist(cap_buckets(banded, buckets, max_bucket))
     cand = bucket_pairs(banded, buckets, "_id").dropDuplicates(["id_a", "id_b"])
-    if not verify:
-        return cand
     sha = shingled.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"))
     shb = shingled.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"))
     inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
@@ -236,12 +208,10 @@ def simhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bits: int = 64,
     max_hamming: int = 7,
     n_tables: int = 8,
     max_bucket: int | None = 128,
     feature_n: int = 3,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """SimHash near-dup pairs: 64-bit signature = sign(Σ feature weight
     vectors), candidate join on ``n_tables`` sub-fingerprint blocks, verified
@@ -266,138 +236,58 @@ def simhash_near_duplicates(
     ``max_bucket`` caps each (table, block) bucket, e.g. the all-zeros
     block every short doc shares.
 
-    All JVM-side: token hash via xxhash64, bit votes via higher-order
-    aggregate over bit positions.
-
-    ``portable_hash=True`` (oracle mode, see
-    :func:`minhash_near_duplicates`): the feature hash becomes the first
-    16 hex digits of md5, bit votes run per hex digit, and the signature
-    is rendered as a 16-char hex STRING whose 2-char substrings are the
-    ``n_tables=8`` blocks — every step has an exact SQL twin in any
-    engine with md5. Requires the default 64-bit/8-table geometry.
-    Production default stays xxhash64 (one 64-bit hash per feature vs 16
-    digit extractions)."""
+    Hash family (see :func:`minhash_near_duplicates`): a feature's 64-bit
+    word is the first 16 hex digits of its md5, read as two 32-bit halves
+    (one 64-bit ``conv`` would overflow bigint). The ``dedup_simhash``
+    DuckDB oracle votes per hex digit and renders the signature as a hex
+    string; its 2-digit block ``t`` is byte ``7 - t`` of this signature,
+    so the two differ only in table labels, never in buckets, candidates
+    or hamming values."""
     if max_hamming > n_tables - 1:
         raise ValueError(
             f"max_hamming={max_hamming} exceeds the pigeonhole recall bound "
             f"n_tables-1={n_tables - 1}; raise n_tables instead"
         )
-    if portable_hash and (bits != 64 or n_tables != 8):
-        raise ValueError("portable_hash requires bits=64, n_tables=8")
     shingled = _shingled(df, text_col, id_col, feature_n)
-    if portable_hash:
-        # Hex-digit layout: digit p (1-based, leftmost first) carries vote
-        # bits k=0..3 as (digit >> k) & 1. The 16 hex digits decode as TWO
-        # 32-bit words (one conv each), not 16 per-digit convs — digit p's
-        # bit k is word >> (4·(8-p̂)+k) & 1 with p̂ the in-word position,
-        # value-identical and ~8× less per-shingle extraction work. The
-        # same 64 conditional-SUM aggregates as the fast path.
-        hexmap = F.array(*[F.lit(c) for c in "0123456789abcdef"])
-        ex = (
-            shingled.select("_id", F.explode("_sh").alias("_s"))
-            .select("_id", F.md5("_s").alias("_h"))
-            .select(
-                "_id",
-                F.conv(F.substring("_h", 1, 8), 16, 10)
-                .cast("bigint")
-                .alias("_w0"),
-                F.conv(F.substring("_h", 9, 8), 16, 10)
-                .cast("bigint")
-                .alias("_w1"),
-            )
-        )
-
-        def _bit(p: int, k: int):
-            word = "_w0" if p <= 8 else "_w1"
-            pos = p if p <= 8 else p - 8
-            return F.shiftright(word, 4 * (8 - pos) + k).bitwiseAND(F.lit(1))
-
-        votes = ex.groupBy("_id").agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[
-                F.sum(_bit(p, k)).alias(f"_v{p}_{k}")
-                for p in range(1, 17)
-                for k in range(4)
-            ],
-        )
-        digit = lambda p: sum(  # noqa: E731
+    half = lambda pos: (  # noqa: E731
+        F.conv(F.substring("_m", pos, 8), 16, 10).cast("bigint")
+    )
+    ex = (
+        shingled.select("_id", F.explode("_sh").alias("_s"))
+        .select("_id", F.md5("_s").alias("_m"))
+        .select("_id", F.shiftleft(half(1), 32).bitwiseOR(half(9)).alias("_h"))
+    )
+    # Bit votes via explode → 64 conditional-SUM aggregates, NOT 64
+    # higher-order filter() passes over the hash array: HOFs run
+    # interpreted, and 64 of them over every doc's shingle array measured
+    # 118.9 s end-to-end at sf0.1. Exploded, this is one codegen pass
+    # extracting 64 bits per feature word into 64 partial sums; the
+    # shuffle carries one 65-long row per doc. bit b of the simhash = 1
+    # iff (# features with bit b set) > n_features/2. shiftrightunsigned
+    # avoids sign trouble for bit 63.
+    votes = ex.groupBy("_id").agg(
+        F.count(F.lit(1)).alias("_n"),
+        *[
+            F.sum(F.shiftrightunsigned("_h", b).bitwiseAND(F.lit(1))).alias(f"_v{b}")
+            for b in range(64)
+        ],
+    )
+    sim = votes.select(
+        "_id",
+        sum(
             [
-                (F.col(f"_v{p}_{k}") > F.col("_n") / F.lit(2.0)).cast("int")
-                * (1 << k)
-                for k in range(4)
-            ],
-            F.lit(0),
-        )
-        # _sim stays the 16-char hex STRING (the oracle-visible rendering);
-        # the two decoded words ride along so the per-PAIR hamming in the
-        # candidate join is 2 xor + 2 bit_count, not 32 substring convs —
-        # the candidate set is the operator's largest intermediate
-        sim = votes.select(
-            "_id",
-            F.concat(
-                *[F.element_at(hexmap, digit(p) + 1) for p in range(1, 17)]
-            ).alias("_sim"),
-        ).select(
-            "_id",
-            "_sim",
-            F.conv(F.substring("_sim", 1, 8), 16, 10)
-            .cast("bigint")
-            .alias("_shi"),
-            F.conv(F.substring("_sim", 9, 8), 16, 10)
-            .cast("bigint")
-            .alias("_slo"),
-        )
-        carry = ["_shi", "_slo"]
-        block_of = lambda t: F.substring("_sim", 2 * t + 1, 2)  # noqa: E731
-        hamming_expr = (
-            F.bit_count(F.col("_shi_a").bitwiseXOR(F.col("_shi_b")))
-            + F.bit_count(F.col("_slo_a").bitwiseXOR(F.col("_slo_b")))
-        ).cast("int")
-    else:
-        # Bit votes via explode → ``bits`` conditional-SUM aggregates, NOT
-        # ``bits`` higher-order filter() passes over the hash array: HOFs
-        # run interpreted, and 64 of them over every doc's shingle array
-        # measured 118.9 s end-to-end at sf0.1. Exploded, this is one
-        # codegen pass extracting 64 bits per shingle hash into 64 partial
-        # sums; the shuffle carries one 65-long row per doc. bit b of the
-        # simhash = 1 iff (# features with bit b set) > n_features/2 —
-        # identical either way. shiftrightunsigned avoids sign trouble for
-        # bit 63.
-        ex = (
-            shingled.select("_id", F.explode("_sh").alias("_s"))
-            .select("_id", F.xxhash64("_s").alias("_h"))
-        )
-        votes = ex.groupBy("_id").agg(
-            F.count(F.lit(1)).alias("_n"),
-            *[
-                F.sum(F.shiftrightunsigned("_h", b).bitwiseAND(F.lit(1))).alias(
-                    f"_v{b}"
+                F.shiftleft(
+                    (F.col(f"_v{b}") > F.col("_n") / F.lit(2.0)).cast("long"), b
                 )
-                for b in range(bits)
+                for b in range(64)
             ],
-        )
-        sim = votes.select(
-            "_id",
-            sum(
-                [
-                    F.shiftleft(
-                        (F.col(f"_v{b}") > F.col("_n") / F.lit(2.0)).cast("long"),
-                        b,
-                    )
-                    for b in range(bits)
-                ],
-                F.lit(0).cast("long"),
-            ).alias("_sim"),
-        )
-        block_bits = bits // n_tables
-        mask = (1 << block_bits) - 1
-        carry = ["_sim"]
-        block_of = lambda t: F.shiftrightunsigned(  # noqa: E731
-            "_sim", t * block_bits
-        ).bitwiseAND(F.lit(mask))
-        hamming_expr = F.bit_count(
-            F.col("_sim_a").bitwiseXOR(F.col("_sim_b"))
-        )
+            F.lit(0).cast("long"),
+        ).alias("_sim"),
+    )
+    block_bits = 64 // n_tables
+    block_of = lambda t: F.shiftrightunsigned(  # noqa: E731
+        "_sim", t * block_bits
+    ).bitwiseAND(F.lit((1 << block_bits) - 1))
     blocks = sim.select(
         "*",
         F.posexplode(F.array(*[block_of(t) for t in range(n_tables)])).alias(
@@ -407,9 +297,10 @@ def simhash_near_duplicates(
     buckets = ["_tbl", "_blk"]
     # persisted for the self-join (see minhash_near_duplicates)
     blocks = caching.persist(cap_buckets(blocks, buckets, max_bucket))
-    cand = (
-        bucket_pairs(blocks, buckets, "_id", carry)
-        .select("id_a", "id_b", hamming_expr.alias("hamming"))
+    hamming = F.bit_count(F.col("_sim_a").bitwiseXOR(F.col("_sim_b")))
+    return (
+        bucket_pairs(blocks, buckets, "_id", ["_sim"])
+        .select("id_a", "id_b", hamming.alias("hamming"))
         # hamming-filter BEFORE dropDuplicates: the predicate is map-side
         # in the join stage, so the dedup shuffle carries only true
         # near-dups (~0.05% of candidates at sf0.1: 234 of 408 k), not the
@@ -418,7 +309,6 @@ def simhash_near_duplicates(
         .where(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-    return cand.select("id_a", "id_b", "hamming")
 
 
 def ngram_jaccard_pairs(
@@ -469,19 +359,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def content_hash_col(col: str, normalize: bool = True):
-    """The incremental-dedup family's content key: md5 of the
-    whitespace-collapsed, trimmed, lowercased text (or of the raw text
-    with ``normalize=False``). Factored out so the streaming gate
-    (streaming/neardup_gate.py) and :func:`incremental_dedup` share one
-    definition — hash parity between the persisted index and the batch
-    operator is the twin contract."""
-    norm = F.col(col)
-    if normalize:
-        norm = F.lower(F.regexp_replace(F.trim(norm), r"\s+", " "))
-    return F.md5(norm)
-
-
 def keyed_incremental_gate(
     batch: DataFrame,
     history: DataFrame,
@@ -522,12 +399,11 @@ def incremental_dedup(
     history: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    normalize: bool = True,
 ) -> DataFrame:
-    """Batch-vs-corpus dedup: rows of ``new_docs`` whose normalized content
-    hash does NOT already exist in ``history`` — the incremental-ingest
-    stage that keeps a growing corpus exact-duplicate-free without ever
-    re-deduping the whole corpus.
+    """Batch-vs-corpus dedup: rows of ``new_docs`` whose content key
+    (``functions.text.fingerprint``) does NOT already exist in
+    ``history`` — the incremental-ingest stage that keeps a growing corpus
+    exact-duplicate-free without ever re-deduping the whole corpus.
 
     Scale shape: LEFT ANTI join on a 16-byte hash. The history side
     projects to hashes only (at 100 TB, a bucketed/Z-ordered hash table
@@ -535,12 +411,8 @@ def incremental_dedup(
     the join but the shuffle key is the hash. Within-batch duplicates are
     also collapsed (keep min id) so the output is ingestible as-is.
     """
-
-    def _h(col):
-        return content_hash_col(col, normalize)
-
-    seen = history.select(_h(text_col).alias("content_hash")).distinct()
-    batch = new_docs.withColumn("content_hash", _h(text_col))
+    seen = history.select(fingerprint(text_col).alias("content_hash")).distinct()
+    batch = new_docs.withColumn("content_hash", fingerprint(text_col))
     fresh = top_k_per_group(batch, ["content_hash"], [F.asc(id_col)])
     return fresh.join(seen, "content_hash", "left_anti").drop("content_hash")
 

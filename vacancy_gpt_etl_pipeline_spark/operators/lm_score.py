@@ -29,22 +29,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vacancy_gpt_etl_pipeline_spark.functions.text import gram_starts, tokens
+
 
 def _doc_bigrams(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(_id, _w1, _w2) — every consecutive token pair (NOT distinct:
     the LM scores each occurrence). Tokens materialize as a real column
     first (expression-economy rule 1)."""
-    tokens = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    toks = df.select(F.col(id_col).alias("_id"), tokens.alias("_toks")).where(
-        F.size("_toks") >= 2
-    )
-    idx = F.sequence(F.lit(1), F.size("_toks") - 1)
+    toks = df.select(
+        F.col(id_col).alias("_id"), tokens(text_col).alias("_toks")
+    ).where(F.size("_toks") >= 2)
     pair = lambda i: F.struct(  # noqa: E731
         F.element_at("_toks", i).alias("_w1"),
         F.element_at("_toks", i + 1).alias("_w2"),
     )
     return toks.select(
-        "_id", F.explode(F.transform(idx, pair)).alias("_p")
+        "_id", F.explode(F.transform(gram_starts("_toks", 2), pair)).alias("_p")
     ).select("_id", "_p._w1", "_p._w2")
 
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vacancy_gpt_etl_pipeline_spark.functions.text import token_count
+
 
 def pack_sequences(
     docs: DataFrame,
@@ -33,7 +35,7 @@ def pack_sequences(
     """Per-``by``-stratum packing: returns one row per document with its
     whitespace token count and assigned ``pack_id`` (0-based within the
     stratum, ordered by ``id_col``)."""
-    n_tok = F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"))
+    n_tok = token_count(text_col)
     w = (
         Window.partitionBy(by)
         .orderBy(id_col)

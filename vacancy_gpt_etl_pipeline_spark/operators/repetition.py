@@ -33,6 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vacancy_gpt_etl_pipeline_spark.functions.text import (
+    gram_at,
+    gram_starts,
+    tokens,
+)
+
 
 def _gram_counts(
     df: DataFrame, text_col: str, id_col: str, n: int
@@ -40,17 +46,11 @@ def _gram_counts(
     """(_id, _g, _cnt) — occurrence counts per word n-gram (NOT distinct:
     counts are the point). Same expression-economy layout as
     dedup._shingled: tokens as a real column, grams referencing it."""
-    tokens = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    toks = df.select(F.col(id_col).alias("_id"), tokens.alias("_toks")).where(
-        F.size("_toks") >= n
-    )
-    gram = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at("_toks", i + j) for j in range(n)]
-    )
-    idx = F.sequence(F.lit(1), F.size("_toks") - (n - 1))
-    ex = toks.select(
-        "_id", F.explode(F.transform(idx, gram)).alias("_g")
-    )
+    toks = df.select(
+        F.col(id_col).alias("_id"), tokens(text_col).alias("_toks")
+    ).where(F.size("_toks") >= n)
+    grams = F.transform(gram_starts("_toks", n), lambda i: gram_at("_toks", i, n))
+    ex = toks.select("_id", F.explode(grams).alias("_g"))
     return ex.groupBy("_id", "_g").agg(F.count(F.lit(1)).alias("_cnt"))
 
 

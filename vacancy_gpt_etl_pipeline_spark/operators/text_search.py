@@ -23,11 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from vacancy_gpt_etl_pipeline_spark.functions.text import tokens
 from vacancy_gpt_etl_pipeline_spark.operators.relational import top_k_per_group
-
-
-def _tokens(text_col: str):
-    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
 
 
 def bm25_topk(
@@ -54,12 +51,12 @@ def bm25_topk(
     qterms = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
-            F.explode(_tokens(query_text_col)).alias("term"),
+            F.explode(tokens(query_text_col)).alias("term"),
         )
         .where(F.col("term") != "")
         .distinct()
     )
-    toks = docs.select(F.col(id_col).alias("doc_id"), _tokens(text_col).alias("_t"))
+    toks = docs.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("_t"))
     doclen = toks.select("doc_id", F.size("_t").alias("dl"))
     stats = doclen.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -129,7 +126,7 @@ def tfidf_keywords(
     engine-stable.
     """
     toks = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(_tokens(text_col)).alias("term")
+        F.col(id_col).alias("doc_id"), F.explode(tokens(text_col)).alias("term")
     ).where(F.length("term") >= min_token_len)
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -181,7 +178,7 @@ def pmi_collocations(
     bigram side before the joins). Scores quantize to decimal before
     ranking so tie-breaks (pair asc) are engine-stable.
     """
-    toks = docs.select(_tokens(text_col).alias("_t"))
+    toks = docs.select(tokens(text_col).alias("_t"))
     uni = toks.select(F.explode("_t").alias("w")).groupBy("w").agg(
         F.count(F.lit(1)).alias("c_w")
     )

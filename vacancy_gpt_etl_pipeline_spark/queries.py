@@ -18,7 +18,7 @@ bit-for-bit):
 
 Every registry entry carries a full value-hash oracle — zero rows-only
 entries. The formerly hash-exempt paths were converted: MinHash/SimHash
-run portable-md5 hash families the oracle reproduces, the multimodal
+run the md5 hash family the oracle reproduces, the multimodal
 decoders parse real bytes that generator-formula SQL recomputes, and
 iterative algorithms (PageRank, connected components) use exact integer
 arithmetic replayed as unrolled/recursive CTEs.
@@ -49,6 +49,7 @@ from vacancy_gpt_etl_pipeline_spark.functions.text import (
     quality_score,
     stopword_ratio,
     token_count,
+    tokens,
 )
 from vacancy_gpt_etl_pipeline_spark.operators import caching
 from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
@@ -1367,21 +1368,19 @@ FROM r JOIN s USING (cluster_id) WHERE r.rn > 1
 
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash + banded LSH near-dup pairs in PORTABLE-HASH mode
-    (salted-md5 signatures, operators/dedup.minhash_near_duplicates):
-    every stage — shingling, 64 min-hashes, 16 band hashes, the
-    max_bucket=64 skew cap, candidate self-join, exact-Jaccard verify —
-    is mirrored value-for-value by the DuckDB oracle. Production default
-    stays xxhash64 (same pipeline, cheaper hash); candidate
-    precision/recall vs exact Jaccard is additionally asserted in
-    tests/test_neardup_quality.py on a seeded near-dup fixture."""
+    """MinHash + banded LSH near-dup pairs (md5-affine signatures,
+    operators/dedup.minhash_near_duplicates): every stage — shingling,
+    64 min-hashes, 16 band hashes, the max_bucket=64 skew cap, candidate
+    self-join, exact-Jaccard verify — is mirrored value-for-value by the
+    DuckDB oracle; candidate precision/recall vs exact Jaccard is
+    additionally asserted in tests/test_neardup_quality.py on a seeded
+    near-dup fixture."""
     return minhash_near_duplicates(
         _t(spark, sf_dir, "documents"),
         "text",
         "doc_id",
         jaccard_threshold=0.5,
         max_bucket=64,
-        portable_hash=True,
     )
 
 
@@ -1469,19 +1468,18 @@ MINHASH_LSH_SQL = _minhash_lsh_sql()
 
 
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs in PORTABLE-HASH mode (hex-digit md5
-    signatures rendered as 16-char strings; 8 tables × 2-hex-digit blocks
-    pigeonhole-certify recall for hamming ≤ 7). The DuckDB oracle mirrors
-    the digit votes, signature rendering, block join, max_bucket=128 cap,
-    and hamming verify exactly; precision/recall vs planted near-dups is
-    additionally asserted in tests/test_neardup_quality.py. Production
-    default stays xxhash64."""
+    """SimHash near-dup pairs over md5 feature words (8 tables × 8-bit
+    blocks pigeonhole-certify recall for hamming ≤ 7). The DuckDB oracle
+    votes per hex digit and renders the signature as a 16-char string;
+    its 2-digit blocks are the operator's bytes under permuted table
+    labels, so the block join, max_bucket=128 cap and hamming verify give
+    the same pairs; precision/recall vs planted near-dups is additionally
+    asserted in tests/test_neardup_quality.py."""
     return simhash_near_duplicates(
         _t(spark, sf_dir, "documents", widen=True),
         "text",
         "doc_id",
         max_bucket=128,
-        portable_hash=True,
     )
 
 
@@ -3380,7 +3378,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage at 100 TB, no UDF anywhere. Ratios are int-over-int single
     IEEE divisions, so both engines produce bit-identical doubles."""
     d = _t(spark, sf_dir, "documents")
-    w = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    w = tokens("text")
     n_words = F.size(w)
     sum_len = F.aggregate(
         w, F.lit(0), lambda acc, x: acc + F.length(x)
@@ -3767,8 +3765,9 @@ def train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME split by construction. md5's first hex digit < 'd' ⇔ 13/16 of the
     space → train."""
     d = _t(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace(F.trim("text"), r"\s+", " ")))
-    split = F.when(F.substring(fp, 1, 1) < "d", "train").otherwise("test")
+    split = F.when(F.substring(fingerprint("text"), 1, 1) < "d", "train").otherwise(
+        "test"
+    )
     return (
         d.select(split.alias("split"))
         .groupBy("split")
@@ -3797,10 +3796,9 @@ def split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 500001).alias("doc_id"), "text"
     )
     corpus = d.unionByName(planted)
-    fp = F.md5(F.lower(F.regexp_replace(F.trim("text"), r"\s+", " ")))
     labeled = corpus.select(
         "doc_id",
-        fp.alias("fingerprint"),
+        fingerprint("text").alias("fingerprint"),
         F.when(F.col("doc_id") % 5 < 4, "train").otherwise("test").alias("split"),
     )
     train = labeled.where(F.col("split") == "train").select(
@@ -5680,27 +5678,29 @@ def multimodal_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (identity), so nothing is repartitioned down and the full table
     # is never cached — the persist is keyed off the identity check.
     docs = _t(spark, sf_dir, "documents")
-    _w = widen_scan(
-        docs, raw_scan=True,
-        target=min(8, spark.sparkContext.defaultParallelism),
-    )
+    _w = widen_scan(docs, target=min(8, spark.sparkContext.defaultParallelism))
     if _w is not docs:
         docs = caching.persist(_w)
 
-    def drops(frame: DataFrame, key: str, modality: str) -> DataFrame:
+    # the keep-first survivor rule of every exact leg: the group's min
+    # id is kept, the other members of a group of ≥ 2 are dropped
+    def keep_first(frame: DataFrame, key: str) -> DataFrame:
         w = Window.partitionBy(key)
-        return (
-            frame.withColumn("keep_id", F.min("asset_id").over(w))
-            .withColumn("_n", F.count(F.lit(1)).over(w))
-            .where(
-                (F.col("_n") >= 2) & (F.col("asset_id") != F.col("keep_id"))
-            )
-            .select(
-                F.lit(modality).alias("modality"),
-                "keep_id",
-                F.col("asset_id").alias("drop_id"),
-            )
+        return frame.withColumn("keep_id", F.min("asset_id").over(w)).withColumn(
+            "_cnt", F.count(F.lit(1)).over(w)
         )
+
+    def drop_rows(fw: DataFrame, modality: str) -> DataFrame:
+        return fw.where(
+            (F.col("_cnt") >= 2) & (F.col("asset_id") != F.col("keep_id"))
+        ).select(
+            F.lit(modality).alias("modality"),
+            "keep_id",
+            F.col("asset_id").alias("drop_id"),
+        )
+
+    def drops(frame: DataFrame, key: str, modality: str) -> DataFrame:
+        return drop_rows(keep_first(frame, key), modality)
 
     # NULL text is excluded, matching the oracle's equality join (SQL
     # NULL never equals NULL; a window partition WOULD group them)
@@ -5729,22 +5729,11 @@ def multimodal_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # skipped via reps_precomputed (a window keep-first row IS the
     # group's min-id representative).
     def drops_and_reps(frame: DataFrame, key: str, modality: str, rep_cols):
-        w = Window.partitionBy(key)
-        fw = caching.persist(
-            frame.withColumn("keep_id", F.min("asset_id").over(w))
-            .withColumn("_cnt", F.count(F.lit(1)).over(w))
-        )
-        d = fw.where(
-            (F.col("_cnt") >= 2) & (F.col("asset_id") != F.col("keep_id"))
-        ).select(
-            F.lit(modality).alias("modality"),
-            "keep_id",
-            F.col("asset_id").alias("drop_id"),
-        )
+        fw = caching.persist(keep_first(frame, key))
         reps = fw.where(F.col("asset_id") == F.col("keep_id")).select(
             "asset_id", *rep_cols
         )
-        return d, reps
+        return drop_rows(fw, modality), reps
 
     def near_rows(pairs: DataFrame, modality: str) -> DataFrame:
         return (
@@ -12016,12 +12005,13 @@ def training_mix_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    fp = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
     # persisted: both the classifier word explode and the survivor
     # join read this frame — unpersisted, the fingerprint window runs
     # twice over the corpus
     deduped = caching.persist(
-        top_k_per_group(docs.withColumn("_fp", fp), ["_fp"], ["doc_id"])
+        top_k_per_group(
+            docs.withColumn("_fp", fingerprint("text")), ["_fp"], ["doc_id"]
+        )
         .drop("_fp")
     )
     kept = caching.persist(

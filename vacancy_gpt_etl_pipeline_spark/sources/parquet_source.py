@@ -20,10 +20,8 @@ from vacancy_gpt_etl_pipeline_spark.session import (
 )
 
 
-def widen_scan(
-    df: DataFrame, raw_scan: bool = False, target: int | None = None
-) -> DataFrame:
-    """Round-robin a narrow scan up to executor width — use below
+def widen_scan(df: DataFrame, target: int | None = None) -> DataFrame:
+    """Round-robin a narrow parquet scan up to executor width — use below
     CPU-DENSE map work (tokenize/md5/regex/rolling-hash/vector math), and
     only there.
 
@@ -69,55 +67,21 @@ def widen_scan(
     spark = df.sparkSession
     if target is None:
         target = spark.sparkContext.defaultParallelism
-    if raw_scan:
-        # Valid ONLY for a frame that is a bare file scan (the
-        # read_table caller): each file contributes ≥1 split, so a file
-        # count ≥ target proves the scan is wide from the listing
-        # alone. Below that, estimate the split count the way
-        # FilePartition packs files (maxSplitBytes = min(
-        # maxPartitionBytes, max(openCost, totalBytes/parallelism)))
-        # from driver-side file sizes — never df.rdd, which forces a
-        # Python-RDD conversion on top of physical planning. The
-        # estimate errs toward widening (an already-wide scan gains a
-        # benign exchange; semantics never change).
-        files = df.inputFiles()
-        if len(files) >= target:
-            return df
-        if _estimate_scan_splits(spark, files) < target:
-            return df.repartition(target)
+    # ``df`` must be a bare file scan (``read_table``'s frame): each file
+    # contributes ≥1 split, so a file count ≥ target proves the scan is
+    # wide from the listing alone. Below that, estimate the split count
+    # the way FilePartition packs files (maxSplitBytes = min(
+    # maxPartitionBytes, max(openCost, totalBytes/parallelism))) from
+    # driver-side file sizes — never df.rdd, which forces a Python-RDD
+    # conversion on top of physical planning. The estimate errs toward
+    # widening (an already-wide scan gains a benign exchange; semantics
+    # never change).
+    files = df.inputFiles()
+    if len(files) >= target:
         return df
-    # General frames (post-shuffle/repartition) report their partition
-    # count through the JVM plan's outputPartitioning — again no Python
-    # RDD materialization. sparkPlan (pre-adaptive) carries the declared
-    # partitioning; the AQE wrapper itself reports UnknownPartitioning.
-    # Plans that don't declare a count (bare maps over scans print
-    # UnknownPartitioning(0)) widen defensively — a benign extra
-    # exchange, never a semantic change.
-    n_parts = _declared_partition_count(df)
-    if n_parts is None or n_parts < target:
+    if _estimate_scan_splits(spark, files) < target:
         return df.repartition(target)
     return df
-
-
-def _declared_partition_count(df: DataFrame) -> int | None:
-    """The partition count the pre-adaptive physical plan declares, via
-    JVM introspection (``_jdf.queryExecution().sparkPlan()
-    .outputPartitioning()``) — a PRIVATE PySpark surface a Spark
-    upgrade may break. Returns None when the path no longer resolves,
-    which widen_scan treats as "unknown → widen defensively" (benign
-    extra exchange, never a semantic change).
-    tests/test_plan_shapes.py pins this path: if an upgrade silently
-    breaks it, the pin test goes red INSTEAD of every widen_scan call
-    silently double-exchanging (r9 verdict demerit 2)."""
-    try:
-        return int(
-            df._jdf.queryExecution()
-            .sparkPlan()
-            .outputPartitioning()
-            .numPartitions()
-        )
-    except Exception:
-        return None
 
 
 def _estimate_scan_splits(spark: SparkSession, files: list[str]) -> int:
@@ -169,7 +133,7 @@ def read_table(
             if widen_target is None
             else min(widen_target, spark.sparkContext.defaultParallelism)
         )
-        df = widen_scan(df, raw_scan=True, target=target)
+        df = widen_scan(df, target=target)
     # nanosAsLong surfaces TIMESTAMP(NANOS) columns as bigint; restore a
     # proper µs TimestampType column (the fixtures carry no sub-µs parts).
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":

@@ -70,11 +70,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vacancy_gpt_etl_pipeline_spark.functions.text import fingerprint
 from vacancy_gpt_etl_pipeline_spark.operators import caching
-from vacancy_gpt_etl_pipeline_spark.operators.dedup import (
-    _shingled,
-    content_hash_col,
-)
+from vacancy_gpt_etl_pipeline_spark.operators.dedup import _shingled
 from vacancy_gpt_etl_pipeline_spark.operators.relational import (
     cap_buckets,
     top_k_per_group,
@@ -111,14 +109,10 @@ def _shingle_postings(docs: DataFrame, n: int) -> DataFrame:
     """``(doc_id, s_hash, n_sh, pb)`` postings for one batch — the same
     distinct word n-grams as the batch operator (shared ``_shingled``
     helper), keyed by xxhash64 so the persisted index stores 8-byte
-    keys instead of shingle strings.
-
-    ``persist=False`` + a checkpoint instead of `_shingled`'s default
-    persist: the checkpoint materializes the array before the explode
-    (the re-evaluation hazard the default persist guards against), and
-    the caller's ``CacheScope`` region frees it with the micro-batch."""
-    sh = caching.checkpoint(_shingled(docs, "text", "doc_id", n, persist=False))
-    ex = sh.select(
+    keys instead of shingle strings. The shingle frame is persisted by
+    ``_shingled``; the caller's ``CacheScope`` region frees it with the
+    micro-batch."""
+    ex = _shingled(docs, "text", "doc_id", n).select(
         F.col("_id").alias("doc_id"),
         F.size("_sh").cast("int").alias("n_sh"),
         F.explode("_sh").alias("_s"),
@@ -140,7 +134,6 @@ def apply_neardup_gate_batch(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_fanout: int = 10_000,
-    normalize: bool = True,
 ) -> None:
     """One micro-batch of the text gate — exposed as a plain function
     so retry idempotence is testable without a streaming harness.
@@ -149,9 +142,7 @@ def apply_neardup_gate_batch(
     batch's partition of ``out_path`` and both indexes."""
     spark = batch_df.sparkSession
     with caching.CacheScope(spark):
-        hashed = batch_df.withColumn(
-            "content_hash", content_hash_col("text", normalize)
-        )
+        hashed = batch_df.withColumn("content_hash", fingerprint("text"))
         # keep-first within batch (the incremental_dedup contract), then
         # checkpoint: the frame feeds the prefix collect, the exact gate,
         # and the shingle stage
@@ -260,7 +251,6 @@ def write_stream_neardup_gate(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_fanout: int = 10_000,
-    normalize: bool = True,
 ) -> None:
     """Drain a document ``stream`` (AvailableNow; rows of
     ``(doc_id, text)``) through the incremental text gate: each
@@ -278,7 +268,6 @@ def write_stream_neardup_gate(
             n=n,
             threshold=threshold,
             max_shingle_fanout=max_shingle_fanout,
-            normalize=normalize,
         )
 
     drain(stream, checkpoint, _batch)
